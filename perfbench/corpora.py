@@ -20,16 +20,18 @@ import pyarrow.parquet as pq
 from docling_core_spark.corpus import CORPUS_VERSION, gen_doc_spans
 
 # bump when a generator below changes what it writes
-BENCH_CORPUS_VERSION = 1
-# share of base texts planted as exact duplicates across every copy
+BENCH_CORPUS_VERSION = 2
+# share of base rows planted as exact duplicates across every copy
 DUP_SHARE = 0.02
+# the sf0.1 `documents` test table (doc_id, text, lang, source, n_chars),
+# 5,000 rows, copied byte for byte so the checkout carries it
+DOCUMENTS = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                         "data", "documents.parquet")
 
 SPAN_TYPE = pa.struct([("kind", pa.string()), ("text", pa.string()),
                        ("media_ref", pa.string()), ("offset", pa.int32())])
 DOCS_SCHEMA = pa.schema([("doc_id", pa.string()),
                          ("spans", pa.list_(SPAN_TYPE))])
-TEXT_SCHEMA = pa.schema([("doc_id", pa.int64()), ("text", pa.string()),
-                         ("lang", pa.string()), ("source", pa.string())])
 
 
 @dataclass
@@ -38,7 +40,6 @@ class Corpus:
     files: List[str]     # one file per read task, in task order
     n_docs: int
     n_bytes: int         # input bytes on disk
-    mega_ids: List[str]  # doc_ids of the skew tail (may be empty)
 
     @property
     def slice_file(self) -> str:
@@ -58,102 +59,64 @@ def _write_parts(tables: List[pa.Table], path: str) -> None:
     os.replace(tmp, path)
 
 
-def _load(path: str, mega_ids: List[str]) -> Corpus:
+def _load(path: str) -> Corpus:
     files = sorted(os.path.join(path, f) for f in os.listdir(path)
                    if f.endswith(".parquet"))
     n_docs = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     return Corpus(path, files, n_docs,
-                  sum(os.path.getsize(f) for f in files), mega_ids)
+                  sum(os.path.getsize(f) for f in files))
 
 
-def span_corpus(work: str, seed: int, n_docs: int, n_files: int,
-                mega_every: int = 0) -> Corpus:
-    """documents(doc_id, spans) from ``corpus.gen_doc_spans``. Mega-docs
-    (every ``mega_every``-th index) all go to file 0, so one read task
-    carries the whole skew tail."""
-    mega = [i for i in range(n_docs)
-            if mega_every and i % mega_every == mega_every - 1]
-    mega_ids = [f"doc_{i:012d}" for i in mega]
+def span_corpus(work: str, seed: int, n_docs: int, n_files: int) -> Corpus:
+    """documents(doc_id, spans) from ``corpus.gen_doc_spans``, split
+    evenly over ``n_files`` files in doc_id order."""
     path = os.path.join(work, "corpus",
-                        f"spans-s{seed}-n{n_docs}-f{n_files}-m{mega_every}"
+                        f"spans-s{seed}-n{n_docs}-f{n_files}"
                         f"-v{CORPUS_VERSION}.{BENCH_CORPUS_VERSION}")
     if os.path.isdir(path):
-        return _load(path, mega_ids)
-    mega_set = set(mega)
-    uniform = [i for i in range(n_docs) if i not in mega_set]
-    per = -(-len(uniform) // n_files)
-    groups = [uniform[k * per:(k + 1) * per] for k in range(n_files)]
-    groups[0] = mega + groups[0]
+        return _load(path)
+    per = -(-n_docs // n_files)
     tables = []
-    for g in groups:
-        rows = [{"doc_id": f"doc_{i:012d}",
-                 "spans": gen_doc_spans(i, seed=seed,
-                                        mega_every=mega_every or None)}
-                for i in g]
+    for k in range(n_files):
+        rows = [{"doc_id": f"doc_{i:012d}", "spans": gen_doc_spans(i, seed)}
+                for i in range(k * per, min(n_docs, (k + 1) * per))]
         tables.append(pa.Table.from_pylist(rows, schema=DOCS_SCHEMA))
     _write_parts(tables, path)
-    return _load(path, mega_ids)
+    return _load(path)
 
 
-_VOCAB = ("data spark table query row column scan hash join sort filter "
-          "group value key stream batch vector index page model token "
-          "chunk text word line fast slow big small order part window "
-          "merge agg").split()
-_STOP = {"en": ["the", "a", "of", "to", "and", "in", "is", "on", "for",
-                "with"],
-         "de": ["der", "die", "das", "und", "ist", "von", "mit", "ein"],
-         "es": ["el", "los", "las", "y", "un", "una", "es", "por"],
-         "fr": ["le", "les", "des", "et", "une", "est", "dans", "pour"]}
-
-
-def _base_texts(rng: random.Random, n: int) -> List[tuple]:
-    """(text, lang) rows shaped like the documents table: word salad
-    with a language's stopwords mixed in, some PII, some docs too short
-    or stopword-free for the quality gate."""
-    rows = []
-    for i in range(n):
-        lang = rng.choice(("en", "en", "de", "es", "fr", "zh"))
-        words = rng.choices(_VOCAB, k=rng.randint(2, 90))
-        if lang in _STOP:
-            for _ in range(max(1, len(words) // 6)):
-                words[rng.randrange(len(words))] = rng.choice(_STOP[lang])
-        r = rng.random()
-        if r < 0.06:
-            words.append(f"mail user{i}@example.com")
-        elif r < 0.1:
-            words.append(f"call +1-555-{rng.randrange(10000):04d}")
-        rows.append((" ".join(words), lang))
-    return rows
-
-
-def text_corpus(work: str, seed: int, n_base: int, n_copies: int,
+def text_corpus(work: str, seed: int, n_copies: int,
                 n_files: int) -> Corpus:
-    """documents(doc_id, text, lang, source): a seeded base table
-    replicated ``n_copies`` times. Each copy's text gets a " rep<k>"
-    suffix so replicas are not exact duplicates, except a seeded
-    DUP_SHARE of base rows that stay byte-identical in every copy - the
-    dedup stage's real work."""
-    path = os.path.join(work, "corpus", f"text-s{seed}-b{n_base}"
-                        f"-k{n_copies}-f{n_files}-v{BENCH_CORPUS_VERSION}")
+    """documents(doc_id, text, source): the sf0.1 documents table
+    replicated ``n_copies`` times, as bench_scaling_pipeline.py does it.
+    Copy k adds k * 10^7 to doc_id and appends " rep<k>" to the text, so
+    replicas are not exact duplicates, except a seeded DUP_SHARE of base
+    rows that stay byte-identical in every copy - the dedup stage's real
+    work. Rows are shuffled by the seed before the split into files."""
+    path = os.path.join(work, "corpus", f"text-s{seed}-k{n_copies}"
+                        f"-f{n_files}-v{BENCH_CORPUS_VERSION}")
     if os.path.isdir(path):
-        return _load(path, [])
+        return _load(path)
+    base = pq.read_table(DOCUMENTS, columns=["doc_id", "text", "source"])
+    base_ids = base["doc_id"].to_pylist()
+    base_texts = base["text"].to_pylist()
+    base_srcs = base["source"].to_pylist()
     rng = random.Random(seed)
-    base = _base_texts(rng, n_base)
-    planted = [rng.random() < DUP_SHARE for _ in range(n_base)]
-    ids, texts, langs, srcs = [], [], [], []
+    planted = set(rng.sample(range(base.num_rows),
+                             round(DUP_SHARE * base.num_rows)))
+    ids, texts, srcs = [], [], []
     for k in range(n_copies):
-        for i, (text, lang) in enumerate(base):
-            ids.append(i + k * 10_000_000)
-            texts.append(text if planted[i] else f"{text} rep{k}")
-            langs.append(lang)
-            srcs.append(f"src{i % 5}")
+        for i, (doc_id, text, src) in enumerate(zip(base_ids, base_texts,
+                                                    base_srcs)):
+            ids.append(doc_id + k * 10_000_000)
+            texts.append(text if i in planted else f"{text} rep{k}")
+            srcs.append(src)
     order = list(range(len(ids)))
     rng.shuffle(order)
     table = pa.table({"doc_id": pa.array([ids[j] for j in order], pa.int64()),
-                      "text": [texts[j] for j in order],
-                      "lang": [langs[j] for j in order],
-                      "source": [srcs[j] for j in order]},
-                     schema=TEXT_SCHEMA)
+                      "text": pa.array([texts[j] for j in order], pa.string()),
+                      "source": pa.array([srcs[j] for j in order],
+                                         pa.string())})
     per = -(-table.num_rows // n_files)
     _write_parts([table.slice(k * per, per) for k in range(n_files)], path)
-    return _load(path, [])
+    return _load(path)

@@ -1,20 +1,21 @@
-"""Single-process traced pass: the per-document loop of the Spark
-stage, run in this process over unsliced parquet batches, with timers
-around each call into the engine's modules.
+"""Single-process traced pass: the workload's own mapInArrow closure,
+taken from ``engine.chunk_documents`` and run in this process over
+unsliced parquet batches, with timers on the module functions it looks
+up at call time.
 
-Self times nest as: pass = decode + tree + <per-doc work> + outbuild
-(+ loop overhead). For hybrid chunking the per-doc work is
-``hybrid_chunk``, whose self time excludes the outermost
-``MarkdownSerializer.serialize`` calls and ``RegexTokenizer.count_tokens``
-calls made under it; for the markdown export it is the
-``export_to_markdown`` call.
+Spans nest as: pass = decode + tree + hybrid + outbuild. ``hybrid`` is
+``hybrid_chunk``; its self time excludes the outermost
+``MarkdownSerializer.serialize`` calls and the
+``RegexTokenizer.count_tokens`` calls made under it. ``outbuild`` is the
+closure's self time: row assembly (``_origin_struct`` and the per-chunk
+appends) plus ``_chunk_record_batch``.
 """
 
 from __future__ import annotations
 
 import time
 from contextlib import contextmanager
-from typing import Dict, List
+from typing import Callable, Dict, List
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -22,19 +23,35 @@ import pyarrow.parquet as pq
 from docling_core_spark import engine
 from docling_core_spark.chunking import hybrid as hybrid_mod
 from docling_core_spark.chunking import semsplit as semsplit_mod
-from docling_core_spark.chunking.hybrid import hybrid_chunk
 from docling_core_spark.chunking.tokenizer import RegexTokenizer
-from docling_core_spark.model.spans import doc_from_spans
-from docling_core_spark.serializers.markdown import (MarkdownSerializer,
-                                                     export_to_markdown)
+from docling_core_spark.model import spans as spans_mod
+from docling_core_spark.serializers.markdown import MarkdownSerializer
 
-# the traced pass's layer self times must cover at least this share of
-# its wall time; the remainder is loop and timer overhead
-RECONCILE_TOLERANCE = 0.05
+# the traced pass's timed spans must cover at least this share of its
+# wall time; the rest is the closure's per-chunk appends, loop and timer
+# overhead
+RECONCILE_TOLERANCE = 0.10
 
 BATCH_ROWS = 256  # spark.sql.execution.arrow.maxRecordsPerBatch
 
 now = time.perf_counter
+
+
+class _Capture:
+    """Stands in for a DataFrame: ``select`` returns it, ``mapInArrow``
+    returns the per-batch closure the stage would ship to workers."""
+
+    def select(self, *cols):
+        return self
+
+    def mapInArrow(self, fn, schema):
+        return fn
+
+
+def stage_closure(stage: Callable):
+    """The Iterator[RecordBatch] -> Iterator[RecordBatch] closure that
+    ``stage(df)`` hands to mapInArrow."""
+    return stage(_Capture())
 
 
 def read_batches(path: str) -> List[pa.RecordBatch]:
@@ -49,169 +66,117 @@ def read_batches(path: str) -> List[pa.RecordBatch]:
     return batches
 
 
+def run_closure(fn, batches) -> int:
+    """Drive the closure over ``batches``; returns the output row count."""
+    return sum(out.num_rows for out in fn(iter(batches)))
+
+
+def _timed(fn, tracer: "Tracer", name: str, outermost: bool = False):
+    """``fn`` with its time and calls added to ``tracer`` under ``name``;
+    with ``outermost`` only calls not nested in another call count."""
+    depth = [0]
+
+    def wrapper(*a, **kw):
+        if outermost and depth[0]:
+            return fn(*a, **kw)
+        depth[0] += 1
+        t0 = now()
+        try:
+            return fn(*a, **kw)
+        finally:
+            depth[0] -= 1
+            tracer.t[name] += now() - t0
+            tracer.n[name] += 1
+    return wrapper
+
+
 class Tracer:
-    """Counters and timers installed on the engine's classes for the
-    duration of ``installed()``."""
+    """Timers and counters installed on the module attributes the
+    closure looks up, for the duration of ``installed()``."""
+
+    NAMES = ("decode", "tree", "hybrid", "markdown", "tokenizer",
+             "semsplit", "origin", "record_batch")
 
     def __init__(self) -> None:
-        self.t: Dict[str, float] = dict.fromkeys(
-            ("decode", "tree", "work", "markdown", "tokenizer",
-             "outbuild"), 0.0)
-        self.n: Dict[str, int] = dict.fromkeys(
-            ("markdown", "tokenizer", "semsplit"), 0)
+        self.t: Dict[str, float] = dict.fromkeys(self.NAMES, 0.0)
+        self.n: Dict[str, int] = dict.fromkeys(self.NAMES, 0)
 
     @contextmanager
-    def installed(self, time_serialize: bool):
-        tracer = self
-        orig_count = RegexTokenizer.count_tokens
-        orig_ser = MarkdownSerializer.serialize
-        orig_split = semsplit_mod.recursive_split
-        depth = [0]
+    def installed(self):
+        orig_iter = engine._iter_span_tuples
 
-        def count_tokens(tok, text):
+        def iter_span_tuples(batch):
+            # the decode is lazy: time it whole, then hand out the docs
             t0 = now()
-            try:
-                return orig_count(tok, text)
-            finally:
-                tracer.t["tokenizer"] += now() - t0
-                tracer.n["tokenizer"] += 1
+            docs = list(orig_iter(batch))
+            self.t["decode"] += now() - t0
+            self.n["decode"] += 1
+            return iter(docs)
 
-        def serialize(ser, *a, **kw):
-            if depth[0]:
-                return orig_ser(ser, *a, **kw)
-            depth[0] += 1
-            t0 = now()
-            try:
-                return orig_ser(ser, *a, **kw)
-            finally:
-                depth[0] -= 1
-                tracer.t["markdown"] += now() - t0
-                tracer.n["markdown"] += 1
-
-        def recursive_split(*a, **kw):
-            tracer.n["semsplit"] += 1
-            return orig_split(*a, **kw)
-
-        RegexTokenizer.count_tokens = count_tokens
-        if time_serialize:
-            MarkdownSerializer.serialize = serialize
-        semsplit_mod.recursive_split = recursive_split
-        hybrid_mod.recursive_split = recursive_split
+        patches = [
+            (engine, "_iter_span_tuples", iter_span_tuples),
+            (engine, "_origin_struct",
+             _timed(engine._origin_struct, self, "origin")),
+            (engine, "_chunk_record_batch",
+             _timed(engine._chunk_record_batch, self, "record_batch")),
+            (spans_mod, "doc_from_spans",
+             _timed(spans_mod.doc_from_spans, self, "tree")),
+            (hybrid_mod, "hybrid_chunk",
+             _timed(hybrid_mod.hybrid_chunk, self, "hybrid", True)),
+            (MarkdownSerializer, "serialize",
+             _timed(MarkdownSerializer.serialize, self, "markdown", True)),
+            (RegexTokenizer, "count_tokens",
+             _timed(RegexTokenizer.count_tokens, self, "tokenizer")),
+        ]
+        split = _timed(semsplit_mod.recursive_split, self, "semsplit")
+        patches += [(semsplit_mod, "recursive_split", split),
+                    (hybrid_mod, "recursive_split", split)]
+        saved = [(obj, attr, getattr(obj, attr)) for obj, attr, _ in patches]
+        for obj, attr, fn in patches:
+            setattr(obj, attr, fn)
         try:
             yield self
         finally:
-            RegexTokenizer.count_tokens = orig_count
-            MarkdownSerializer.serialize = orig_ser
-            semsplit_mod.recursive_split = orig_split
-            hybrid_mod.recursive_split = orig_split
+            for obj, attr, fn in saved:
+                setattr(obj, attr, fn)
 
 
-def chunk_pass(batches, tr: Tracer = None) -> int:
-    """engine.chunk_documents' per-batch loop (mode="hybrid",
-    max_tokens=64); returns the chunk count."""
-    tok = RegexTokenizer(64)
-    n_chunks = 0
-    for batch in batches:
-        t0 = now()
-        docs = list(engine._iter_span_tuples(batch))
-        t1 = now()
-        ids, idxs, txts, heads, refs, origins = [], [], [], [], [], []
-        tree = work = out = 0.0
-        for doc_id, tuples in docs:
-            a = now()
-            doc = doc_from_spans(doc_id, tuples)
-            b = now()
-            chunks = hybrid_chunk(doc, tokenizer=tok, merge_peers=True)
-            c = now()
-            org = engine._origin_struct(doc)
-            for ci, ch in enumerate(chunks):
-                ids.append(doc_id)
-                idxs.append(ci)
-                txts.append(ch.text)
-                heads.append(ch.headings)
-                refs.append(ch.offsets)
-                origins.append(org)
-            d = now()
-            tree += b - a
-            work += c - b
-            out += d - c
-        e = now()
-        engine._chunk_record_batch(ids, idxs, txts, heads, refs, origins)
-        n_chunks += len(ids)
-        if tr is not None:
-            tr.t["decode"] += t1 - t0
-            tr.t["tree"] += tree
-            tr.t["work"] += work
-            tr.t["outbuild"] += out + now() - e
-    return n_chunks
-
-
-def export_pass(batches, tr: Tracer = None) -> int:
-    """engine.export_documents' per-batch loop (fmt="md"); returns the
-    row count."""
-    n_rows = 0
-    for batch in batches:
-        t0 = now()
-        docs = list(engine._iter_span_tuples(batch))
-        t1 = now()
-        ids, txts = [], []
-        tree = work = 0.0
-        for doc_id, tuples in docs:
-            a = now()
-            doc = doc_from_spans(doc_id, tuples)
-            b = now()
-            txt = export_to_markdown(doc)
-            c = now()
-            ids.append(doc_id)
-            txts.append(txt)
-            tree += b - a
-            work += c - b
-        e = now()
-        pa.RecordBatch.from_arrays([
-            pa.array(ids, pa.string()),
-            pa.array(["md"] * len(ids), pa.string()),
-            pa.array(txts, pa.string())], names=["doc_id", "fmt", "text"])
-        n_rows += len(ids)
-        if tr is not None:
-            tr.t["decode"] += t1 - t0
-            tr.t["tree"] += tree
-            tr.t["work"] += work
-            tr.t["markdown"] += work
-            tr.n["markdown"] += len(ids)
-            tr.t["outbuild"] += now() - e
-    return n_rows
-
-
-def traced_layers(path: str, kind: str) -> Dict[str, float]:
-    """Per-layer metrics of one traced pass over the parquet file
-    ``path``: seconds per 1k docs, share of the traced pass, calls per
-    doc; plus the untraced/traced throughput ratio."""
+def traced_layers(path: str, stage: Callable) -> Dict[str, float]:
+    """Per-layer metrics of one traced pass of ``stage``'s closure over
+    the parquet file ``path``: seconds per 1k docs, share of the traced
+    pass, calls per doc; plus the traced/untraced time ratio and the
+    share of the pass outside every timed call."""
     batches = read_batches(path)
     n_docs = sum(b.num_rows for b in batches)
-    run = chunk_pass if kind == "chunk" else export_pass
+    fn = stage_closure(stage)
 
-    run(batches[:1])  # first-call costs: regex compiles, lazy imports
+    run_closure(fn, batches[:1])  # first-call costs: regexes, lazy imports
     t0 = now()
-    run(batches)
+    run_closure(fn, batches)
     untraced = now() - t0
 
     tr = Tracer()
-    with tr.installed(time_serialize=(kind == "chunk")):
+    with tr.installed():
         t0 = now()
-        n_out = run(batches, tr)
+        n_out = run_closure(fn, batches)
         wall = now() - t0
 
     t = tr.t
-    if kind == "chunk":
-        hybrid_self = t["work"] - t["markdown"] - t["tokenizer"]
-    else:
-        hybrid_self = 0.0
-    layers = {"engine.decode": t["decode"], "model.tree": t["tree"],
-              "serializers.markdown": t["markdown"],
-              "chunking.tokenizer": t["tokenizer"],
-              "chunking.hybrid_self": hybrid_self,
-              "engine.outbuild": t["outbuild"]}
-    covered = t["decode"] + t["tree"] + t["work"] + t["outbuild"]
+    layers = {
+        "engine.decode": t["decode"],
+        "model.tree": t["tree"],
+        "serializers.markdown": t["markdown"],
+        "chunking.tokenizer": t["tokenizer"],
+        "chunking.hybrid_self": t["hybrid"] - t["markdown"] - t["tokenizer"],
+        "engine.outbuild": wall - t["decode"] - t["tree"] - t["hybrid"],
+    }
+    negative = [k for k, v in layers.items() if v < 0]
+    if negative:
+        raise RuntimeError(f"negative self time in {negative}: the timed "
+                           f"spans overlap")
+    # outbuild's timed part; the rest of it is the closure's own loop
+    timed = (sum(layers.values()) - layers["engine.outbuild"]
+             + t["origin"] + t["record_batch"])
     out = {}
     for name, secs in layers.items():
         out[name + "_s"] = secs * 1000.0 / n_docs
@@ -220,9 +185,8 @@ def traced_layers(path: str, kind: str) -> Dict[str, float]:
         "serializers.markdown_calls": tr.n["markdown"] / n_docs,
         "chunking.tokenizer_calls": tr.n["tokenizer"] / n_docs,
         "chunking.semsplit_calls": tr.n["semsplit"] / n_docs,
-        "chunking.chunks_per_doc": (n_out / n_docs if kind == "chunk"
-                                    else 0.0),
+        "chunking.chunks_per_doc": n_out / n_docs,
         "trace.overhead": wall / untraced,
-        "trace.unattributed": 1.0 - covered / wall,
+        "trace.unattributed": 1.0 - timed / wall,
     })
     return out

@@ -2,24 +2,25 @@
 """The repository benchmark: one workload, one seed, one run.
 
     python3 perfbench/run.py --workload chunk_hybrid --seed 1 \\
-        --seconds 15 --trace 0
+        --seconds 10 --trace 0
 
 Run from the repository root. Workloads (see workloads.py):
-chunk_hybrid, export_md_skewed, train_corpus. The input is generated
-from ``--seed`` and cached under perfbench/.work/.
+chunk_hybrid, train_corpus. The input is generated from ``--seed`` and
+cached under perfbench/.work/.
 
 ``--trace 0`` measures the end-to-end metrics with event logs off:
   setup_s      start-up until the first timed pass can begin: module
                imports, JVM launch, SparkContext + get_spark(), and
-               a set-up pass (a full pass; for train_corpus the job
-               over a 1/16 slice). Input generation is left out;
+               the workload's set-up pass; the median over the
+               workload's setup_reps start-ups, each in a fresh JVM.
+               Input generation is left out;
   docs_per_s   median over the window's full passes at local[nproc];
-  scaling_eff  median docs_per_s / (nproc * median single-task docs/s
-               on the corpus's last 1/nproc), passes interleaved;
   peak_rss_mb  peak RSS of the JVM plus its Python workers.
 ``--trace 1`` is a separate run with event logs on; it prints the
 per-layer metrics (eventlog.py for the Spark runtime, inproc.py for the
-per-document Python layers).
+per-document Python layers) and scaling_eff: median full-pass docs/s
+over nproc * median single-task docs/s on the corpus's last 1/nproc,
+passes interleaved (chunk_hybrid only).
 
 Every run checks the workload's output (error_share) and brackets
 itself with a fixed pure-Python CPU loop (control_*_s) that runs no
@@ -46,20 +47,22 @@ WORK = os.path.join(HERE, ".work")
 
 CONTROL_LOOPS = 3_000_000
 
-# which end-to-end metric each layer metric should move, and where
+# which end-to-end metric each layer metric should move, and on which
+# workload; BENCHMARK.json's schema has no field for it, so every run
+# prints it on its detail line
 LAYER_TARGETS = {
     "scan.*": "docs_per_s on train_corpus (read_amp ~n_buckets there)",
-    "engine.arrow_*_bytes, engine.python_run_s":
-        "docs_per_s on chunk_hybrid; much less on export_md_skewed",
-    "engine.python_start_s": "setup_s",
-    "task.*": "docs_per_s on export_md_skewed",
+    "engine.arrow_*_bytes, engine.python_run_s": "docs_per_s on chunk_hybrid",
+    "engine.python_start_s": "setup_s on chunk_hybrid",
+    "task.*": "docs_per_s on chunk_hybrid (its slowest task ends the pass)",
     "shuffle.*, spill.bytes, write.*, spark.jobs":
         "docs_per_s on train_corpus",
-    "jvm.gc_s": "docs_per_s on every workload",
-    "python.rss_peak_mb, jvm.rss_peak_mb": "peak_rss_mb on export_md_skewed",
-    "engine.decode_*, model.tree_*, serializers.markdown_*":
-        "docs_per_s on chunk_hybrid and export_md_skewed",
-    "chunking.*, engine.outbuild_*": "docs_per_s on chunk_hybrid",
+    "jvm.gc_s": "docs_per_s on both workloads",
+    "scaling_eff": "docs_per_s on chunk_hybrid, as cores are added",
+    "python.rss_peak_mb": "peak_rss_mb on chunk_hybrid",
+    "jvm.rss_peak_mb": "peak_rss_mb on both workloads",
+    "engine.decode_*, engine.outbuild_*, model.*, serializers.*, chunking.*":
+        "docs_per_s on chunk_hybrid",
     "textops.*": "docs_per_s on train_corpus",
 }
 
@@ -83,38 +86,36 @@ def quartiles(xs):
 def timed_run(wl, seconds: float, import_s: float) -> dict:
     import sparkenv
 
-    t0 = time.perf_counter()
-    spark = sparkenv.start(WORK, wl.cores)
-    wl.warmup(spark)
-    setup_s = import_s + time.perf_counter() - t0
-    full, single = [], []
+    setups = []
+    for rep in range(wl.setup_reps):
+        if rep:
+            spark.stop()
+            sparkenv.shutdown_jvm()
+        t0 = time.perf_counter()
+        spark = sparkenv.start(WORK, wl.cores)
+        wl.warmup(spark)
+        setups.append(import_s + time.perf_counter() - t0)
+    full = []
     t_start = time.perf_counter()
     while not full or time.perf_counter() - t_start < seconds:
         t0 = time.perf_counter()
         n = wl.full_pass(spark)
         full.append(n / (time.perf_counter() - t0))
-        t0 = time.perf_counter()
-        n = wl.single_pass(spark)
-        single.append(n / (time.perf_counter() - t0))
     rss = sparkenv.peak_rss_mb()
     checked, bad = wl.verify(spark)
     spark.stop()
     sparkenv.shutdown_jvm()
-    dps = statistics.median(full)
     return {
         "checked": checked, "bad": bad,
         "metrics": {
-            "docs_per_s": {"value": dps, "unit": "docs/s"},
-            "scaling_eff": {"value": dps / (wl.cores
-                                            * statistics.median(single)),
-                            "unit": "ratio"},
-            "setup_s": {"value": setup_s, "unit": "s"},
+            "docs_per_s": {"value": statistics.median(full),
+                           "unit": "docs/s"},
+            "setup_s": {"value": statistics.median(setups), "unit": "s"},
             "peak_rss_mb": {"value": rss, "unit": "MB"},
         },
         "detail": {"docs_per_s_q1_med_q3": quartiles(full),
-                   "single_task_docs_per_s_q1_med_q3": quartiles(single),
                    "passes": len(full), "full_docs_per_s": full,
-                   "single_task_docs_per_s": single},
+                   "setup_s_reps": setups},
     }
 
 
@@ -129,12 +130,22 @@ def traced_run(wl, seconds: float, import_s: float) -> dict:
     sc = spark.sparkContext
     sc.setJobGroup("warmup", "set-up pass")
     wl.warmup(spark)
-    sc.setJobGroup("measured", "full passes")
-    n_passes = 0
+    # full passes, and single-task passes for the weak-scaling reading
+    # where the workload has one, interleaved
+    single_pass = getattr(wl, "single_pass", None)
+    full, single = [], []
     t_start = time.perf_counter()
-    while not n_passes or time.perf_counter() - t_start < seconds:
-        wl.full_pass(spark)
-        n_passes += 1
+    while not full or time.perf_counter() - t_start < seconds:
+        sc.setJobGroup("measured", "full passes")
+        t0 = time.perf_counter()
+        n = wl.full_pass(spark)
+        full.append(n / (time.perf_counter() - t0))
+        if single_pass:
+            sc.setJobGroup("single", "single-task passes")
+            t0 = time.perf_counter()
+            n = single_pass(spark)
+            single.append(n / (time.perf_counter() - t0))
+    n_passes = len(full)
     sc.setJobGroup("verify", "output check")
     checked, bad = wl.verify(spark)
     spark.stop()
@@ -148,6 +159,9 @@ def traced_run(wl, seconds: float, import_s: float) -> dict:
                                      wl.corpus.path, wl.corpus.n_bytes,
                                      n_passes))
     layers.update(wl.layers())
+    if single:
+        layers["scaling_eff"] = statistics.median(full) / (
+            wl.cores * statistics.median(single))
     unattributed = layers["trace.unattributed"]
     reconciled = -0.01 <= unattributed <= inproc.RECONCILE_TOLERANCE
     if not reconciled:
@@ -159,6 +173,7 @@ def traced_run(wl, seconds: float, import_s: float) -> dict:
         "metrics": {k: {"value": layers[k], "unit": u}
                     for k, u in units.items()},
         "detail": {"traced_passes": n_passes,
+                   "full_docs_per_s": full, "single_task_docs_per_s": single,
                    "layer_targets": LAYER_TARGETS},
     }
 

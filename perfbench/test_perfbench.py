@@ -1,6 +1,6 @@
 """Tests of the benchmark itself: python -m pytest perfbench -q
 
-The repeat test runs every workload's traced run twice (a few minutes).
+The repeat test runs each workload's traced run twice (a few minutes).
 """
 
 from __future__ import annotations
@@ -76,8 +76,7 @@ EXACT = ("chunking.tokenizer_calls", "serializers.markdown_calls",
          "scan.read_amp", "scan.bytes_read", "spark.jobs")
 
 
-@pytest.mark.parametrize("workload", ["chunk_hybrid", "export_md_skewed",
-                                      "train_corpus"])
+@pytest.mark.parametrize("workload", ["chunk_hybrid", "train_corpus"])
 def test_counts_repeat_exactly(workload):
     runs = [_result(_run("--workload", workload, "--seed", "5",
                          "--seconds", "1", "--trace", "1"))
@@ -89,10 +88,35 @@ def test_counts_repeat_exactly(workload):
     assert first == second
     if workload == "train_corpus":
         assert first["scan.read_amp"] == pytest.approx(8.0, rel=0.02)
+        assert first["chunking.tokenizer_calls"] == 0
     else:
         assert first["scan.read_amp"] == pytest.approx(1.0, rel=0.02)
-    if workload == "export_md_skewed":
-        assert first["chunking.tokenizer_calls"] == 0
+
+
+def test_traced_closure_is_the_engines(tmp_path):
+    """The traced pass runs chunk_documents' own closure: its rows match
+    the per-doc reference, and the timers see every doc."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import inproc
+    from corpora import DOCS_SCHEMA
+    from docling_core_spark.corpus import gen_doc_spans
+    from workloads import ChunkHybrid
+
+    rows = [{"doc_id": f"doc_{i:012d}", "spans": gen_doc_spans(i, seed=3)}
+            for i in range(4)]
+    path = str(tmp_path / "docs.parquet")
+    pq.write_table(pa.Table.from_pylist(rows, schema=DOCS_SCHEMA), path)
+    fn = inproc.stage_closure(ChunkHybrid.stage)
+    tr = inproc.Tracer()
+    with tr.installed():
+        out = [tuple(r.values()) for b in fn(iter(inproc.read_batches(path)))
+               for r in b.to_pylist()]
+    assert verify.diff_docs(verify.digest(out),
+                            verify.digest(_chunk_rows(4))) == []
+    assert tr.n["tree"] == tr.n["hybrid"] == 4
+    assert tr.n["record_batch"] == tr.n["decode"] == 1
 
 
 def test_fails_without_the_program(tmp_path):

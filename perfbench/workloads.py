@@ -1,9 +1,9 @@
-"""The three workloads: input, set-up pass, timed passes, and the check
+"""The two workloads: input, set-up pass, timed passes, and the check
 of their output.
 
-Each workload runs a full pass over its corpus at local[cores] and a
-single-task pass over the corpus's last file (1/cores of it) for the
-weak-scaling reading.
+Each workload times full passes over its corpus at local[cores].
+chunk_hybrid also has a single-task pass over the corpus's last file
+(1/cores of it) for the weak-scaling reading of the traced run.
 """
 
 from __future__ import annotations
@@ -30,9 +30,8 @@ from docling_core_spark.chunking.hybrid import hybrid_chunk
 from docling_core_spark.chunking.tokenizer import RegexTokenizer
 from docling_core_spark.io.checkpoint import read_output, run_resumable
 from docling_core_spark.model.spans import doc_from_spans
-from docling_core_spark.serializers.markdown import export_to_markdown
 
-# docs per verified sample (chunk/export); every mega-doc is added
+# docs per verified sample
 SAMPLE_DOCS = 48
 
 
@@ -55,24 +54,30 @@ def _warm_input(corpus: corpora.Corpus, rows: int) -> str:
     return path
 
 
-class SpanWorkload:
-    """A fused per-document mapInArrow stage into a noop sink."""
+class ChunkHybrid:
+    """engine.chunk_documents(mode="hybrid", max_tokens=64), one fused
+    per-document mapInArrow stage, into a noop sink."""
 
-    kind = ""
-    n_docs = 0
-    mega_every = 0
+    kind = "chunk"
+    n_docs = 1000
+    # start-ups per run; setup_s is their median
+    setup_reps = 2
 
     def __init__(self, work: str, seed: int, cores: int) -> None:
         self.work, self.seed, self.cores = work, seed, cores
-        self.corpus = corpora.span_corpus(work, seed, self.n_docs, cores,
-                                          self.mega_every)
+        self.corpus = corpora.span_corpus(work, seed, self.n_docs, cores)
 
-    def stage(self, df):
-        raise NotImplementedError
+    @staticmethod
+    def stage(df):
+        return engine.chunk_documents(df, mode="hybrid", max_tokens=64)
 
     @staticmethod
     def reference_rows(doc_id: str, tuples: list) -> List[tuple]:
-        raise NotImplementedError
+        doc = doc_from_spans(doc_id, tuples)
+        org = engine._origin_struct(doc)
+        return [(doc_id, i, c.text, c.headings, c.offsets, org)
+                for i, c in enumerate(hybrid_chunk(
+                    doc, tokenizer=RegexTokenizer(64), merge_peers=True))]
 
     def warmup(self, spark: SparkSession) -> None:
         self.full_pass(spark)
@@ -87,9 +92,8 @@ class SpanWorkload:
 
     def sample_ids(self) -> List[str]:
         rng = random.Random(self.seed * 7919 + 1)
-        ids = [f"doc_{i:012d}" for i in range(self.n_docs)]
-        return sorted(set(rng.sample(ids, SAMPLE_DOCS))
-                      | set(self.corpus.mega_ids))
+        return sorted(rng.sample(
+            [f"doc_{i:012d}" for i in range(self.n_docs)], SAMPLE_DOCS))
 
     def verify(self, spark: SparkSession) -> Tuple[int, List[str]]:
         """Spark's rows for a seeded doc sample against the same public
@@ -109,39 +113,8 @@ class SpanWorkload:
         return len(ids), verify.diff_docs(got, verify.digest(want_rows))
 
     def layers(self) -> Dict[str, float]:
-        """In-process layers over the first file (for the skewed corpus,
-        the one holding every mega-doc)."""
-        return inproc.traced_layers(self.corpus.files[0], self.kind)
-
-
-class ChunkHybrid(SpanWorkload):
-    kind = "chunk"
-    n_docs = 1000
-
-    def stage(self, df):
-        return engine.chunk_documents(df, mode="hybrid", max_tokens=64)
-
-    @staticmethod
-    def reference_rows(doc_id, tuples):
-        doc = doc_from_spans(doc_id, tuples)
-        org = engine._origin_struct(doc)
-        return [(doc_id, i, c.text, c.headings, c.offsets, org)
-                for i, c in enumerate(hybrid_chunk(
-                    doc, tokenizer=RegexTokenizer(64), merge_peers=True))]
-
-
-class ExportMdSkewed(SpanWorkload):
-    kind = "export"
-    n_docs = 1000
-    mega_every = 500
-
-    def stage(self, df):
-        return engine.export_documents(df, fmt="md")
-
-    @staticmethod
-    def reference_rows(doc_id, tuples):
-        return [(doc_id, "md",
-                 export_to_markdown(doc_from_spans(doc_id, tuples)))]
+        """In-process layers over the first corpus file."""
+        return inproc.traced_layers(self.corpus.files[0], self.stage)
 
 
 def _oracle_sql(path: str) -> str:
@@ -178,19 +151,23 @@ class TrainCorpus:
     committed as the job does."""
 
     kind = "train"
-    n_base, n_copies = 2000, 8
+    # 20k docs. A pass costs about 10.5 s of fixed per-job work (some
+    # 45 Spark jobs) plus 0.06 ms per doc on 4 vCPUs, so the ~160k docs
+    # of the full-size job would not fit the benchmark's time budget
+    n_copies = 4
     n_buckets = 8
+    # one start-up per run: a train_corpus start-up costs 20-30 s
+    setup_reps = 1
 
     def __init__(self, work: str, seed: int, cores: int) -> None:
         self.work, self.seed, self.cores = work, seed, cores
-        self.corpus = corpora.text_corpus(work, seed, self.n_base,
-                                          self.n_copies, cores)
+        self.corpus = corpora.text_corpus(work, seed, self.n_copies, cores)
         self.warm_path = _warm_input(self.corpus, 256)
         self.out_root = os.path.join(work, "out", f"train-s{seed}")
         self.stage_times: List[Dict[str, float]] = []
 
-    def _pipeline(self, spark: SparkSession, inp: str, out: str
-                  ) -> Dict[str, float]:
+    def _pipeline(self, spark: SparkSession, inp: str, out: str,
+                  n_buckets: int) -> Dict[str, float]:
         shutil.rmtree(out, ignore_errors=True)
         docs = spark.read.parquet(inp)
         t0 = time.perf_counter()
@@ -200,7 +177,7 @@ class TrainCorpus:
             lambda d: (textops.hygiene_over(d)
                        .filter(F.col("keep")).drop("keep")
                        .withColumn("content_md5", F.md5("clean_text"))),
-            n_buckets=self.n_buckets)
+            n_buckets=n_buckets)
         t1 = time.perf_counter()
         s2 = os.path.join(out, "stage2")
         (textops.dedup_retain_over(read_output(spark, s1), mode="window")
@@ -214,22 +191,16 @@ class TrainCorpus:
                 "textops.pack_s": t3 - t2}
 
     def warmup(self, spark: SparkSession) -> None:
+        # every plan of a pass, but one bucket: the buckets' jobs differ
+        # only in a literal, and eight of them would double set-up time
         self._pipeline(spark, self.warm_path,
-                       os.path.join(self.out_root, "warm"))
+                       os.path.join(self.out_root, "warm"), 1)
 
     def full_pass(self, spark: SparkSession) -> int:
         self.stage_times.append(self._pipeline(
-            spark, self.corpus.path, os.path.join(self.out_root, "full")))
+            spark, self.corpus.path, os.path.join(self.out_root, "full"),
+            self.n_buckets))
         return self.corpus.n_docs
-
-    def single_pass(self, spark: SparkSession) -> int:
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-        try:
-            self._pipeline(spark, self.corpus.slice_file,
-                           os.path.join(self.out_root, "single"))
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", str(self.cores))
-        return self.corpus.slice_docs()
 
     def verify(self, spark: SparkSession) -> Tuple[int, List[str]]:
         """The last full pass's packed output against the DuckDB
@@ -254,6 +225,4 @@ class TrainCorpus:
                 for k in self.stage_times[0]}
 
 
-WORKLOADS = {"chunk_hybrid": ChunkHybrid,
-             "export_md_skewed": ExportMdSkewed,
-             "train_corpus": TrainCorpus}
+WORKLOADS = {"chunk_hybrid": ChunkHybrid, "train_corpus": TrainCorpus}
