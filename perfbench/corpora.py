@@ -1,9 +1,8 @@
 """Seeded benchmark inputs, generated once per (workload, seed) and cached.
 
-Every corpus is ``n_files`` parquet files, one read task each: the
-benchmark runs at ``local[n_files]``, so one file is one core's share.
-The last file doubles as the single-task slice the weak-scaling pass
-reads (1/n_files of the same corpus).
+Every corpus is ``n_files`` parquet files, one read task each. The
+last 1/cores of them is the slice the weak-scaling pass reads in a
+single task.
 """
 
 from __future__ import annotations
@@ -41,12 +40,13 @@ class Corpus:
     n_docs: int
     n_bytes: int         # input bytes on disk
 
-    @property
-    def slice_file(self) -> str:
-        return self.files[-1]
+    def slice_files(self, cores: int) -> List[str]:
+        """The last 1/cores of the files."""
+        return self.files[-(len(self.files) // cores):]
 
-    def slice_docs(self) -> int:
-        return pq.ParquetFile(self.slice_file).metadata.num_rows
+    def slice_docs(self, cores: int) -> int:
+        return sum(pq.ParquetFile(f).metadata.num_rows
+                   for f in self.slice_files(cores))
 
 
 def _write_parts(tables: List[pa.Table], path: str) -> None:

@@ -54,12 +54,12 @@ def stage_closure(stage: Callable):
     return stage(_Capture())
 
 
-def read_batches(path: str) -> List[pa.RecordBatch]:
+def read_batches(paths: List[str]) -> List[pa.RecordBatch]:
     """Unsliced batches: ``engine._iter_span_tuples`` reads
     ``spans.values`` whole, so a batch sliced out of a bigger table
     would decode the entire table per batch."""
-    batches = list(pq.ParquetFile(path).iter_batches(
-        batch_size=BATCH_ROWS, columns=["doc_id", "spans"]))
+    batches = [b for path in paths for b in pq.ParquetFile(path).iter_batches(
+        batch_size=BATCH_ROWS, columns=["doc_id", "spans"])]
     for b in batches:
         if b.column("spans").offset != 0:
             raise RuntimeError("sliced batch from iter_batches")
@@ -141,12 +141,12 @@ class Tracer:
                 setattr(obj, attr, fn)
 
 
-def traced_layers(path: str, stage: Callable) -> Dict[str, float]:
+def traced_layers(paths: List[str], stage: Callable) -> Dict[str, float]:
     """Per-layer metrics of one traced pass of ``stage``'s closure over
-    the parquet file ``path``: seconds per 1k docs, share of the traced
-    pass, calls per doc; plus the traced/untraced time ratio and the
-    share of the pass outside every timed call."""
-    batches = read_batches(path)
+    the parquet files ``paths``: seconds per 1k docs, share of the
+    traced pass, calls per doc; plus the traced/untraced time ratio and
+    the share of the pass outside every timed call."""
+    batches = read_batches(paths)
     n_docs = sum(b.num_rows for b in batches)
     fn = stage_closure(stage)
 

@@ -110,6 +110,46 @@ def _tree(root: int) -> list:
     return out
 
 
+def _cpu_ticks(stat_path: str, reaped: bool = True) -> int:
+    try:
+        with open(stat_path) as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+    except OSError:
+        return 0
+    # utime, stime, then cutime, cstime: reaped children
+    return sum(int(x) for x in fields[11:15 if reaped else 13])
+
+
+def _jit_ticks(pid: int) -> int:
+    """CPU ticks of the JVM's JIT compiler threads, which live as long
+    as the JVM."""
+    try:
+        tids = os.listdir(f"/proc/{pid}/task")
+    except OSError:
+        return 0
+    total = 0
+    for tid in tids:
+        try:
+            with open(f"/proc/{pid}/task/{tid}/comm") as f:
+                name = f.read()
+        except OSError:
+            continue
+        if name.startswith(("C1 CompilerThre", "C2 CompilerThre")):
+            total += _cpu_ticks(f"/proc/{pid}/task/{tid}/stat", False)
+    return total
+
+
+def cpu_s() -> float:
+    """CPU seconds used so far by the JVM and every process under it,
+    reaped children included, less the JVM's JIT compiler threads: how
+    much compiling lands inside a pass follows the compiler's timing,
+    not the pass's work."""
+    jvm = SparkContext._gateway.proc.pid
+    ticks = (sum(_cpu_ticks(f"/proc/{pid}/stat") for pid in _tree(jvm))
+             - _jit_ticks(jvm))
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 def peak_rss_mb() -> float:
     """Peak resident memory (VmHWM) of the JVM plus every process under
     it - the Python worker daemon and its forked workers."""

@@ -111,7 +111,7 @@ def test_traced_closure_is_the_engines(tmp_path):
     fn = inproc.stage_closure(ChunkHybrid.stage)
     tr = inproc.Tracer()
     with tr.installed():
-        out = [tuple(r.values()) for b in fn(iter(inproc.read_batches(path)))
+        out = [tuple(r.values()) for b in fn(iter(inproc.read_batches([path])))
                for r in b.to_pylist()]
     assert verify.diff_docs(verify.digest(out),
                             verify.digest(_chunk_rows(4))) == []

@@ -2,8 +2,8 @@
 of their output.
 
 Each workload times full passes over its corpus at local[cores].
-chunk_hybrid also has a single-task pass over the corpus's last file
-(1/cores of it) for the weak-scaling reading of the traced run.
+chunk_hybrid also has a single-task pass over the corpus's last 1/cores
+for the weak-scaling reading of the traced run.
 """
 
 from __future__ import annotations
@@ -60,12 +60,19 @@ class ChunkHybrid:
 
     kind = "chunk"
     n_docs = 1000
-    # start-ups per run; setup_s is their median
-    setup_reps = 2
+    # read tasks per core: with several, a core slowed by a neighbour
+    # takes fewer tasks instead of holding up the whole pass
+    files_per_core = 4
+    # untimed passes after set-up: the JVM is still compiling the Arrow
+    # paths and the pass time is still falling
+    settle_passes = 2
+    max_passes = None
 
     def __init__(self, work: str, seed: int, cores: int) -> None:
         self.work, self.seed, self.cores = work, seed, cores
-        self.corpus = corpora.span_corpus(work, seed, self.n_docs, cores)
+        self.corpus = corpora.span_corpus(work, seed, self.n_docs,
+                                          cores * self.files_per_core)
+        self.warm_path = _warm_input(self.corpus, 16)
 
     @staticmethod
     def stage(df):
@@ -80,15 +87,16 @@ class ChunkHybrid:
                     doc, tokenizer=RegexTokenizer(64), merge_peers=True))]
 
     def warmup(self, spark: SparkSession) -> None:
-        self.full_pass(spark)
+        _noop(self.stage(spark.read.parquet(self.warm_path)))
 
     def full_pass(self, spark: SparkSession) -> int:
         _noop(self.stage(spark.read.parquet(self.corpus.path)))
         return self.corpus.n_docs
 
     def single_pass(self, spark: SparkSession) -> int:
-        _noop(self.stage(spark.read.parquet(self.corpus.slice_file)))
-        return self.corpus.slice_docs()
+        _noop(self.stage(spark.read.parquet(
+            *self.corpus.slice_files(self.cores)).coalesce(1)))
+        return self.corpus.slice_docs(self.cores)
 
     def sample_ids(self) -> List[str]:
         rng = random.Random(self.seed * 7919 + 1)
@@ -113,8 +121,9 @@ class ChunkHybrid:
         return len(ids), verify.diff_docs(got, verify.digest(want_rows))
 
     def layers(self) -> Dict[str, float]:
-        """In-process layers over the first corpus file."""
-        return inproc.traced_layers(self.corpus.files[0], self.stage)
+        """In-process layers over the corpus's first 1/cores."""
+        return inproc.traced_layers(
+            self.corpus.files[:self.files_per_core], self.stage)
 
 
 def _oracle_sql(path: str) -> str:
@@ -156,8 +165,11 @@ class TrainCorpus:
     # of the full-size job would not fit the benchmark's time budget
     n_copies = 4
     n_buckets = 8
-    # one start-up per run: a train_corpus start-up costs 20-30 s
-    setup_reps = 1
+    # the set-up pass already runs all 67 Spark jobs of a pass, on a
+    # small input. One timed pass per run: a pass takes 8-25 s, so a
+    # second one would not fit the benchmark's time budget
+    settle_passes = 0
+    max_passes = 1
 
     def __init__(self, work: str, seed: int, cores: int) -> None:
         self.work, self.seed, self.cores = work, seed, cores
@@ -191,10 +203,8 @@ class TrainCorpus:
                 "textops.pack_s": t3 - t2}
 
     def warmup(self, spark: SparkSession) -> None:
-        # every plan of a pass, but one bucket: the buckets' jobs differ
-        # only in a literal, and eight of them would double set-up time
         self._pipeline(spark, self.warm_path,
-                       os.path.join(self.out_root, "warm"), 1)
+                       os.path.join(self.out_root, "warm"), self.n_buckets)
 
     def full_pass(self, spark: SparkSession) -> int:
         self.stage_times.append(self._pipeline(
@@ -219,10 +229,10 @@ class TrainCorpus:
         return self.corpus.n_docs, verify.diff_docs(got, want)
 
     def layers(self) -> Dict[str, float]:
-        """Stage wall times, median over the full passes run; the
+        """Stage wall times, median over the timed full passes; the
         per-document Python layers do not run in this workload."""
-        return {k: statistics.median(p[k] for p in self.stage_times)
-                for k in self.stage_times[0]}
+        timed = self.stage_times[self.settle_passes:]
+        return {k: statistics.median(p[k] for p in timed) for k in timed[0]}
 
 
 WORKLOADS = {"chunk_hybrid": ChunkHybrid, "train_corpus": TrainCorpus}
