@@ -1,28 +1,53 @@
-"""Spark-side document pipeline: synthesis, chunking, exports.
+"""Spark-side document pipeline: synthesis, chunking, exports, and the
+per-row Arrow stage runner.
 
 Architecture (SURVEY §7.0): the input table is one row per document
-(``doc_id``, ``spans`` array). All per-document tree logic is fused into
-single ``mapInPandas`` stages - Arrow crosses the JVM/Python boundary
-once each way per batch, there is NO shuffle in the chunking path at
-all (the data is already per-document), and Catalyst keeps projection
-pruning because we select only the columns the UDF needs.
+(``doc_id``, ``spans`` array). All per-document work is Python over
+Arrow batches inside single ``mapInArrow`` stages - Arrow crosses the
+JVM/Python boundary once each way per batch, there is NO shuffle in the
+chunking path at all (the data is already per-document), and Catalyst
+keeps projection pruning because each stage selects only the columns it
+reads.
+
+``map_rows`` is the one way to write a per-row stage. It selects the
+stage's input columns and runs one ``mapInArrow``: a per-task factory
+runs once per Python task (lazy imports, tokenizers) and returns a row
+function, which is called on every input row (a ``spans`` column arrives
+as ``[(kind, text, media_ref, offset)]`` tuples) and returns 0..n output
+rows. Output batches are built column-wise with Arrow types taken from
+the declared Spark schema; a ``spans`` output column is packed from flat
+child arrays.
+
+Stages that stay hand-written, because they carry state or I/O the
+runner has no switch for:
+
+* ``rehome`` (5 stages): payload joins and witness batches;
+* ``mediaops`` (4 stages): ``mapInPandas`` over binary media;
+* ``extraction.layout_spark`` ``extract_layout_packed``,
+  ``extract_layout_packed_files`` and ``extract_layout_shards``: a
+  document carried across batches in partition order, and shard file
+  writes;
+* ``io.ingest._remote_streams``: network I/O;
+* ``pdfpage.synth_pdf_cells``: page cells appended straight into the
+  column buffers its single-process oracle shares;
+* ``textops.embedding_top_pairs``: grouped ``applyInPandas``.
 
 Scale design:
 * generation/chunking are embarrassingly parallel over rows; cost skew
   from mega-documents is defused by ``repartition(n)`` round-robin
-  before the UDF (cheap vs. the UDF cost) plus small Arrow batches.
-* output explodes to one row per chunk inside the UDF (no
+  before the stage (cheap vs. the stage cost) plus small Arrow batches.
+* output explodes to one row per chunk inside the stage (no
   posexplode shuffle afterwards).
-* resumability (north rule) is snapshot-style: ``run_resumable`` writes
-  per-partition parquet + a lineage table and anti-joins already-done
-  doc_ids on restart (see io/checkpoint.py).
+* resumability (north rule): ``run_resumable`` splits the input into
+  doc_id hash buckets, commits each bucket's output with a lineage
+  slice, and on restart skips every bucket that already has lineage
+  (see io/checkpoint.py).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
-
-import pandas as pd
+from itertools import accumulate
+from typing import Callable, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -80,50 +105,104 @@ SPAN_STATS_SCHEMA = StructType([
 
 
 # ----------------------------------------------------------------------
+# the per-row Arrow stage runner
+# ----------------------------------------------------------------------
+
+def map_rows(df: DataFrame, in_cols: Sequence[str],
+             schema: Union[StructType, str],
+             task: Callable[[], Callable[..., list]]) -> DataFrame:
+    """``df.select(*in_cols)`` -> one mapInArrow stage emitting ``schema``
+    (a StructType or a DDL string).
+
+    ``task()`` runs once per Python task and returns the row function.
+    That function takes one argument per input column and returns a
+    list of output row tuples in ``schema`` column order."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches):
+        row_fn = task()
+        for batch in batches:
+            rows: list = []
+            for args in _iter_span_tuples(batch):
+                rows.extend(row_fn(*args))
+            yield _chunk_record_batch(rows, arrow_schema)
+
+    return df.select(*in_cols).mapInArrow(run, schema)
+
+
+def _iter_span_tuples(batch):
+    """RecordBatch -> one tuple per row, in column order. A ``spans``
+    column decodes to [(kind, text, media_ref, offset)] lists through
+    its Arrow child arrays - no per-struct dict materialization.
+    (Named for its first use; perfbench/inproc.py times it by name.)"""
+    cols = []
+    for name, col in zip(batch.schema.names, batch.columns):
+        if name != "spans":
+            cols.append(col.to_pylist())
+            continue
+        values = col.values
+        kinds = values.field("kind").to_pylist()
+        texts = values.field("text").to_pylist()
+        mrefs = values.field("media_ref").to_pylist()
+        offs = values.field("offset").to_pylist()
+        bounds = col.offsets.to_pylist()
+        cols.append([list(zip(kinds[a:b], texts[a:b], mrefs[a:b],
+                              offs[a:b]))
+                     for a, b in zip(bounds, bounds[1:])])
+    return zip(*cols)
+
+
+def _chunk_record_batch(rows: list, schema):
+    """Output row tuples -> one RecordBatch of exactly ``schema``
+    (a pyarrow schema), built column-wise. (Named for the chunk
+    stages; perfbench/inproc.py times it by name.)"""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [_pack_spans(col, f.type) if f.name == "spans"
+         else pa.array(col, f.type) for col, f in zip(cols, schema)],
+        schema=schema)
+
+
+def _pack_spans(docs, list_type):
+    """Per-row lists of span dicts -> a list<struct> column, packed from
+    one flat child array per struct field."""
+    import pyarrow as pa
+
+    struct_type = list_type.value_type
+    flat = [s for spans in docs for s in spans]
+    bounds = pa.array([0, *accumulate(map(len, docs))], pa.int32())
+    children = [pa.array([s[f.name] for s in flat], f.type)
+                for f in struct_type]
+    return pa.ListArray.from_arrays(
+        bounds, pa.StructArray.from_arrays(children,
+                                           fields=list(struct_type)),
+        type=list_type)
+
+
+# ----------------------------------------------------------------------
 def synth_documents(spark: SparkSession, n_docs: int, seed: int = 42,
                     mega_every: Optional[int] = None,
                     partitions: Optional[int] = None) -> DataFrame:
     """Deterministic distributed corpus: each executor generates its
     docs purely from (seed, index) - no driver materialization, no
     shuffle, linear scale-out."""
-    import pyarrow as pa
-
     n_parts = partitions or spark.sparkContext.defaultParallelism
 
-    def gen(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    def task():
         from docling_core_spark.corpus import gen_doc_spans
-        for batch in batches:
-            doc_ids = []
-            kinds, texts, mrefs, offs = [], [], [], []
-            bounds = [0]
-            for i in batch.column("id").to_pylist():
-                i = int(i)
-                doc_ids.append(f"doc_{i:012d}")
-                for s in gen_doc_spans(i, seed=seed, mega_every=mega_every):
-                    kinds.append(s["kind"])
-                    texts.append(s["text"])
-                    mrefs.append(s["media_ref"])
-                    offs.append(s["offset"])
-                bounds.append(len(kinds))
-            struct = pa.StructArray.from_arrays(
-                [pa.array(kinds, pa.string()),
-                 pa.array(texts, pa.string()),
-                 pa.array(mrefs, pa.string()),
-                 pa.array(offs, pa.int32())],
-                names=["kind", "text", "media_ref", "offset"])
-            spans = pa.ListArray.from_arrays(pa.array(bounds, pa.int32()),
-                                             struct)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, pa.string()), spans],
-                names=["doc_id", "spans"])
 
-    return (spark.range(0, n_docs, numPartitions=n_parts)
-            .mapInArrow(gen, schema=DOCUMENTS_SCHEMA))
+        return lambda i: [(f"doc_{i:012d}", gen_doc_spans(
+            i, seed=seed, mega_every=mega_every))]
 
-
-def _rows_to_tuples(spans) -> list:
-    return [(s["kind"], s["text"], s["media_ref"], int(s["offset"]))
-            for s in spans]
+    return map_rows(spark.range(0, n_docs, numPartitions=n_parts),
+                    ("id",), DOCUMENTS_SCHEMA, task)
 
 
 def _origin_struct(doc) -> Optional[dict]:
@@ -136,45 +215,45 @@ def _origin_struct(doc) -> Optional[dict]:
             "filename": doc.origin["filename"]}
 
 
-_ORIGIN_PA = None
+def _chunker(mode: str, max_tokens: int, merge_peers: bool = True):
+    """The chunk-mode dispatch every chunk stage shares: Doc -> chunks
+    for ``mode`` ("hybrid", "page", anything else hierarchical). Call
+    it once per task: it imports lazily and builds the tokenizer."""
+    if mode == "hybrid":
+        from docling_core_spark.chunking.hybrid import hybrid_chunk
+        from docling_core_spark.chunking.tokenizer import RegexTokenizer
+
+        tok = RegexTokenizer(max_tokens)
+        return lambda doc: hybrid_chunk(doc, tokenizer=tok,
+                                        merge_peers=merge_peers)
+    if mode == "page":
+        from docling_core_spark.chunking.page import page_chunk
+
+        return page_chunk
+    from docling_core_spark.chunking.hierarchical import hierarchical_chunk
+
+    return hierarchical_chunk
 
 
-def _chunk_record_batch(ids, idxs, txts, heads, refs, origins):
-    """Arrow-native chunk batch build (shared by every chunk stage)."""
-    import pyarrow as pa
+def _chunk_task(mode: str, max_tokens: int, merge_peers: bool,
+                to_spans=None):
+    """Per-task factory of the chunk-row function: (doc_id, spans) ->
+    CHUNKS_SCHEMA rows. With ``to_spans`` the second column is a
+    payload string that ``to_spans`` parses to span dicts first."""
+    def task():
+        from docling_core_spark.model.spans import doc_from_spans, span_tuples
 
-    global _ORIGIN_PA
-    if _ORIGIN_PA is None:
-        _ORIGIN_PA = pa.struct([("mimetype", pa.string()),
-                                ("binary_hash", pa.string()),
-                                ("filename", pa.string())])
-    return pa.RecordBatch.from_arrays([
-        pa.array(ids, pa.string()),
-        pa.array(idxs, pa.int32()),
-        pa.array(txts, pa.string()),
-        pa.array(heads, pa.list_(pa.string())),
-        pa.array(refs, pa.list_(pa.int32())),
-        pa.array(origins, _ORIGIN_PA),
-    ], names=["doc_id", "chunk_idx", "text", "headings", "span_refs",
-              "origin"])
+        chunk = _chunker(mode, max_tokens, merge_peers)
 
-
-# ----------------------------------------------------------------------
-def _iter_span_tuples(batch):
-    """RecordBatch(doc_id, spans) -> (doc_id, [(kind,text,mref,off)])
-    via Arrow child arrays - avoids per-struct dict materialization."""
-    doc_ids = batch.column("doc_id").to_pylist()
-    spans_col = batch.column("spans")
-    values = spans_col.values
-    kinds = values.field("kind").to_pylist()
-    texts = values.field("text").to_pylist()
-    mrefs = values.field("media_ref").to_pylist()
-    offs = values.field("offset").to_pylist()
-    bounds = spans_col.offsets.to_pylist()
-    for i, doc_id in enumerate(doc_ids):
-        a, b = bounds[i], bounds[i + 1]
-        yield doc_id, list(zip(kinds[a:b], texts[a:b], mrefs[a:b],
-                               offs[a:b]))
+        def row(doc_id, spans):
+            if to_spans is not None:
+                doc_id, spans = str(doc_id), span_tuples(to_spans(spans))
+            doc = doc_from_spans(doc_id, spans)
+            org = _origin_struct(doc)
+            return [(doc_id, ci, c.text, c.headings, c.offsets, org)
+                    for ci, c in enumerate(chunk(doc))]
+        return row
+    return task
 
 
 def chunk_documents(df: DataFrame, mode: str = "hybrid",
@@ -187,46 +266,14 @@ def chunk_documents(df: DataFrame, mode: str = "hybrid",
     explode, per Arrow batch. Zero shuffles; both boundaries stay in
     Arrow (no pandas object columns - the output explode produces ~30x
     more rows than docs, so the Arrow-native array build matters)."""
-    import pyarrow as pa
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from docling_core_spark.chunking.hierarchical import hierarchical_chunk
-        from docling_core_spark.chunking.hybrid import hybrid_chunk
-        from docling_core_spark.chunking.page import page_chunk
-        from docling_core_spark.chunking.tokenizer import RegexTokenizer
-        from docling_core_spark.model.spans import doc_from_spans
-
-        tok = RegexTokenizer(max_tokens)
-        for batch in batches:
-            ids, idxs, txts, heads, refs, origins = [], [], [], [], [], []
-            for doc_id, tuples in _iter_span_tuples(batch):
-                doc = doc_from_spans(doc_id, tuples)
-                if mode == "hybrid":
-                    chunks = hybrid_chunk(doc, tokenizer=tok,
-                                          merge_peers=merge_peers)
-                elif mode == "page":
-                    chunks = page_chunk(doc)
-                else:
-                    chunks = hierarchical_chunk(doc)
-                org = _origin_struct(doc)
-                for ci, c in enumerate(chunks):
-                    ids.append(doc_id)
-                    idxs.append(ci)
-                    txts.append(c.text)
-                    heads.append(c.headings)
-                    refs.append(c.offsets)
-                    origins.append(org)
-            yield _chunk_record_batch(ids, idxs, txts, heads, refs,
-                                      origins)
-
-    out = df.select("doc_id", "spans")
     if salt_partitions:
         # round-robin repartition: when upstream partitioning is skewed
         # (few huge files, or a groupBy that emitted mega-documents),
         # this rebalances rows across tasks; the chunker itself is
         # per-row so any partitioning is semantically identical
-        out = out.repartition(salt_partitions)
-    return out.mapInArrow(run, schema=CHUNKS_SCHEMA)
+        df = df.select("doc_id", "spans").repartition(salt_partitions)
+    return map_rows(df, ("doc_id", "spans"), CHUNKS_SCHEMA,
+                    _chunk_task(mode, max_tokens, merge_peers))
 
 
 # ----------------------------------------------------------------------
@@ -245,45 +292,8 @@ def parse_and_chunk(df: DataFrame, to_spans, text_col: str,
     and each runner level forks its own worker pool. Per-row sequential
     transforms belong in one UDF; only relational ops (joins, aggs) need
     plan-level composition. Measured ~2x on doctags->chunks at sf0.1."""
-    import pyarrow as pa
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from docling_core_spark.chunking.hierarchical import (
-            hierarchical_chunk,
-        )
-        from docling_core_spark.chunking.hybrid import hybrid_chunk
-        from docling_core_spark.chunking.page import page_chunk
-        from docling_core_spark.chunking.tokenizer import RegexTokenizer
-        from docling_core_spark.model.spans import doc_from_spans
-
-        tok = RegexTokenizer(max_tokens)
-        for batch in batches:
-            doc_ids = batch.column(id_col).to_pylist()
-            payloads = batch.column(text_col).to_pylist()
-            ids, idxs, txts, heads, refs, origins = [], [], [], [], [], []
-            for doc_id, payload in zip(doc_ids, payloads):
-                tuples = [(s["kind"], s["text"], s["media_ref"],
-                           s["offset"]) for s in to_spans(payload)]
-                doc = doc_from_spans(str(doc_id), tuples)
-                if mode == "hybrid":
-                    chunks = hybrid_chunk(doc, tokenizer=tok,
-                                          merge_peers=merge_peers)
-                elif mode == "page":
-                    chunks = page_chunk(doc)
-                else:
-                    chunks = hierarchical_chunk(doc)
-                org = _origin_struct(doc)
-                for ci, c in enumerate(chunks):
-                    ids.append(str(doc_id))
-                    idxs.append(ci)
-                    txts.append(c.text)
-                    heads.append(c.headings)
-                    refs.append(c.offsets)
-                    origins.append(org)
-            yield _chunk_record_batch(ids, idxs, txts, heads, refs,
-                                      origins)
-
-    return df.select(id_col, text_col).mapInArrow(run, schema=CHUNKS_SCHEMA)
+    return map_rows(df, (id_col, text_col), CHUNKS_SCHEMA,
+                    _chunk_task(mode, max_tokens, merge_peers, to_spans))
 
 
 # ----------------------------------------------------------------------
@@ -294,9 +304,7 @@ def export_documents(df: DataFrame, fmt: str = "md",
     html, json, yaml}. json/yaml are the reference's DoclingDocument
     schema - the interop sinks (S2/S3); sources/docjson.py is the
     matching source."""
-    import pyarrow as pa
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    def task():
         from docling_core_spark.model.spans import doc_from_spans
         from docling_core_spark.serializers.docjson import (
             export_to_docjson_str,
@@ -320,19 +328,10 @@ def export_documents(df: DataFrame, fmt: str = "md",
                   d, split_page_view=True, **k),
               "json": export_to_docjson_str,
               "yaml": export_to_docyaml_str}[fmt]
-        for batch in batches:
-            ids, txts = [], []
-            for doc_id, tuples in _iter_span_tuples(batch):
-                doc = doc_from_spans(doc_id, tuples)
-                ids.append(doc_id)
-                txts.append(fn(doc, **kw))
-            yield pa.RecordBatch.from_arrays([
-                pa.array(ids, pa.string()),
-                pa.array([fmt] * len(ids), pa.string()),
-                pa.array(txts, pa.string()),
-            ], names=["doc_id", "fmt", "text"])
+        return lambda doc_id, spans: [
+            (doc_id, fmt, fn(doc_from_spans(doc_id, spans), **kw))]
 
-    return df.select("doc_id", "spans").mapInArrow(run, schema=EXPORTS_SCHEMA)
+    return map_rows(df, ("doc_id", "spans"), EXPORTS_SCHEMA, task)
 
 
 # ----------------------------------------------------------------------
@@ -353,30 +352,15 @@ def contextualize_chunks(chunks: DataFrame, delim: str = "\n"
 def doc_stats(df: DataFrame, mode: str = "hybrid", max_tokens: int = 64
               ) -> DataFrame:
     """Per-doc span/chunk/char counts - cheap lineage-style metrics."""
-    import pyarrow as pa
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from docling_core_spark.chunking.hierarchical import hierarchical_chunk
-        from docling_core_spark.chunking.hybrid import hybrid_chunk
-        from docling_core_spark.chunking.tokenizer import RegexTokenizer
+    def task():
         from docling_core_spark.model.spans import doc_from_spans
-        tok = RegexTokenizer(max_tokens)
-        for batch in batches:
-            ids, nspans, nchunks, nchars = [], [], [], []
-            for doc_id, tuples in _iter_span_tuples(batch):
-                doc = doc_from_spans(doc_id, tuples)
-                chunks = (hybrid_chunk(doc, tokenizer=tok) if mode == "hybrid"
-                          else hierarchical_chunk(doc))
-                ids.append(doc_id)
-                nspans.append(len(tuples))
-                nchunks.append(len(chunks))
-                nchars.append(sum(len(c.text) for c in chunks))
-            yield pa.RecordBatch.from_arrays([
-                pa.array(ids, pa.string()),
-                pa.array(nspans, pa.int32()),
-                pa.array(nchunks, pa.int32()),
-                pa.array(nchars, pa.int64()),
-            ], names=["doc_id", "n_spans", "n_chunks", "n_chars"])
 
-    return df.select("doc_id", "spans").mapInArrow(run,
-                                                   schema=SPAN_STATS_SCHEMA)
+        chunk = _chunker(mode, max_tokens)
+
+        def row(doc_id, spans):
+            chunks = chunk(doc_from_spans(doc_id, spans))
+            return [(doc_id, len(spans), len(chunks),
+                     sum(len(c.text) for c in chunks))]
+        return row
+
+    return map_rows(df, ("doc_id", "spans"), SPAN_STATS_SCHEMA, task)

@@ -69,6 +69,8 @@ from __future__ import annotations
 
 from typing import Dict, Iterable, List, Optional, Sequence, Tuple
 
+from docling_core_spark.model.spans import span_tuples
+
 # ---------------------------------------------------------------------
 # geometry constants (the "printer")
 # ---------------------------------------------------------------------
@@ -441,8 +443,7 @@ def render_layout_cells(doc_id: str,
                         ) -> List[Cell]:
     """Print the document: one word cell per word (code: one cell per
     line), chrome on every page. Pure function of its inputs."""
-    tup = [(s["kind"], s["text"], s["media_ref"], s["offset"])
-           if isinstance(s, dict) else tuple(s) for s in spans]
+    tup = span_tuples(spans)
     blocks, headers, footers = _spans_to_blocks(tup)
     cells: List[Cell] = []
     idx = 0
@@ -852,8 +853,7 @@ def project_for_layout(spans: Sequence) -> List[Row]:
     """Which spans survive the print round trip, in normal form -
     computed straight from the source sequence. Accepts span dicts or
     tuples."""
-    tup = [(s["kind"], s["text"], s["media_ref"], s["offset"])
-           if isinstance(s, dict) else tuple(s) for s in spans]
+    tup = span_tuples(spans)
 
     blocks: List[Block] = []
     stack_depth = 0

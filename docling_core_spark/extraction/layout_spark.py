@@ -47,6 +47,8 @@ from typing import Iterator, List
 
 from pyspark.sql import DataFrame, SparkSession
 
+from docling_core_spark.engine import map_rows
+
 # bump when the print dialect or extractor semantics change
 LAYOUT_VERSION = 3
 
@@ -76,53 +78,30 @@ STATS_SCHEMA = ("doc_id string, n_pages int, n_cells int, "
                 "n_chrome_cells int, n_lines int, n_blocks int, "
                 "n_spans int, content_chars long")
 
-def _pages_batch(rows: List[tuple]):
-    """rows: [(doc_id, page_no, texts, fonts, xs0, ys0, xs1, ys1)]."""
-    import pyarrow as pa
-
-    return pa.RecordBatch.from_arrays(
-        [pa.array([r[0] for r in rows], pa.string()),
-         pa.array([r[1] for r in rows], pa.int32()),
-         pa.array([r[2] for r in rows], pa.string()),
-         pa.array([r[3] for r in rows], pa.list_(pa.int8())),
-         pa.array([r[4] for r in rows], pa.list_(pa.float64())),
-         pa.array([r[5] for r in rows], pa.list_(pa.float64())),
-         pa.array([r[6] for r in rows], pa.list_(pa.float64())),
-         pa.array([r[7] for r in rows], pa.list_(pa.float64()))],
-        names=["doc_id", "page_no", "texts", "fonts",
-               "xs0", "ys0", "xs1", "ys1"])
-
-
 def render_layout(docs: DataFrame) -> DataFrame:
     """(doc_id, spans) -> packed page rows: the print source."""
-    def run(batches: Iterator) -> Iterator:
+    def task():
         from docling_core_spark.extraction.layout import (
             FONT_INDEX,
             TEXT_SEP,
             render_layout_cells,
         )
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            spans = batch.column("spans").to_pylist()
-            rows: List[tuple] = []
-            for d, s in zip(doc_ids, spans):
-                pages = {}
-                for c in render_layout_cells(d, s):
-                    pages.setdefault(c["page_no"], []).append(c)
-                for p in sorted(pages):
-                    cs = pages[p]
-                    rows.append((
-                        d, p,
-                        TEXT_SEP.join(c["text"] for c in cs),
-                        [FONT_INDEX[c["font"]] for c in cs],
-                        [c["x0"] for c in cs],
-                        [c["y0"] for c in cs],
-                        [c["x1"] for c in cs],
-                        [c["y1"] for c in cs]))
-            if rows:
-                yield _pages_batch(rows)
 
-    return docs.select("doc_id", "spans").mapInArrow(run, CELLS_SCHEMA)
+        def row(d, spans):
+            pages = {}
+            for c in render_layout_cells(d, spans):
+                pages.setdefault(c["page_no"], []).append(c)
+            return [(d, p,
+                     TEXT_SEP.join(c["text"] for c in cs),
+                     [FONT_INDEX[c["font"]] for c in cs],
+                     [c["x0"] for c in cs],
+                     [c["y0"] for c in cs],
+                     [c["x1"] for c in cs],
+                     [c["y1"] for c in cs])
+                    for p, cs in sorted(pages.items())]
+        return row
+
+    return map_rows(docs, ("doc_id", "spans"), CELLS_SCHEMA, task)
 
 
 def _parse_cell_batches(batches: Iterator) -> Iterator:
@@ -590,33 +569,20 @@ def layout_stats(docs: DataFrame) -> DataFrame:
     """Fused print+parse per document -> accounting rows (zero
     shuffle; every doc yields a row, even all-media docs that print
     nothing)."""
-    import pyarrow as pa
-
-    def run(batches: Iterator) -> Iterator:
+    def task():
         from docling_core_spark.extraction.layout import (
             extract_layout_spans,
             render_layout_cells,
         )
-        keys = ("n_pages", "n_cells", "n_chrome_cells", "n_lines",
-                "n_blocks", "n_spans", "content_chars")
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            spans = batch.column("spans").to_pylist()
-            out = {k: [] for k in ("doc_id",) + keys}
-            for d, s in zip(doc_ids, spans):
-                _rows, st = extract_layout_spans(
-                    render_layout_cells(d, s))
-                out["doc_id"].append(d)
-                for k in keys:
-                    out[k].append(st[k])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out["doc_id"], pa.string())]
-                + [pa.array(out[k],
-                            pa.int64() if k == "content_chars"
-                            else pa.int32()) for k in keys],
-                names=["doc_id"] + list(keys))
 
-    return docs.select("doc_id", "spans").mapInArrow(run, STATS_SCHEMA)
+        def row(d, spans):
+            _rows, st = extract_layout_spans(render_layout_cells(d, spans))
+            return [(d, st["n_pages"], st["n_cells"], st["n_chrome_cells"],
+                     st["n_lines"], st["n_blocks"], st["n_spans"],
+                     st["content_chars"])]
+        return row
+
+    return map_rows(docs, ("doc_id", "spans"), STATS_SCHEMA, task)
 
 
 # ----------------------------------------------------------------------

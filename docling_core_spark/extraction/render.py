@@ -45,7 +45,7 @@ from docling_core_spark.model.doc import (
 )
 from docling_core_spark.model.kv import parse_kv
 from docling_core_spark.model.otsl import parse_otsl
-from docling_core_spark.model.spans import doc_from_spans
+from docling_core_spark.model.spans import doc_from_spans, span_tuples
 
 _CHROME_WORDS = (
     "home about contact privacy terms careers press blog archive "
@@ -407,12 +407,10 @@ def _chrome_script(rng: random.Random) -> str:
             "</script>")
 
 
-def render_page_html(doc_id: str, spans: Iterable[dict],
+def render_page_html(doc_id: str, spans: Iterable,
                      chrome_seed: int = 7) -> str:
-    """Span rows -> one full deterministic HTML page."""
-    span_tuples = [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                   for s in spans]
-    doc = doc_from_spans(doc_id, span_tuples)
+    """Span tuples (or dicts) -> one full deterministic HTML page."""
+    doc = doc_from_spans(doc_id, span_tuples(spans))
     rng = random.Random((zlib.crc32(doc_id.encode()) << 8) ^ chrome_seed)
 
     r = _PageRenderer(doc)

@@ -18,9 +18,10 @@ scan -> extract stage only, not page synthesis.
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from docling_core_spark.engine import map_rows
 
 # bump when the renderer's page dialect or chrome changes
 PAGES_VERSION = 2
@@ -28,24 +29,13 @@ PAGES_VERSION = 2
 
 def render_pages(docs: DataFrame) -> DataFrame:
     """(doc_id, spans) -> (doc_id, html): the synthetic page source."""
-    import pyarrow as pa
-
-    schema = pa.schema([("doc_id", pa.string()), ("html", pa.string())])
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    def task():
         from docling_core_spark.extraction.render import render_page_html
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            spans = batch.column("spans").to_pylist()
-            htmls = [render_page_html(d, s)
-                     for d, s in zip(doc_ids, spans)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, pa.string()),
-                 pa.array(htmls, pa.string())],
-                schema=schema)
 
-    return docs.select("doc_id", "spans").mapInArrow(
-        run, "doc_id string, html string")
+        return lambda d, spans: [(d, render_page_html(d, spans))]
+
+    return map_rows(docs, ("doc_id", "spans"), "doc_id string, html string",
+                    task)
 
 
 def extract_pages(pages: DataFrame, html_col: str = "html",
@@ -57,74 +47,39 @@ def extract_pages(pages: DataFrame, html_col: str = "html",
     UDF (few huge crawl files, or mega-pages clustered in one split) -
     same defusal as engine.chunk_documents; extraction is per-row, so
     any partitioning is semantically identical."""
-    import pyarrow as pa
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    def task():
         from docling_core_spark.extraction.extract import extract_spans
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            htmls = batch.column(html_col).to_pylist()
-            out_doc, ords, kinds, texts, mrefs = [], [], [], [], []
-            for d, h in zip(doc_ids, htmls):
-                rows, _ = extract_spans(h or "")
-                for r in rows:
-                    out_doc.append(d)
-                    ords.append(r["offset"])
-                    kinds.append(r["kind"])
-                    texts.append(r["text"])
-                    mrefs.append(r["media_ref"])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_doc, pa.string()),
-                 pa.array(ords, pa.int32()),
-                 pa.array(kinds, pa.string()),
-                 pa.array(texts, pa.string()),
-                 pa.array(mrefs, pa.string())],
-                names=["doc_id", "ord", "kind", "text", "media_ref"])
 
-    sel = pages.select("doc_id", html_col)
+        return lambda d, h: [
+            (d, r["offset"], r["kind"], r["text"], r["media_ref"])
+            for r in extract_spans(h or "")[0]]
+
     if salt_partitions:
-        sel = sel.repartition(salt_partitions)
-    return sel.mapInArrow(
-        run, "doc_id string, ord int, kind string, text string, "
-             "media_ref string")
+        pages = pages.select("doc_id", html_col).repartition(
+            salt_partitions)
+    return map_rows(pages, ("doc_id", html_col),
+                    "doc_id string, ord int, kind string, text string, "
+                    "media_ref string", task)
 
 
 def extract_page_stats(pages: DataFrame, html_col: str = "html"
                        ) -> DataFrame:
     """(doc_id, html) -> per-page boilerplate stats."""
-    import pyarrow as pa
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    def task():
         from docling_core_spark.extraction.extract import extract_spans
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            htmls = batch.column(html_col).to_pylist()
-            cols = {"doc_id": [], "page_chars": [], "content_chars": [],
-                    "n_dropped": [], "main_found": [],
-                    "content_ratio": []}
-            for d, h in zip(doc_ids, htmls):
-                _, st = extract_spans(h or "")
-                cols["doc_id"].append(d)
-                cols["page_chars"].append(st["page_chars"])
-                cols["content_chars"].append(st["content_chars"])
-                cols["n_dropped"].append(st["n_dropped"])
-                cols["main_found"].append(st["main_found"])
-                ratio = (st["content_chars"] / st["page_chars"]
-                         if st["page_chars"] else 0.0)
-                cols["content_ratio"].append(round(ratio, 6))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols["doc_id"], pa.string()),
-                 pa.array(cols["page_chars"], pa.int64()),
-                 pa.array(cols["content_chars"], pa.int64()),
-                 pa.array(cols["n_dropped"], pa.int32()),
-                 pa.array(cols["main_found"], pa.int32()),
-                 pa.array(cols["content_ratio"], pa.float64())],
-                names=["doc_id", "page_chars", "content_chars",
-                       "n_dropped", "main_found", "content_ratio"])
 
-    return pages.select("doc_id", html_col).mapInArrow(
-        run, "doc_id string, page_chars long, content_chars long, "
-             "n_dropped int, main_found int, content_ratio double")
+        def row(d, h):
+            _, st = extract_spans(h or "")
+            ratio = (st["content_chars"] / st["page_chars"]
+                     if st["page_chars"] else 0.0)
+            return [(d, st["page_chars"], st["content_chars"],
+                     st["n_dropped"], st["main_found"], round(ratio, 6))]
+        return row
+
+    return map_rows(pages, ("doc_id", html_col),
+                    "doc_id string, page_chars long, content_chars long, "
+                    "n_dropped int, main_found int, content_ratio double",
+                    task)
 
 
 # ----------------------------------------------------------------------

@@ -324,47 +324,28 @@ def ingest_spans(streams: DataFrame) -> DataFrame:
     media_ref). The Python stage emits the PACKED per-doc shape and
     the unpack runs JVM-side (layout_spark.unpack_spans_flat), so the
     Arrow boundary carries ~3 string values per document."""
-    import pyarrow as pa
-
+    from docling_core_spark.engine import map_rows
     from docling_core_spark.extraction.layout import TEXT_SEP
     from docling_core_spark.extraction.layout_spark import (
         PACKED_SPANS_SCHEMA,
         unpack_spans_flat,
     )
 
-    def run(batches: Iterator) -> Iterator:
-        def clean(s: str) -> str:
-            # arbitrary ingested files may contain the packing
-            # separator (U+001F) in their text; passing it through
-            # would silently shift every later span's boundary at
-            # unpack. Strip it - it is a non-printing control char
-            # with no content meaning.
-            return s.replace(TEXT_SEP, "") if TEXT_SEP in s else s
+    def clean(s: str) -> str:
+        # arbitrary ingested files may contain the packing separator
+        # (U+001F) in their text; passing it through would silently
+        # shift every later span's boundary at unpack. Strip it - it is
+        # a non-printing control char with no content meaning.
+        return s.replace(TEXT_SEP, "") if TEXT_SEP in s else s
 
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            names = batch.column("name").to_pylist()
-            fmts = batch.column("fmt").to_pylist()
-            contents = batch.column("content").to_pylist()
-            rows = []
-            for d, nm, fmt, data in zip(doc_ids, names, fmts, contents):
-                spans = spans_from_stream(nm, fmt, data or b"")
-                rows.append((
-                    d,
-                    list(range(len(spans))),
-                    TEXT_SEP.join(clean(s["kind"]) for s in spans),
-                    TEXT_SEP.join(clean(s.get("text", ""))
-                                  for s in spans),
-                    TEXT_SEP.join(clean(s.get("media_ref", ""))
-                                  for s in spans)))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([r[0] for r in rows], pa.string()),
-                 pa.array([r[1] for r in rows], pa.list_(pa.int32())),
-                 pa.array([r[2] for r in rows], pa.string()),
-                 pa.array([r[3] for r in rows], pa.string()),
-                 pa.array([r[4] for r in rows], pa.string())],
-                names=["doc_id", "ords", "kinds", "texts", "refs"])
+    def row(d, nm, fmt, data):
+        spans = spans_from_stream(nm, fmt, data or b"")
+        return [(d, list(range(len(spans))),
+                 TEXT_SEP.join(clean(s["kind"]) for s in spans),
+                 TEXT_SEP.join(clean(s.get("text", "")) for s in spans),
+                 TEXT_SEP.join(clean(s.get("media_ref", ""))
+                               for s in spans))]
 
-    packed = streams.select("doc_id", "name", "fmt", "content") \
-        .mapInArrow(run, PACKED_SPANS_SCHEMA)
-    return unpack_spans_flat(packed)
+    return unpack_spans_flat(map_rows(
+        streams, ("doc_id", "name", "fmt", "content"), PACKED_SPANS_SCHEMA,
+        lambda: row))

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import hashlib
 import re
-from typing import Dict, Iterator, List, Optional, Tuple
+from typing import Dict, List, Optional, Tuple
 
 from docling_core_spark.model.doc import (
     PAGE_H,
@@ -440,64 +440,36 @@ def legacy_to_spans(legacy: dict) -> Tuple[dict, List[dict]]:
 
 def export_legacy(docs) -> "object":
     """(doc_id, spans) -> (doc_id, fmt='legacy', text=json)."""
-    import pyarrow as pa
+    from docling_core_spark.engine import map_rows
 
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    def task():
         import json as _json
 
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            span_rows = batch.column("spans").to_pylist()
-            texts = []
-            for d, spans in zip(doc_ids, span_rows):
-                tuples = [(s["kind"], s["text"], s["media_ref"],
-                           s["offset"]) for s in spans]
-                texts.append(_json.dumps(
-                    spans_to_legacy(d, tuples), ensure_ascii=False,
-                    sort_keys=True))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, pa.string()),
-                 pa.array(["legacy"] * len(doc_ids), pa.string()),
-                 pa.array(texts, pa.string())],
-                names=["doc_id", "fmt", "text"])
+        return lambda d, tuples: [(d, "legacy", _json.dumps(
+            spans_to_legacy(d, tuples), ensure_ascii=False,
+            sort_keys=True))]
 
-    return docs.select("doc_id", "spans").mapInArrow(
-        run, "doc_id string, fmt string, text string")
+    return map_rows(docs, ("doc_id", "spans"),
+                    "doc_id string, fmt string, text string", task)
 
 
 def parse_legacy_roundtrip(docs) -> "object":
     """(doc_id, spans) -> legacy JSON -> spans again -> exploded rows
     (doc_id, ord, kind, text, media_ref): the interop round trip as a
     driver-checkable query."""
-    import pyarrow as pa
+    from docling_core_spark.engine import map_rows
 
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    def task():
         import json as _json
 
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            span_rows = batch.column("spans").to_pylist()
-            o_doc, o_ord, o_kind, o_text, o_ref = [], [], [], [], []
-            for d, spans in zip(doc_ids, span_rows):
-                tuples = [(s["kind"], s["text"], s["media_ref"],
-                           s["offset"]) for s in spans]
-                legacy = _json.loads(_json.dumps(
-                    spans_to_legacy(d, tuples), ensure_ascii=False))
-                _origin, back = legacy_to_spans(legacy)
-                for r in back:
-                    o_doc.append(d)
-                    o_ord.append(r["offset"])
-                    o_kind.append(r["kind"])
-                    o_text.append(r["text"])
-                    o_ref.append(r["media_ref"])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_doc, pa.string()),
-                 pa.array(o_ord, pa.int32()),
-                 pa.array(o_kind, pa.string()),
-                 pa.array(o_text, pa.string()),
-                 pa.array(o_ref, pa.string())],
-                names=["doc_id", "ord", "kind", "text", "media_ref"])
+        def row(d, tuples):
+            legacy = _json.loads(_json.dumps(
+                spans_to_legacy(d, tuples), ensure_ascii=False))
+            _origin, back = legacy_to_spans(legacy)
+            return [(d, r["offset"], r["kind"], r["text"], r["media_ref"])
+                    for r in back]
+        return row
 
-    return docs.select("doc_id", "spans").mapInArrow(
-        run, "doc_id string, ord int, kind string, text string, "
-             "media_ref string")
+    return map_rows(docs, ("doc_id", "spans"),
+                    "doc_id string, ord int, kind string, text string, "
+                    "media_ref string", task)

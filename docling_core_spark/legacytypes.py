@@ -663,38 +663,14 @@ def validate_legacy_df(payloads):
     """(doc_id, kind, payload-json) -> quarantine rows (doc_id, kind,
     ok, n_errors, first_error): ONE fused Arrow stage, zero shuffle -
     the S12 quarantine shape over the legacy sidecar families."""
-    import pyarrow as pa
+    from docling_core_spark.engine import map_rows
+    from docling_core_spark.rectypes import screen_payload
 
-    def run(batches):
-        for b in batches:
-            ids = b.column("doc_id").to_pylist()
-            kinds = b.column("kind").to_pylist()
-            payloads_ = b.column("payload").to_pylist()
-            oks, ns, firsts = [], [], []
-            for k, p in zip(kinds, payloads_):
-                # malformed JSON and unknown kinds are exactly what a
-                # quarantine screen exists to catch - they must land
-                # as rows, never fail the stage (rectypes.py pattern)
-                try:
-                    validator = VALIDATORS[k]
-                except KeyError:
-                    errs = [f"payload: unknown sidecar kind {k!r}"]
-                else:
-                    try:
-                        errs = validator(json.loads(p))
-                    except ValueError as exc:
-                        errs = [f"payload: invalid JSON ({exc})"]
-                oks.append(not errs)
-                ns.append(len(errs))
-                firsts.append(errs[0] if errs else "")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()),
-                 pa.array(kinds, pa.string()),
-                 pa.array(oks, pa.bool_()),
-                 pa.array(ns, pa.int32()),
-                 pa.array(firsts, pa.string())],
-                ["doc_id", "kind", "ok", "n_errors", "first_error"])
+    def row(doc_id, kind, payload):
+        errs = screen_payload(VALIDATORS, kind, payload)
+        return [(doc_id, kind, not errs, len(errs),
+                 errs[0] if errs else "")]
 
-    return payloads.mapInArrow(
-        run, "doc_id long, kind string, ok boolean, n_errors int, "
-             "first_error string")
+    return map_rows(payloads, ("doc_id", "kind", "payload"),
+                    "doc_id long, kind string, ok boolean, n_errors int, "
+                    "first_error string", lambda: row)

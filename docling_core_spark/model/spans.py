@@ -108,6 +108,13 @@ def encode_image_ref(image: Optional[dict]) -> str:
                                   separators=(",", ":")) + "</image>"
 
 
+def span_tuples(spans: Iterable) -> List[Span]:
+    """Span dicts or (kind, text, media_ref, offset) tuples -> tuples."""
+    return [s if isinstance(s, tuple)
+            else (s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in spans]
+
+
 def doc_from_spans(doc_id: str, spans: Iterable[Span]) -> Doc:
     """Rebuild the document tree from its span sequence.
 

@@ -30,7 +30,7 @@ import re
 from typing import Dict, List, Optional, Tuple
 
 # bump when any expected-row computation here changes shape/semantics
-ORACLE_VERSION = 9  # r4: search_meta_validation synth endpoint rename
+ORACLE_VERSION = 10  # shared sidecar screen: "payload: invalid JSON (...)"
 
 # headings are free text; \x1f (ASCII unit separator) never appears in
 # the corpus and both sides apply the identical join, so equality of
@@ -1038,14 +1038,13 @@ def ensure_rec_validation(sf_dir: str) -> str:
     (same pure functions the Spark stage runs; the validators
     themselves are parity-locked to the live reference models in
     tests/test_rectypes.py). Keyed by the documents fingerprint."""
-    import json as _json
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from docling_core_spark.rectypes import (
         VALIDATORS,
         corrupt_rec,
+        screen_payload,
         synth_rec_payload,
     )
 
@@ -1065,12 +1064,8 @@ def ensure_rec_validation(sf_dir: str) -> str:
     for doc_id, text in zip(t.column("doc_id").to_pylist(),
                             t.column("text").to_pylist()):
         kind, js = synth_rec_payload(int(doc_id), text or "")
-        js = corrupt_rec(int(doc_id), kind, js)
-        try:
-            obj = _json.loads(js)
-            es = VALIDATORS[kind](obj)
-        except ValueError as exc:
-            es = [f"json: {exc}"]
+        es = screen_payload(VALIDATORS, kind,
+                            corrupt_rec(int(doc_id), kind, js))
         rows.append((int(doc_id), kind, not es, len(es),
                      "; ".join(es)))
     out = pa.Table.from_arrays(
@@ -1099,11 +1094,10 @@ def ensure_search_validation(sf_dir: str) -> str:
     synthesize -> corrupt -> validate (searchtypes.py pure functions;
     validators parity-locked to the live reference Meta/Generic/
     Package models in tests/test_searchtypes.py)."""
-    import json as _json
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from docling_core_spark.rectypes import screen_payload
     from docling_core_spark.searchtypes import (
         VALIDATORS,
         corrupt_search,
@@ -1126,12 +1120,8 @@ def ensure_search_validation(sf_dir: str) -> str:
     for doc_id, text in zip(t.column("doc_id").to_pylist(),
                             t.column("text").to_pylist()):
         kind, js = synth_search_payload(int(doc_id), text or "")
-        js = corrupt_search(int(doc_id), kind, js)
-        try:
-            obj = _json.loads(js)
-            es = VALIDATORS[kind](obj)
-        except ValueError as exc:
-            es = [f"json: {exc}"]
+        es = screen_payload(VALIDATORS, kind,
+                            corrupt_search(int(doc_id), kind, js))
         rows.append((int(doc_id), kind, not es, len(es),
                      "; ".join(es)))
     out = pa.Table.from_arrays(

@@ -32,6 +32,7 @@ from docling_core_spark.engine import (
     chunk_documents,
     doc_stats,
     export_documents,
+    map_rows,
     synth_documents,
 )
 
@@ -872,25 +873,15 @@ def q_token_counts_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     ship the assets dir via --archives next to the --py-files zip.
     Oracle: an INDEPENDENT trie-based WordPiece + heap-based BPE
     reimplementation (pyoracle.ensure_token_counts_real)."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     spec = _tokenizer_asset_spec()  # driver-side env capture
 
-    def gen(batches):
-        import pyarrow as pa
+    def task():
         wp, bpe = _real_counters(spec)
-        for b in batches:
-            texts = b.column("text").to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [b.column("doc_id"),
-                 pa.array([wp.count_tokens(t) for t in texts],
-                          pa.int64()),
-                 pa.array([bpe.count_tokens(t) for t in texts],
-                          pa.int64())],
-                ["doc_id", "wp_tokens", "bpe_tokens"])
+        return lambda i, t: [(i, wp.count_tokens(t), bpe.count_tokens(t))]
 
-    return (docs.mapInArrow(
-        gen, "doc_id long, wp_tokens long, bpe_tokens long")
-        .orderBy("doc_id"))
+    return map_rows(_t(spark, sf_dir, "documents"), ("doc_id", "text"),
+                    "doc_id long, wp_tokens long, bpe_tokens long",
+                    task).orderBy("doc_id")
 
 
 def q_rec_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -900,32 +891,19 @@ def q_rec_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     locked to the live reference pydantic models in
     tests/test_rectypes.py). One fused Arrow stage end-to-end:
     synthesize -> corrupt -> validate, zero shuffle."""
-    import pyarrow as pa
-
     from docling_core_spark.rectypes import (
         corrupt_rec,
         synth_rec_payload,
         validate_records_df,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    def row(i, t):
+        kind, js = synth_rec_payload(i, t or "")
+        return [(i, kind, corrupt_rec(i, kind, js))]
 
-    def gen(batches):
-        for b in batches:
-            ids = b.column("doc_id").to_pylist()
-            texts = b.column("text").to_pylist()
-            kinds, payloads = [], []
-            for i, t in zip(ids, texts):
-                kind, js = synth_rec_payload(int(i), t or "")
-                kinds.append(kind)
-                payloads.append(corrupt_rec(int(i), kind, js))
-            yield pa.RecordBatch.from_arrays(
-                [b.column("doc_id"), pa.array(kinds, pa.string()),
-                 pa.array(payloads, pa.string())],
-                ["doc_id", "kind", "payload"])
-
-    payloads = docs.mapInArrow(
-        gen, "doc_id long, kind string, payload string")
+    payloads = map_rows(_t(spark, sf_dir, "documents"), ("doc_id", "text"),
+                        "doc_id long, kind string, payload string",
+                        lambda: row)
     return validate_records_df(payloads).orderBy("doc_id")
 
 
@@ -937,32 +915,19 @@ def q_search_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the from-scratch validators (searchtypes.py, parity-locked to the
     live reference pydantic models in tests/test_searchtypes.py). One
     fused Arrow stage end-to-end, zero shuffle."""
-    import pyarrow as pa
-
     from docling_core_spark.searchtypes import (
         corrupt_search,
         synth_search_payload,
         validate_search_df,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    def row(i, t):
+        kind, js = synth_search_payload(i, t or "")
+        return [(i, kind, corrupt_search(i, kind, js))]
 
-    def gen(batches):
-        for b in batches:
-            ids = b.column("doc_id").to_pylist()
-            texts = b.column("text").to_pylist()
-            kinds, payloads = [], []
-            for i, t in zip(ids, texts):
-                kind, js = synth_search_payload(int(i), t or "")
-                kinds.append(kind)
-                payloads.append(corrupt_search(int(i), kind, js))
-            yield pa.RecordBatch.from_arrays(
-                [b.column("doc_id"), pa.array(kinds, pa.string()),
-                 pa.array(payloads, pa.string())],
-                ["doc_id", "kind", "payload"])
-
-    payloads = docs.mapInArrow(
-        gen, "doc_id long, kind string, payload string")
+    payloads = map_rows(_t(spark, sf_dir, "documents"), ("doc_id", "text"),
+                        "doc_id long, kind string, payload string",
+                        lambda: row)
     return validate_search_df(payloads).orderBy("doc_id")
 
 

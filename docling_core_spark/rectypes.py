@@ -38,7 +38,7 @@ deterministic corruption matrix (tests/test_rectypes.py).
 from __future__ import annotations
 
 import re
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 VERSION_PATTERN = (
     r"^(0|[1-9]\d*)\.(0|[1-9]\d*)\.(0|[1-9]\d*)"
@@ -658,40 +658,41 @@ def corrupt_rec(doc_id: int, kind: str, js: str) -> str:
 # Spark operator (S12 shape: one fused Arrow stage, quarantine rows)
 # ----------------------------------------------------------------------
 
+def screen_payload(validators: dict, kind, payload) -> List[str]:
+    """Errors for one (kind, payload-json) sidecar row - the per-row
+    screen every sidecar quarantine stage shares. Hostile rows (a NULL
+    or unknown kind, a NULL or malformed payload) become error lists,
+    never exceptions that would fail the whole Arrow stage."""
+    import json
+
+    try:
+        validator = validators[kind]
+    except KeyError:
+        return [f"payload: unknown sidecar kind {kind!r}"]
+    try:
+        return validator(json.loads(payload))
+    except (TypeError, ValueError) as exc:
+        return [f"payload: invalid JSON ({exc})"]
+
+
+def screen_payloads_df(df, validators: dict, kind_col: str = "kind",
+                       json_col: str = "payload"):
+    """(doc_id, kind, payload) -> (doc_id, kind, is_valid, n_errors,
+    errors): zero shuffle, ``screen_payload`` runs once per row inside
+    one mapInArrow stage."""
+    from docling_core_spark.engine import map_rows
+
+    def row(doc_id, kind, payload):
+        es = screen_payload(validators, kind, payload)
+        return [(doc_id, kind, not es, len(es), "; ".join(es))]
+
+    return map_rows(df, ("doc_id", kind_col, json_col),
+                    "doc_id long, kind string, is_valid boolean, "
+                    "n_errors int, errors string", lambda: row)
+
+
 def validate_records_df(df, kind_col: str = "kind",
                         json_col: str = "payload"):
-    """(doc_id, kind, payload) -> (doc_id, kind, is_valid, n_errors,
-    errors): zero shuffle, validators run once per row inside one
-    mapInArrow stage."""
-    import pyarrow as pa
-
-    def run(batches: Iterator["pa.RecordBatch"]
-            ) -> Iterator["pa.RecordBatch"]:
-        import json as _json
-
-        for batch in batches:
-            ids = batch.column("doc_id").to_pylist()
-            kinds = batch.column(kind_col).to_pylist()
-            payloads = batch.column(json_col).to_pylist()
-            valid, n_err, errs = [], [], []
-            for kind, payload in zip(kinds, payloads):
-                try:
-                    obj = _json.loads(payload or "")
-                    es = VALIDATORS[kind](obj)
-                except ValueError as exc:
-                    es = [f"json: {exc}"]
-                valid.append(not es)
-                n_err.append(len(es))
-                errs.append("; ".join(es))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()),
-                 pa.array(kinds, pa.string()),
-                 pa.array(valid, pa.bool_()),
-                 pa.array(n_err, pa.int32()),
-                 pa.array(errs, pa.string())],
-                names=["doc_id", "kind", "is_valid", "n_errors",
-                       "errors"])
-
-    return df.select("doc_id", kind_col, json_col).mapInArrow(
-        run, "doc_id long, kind string, is_valid boolean, "
-             "n_errors int, errors string")
+    """Record/Statement/QA sidecar quarantine rows (screen_payloads_df
+    over this module's VALIDATORS)."""
+    return screen_payloads_df(df, VALIDATORS, kind_col, json_col)

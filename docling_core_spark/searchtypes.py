@@ -27,7 +27,7 @@ driver involvement; quarantine rows come back as columns.
 from __future__ import annotations
 
 import re
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 from docling_core_spark.rectypes import (
     _MISSING,
@@ -35,6 +35,7 @@ from docling_core_spark.rectypes import (
     _forbid_extra,
     _is_str,
     _str_field,
+    screen_payloads_df,
 )
 
 # Semantic Versioning 2.0.0 (the reference pins the same published
@@ -425,38 +426,6 @@ def corrupt_search(doc_id: int, kind: str, js: str) -> str:
 
 def validate_search_df(df, kind_col: str = "kind",
                        json_col: str = "payload"):
-    """(doc_id, kind, payload) -> quarantine rows; one fused
-    mapInArrow stage, zero shuffle (the rectypes.validate_records_df
-    shape)."""
-    import pyarrow as pa
-
-    def run(batches: Iterator["pa.RecordBatch"]
-            ) -> Iterator["pa.RecordBatch"]:
-        import json as _json
-
-        for batch in batches:
-            ids = batch.column("doc_id").to_pylist()
-            kinds = batch.column(kind_col).to_pylist()
-            payloads = batch.column(json_col).to_pylist()
-            valid, n_err, errs = [], [], []
-            for kind, payload in zip(kinds, payloads):
-                try:
-                    obj = _json.loads(payload or "")
-                    es = VALIDATORS[kind](obj)
-                except ValueError as exc:
-                    es = [f"json: {exc}"]
-                valid.append(not es)
-                n_err.append(len(es))
-                errs.append("; ".join(es))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()),
-                 pa.array(kinds, pa.string()),
-                 pa.array(valid, pa.bool_()),
-                 pa.array(n_err, pa.int32()),
-                 pa.array(errs, pa.string())],
-                names=["doc_id", "kind", "is_valid", "n_errors",
-                       "errors"])
-
-    return df.select("doc_id", kind_col, json_col).mapInArrow(
-        run, "doc_id long, kind string, is_valid boolean, "
-             "n_errors int, errors string")
+    """Search-index sidecar quarantine rows (rectypes.screen_payloads_df
+    over this module's VALIDATORS)."""
+    return screen_payloads_df(df, VALIDATORS, kind_col, json_col)

@@ -370,35 +370,12 @@ def load_docjson_documents(df, json_col: str = "doc_json",
                            id_col: str = "doc_id"):
     """DataFrame(doc_id, doc_json) -> documents(doc_id, spans), one
     mapInArrow stage - the S1 ingestion operator."""
-    import pyarrow as pa
+    from docling_core_spark.engine import DOCUMENTS_SCHEMA, map_rows
 
-    from docling_core_spark.engine import DOCUMENTS_SCHEMA
+    def row(d, doc_json):
+        return [(str(d), docjson_to_spans(doc_json or "{}"))]
 
-    def run(batches):
-        for batch in batches:
-            ids = batch.column(id_col).to_pylist()
-            docs = batch.column(json_col).to_pylist()
-            kinds, texts, mrefs, offs = [], [], [], []
-            bounds = [0]
-            for doc_json in docs:
-                for s in docjson_to_spans(doc_json or "{}"):
-                    kinds.append(s["kind"])
-                    texts.append(s["text"])
-                    mrefs.append(s["media_ref"])
-                    offs.append(s["offset"])
-                bounds.append(len(kinds))
-            struct = pa.StructArray.from_arrays(
-                [pa.array(kinds, pa.string()), pa.array(texts, pa.string()),
-                 pa.array(mrefs, pa.string()), pa.array(offs, pa.int32())],
-                names=["kind", "text", "media_ref", "offset"])
-            spans = pa.ListArray.from_arrays(pa.array(bounds, pa.int32()),
-                                             struct)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(x) for x in ids], pa.string()), spans],
-                names=["doc_id", "spans"])
-
-    return df.select(id_col, json_col).mapInArrow(
-        run, schema=DOCUMENTS_SCHEMA)
+    return map_rows(df, (id_col, json_col), DOCUMENTS_SCHEMA, lambda: row)
 
 
 def docyaml_to_spans(doc_yaml: str) -> List[Dict]:

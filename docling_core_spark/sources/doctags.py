@@ -197,35 +197,13 @@ def parse_doctags_documents(df, doctags_col: str = "doctags",
                             id_col: str = "doc_id"):
     """DataFrame(doc_id, doctags) -> documents(doc_id, spans), one
     mapInArrow stage (the engine's 'parse' extraction stage)."""
-    import pyarrow as pa
+    from docling_core_spark.engine import DOCUMENTS_SCHEMA, map_rows
 
-    from docling_core_spark.engine import DOCUMENTS_SCHEMA
+    def row(d, stream):
+        return [(str(d), doctags_to_spans(stream or ""))]
 
-    def run(batches):
-        for batch in batches:
-            ids = batch.column(id_col).to_pylist()
-            streams = batch.column(doctags_col).to_pylist()
-            kinds, texts, mrefs, offs = [], [], [], []
-            bounds = [0]
-            for stream in streams:
-                for s in doctags_to_spans(stream or ""):
-                    kinds.append(s["kind"])
-                    texts.append(s["text"])
-                    mrefs.append(s["media_ref"])
-                    offs.append(s["offset"])
-                bounds.append(len(kinds))
-            struct = pa.StructArray.from_arrays(
-                [pa.array(kinds, pa.string()), pa.array(texts, pa.string()),
-                 pa.array(mrefs, pa.string()), pa.array(offs, pa.int32())],
-                names=["kind", "text", "media_ref", "offset"])
-            spans = pa.ListArray.from_arrays(pa.array(bounds, pa.int32()),
-                                             struct)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(x) for x in ids], pa.string()), spans],
-                names=["doc_id", "spans"])
-
-    return df.select(id_col, doctags_col).mapInArrow(
-        run, schema=DOCUMENTS_SCHEMA)
+    return map_rows(df, (id_col, doctags_col), DOCUMENTS_SCHEMA,
+                    lambda: row)
 
 
 def parse_and_chunk_doctags(df, doctags_col: str = "doctags",

@@ -22,7 +22,7 @@ operator surfaces them as a ``validation_errors`` column.
 from __future__ import annotations
 
 import re
-from typing import Dict, Iterator, List, Optional
+from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame
 
@@ -169,53 +169,36 @@ def _payload_errors(payload: str) -> List[str]:
         return [f"json: {exc}"]
 
 
+_VALIDATION_SCHEMA = ("doc_id string, is_valid boolean, n_errors int, "
+                      "errors string")
+
+
+def _validation_row(doc_id: str, payload: str) -> list:
+    es = _payload_errors(payload)
+    return [(doc_id, not es, len(es), "; ".join(es))]
+
+
 def validate_docjson(df: DataFrame, json_col: str = "doc_json"
                      ) -> DataFrame:
     """(doc_id, doc_json) -> (doc_id, is_valid, n_errors, errors):
     quarantine-friendly validation rows, one fused Arrow stage."""
-    import pyarrow as pa
+    from docling_core_spark.engine import map_rows
 
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            payloads = batch.column(json_col).to_pylist()
-            valid, n_err, errs = [], [], []
-            for payload in payloads:
-                es = _payload_errors(payload)
-                valid.append(not es)
-                n_err.append(len(es))
-                errs.append("; ".join(es))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, pa.string()),
-                 pa.array(valid, pa.bool_()),
-                 pa.array(n_err, pa.int32()),
-                 pa.array(errs, pa.string())],
-                names=["doc_id", "is_valid", "n_errors", "errors"])
-
-    return df.select("doc_id", json_col).mapInArrow(
-        run, "doc_id string, is_valid boolean, n_errors int, "
-             "errors string")
+    return map_rows(df, ("doc_id", json_col), _VALIDATION_SCHEMA,
+                    lambda: _validation_row)
 
 
 def corrupt_docjson_df(df: DataFrame, json_col: str = "doc_json"
                        ) -> DataFrame:
     """Deterministic corruption stage for validation tests/benchmarks
     (see corrupt_docjson)."""
-    import pyarrow as pa
+    from docling_core_spark.engine import map_rows
 
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            payloads = batch.column(json_col).to_pylist()
-            out = [corrupt_docjson(d, p or "")
-                   for d, p in zip(doc_ids, payloads)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, pa.string()),
-                 pa.array(out, pa.string())],
-                names=["doc_id", json_col])
+    def row(d, p):
+        return [(d, corrupt_docjson(d, p or ""))]
 
-    return df.select("doc_id", json_col).mapInArrow(
-        run, f"doc_id string, {json_col} string")
+    return map_rows(df, ("doc_id", json_col),
+                    f"doc_id string, {json_col} string", lambda: row)
 
 
 def export_corrupt_validate(docs: DataFrame) -> DataFrame:
@@ -231,36 +214,20 @@ def export_corrupt_validate(docs: DataFrame) -> DataFrame:
     (export_to_docjson_str, corrupt_docjson, _payload_errors) are
     byte-identical to the staged path — pinned by
     test_fused_export_corrupt_validate_matches_chained."""
-    import pyarrow as pa
+    from docling_core_spark.engine import map_rows
 
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        from docling_core_spark.engine import _iter_span_tuples
+    def task():
         from docling_core_spark.model.spans import doc_from_spans
         from docling_core_spark.serializers.docjson import (
             export_to_docjson_str,
         )
 
-        for batch in batches:
-            ids, valid, n_err, errs = [], [], [], []
-            for doc_id, tuples in _iter_span_tuples(batch):
-                js = corrupt_docjson(
-                    doc_id,
-                    export_to_docjson_str(doc_from_spans(doc_id, tuples)))
-                es = _payload_errors(js)
-                ids.append(doc_id)
-                valid.append(not es)
-                n_err.append(len(es))
-                errs.append("; ".join(es))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.string()),
-                 pa.array(valid, pa.bool_()),
-                 pa.array(n_err, pa.int32()),
-                 pa.array(errs, pa.string())],
-                names=["doc_id", "is_valid", "n_errors", "errors"])
+        def row(doc_id, tuples):
+            js = export_to_docjson_str(doc_from_spans(doc_id, tuples))
+            return _validation_row(doc_id, corrupt_docjson(doc_id, js))
+        return row
 
-    return docs.select("doc_id", "spans").mapInArrow(
-        run, "doc_id string, is_valid boolean, n_errors int, "
-             "errors string")
+    return map_rows(docs, ("doc_id", "spans"), _VALIDATION_SCHEMA, task)
 
 
 # deterministic corruption for the validation query's test input: a

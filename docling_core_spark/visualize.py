@@ -30,7 +30,7 @@ metric and compares call-for-call (tests/test_visualize.py).
 from __future__ import annotations
 
 import json
-from typing import Dict, Iterator, List, Optional, Tuple
+from typing import Dict, List, Optional, Tuple
 
 from docling_core_spark.model.doc import (
     LAYER_BODY,
@@ -52,7 +52,7 @@ from docling_core_spark.model.doc import (
     Node,
     node_bbox,
 )
-from docling_core_spark.model.spans import doc_from_spans
+from docling_core_spark.model.spans import doc_from_spans, span_tuples
 
 # DocItemLabel.get_color (labels.py:43-70)
 LABEL_COLORS: Dict[str, Tuple[int, int, int]] = {
@@ -143,8 +143,7 @@ def _make_emitter(doc_id: str, rows: List[dict]):
 def layout_draw_rows(doc_id: str, spans, show_label: bool = True
                      ) -> List[dict]:
     """LayoutVisualizer draw commands for one document."""
-    doc = doc_from_spans(doc_id, [(s["kind"], s["text"], s["media_ref"],
-                                   s["offset"]) for s in spans])
+    doc = doc_from_spans(doc_id, span_tuples(spans))
     rows: List[dict] = []
     emit = _make_emitter(doc_id, rows)
 
@@ -183,8 +182,7 @@ def reading_order_rows(doc_id: str, spans,
                        show_branch_numbering: bool = False
                        ) -> List[dict]:
     """ReadingOrderVisualizer draw commands for one document."""
-    doc = doc_from_spans(doc_id, [(s["kind"], s["text"], s["media_ref"],
-                                   s["offset"]) for s in spans])
+    doc = doc_from_spans(doc_id, span_tuples(spans))
     rows: List[dict] = []
     emit = _make_emitter(doc_id, rows)
 
@@ -246,31 +244,14 @@ _VIZ_SCHEMA = ("doc_id string, page_no int, seq int, op string, "
 
 
 def _viz_op(docs, row_fn):
-    import pyarrow as pa
+    from docling_core_spark.engine import map_rows
 
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            tbl = batch.to_pydict()
-            cols = {k: [] for k in ("doc_id", "page_no", "seq", "op",
-                                    "coords", "fill", "outline",
-                                    "width", "text")}
-            for did, spans in zip(tbl["doc_id"], tbl["spans"]):
-                for r in row_fn(did, spans):
-                    for k, v in r.items():
-                        cols[k].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols["doc_id"], pa.string()),
-                 pa.array(cols["page_no"], pa.int32()),
-                 pa.array(cols["seq"], pa.int32()),
-                 pa.array(cols["op"], pa.string()),
-                 pa.array(cols["coords"], pa.string()),
-                 pa.array(cols["fill"], pa.string()),
-                 pa.array(cols["outline"], pa.string()),
-                 pa.array(cols["width"], pa.int32()),
-                 pa.array(cols["text"], pa.string())],
-                names=list(cols))
+    def task():
+        # draw rows are dicts in _VIZ_SCHEMA column order (_make_emitter)
+        return lambda did, spans: [tuple(r.values())
+                                   for r in row_fn(did, spans)]
 
-    return docs.select("doc_id", "spans").mapInArrow(run, _VIZ_SCHEMA)
+    return map_rows(docs, ("doc_id", "spans"), _VIZ_SCHEMA, task)
 
 
 def visualize_layout(docs):
@@ -313,8 +294,7 @@ def table_viz_rows(doc_id: str, spans) -> List[dict]:
     rectangle per cell, colored by header/section flags."""
     from docling_core_spark.model.otsl import parse_otsl
 
-    doc = doc_from_spans(doc_id, [(s["kind"], s["text"], s["media_ref"],
-                                   s["offset"]) for s in spans])
+    doc = doc_from_spans(doc_id, span_tuples(spans))
     rows: List[dict] = []
     emit = _make_emitter(doc_id, rows)
 
@@ -371,8 +351,7 @@ def kv_viz_rows(doc_id: str, spans, show_label: bool = True
     the cells so they sit on top), per page in ascending order."""
     from docling_core_spark.model.kv import parse_kv
 
-    doc = doc_from_spans(doc_id, [(s["kind"], s["text"], s["media_ref"],
-                                   s["offset"]) for s in spans])
+    doc = doc_from_spans(doc_id, span_tuples(spans))
     rows: List[dict] = []
     emit = _make_emitter(doc_id, rows)
 

@@ -79,7 +79,9 @@ def test_validate_legacy_df_survives_hostile_rows(spark):
         [(1, "annotation", json.dumps(good)),
          (2, "annotation", '{"annotations": [truncated'),
          (3, "mystery", "{}"),
-         (4, "ocr", "not json at all")],
+         (4, "ocr", "not json at all"),
+         (5, None, json.dumps(good)),
+         (6, "annotation", None)],
         "doc_id long, kind string, payload string")
     got = {r["doc_id"]: r for r in validate_legacy_df(df).collect()}
     assert got[1]["ok"] is True
@@ -88,6 +90,10 @@ def test_validate_legacy_df_survives_hostile_rows(spark):
     assert got[3]["ok"] is False and "unknown sidecar kind" in got[3][
         "first_error"]
     assert got[4]["ok"] is False and "invalid JSON" in got[4][
+        "first_error"]
+    assert got[5]["ok"] is False and "unknown sidecar kind" in got[5][
+        "first_error"]
+    assert got[6]["ok"] is False and "invalid JSON" in got[6][
         "first_error"]
 
 

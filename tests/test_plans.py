@@ -269,3 +269,59 @@ def test_tfidf_top_terms_plan(spark):
     assert "Python" not in p and "ArrowEval" not in p
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
+
+
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+@pytest.fixture(scope="module")
+def wide_docs_path(tmp_path_factory):
+    """A documents parquet with one column no stage reads."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from docling_core_spark.corpus import gen_doc_spans
+    from docling_core_spark.engine import DOCUMENTS_SCHEMA
+
+    schema = to_arrow_schema(DOCUMENTS_SCHEMA).append(
+        pa.field("unread", pa.string()))
+    rows = [{"doc_id": f"doc_{i:012d}", "spans": gen_doc_spans(i, 42),
+             "unread": "x"} for i in range(4)]
+    path = str(tmp_path_factory.mktemp("plans") / "docs.parquet")
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), path)
+    return path
+
+
+@pytest.mark.parametrize("stage", [
+    "export_documents_md", "doc_stats", "viz_op",
+    "parse_legacy_roundtrip", "render_pages", "export_corrupt_validate"])
+def test_span_stage_is_one_arrow_stage_over_pruned_scan(
+        spark, wide_docs_path, stage):
+    """Each per-document stage over a parquet scan: exactly one
+    MapInArrow, no Exchange, and the scan reads only doc_id and
+    spans."""
+    from docling_core_spark.engine import doc_stats, export_documents
+    from docling_core_spark.extraction.spark import render_pages
+    from docling_core_spark.legacy import parse_legacy_roundtrip
+    from docling_core_spark.validation import export_corrupt_validate
+    from docling_core_spark.visualize import visualize_layout
+
+    build = {"export_documents_md": lambda d: export_documents(d, "md"),
+             "doc_stats": doc_stats,
+             "viz_op": visualize_layout,
+             "parse_legacy_roundtrip": parse_legacy_roundtrip,
+             "render_pages": render_pages,
+             "export_corrupt_validate": export_corrupt_validate}[stage]
+    p = _explain(build(spark.read.parquet(wide_docs_path)))
+    tree = p.split("(1)")[0]
+    assert tree.count("MapInArrow") == 1
+    assert "Exchange" not in p
+    read_schema, = [ln for ln in p.splitlines() if "ReadSchema" in ln]
+    assert read_schema.split("ReadSchema: ")[1] == (
+        "struct<doc_id:string,spans:array<struct<kind:string,"
+        "text:string,media_ref:string,offset:int>>>")

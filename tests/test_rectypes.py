@@ -142,3 +142,23 @@ def test_uncorrupted_payloads_are_valid():
         kind, js = synth_rec_payload(doc_id, "alpha beta gamma")
         assert not VALIDATORS[kind](json.loads(js)), (doc_id, kind)
         assert _ref_verdict(models[kind], js), (doc_id, kind)
+
+
+def test_validate_records_df_survives_hostile_rows(spark):
+    """A NULL kind, an unknown kind, a NULL payload and malformed JSON
+    land as is_valid=False quarantine rows; none fails the stage."""
+    from docling_core_spark.rectypes import validate_records_df
+
+    kind, js = synth_rec_payload(0, "alpha beta gamma")
+    df = spark.createDataFrame(
+        [(1, kind, js), (2, None, js), (3, "mystery", "{}"),
+         (4, kind, None), (5, kind, '{"truncated')],
+        "doc_id long, kind string, payload string")
+    got = {r["doc_id"]: r for r in validate_records_df(df).collect()}
+    assert got[1]["is_valid"] is True
+    assert "unknown sidecar kind" in got[2]["errors"]
+    assert "unknown sidecar kind" in got[3]["errors"]
+    assert "invalid JSON" in got[4]["errors"]
+    assert "invalid JSON" in got[5]["errors"]
+    assert all(got[i]["is_valid"] is False and got[i]["n_errors"] == 1
+               for i in (2, 3, 4, 5))

@@ -213,3 +213,23 @@ def test_corruption_matrix_matches_reference():
         assert engine_ok == ref_ok, (doc_id, kind, js)
         verdicts[kind].add(engine_ok)
     assert all(v == {True, False} for v in verdicts.values()), verdicts
+
+
+def test_validate_search_df_survives_hostile_rows(spark):
+    """A NULL kind, an unknown kind, a NULL payload and malformed JSON
+    land as is_valid=False quarantine rows; none fails the stage."""
+    from docling_core_spark.searchtypes import validate_search_df
+
+    kind, js = synth_search_payload(0, "alpha beta gamma")
+    df = spark.createDataFrame(
+        [(1, kind, js), (2, None, js), (3, "mystery", "{}"),
+         (4, kind, None), (5, kind, '{"truncated')],
+        "doc_id long, kind string, payload string")
+    got = {r["doc_id"]: r for r in validate_search_df(df).collect()}
+    assert got[1]["is_valid"] is True
+    assert "unknown sidecar kind" in got[2]["errors"]
+    assert "unknown sidecar kind" in got[3]["errors"]
+    assert "invalid JSON" in got[4]["errors"]
+    assert "invalid JSON" in got[5]["errors"]
+    assert all(got[i]["is_valid"] is False and got[i]["n_errors"] == 1
+               for i in (2, 3, 4, 5))
