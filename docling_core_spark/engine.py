@@ -39,9 +39,9 @@ Scale design:
 * output explodes to one row per chunk inside the stage (no
   posexplode shuffle afterwards).
 * resumability (north rule): ``run_resumable`` splits the input into
-  doc_id hash buckets, commits each bucket's output with a lineage
-  slice, and on restart skips every bucket that already has lineage
-  (see io/checkpoint.py).
+  doc_id hash buckets, writes every pending bucket in one pass and
+  commits them with one lineage append, and on restart skips every
+  bucket that already has lineage (see io/checkpoint.py).
 """
 
 from __future__ import annotations

@@ -1,27 +1,37 @@
 """Resumable runs with per-partition lineage (north-rule requirement).
 
-Production target is Iceberg: every bucket commit is an Iceberg
+Production target is Iceberg: every run's commit is an Iceberg
 snapshot and resume = anti-join of processed doc_ids from snapshot
 metadata. This sandbox has no Iceberg runtime, so the same protocol is
 emulated on plain parquet with an explicit commit log:
 
 * the input corpus is split into ``n_buckets`` deterministic hash
-  buckets of ``doc_id`` (``pmod(xxhash64(doc_id), n_buckets)``) - the
-  unit of exactly-once commit;
-* each bucket's output is written to ``out_dir/chunks/bucket=B``
-  (overwrite - rewriting a half-written bucket is idempotent), THEN a
-  lineage slice is appended under ``out_dir/lineage`` recording, per
-  Spark partition of that bucket: ``(bucket, partition_id, min/max
-  doc_id, n_docs, n_chunks, wall_s, committed_at)``;
+  buckets of ``doc_id`` (``pmod(xxhash64(doc_id), n_buckets)``); a
+  bucket is committed whole or not at all;
+* one call handles every pending bucket (those without lineage rows,
+  up to ``max_buckets_this_run``) in one pass: it deletes their
+  directories (leftovers of a crashed run), filters the input to them
+  once, runs the stage once and writes its output in one job,
+  partitioned by bucket, to ``out_dir/chunks/bucket=B``. Parquet
+  cannot push the hash filter down, so a pass per bucket would
+  rescan the whole input once per bucket;
+* THEN one lineage append under ``out_dir/lineage`` records, per
+  (bucket, Spark partition): ``(bucket, partition_id, min/max doc_id,
+  n_docs, n_chunks, wall_s, committed_at)``, with ``wall_s`` the
+  run's wall time. A bucket that wrote no rows gets one sentinel row
+  (``partition_id`` -1, zero counts) and an empty file that keeps its
+  directory readable. This append is the run's commit point;
 * resume reads the lineage table and skips every bucket that has
-  lineage rows - a crash between output write and lineage append just
-  rewrites that one bucket, so the output never double-counts.
+  lineage rows. Readers see committed buckets only, so output written
+  before a crash never double-counts.
 
-At 100 TB the bucket count is sized so one bucket is a few executors'
-worth of work (e.g. 4096 buckets over 10^12 docs); the driver loop is
-then a cheap scheduler and each failed/preempted slice costs at most
-1/4096 of the run to redo. Skew inside a bucket is already defused by
-round-robin repartition before the chunking UDF (engine.py).
+The unit of redo is the run. Spark retries a failed task inside the
+write, but a driver crash before the lineage append redoes every
+bucket of that run. A caller that wants a smaller redo unit passes
+``max_buckets_this_run`` and calls again until no bucket is pending:
+each call is one pass and one commit. Skew inside a run is already
+defused by round-robin repartition before the chunking UDF
+(engine.py).
 
 Reference has no equivalent (single-process, no checkpointing) - this
 implements the scale contract from BASELINE.json north_rule.
@@ -30,6 +40,7 @@ implements the scale contract from BASELINE.json north_rule.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from typing import Callable, List, Optional
 
@@ -82,51 +93,76 @@ def run_resumable(
     max_buckets_this_run: Optional[int] = None,
 ) -> DataFrame:
     """Run ``stage`` (documents df -> per-doc output df with a doc_id
-    column) over all not-yet-committed buckets; return the full
-    committed output.
+    column) over all not-yet-committed buckets in one pass; return the
+    full committed output.
 
-    ``max_buckets_this_run`` exists for tests (simulated preemption):
-    process at most that many buckets then stop - a subsequent call
-    resumes exactly where this one left off.
+    ``max_buckets_this_run`` caps the buckets this call takes on, and
+    so the work a driver crash can throw away; a later call resumes
+    with the rest.
     """
     spark = docs.sparkSession
     done = set(completed_buckets(spark, out_dir))
     todo = [b for b in range(n_buckets) if b not in done]
     if max_buckets_this_run is not None:
         todo = todo[:max_buckets_this_run]
+    if not todo:
+        return read_output(spark, out_dir)
 
-    for b in todo:
-        t0 = time.time()
-        sub = docs.filter(_bucket_col(n_buckets) == b)
-        out = stage(sub).withColumn("partition_id", F.spark_partition_id())
-        chunk_dir = os.path.join(out_dir, "chunks", f"bucket={b}")
-        out.write.mode("overwrite").parquet(chunk_dir)
-        wall = time.time() - t0
-        # lineage from the committed files (cheap: one bucket's worth)
-        written = spark.read.parquet(chunk_dir)
-        lineage = (written.groupBy("partition_id").agg(
-            F.min("doc_id").alias("doc_id_min"),
-            F.max("doc_id").alias("doc_id_max"),
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_chunks"),
-        ).withColumn("bucket", F.lit(b))
-         .withColumn("wall_s", F.lit(round(wall, 3)))
-         .withColumn("committed_at", F.current_timestamp())
-         .select(*LINEAGE_COLS))
-        if lineage.isEmpty():
-            # an empty bucket still needs a commit record, else resume
-            # would reprocess it forever (and a max_buckets_this_run
-            # loop would stall on it); schema must match the aggregate
-            # path exactly or mixed appends corrupt the lineage table
-            lineage = (spark.createDataFrame(
-                [(b, -1, None, None, 0, 0, round(wall, 3))],
-                "bucket int, partition_id int, doc_id_min string, "
-                "doc_id_max string, n_docs bigint, n_chunks bigint, "
-                "wall_s double")
-                .withColumn("committed_at", F.current_timestamp())
-                .select(*LINEAGE_COLS))
-        # the commit point: bucket becomes visible only once this lands
-        lineage.coalesce(1).write.mode("append").parquet(
-            os.path.join(out_dir, "lineage"))
+    t0 = time.time()
+    chunks_dir = os.path.join(out_dir, "chunks")
+    bucket_dirs = {b: os.path.join(chunks_dir, f"bucket={b}") for b in todo}
+    # leftovers of a crashed run: pending buckets' files, and task
+    # output the committer staged but never moved, which the next
+    # append's job commit would otherwise move into place
+    for path in [*bucket_dirs.values(),
+                 os.path.join(chunks_dir, "_temporary")]:
+        shutil.rmtree(path, ignore_errors=True)
+    if len(todo) < n_buckets:
+        docs = docs.filter(_bucket_col(n_buckets).isin(todo))
+    out = stage(docs).withColumn("partition_id", F.spark_partition_id())
+    (out.withColumn("bucket", _bucket_col(n_buckets))
+     .write.mode("append").partitionBy("bucket").parquet(chunks_dir))
+    wall = round(time.time() - t0, 3)
+
+    # a partitioned write makes no directory for a bucket without
+    # rows; give each one an empty file carrying the schema so it
+    # stays readable (one Spark job however many buckets are empty)
+    written = [b for b in todo if os.path.isdir(bucket_dirs[b])]
+    empty = [b for b in todo if b not in written]
+    if empty:
+        spark.createDataFrame([], out.schema).write.parquet(
+            bucket_dirs[empty[0]])
+        part = next(f for f in os.listdir(bucket_dirs[empty[0]])
+                    if f.startswith("part-"))
+        for b in empty[1:]:
+            os.makedirs(bucket_dirs[b])
+            shutil.copy(os.path.join(bucket_dirs[empty[0]], part),
+                        bucket_dirs[b])
+
+    # an empty bucket still needs a commit record, else resume would
+    # reprocess it forever (and a max_buckets_this_run loop would
+    # stall on it); its row carries the aggregate's column types
+    id_type = out.schema["doc_id"].dataType
+    lineage = (spark.createDataFrame(
+        [(b, -1, 0, 0) for b in empty],
+        "bucket int, partition_id int, n_docs bigint, n_chunks bigint")
+        .withColumn("doc_id_min", F.lit(None).cast(id_type))
+        .withColumn("doc_id_max", F.lit(None).cast(id_type)))
+    if written:
+        lineage = (spark.read.option("basePath", chunks_dir)
+                   .parquet(*[bucket_dirs[b] for b in written])
+                   .groupBy("bucket", "partition_id").agg(
+                       F.min("doc_id").alias("doc_id_min"),
+                       F.max("doc_id").alias("doc_id_max"),
+                       F.countDistinct("doc_id").alias("n_docs"),
+                       F.count(F.lit(1)).alias("n_chunks"))
+                   .unionByName(lineage))
+    # the commit point: every bucket of the run becomes visible once
+    # this one append lands
+    (lineage.withColumn("wall_s", F.lit(wall))
+     .withColumn("committed_at", F.current_timestamp())
+     .select(*LINEAGE_COLS)
+     .coalesce(1).write.mode("append")
+     .parquet(os.path.join(out_dir, "lineage")))
 
     return read_output(spark, out_dir)

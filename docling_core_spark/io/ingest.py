@@ -47,7 +47,7 @@ import posixpath
 from typing import Dict, Iterator, List, Optional, Sequence, Tuple
 from urllib.parse import urlsplit
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # stream-row schema shared by the local and remote arms
@@ -129,15 +129,15 @@ def split_sources(sources: Sequence[str]
     return local, urls
 
 
-def _fmt_expr(name_col: str):
+def _fmt_expr(name: Column) -> Column:
     """JVM-side suffix classifier matching classify_format. A literal
     map lookup, NOT a WHEN chain: Catalyst substitutes the suffix
     expression into every WHEN branch textually (plan_audit caught
     the split() evaluated 10x per row), while map.getItem evaluates
     its key exactly once."""
-    suffix = F.when(F.col(name_col).contains("."),
+    suffix = F.when(name.contains("."),
                     F.lower(F.element_at(
-                        F.split(name_col, r"\."), -1))).otherwise("")
+                        F.split(name, r"\."), -1))).otherwise("")
     mapping = F.create_map(
         *[F.lit(x) for kv in FORMAT_BY_SUFFIX.items() for x in kv])
     return F.coalesce(mapping.getItem(suffix), F.lit("binary"))
@@ -150,13 +150,13 @@ def _local_streams(spark: SparkSession, paths: List[str]) -> DataFrame:
     df = (spark.read.format("binaryFile")
           .option("recursiveFileLookup", "true")
           .load(paths))
-    name = F.element_at(F.split("path", "/"), -1)
-    return df.select(
+    df = df.select(
         F.col("path").alias("doc_id"),
-        name.alias("name"),
-        _fmt_expr("name").alias("fmt"),
+        F.element_at(F.split("path", "/"), -1).alias("name"),
         F.col("length").cast("long").alias("n_bytes"),
         F.col("content"))
+    return df.select("doc_id", "name", _fmt_expr(df["name"]).alias("fmt"),
+                     "n_bytes", "content")
 
 
 _GOOGLE_DOC_RE = None

@@ -30,7 +30,7 @@ import re
 from typing import Dict, List, Optional, Tuple
 
 # bump when any expected-row computation here changes shape/semantics
-ORACLE_VERSION = 10  # shared sidecar screen: "payload: invalid JSON (...)"
+ORACLE_VERSION = 11  # dedup_retain_modes: one presence flag per mode
 
 # headings are free text; \x1f (ASCII unit separator) never appears in
 # the corpus and both sides apply the identical join, so equality of

@@ -2401,10 +2401,11 @@ def q_dedup_retain_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulations are row-identical (VERDICT r4 item 5): run BOTH the
     window mode (full-row shuffle on content_md5) and the keys mode
     (24-byte key aggregation + survivor semi-join, payload unshuffled)
-    over the documents table and inner-join the survivor sets on
-    (doc_id, content_md5). Any divergence between the modes drops
-    rows, so the single oracle row-count/hash check certifies both
-    plans at once."""
+    over the documents table and full-outer-join the survivor sets on
+    (doc_id, content_md5), with one presence flag per mode. The oracle
+    emits both flags TRUE on every row, so a row only one mode keeps
+    fails the single oracle row-count/hash check, whichever mode keeps
+    it."""
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").alias("clean_text"))
     # bind the hash ONCE as a generated attribute (plan_audit: letting
@@ -2414,16 +2415,20 @@ def q_dedup_retain_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _gen_bind(docs, ["doc_id", "clean_text"],
                      F.md5("clean_text"), "content_md5")
     win = dedup_retain_over(docs, mode="window").select(
-        "doc_id", "content_md5")
+        "doc_id", "content_md5", F.lit(True).alias("in_window"))
     keys = dedup_retain_over(docs, mode="keys").select(
-        "doc_id", "content_md5")
-    return (win.join(keys, ["doc_id", "content_md5"])
+        "doc_id", "content_md5", F.lit(True).alias("in_keys"))
+    return (win.join(keys, ["doc_id", "content_md5"], "full")
+            .select("doc_id", "content_md5",
+                    F.coalesce("in_window", F.lit(False)).alias("in_window"),
+                    F.coalesce("in_keys", F.lit(False)).alias("in_keys"))
             .orderBy("doc_id"))
 
 
 SQL_DEDUP_RETAIN_MODES = """
 WITH h AS (SELECT doc_id, md5(text) AS content_md5 FROM documents)
-SELECT MIN(doc_id) AS doc_id, content_md5
+SELECT MIN(doc_id) AS doc_id, content_md5,
+       TRUE AS in_window, TRUE AS in_keys
 FROM h GROUP BY content_md5 ORDER BY doc_id
 """
 

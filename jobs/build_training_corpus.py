@@ -8,10 +8,11 @@ driver-oracle-checked as a standalone query):
     stage1/  hygiene     hygiene_over: PII scrub -> language ID ->
                          quality gate (+ content_md5) - per-doc only,
                          so it runs inside resumable doc_id-hash
-                         buckets (io/checkpoint.py): kill/resubmit
-                         continues from the last committed bucket and
-                         per-partition lineage rows land in
-                         stage1/lineage.
+                         buckets (io/checkpoint.py): all pending
+                         buckets go in one pass and one commit, a
+                         kill/resubmit redoes the buckets of the run
+                         it cut, and per-partition lineage rows land
+                         in stage1/lineage.
     stage2/  dedup       dedup_retain_over (min-doc_id per content
                          hash) + optional decontaminate_over against
                          --bench (held-out eval set) + optional
@@ -40,8 +41,9 @@ Build the code archive once, then submit (local or cluster master):
 
 On a real cluster the same command runs with ``--master yarn``/k8s at
 N or 4N executors. 100 TB design: stage 1 is a zero-shuffle codegen
-projection sharded into n-buckets exactly-once commits (size buckets
-so one is a few executors' worth - e.g. 4096 over 10^12 docs); stage 2
+projection over one scan, written partitioned by doc_id-hash bucket
+and committed once (one lineage append), so a resubmit after a kill
+redoes that run; stage 2
 is the pipeline's single unavoidable content-hash shuffle plus one
 broadcast join (the benchmark set is statistic-sized); stage 3
 shuffles only (doc_id, n_tokens) pairs - never text - and broadcasts
@@ -70,7 +72,8 @@ def main() -> None:
     p.add_argument("--seq-len", type=int, default=512,
                    help="packed sequence length in whitespace tokens")
     p.add_argument("--n-buckets", type=int, default=8,
-                   help="stage-1 resume granularity (doc_id hash)")
+                   help="stage-1 output buckets (doc_id hash); "
+                        "a bucket is committed whole or not at all")
     p.add_argument("--exact-substr", action="store_true",
                    help="after global dedup, also cut duplicated "
                         "16-word passages (Lee-et-al ExactSubstr, "

@@ -13,8 +13,9 @@ Build the code archive once, then submit (local or cluster master):
 On a real cluster the same command runs with ``--master yarn``/k8s at N
 or 4N executors - the driver ships the zip to every executor, so no
 code install is needed cluster-side. The run is a resumable hash-bucket
-commit (io/checkpoint.py): re-submitting after a kill continues from
-the last committed bucket, and per-partition lineage rows
+commit (io/checkpoint.py): all pending buckets are written in one pass
+and committed together, re-submitting after a kill redoes the buckets
+the killed run had not committed, and per-partition lineage rows
 (bucket, partition_id, doc range, chunk counts, wall time) land in
 <output>/lineage. This is the operational surface the north rule asks
 for (spark-submit --py-files, resume from checkpoint, lineage+metrics).
@@ -30,12 +31,13 @@ def main() -> None:
     p.add_argument("--input", required=True,
                    help="parquet dir of documents(doc_id, spans)")
     p.add_argument("--output", required=True,
-                   help="output dir (chunks/ + lineage/ committed per bucket)")
+                   help="output dir (chunks/bucket=B + lineage/)")
     p.add_argument("--mode", default="hybrid",
                    choices=["hybrid", "hier", "page"])
     p.add_argument("--max-tokens", type=int, default=64)
     p.add_argument("--n-buckets", type=int, default=8,
-                   help="resume granularity (buckets of hash(doc_id))")
+                   help="output buckets of hash(doc_id); a bucket "
+                        "is committed whole or not at all")
     args = p.parse_args()
 
     # imports resolved from --py-files on executors; deferred past

@@ -20,8 +20,8 @@ independently-committable parse. Output:
 ``<output>/chunks`` span rows (doc_id, ord, kind, text, media_ref)
 plus ``<output>/lineage`` per-partition rows. The run is the same
 resumable hash-bucket commit as jobs/chunk_corpus.py: re-submitting
-after a kill continues from the last committed bucket, and the same
-command runs at N or 4N executors on a real master.
+after a kill redoes the buckets the killed run had not committed, and
+the same command runs at N or 4N executors on a real master.
 """
 
 from __future__ import annotations

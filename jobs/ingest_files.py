@@ -26,15 +26,14 @@ Stages:
   text -> paragraph spans, binary -> media-stub span) in ONE
   mapInArrow stage emitting the packed per-doc shape; JVM-side
   unpack.
-* **commit**: io/checkpoint.run_resumable - doc_id-hash buckets with
-  per-partition lineage rows; re-submitting after a kill continues
-  from the last committed bucket and a fully-committed run is a
-  no-op.
+* **commit**: io/checkpoint.run_resumable - doc_id-hash buckets,
+  written in one pass and committed with one append of per-partition
+  lineage rows; re-submitting after a kill redoes the buckets the
+  killed run had not committed, and a fully-committed run is a no-op.
 
 Output: ``<output>/chunks`` span rows (doc_id, ord, kind, text,
 media_ref) + ``<output>/lineage``. The same command runs at N or 4N
-executors on a real master; at 10^12 files the bucket count is sized
-so one bucket is a few executors' worth (see io/checkpoint.py).
+executors on a real master (see io/checkpoint.py).
 """
 
 from __future__ import annotations

@@ -143,3 +143,101 @@ def test_extraction_tier_preempt_and_resume(spark, out_dir):
     lineage = read_lineage(spark, out_dir)
     assert lineage.groupBy().sum("n_docs").collect()[0][0] == N_DOCS
     pages.unpersist()
+
+
+def _spark_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return how many Spark jobs
+    it launched."""
+    sc = spark.sparkContext
+    group = f"ckpt-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "run_resumable job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_input_read_once(spark, tmp_path):
+    """One pass however many buckets: the job count of a run does not
+    grow with n_buckets when every bucket has rows (a pass per bucket
+    rescans the input and commits once per bucket)."""
+    jobs = {}
+    for n in (2, 8):
+        out = str(tmp_path / f"run{n}")
+        jobs[n] = _spark_jobs(spark, lambda: run_resumable(
+            _docs(spark), out, _stage, n_buckets=n))
+        lineage = read_lineage(spark, out)
+        assert lineage.filter(lineage.n_docs > 0).select(
+            "bucket").distinct().count() == n  # no empty bucket
+    assert jobs[2] == jobs[8]
+
+
+def _direct(spark):
+    return sorted((r["doc_id"], r["chunk_idx"], r["text"])
+                  for r in _stage(_docs(spark)).collect())
+
+
+def _got(out):
+    return sorted((r["doc_id"], r["chunk_idx"], r["text"])
+                  for r in out.collect())
+
+
+def test_failed_commit_is_redone(spark, out_dir, monkeypatch):
+    """The lineage append fails once after the output write landed: no
+    pending bucket is committed, and the rerun rewrites them with no
+    duplicates and no losses."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    run_resumable(_docs(spark), out_dir, _stage, n_buckets=N_BUCKETS,
+                  max_buckets_this_run=2)
+    committed = completed_buckets(spark, out_dir)
+    real = DataFrameWriter.parquet
+
+    def lose_commit(self, path, *args, **kwargs):
+        if path == os.path.join(out_dir, "lineage"):
+            monkeypatch.setattr(DataFrameWriter, "parquet", real)
+            raise RuntimeError("driver lost before the lineage append")
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", lose_commit)
+    with pytest.raises(RuntimeError):
+        run_resumable(_docs(spark), out_dir, _stage, n_buckets=N_BUCKETS)
+    assert all(os.path.isdir(os.path.join(out_dir, "chunks", f"bucket={b}"))
+               for b in range(N_BUCKETS))  # the write landed
+    assert completed_buckets(spark, out_dir) == committed
+
+    out = run_resumable(_docs(spark), out_dir, _stage, n_buckets=N_BUCKETS)
+    assert _got(out) == _direct(spark)
+    assert completed_buckets(spark, out_dir) == list(range(N_BUCKETS))
+
+
+@pytest.mark.parametrize("where", ["bucket", "staged_task"])
+def test_leftover_files_removed(spark, out_dir, where):
+    """A crashed run's parquet files in a pending bucket - in its
+    directory, or staged by a task whose job never committed - are gone
+    after the rerun, whose output equals a clean run."""
+    from pyspark.sql import functions as F
+
+    run_resumable(_docs(spark), out_dir, _stage, n_buckets=N_BUCKETS,
+                  max_buckets_this_run=2)
+    pending = min(set(range(N_BUCKETS))
+                  - set(completed_buckets(spark, out_dir)))
+    junk_dir = os.path.join(out_dir, "junk")
+    (_stage(_docs(spark)).limit(5)
+     .withColumn("partition_id", F.lit(0))
+     .coalesce(1).write.parquet(junk_dir))
+    junk = next(f for f in os.listdir(junk_dir) if f.startswith("part-"))
+    chunks = os.path.join(out_dir, "chunks")
+    dest = (os.path.join(chunks, f"bucket={pending}") if where == "bucket"
+            else os.path.join(chunks, "_temporary", "0",
+                              "task_202601010000_0000_m_000000",
+                              f"bucket={pending}"))
+    os.makedirs(dest, exist_ok=True)
+    shutil.copy(os.path.join(junk_dir, junk),
+                os.path.join(dest, "part-junk.parquet"))
+
+    out = run_resumable(_docs(spark), out_dir, _stage, n_buckets=N_BUCKETS)
+    assert _got(out) == _direct(spark)
+    assert "part-junk.parquet" not in os.listdir(
+        os.path.join(chunks, f"bucket={pending}"))

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from docling_core_spark.textops import (
     CONTAM_BENCH_MOD,
     SAMPLE_MOD,
@@ -715,6 +717,30 @@ def test_dedup_retain_modes_identical_and_keys_plan(spark, tmp_path):
     assert "LeftSemi" in plan             # survivors join back
     with pytest.raises(ValueError):
         dedup_retain_over(df, mode="bogus")
+
+
+@pytest.mark.parametrize("kept_by", ["window", "keys"])
+def test_dedup_retain_modes_flags_one_sided_keep(spark, tmp_path,
+                                                 monkeypatch, kept_by):
+    """q_dedup_retain_modes must surface a survivor that only ONE mode
+    keeps, whichever mode that is: the other mode is made to drop doc
+    3, and doc 3's row carries only the keeping mode's flag (the
+    oracle emits both flags TRUE, so the certification fails)."""
+    from docling_core_spark import textops
+
+    sf = _write_docs(spark, tmp_path, [
+        (1, "alpha"), (2, "alpha"), (3, "beta"), (4, "gamma")])
+    real = textops.dedup_retain_over
+
+    def one_sided(clean, mode="window", **kw):
+        out = real(clean, mode=mode, **kw)
+        return out if mode == kept_by else out.filter("doc_id != 3")
+
+    monkeypatch.setattr(textops, "dedup_retain_over", one_sided)
+    rows = {r["doc_id"]: (r["in_window"], r["in_keys"])
+            for r in textops.q_dedup_retain_modes(spark, sf).collect()}
+    assert rows == {1: (True, True), 4: (True, True),
+                    3: (kept_by == "window", kept_by == "keys")}
 
 
 def test_exact_substr_dedup_first_occurrence_wins(spark, tmp_path):
