@@ -157,8 +157,8 @@ def _href(rng: random.Random, doc_index: int) -> str:
 
 
 # bump when the generator's output changes: materialized corpus caches
-# (queries.corpus_path, bench_scaling) key on this so stale parquet
-# can't silently diverge from the in-process generator
+# (queries.corpus_cache_path, bench_scaling) key on this so stale
+# parquet can't silently diverge from the in-process generator
 CORPUS_VERSION = 9
 
 

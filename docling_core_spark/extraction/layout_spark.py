@@ -589,27 +589,14 @@ def layout_stats(docs: DataFrame) -> DataFrame:
 # materialized cell table per (sf, corpus version, layout version)
 # ----------------------------------------------------------------------
 
-def layout_cells_path(sf_dir: str) -> str:
-    from docling_core_spark.corpus import CORPUS_VERSION
-    from docling_core_spark.queries import corpus_docs_for
-
-    n_docs = corpus_docs_for(sf_dir)
-    return os.path.join(
-        os.environ.get("SPARK_GRAFT_TMP", "/tmp"),
-        f"docling_layout_cells_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{n_docs}_v{CORPUS_VERSION}.{LAYOUT_VERSION}.parquet")
-
-
 def layout_cells_ensure(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the print table if needed; returns its path."""
-    from docling_core_spark.queries import corpus_df
+    from docling_core_spark.io.materialize import materialize
+    from docling_core_spark.queries import corpus_cache_path, corpus_df
 
-    path = layout_cells_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        render_layout(corpus_df(spark, sf_dir)) \
-            .write.mode("overwrite").parquet(path)
-    return path
+    return materialize(
+        corpus_cache_path("layout_cells", sf_dir, LAYOUT_VERSION),
+        lambda p: render_layout(corpus_df(spark, sf_dir)).write.parquet(p))
 
 
 def layout_cells_df(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,8 +17,6 @@ scan -> extract stage only, not page synthesis.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from docling_core_spark.engine import map_rows
@@ -86,26 +84,14 @@ def extract_page_stats(pages: DataFrame, html_col: str = "html"
 # materialized page table per (sf, version)
 # ----------------------------------------------------------------------
 
-def pages_path(sf_dir: str) -> str:
-    from docling_core_spark.corpus import CORPUS_VERSION
-    from docling_core_spark.queries import corpus_docs_for
-
-    n_docs = corpus_docs_for(sf_dir)
-    return os.path.join(
-        os.environ.get("SPARK_GRAFT_TMP", "/tmp"),
-        f"docling_pages_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{n_docs}_v{CORPUS_VERSION}.{PAGES_VERSION}.parquet")
-
-
 def pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The synthetic page table for this sf, materialized once."""
-    from docling_core_spark.queries import corpus_df
+    from docling_core_spark.io.materialize import materialize_df
+    from docling_core_spark.queries import corpus_cache_path, corpus_df
 
-    path = pages_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        render_pages(corpus_df(spark, sf_dir)) \
-            .write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return materialize_df(
+        spark, corpus_cache_path("pages", sf_dir, PAGES_VERSION),
+        lambda: render_pages(corpus_df(spark, sf_dir)))
 
 
 # ----------------------------------------------------------------------

@@ -285,38 +285,38 @@ def ensure_demo_tree(sf_dir: str) -> str:
     """Materialize the deterministic planted file tree the driver row
     q_ingest_files ingests: the first 40 documents of ``sf_dir``'s
     documents table written as real files under a two-subdir tree
-    (even doc_ids as minimal HTML pages, odd as .txt) in the system
-    temp dir, once per sf. Spark-free (pyarrow read), idempotent via
-    a marker file; the marker's underscore prefix keeps Spark's
-    hidden-file filter from ingesting it."""
-    import tempfile
-
+    (even doc_ids as minimal HTML pages, odd as .txt). Spark-free
+    (pyarrow read), keyed on the documents table's ``source_key`` and
+    committed by ``io.materialize`` - its ``_SUCCESS`` marker's
+    underscore prefix keeps Spark's hidden-file filter from ingesting
+    it."""
     import pyarrow.parquet as pq
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"docling_ingest_{os.path.basename(os.path.abspath(sf_dir))}_v1")
-    marker = os.path.join(base, "_READY")
-    if os.path.exists(marker):
-        return base
-    t = pq.read_table(os.path.join(sf_dir, "documents.parquet"),
-                      columns=["doc_id", "text"])
-    rows = sorted(zip(t.column("doc_id").to_pylist(),
-                      t.column("text").to_pylist()))[:40]
-    for sub in ("even", "odd"):
-        os.makedirs(os.path.join(base, sub), exist_ok=True)
-    for doc_id, text in rows:
-        if int(doc_id) % 2 == 0:
-            path = os.path.join(base, "even", f"doc_{doc_id}.html")
-            data = f"<html><body><p>{text}</p></body></html>"
-        else:
-            path = os.path.join(base, "odd", f"doc_{doc_id}.txt")
-            data = text
-        with open(path, "w", encoding="utf-8", newline="") as f:
-            f.write(data)
-    with open(marker, "w", encoding="utf-8") as f:
-        f.write("ok")
-    return base
+    from docling_core_spark.io.materialize import (
+        materialize,
+        scratch_path,
+        source_key,
+    )
+
+    def write(base: str) -> None:
+        t = pq.read_table(os.path.join(sf_dir, "documents.parquet"),
+                          columns=["doc_id", "text"])
+        rows = sorted(zip(t.column("doc_id").to_pylist(),
+                          t.column("text").to_pylist()))[:40]
+        for sub in ("even", "odd"):
+            os.makedirs(os.path.join(base, sub))
+        for doc_id, text in rows:
+            if int(doc_id) % 2 == 0:
+                path = os.path.join(base, "even", f"doc_{doc_id}.html")
+                data = f"<html><body><p>{text}</p></body></html>"
+            else:
+                path = os.path.join(base, "odd", f"doc_{doc_id}.txt")
+                data = text
+            with open(path, "w", encoding="utf-8", newline="") as f:
+                f.write(data)
+
+    return materialize(
+        scratch_path(f"docling_ingest_{source_key(sf_dir)}_v1"), write)
 
 
 def ingest_spans(streams: DataFrame) -> DataFrame:

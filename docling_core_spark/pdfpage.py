@@ -416,48 +416,25 @@ PDF_CELLS_VERSION = 1
 _Q_BBOX = (100.0, 760.0, 400.0, 600.0)  # (l, t, r, b) BOTTOMLEFT
 
 
-def pdf_cells_path(sf_dir: str) -> str:
-    import os
-
-    from docling_core_spark.queries import corpus_docs_for
-
-    n = corpus_docs_for(sf_dir)
-    base = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        os.environ.get("SPARK_GRAFT_TMP", "/tmp"),
-        f"docling_pdfcells_{base}_{n}_v{PDF_CELLS_VERSION}.parquet")
-
-
 def ensure_pdf_cells_local(sf_dir: str) -> str:
     """Spark-free materialization for the DuckDB oracle."""
-    import os
-
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from docling_core_spark.queries import corpus_docs_for
+    from docling_core_spark.io.materialize import materialize_table
+    from docling_core_spark.queries import corpus_cache_path, corpus_docs_for
 
-    path = pdf_cells_path(sf_dir)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    n = corpus_docs_for(sf_dir)
-    cols: Dict[str, list] = {k: [] for k in _CELL_COLS}
-    for i in range(n):
-        _append_cell_rows(cols, i, gen_page_cells(i, 1, 42))
-    table = pa.Table.from_pydict(cols, schema=_arrow_cell_schema())
-    os.makedirs(path, exist_ok=True)
-    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-    open(os.path.join(path, "_SUCCESS"), "w").close()
-    return path
+    def build():
+        cols: Dict[str, list] = {k: [] for k in _CELL_COLS}
+        for i in range(corpus_docs_for(sf_dir)):
+            _append_cell_rows(cols, i, gen_page_cells(i, 1, 42))
+        return pa.Table.from_pydict(cols, schema=_arrow_cell_schema())
+
+    return materialize_table(
+        corpus_cache_path("pdfcells", sf_dir, PDF_CELLS_VERSION), build)
 
 
 def pdf_cells_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    path = pdf_cells_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ensure_pdf_cells_local(sf_dir)
-    return spark.read.parquet(path)
+    return spark.read.parquet(ensure_pdf_cells_local(sf_dir))
 
 
 def q_pdf_cells_in_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:

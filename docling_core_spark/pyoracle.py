@@ -26,11 +26,16 @@ join convention on both sides (see HEADINGS_SEP / join_refs).
 from __future__ import annotations
 
 import os
-import re
 from typing import Dict, List, Optional, Tuple
 
+from docling_core_spark.io.materialize import (
+    materialize_table,
+    scratch_path,
+    source_key,
+)
+
 # bump when any expected-row computation here changes shape/semantics
-ORACLE_VERSION = 11  # dedup_retain_modes: one presence flag per mode
+ORACLE_VERSION = 12  # expectations are committed directories
 
 # headings are free text; \x1f (ASCII unit separator) never appears in
 # the corpus and both sides apply the identical join, so equality of
@@ -207,40 +212,6 @@ def _rows_parse_docjson(n: int) -> list:
         doc2 = doc_from_spans(doc_id, _tuples(spans))
         out.append((doc_id, doc2.origin, _hier(doc2)))
     return _chunk_rows(out)
-
-
-def _rows_doc_pipeline_stats(n: int) -> list:
-    rows = []
-    for r, (doc_id, doc) in zip(_corpus_rows(n), _docs(n)):
-        chunks = _hybrid(doc)
-        rows.append({
-            "doc_id": doc_id,
-            "n_spans": len(r["spans"]),
-            "n_chunks": len(chunks),
-            "n_chars": sum(len(c.text) for c in chunks),
-        })
-    return rows
-
-
-_MEDIA_KIND_RE = re.compile(r"^(picture|table|chart|code)")
-
-
-def _rows_media_features(n: int) -> list:
-    """Per-media-ref feature rows (the SQL oracle aggregates them with
-    the same GROUP BY the Spark query runs)."""
-    from docling_core_spark.mediaops import (
-        _kind_for,
-        _payload_for,
-        feature_row,
-    )
-
-    refs = set()
-    for r in _corpus_rows(n):
-        for s in r["spans"]:
-            if (s["media_ref"] and _MEDIA_KIND_RE.match(s["kind"])):
-                refs.add(s["media_ref"])
-    return [feature_row(ref, _kind_for(ref), _payload_for(ref))
-            for ref in sorted(refs)]
 
 
 def _rows_html_extract(n: int) -> list:
@@ -621,161 +592,117 @@ _CHUNK_COLS = [("doc_id", "string"), ("chunk_idx", "int32"),
                ("span_refs_str", "string"), ("origin_str", "string")]
 
 _SPECS: Dict[str, tuple] = {
-    # name -> (row_fn, [(col, pa_type_name)], final_select_sql or None)
-    "chunks_hybrid": (_rows_chunks_hybrid, _CHUNK_COLS, None),
-    "chunks_hierarchical": (_rows_chunks_hierarchical, _CHUNK_COLS, None),
-    "chunks_page": (_rows_chunks_page, _CHUNK_COLS, None),
+    # name -> (row_fn, [(col, pa_type_name)])
+    "chunks_hybrid": (_rows_chunks_hybrid, _CHUNK_COLS),
+    "chunks_hierarchical": (_rows_chunks_hierarchical, _CHUNK_COLS),
+    "chunks_page": (_rows_chunks_page, _CHUNK_COLS),
     "chunks_contextualized": (
         _rows_chunks_contextualized,
-        _CHUNK_COLS + [("contextualized", "string")], None),
+        _CHUNK_COLS + [("contextualized", "string")]),
     "export_markdown": (
         _rows_export_markdown,
-        [("doc_id", "string"), ("fmt", "string"), ("text", "string")],
-        None),
+        [("doc_id", "string"), ("fmt", "string"), ("text", "string")]),
     "export_doctags": (
         _rows_export_doctags,
-        [("doc_id", "string"), ("fmt", "string"), ("text", "string")],
-        None),
+        [("doc_id", "string"), ("fmt", "string"), ("text", "string")]),
     "export_html": (
         _rows_export_html,
-        [("doc_id", "string"), ("fmt", "string"), ("text", "string")],
-        None),
-    "parse_doctags": (_rows_parse_doctags, _CHUNK_COLS, None),
-    "parse_docjson": (_rows_parse_docjson, _CHUNK_COLS, None),
-    "doc_pipeline_stats": (
-        _rows_doc_pipeline_stats,
-        [("doc_id", "string"), ("n_spans", "int32"),
-         ("n_chunks", "int32"), ("n_chars", "int64")], None),
-    "media_feature_stats": (
-        _rows_media_features,
-        [("media_ref", "string"), ("kind", "string"),
-         ("width", "int32"), ("height", "int32"),
-         ("n_frames", "int32"), ("duration_s", "float64"),
-         ("byte_mean", "float64"), ("phash16", "int64")],
-        # aggregate exactly like mediaops.media_feature_stats
-        # (floor-based rounding: ROUND tie behavior differs between
-        # Spark and DuckDB on rational averages)
-        "SELECT kind, CAST(COUNT(*) AS BIGINT) AS n_items, "
-        "FLOOR(AVG(byte_mean) * 10000 + 0.5) / 10000.0 AS avg_byte_mean, "
-        "FLOOR(AVG(width) * 100 + 0.5) / 100.0 AS avg_width, "
-        "FLOOR(AVG(duration_s) * 1000 + 0.5) / 1000.0 AS avg_duration_s, "
-        "CAST(COUNT(DISTINCT phash16) AS BIGINT) AS n_distinct_phash "
-        "FROM t GROUP BY kind ORDER BY kind"),
-    "concat_chunks": (_rows_concat_chunks, _CHUNK_COLS, None),
-    "extract_range_chunks": (_rows_extract_range_chunks, _CHUNK_COLS,
-                             None),
+        [("doc_id", "string"), ("fmt", "string"), ("text", "string")]),
+    "parse_doctags": (_rows_parse_doctags, _CHUNK_COLS),
+    "parse_docjson": (_rows_parse_docjson, _CHUNK_COLS),
+    "concat_chunks": (_rows_concat_chunks, _CHUNK_COLS),
+    "extract_range_chunks": (_rows_extract_range_chunks, _CHUNK_COLS),
     "html_extract": (
         _rows_html_extract,
         [("doc_id", "string"), ("ord", "int32"), ("kind", "string"),
-         ("text", "string"), ("media_ref", "string")], None),
+         ("text", "string"), ("media_ref", "string")]),
     "html_page_stats": (
         _rows_html_page_stats,
         [("doc_id", "string"), ("page_chars", "int64"),
          ("content_chars", "int64"), ("n_dropped", "int32"),
-         ("main_found", "int32"), ("content_ratio", "float64")], None),
+         ("main_found", "int32"), ("content_ratio", "float64")]),
     "layout_extract": (
         _rows_layout_extract,
         [("doc_id", "string"), ("ord", "int32"), ("kind", "string"),
-         ("text", "string"), ("media_ref", "string")], None),
+         ("text", "string"), ("media_ref", "string")]),
     "layout_page_stats": (
         _rows_layout_page_stats,
         [("doc_id", "string"), ("n_pages", "int32"),
          ("n_cells", "int32"), ("n_chrome_cells", "int32"),
          ("n_lines", "int32"), ("n_blocks", "int32"),
-         ("n_spans", "int32"), ("content_chars", "int64")], None),
+         ("n_spans", "int32"), ("content_chars", "int64")]),
     "rehome_embed": (
         _rows_rehome_embed,
         [("doc_id", "string"), ("media_ref", "string"),
          ("mimetype", "string"), ("dpi", "int32"),
          ("width", "float64"), ("height", "float64"),
-         ("uri_scheme", "string"), ("uri_sha256", "string")], None),
-    "viz_layout": (_rows_viz_layout, _VIZ_COLS, None),
-    "viz_reading_order": (_rows_viz_reading_order, _VIZ_COLS, None),
-    "viz_tables": (_rows_viz_tables, _VIZ_COLS, None),
-    "viz_key_values": (_rows_viz_key_values, _VIZ_COLS, None),
+         ("uri_scheme", "string"), ("uri_sha256", "string")]),
+    "viz_layout": (_rows_viz_layout, _VIZ_COLS),
+    "viz_reading_order": (_rows_viz_reading_order, _VIZ_COLS),
+    "viz_tables": (_rows_viz_tables, _VIZ_COLS),
+    "viz_key_values": (_rows_viz_key_values, _VIZ_COLS),
     "export_legacy": (
         _rows_export_legacy,
-        [("doc_id", "string"), ("fmt", "string"), ("text", "string")],
-        None),
+        [("doc_id", "string"), ("fmt", "string"), ("text", "string")]),
     "legacy_roundtrip": (
         _rows_legacy_roundtrip,
         [("doc_id", "string"), ("ord", "int32"), ("kind", "string"),
-         ("text", "string"), ("media_ref", "string")], None),
+         ("text", "string"), ("media_ref", "string")]),
     "splice_replace": (
         _rows_splice_replace,
         [("doc_id", "string"), ("ord", "int32"), ("kind", "string"),
-         ("text", "string"), ("media_ref", "string")], None),
+         ("text", "string"), ("media_ref", "string")]),
     "splice_graft": (
         _rows_splice_graft,
         [("doc_id", "string"), ("ord", "int32"), ("kind", "string"),
-         ("text", "string"), ("media_ref", "string")], None),
+         ("text", "string"), ("media_ref", "string")]),
     "delete_range": (
         _rows_delete_range,
         [("doc_id", "string"), ("ord", "int32"), ("kind", "string"),
-         ("text", "string"), ("media_ref", "string")], None),
+         ("text", "string"), ("media_ref", "string")]),
     "append_child": (
         _rows_append_child,
         [("doc_id", "string"), ("ord", "int32"), ("kind", "string"),
-         ("text", "string"), ("media_ref", "string")], None),
+         ("text", "string"), ("media_ref", "string")]),
     "docjson_validation": (
         _rows_docjson_validation,
         [("doc_id", "string"), ("is_valid", "bool_"),
-         ("n_errors", "int32"), ("errors", "string")], None),
+         ("n_errors", "int32"), ("errors", "string")]),
     "rehome_refs": (
         _rows_rehome_refs,
         [("doc_id", "string"), ("media_ref", "string"),
          ("mimetype", "string"), ("dpi", "int32"),
          ("width", "float64"), ("height", "float64"),
-         ("uri_scheme", "string"), ("uri_sha256", "string")], None),
+         ("uri_scheme", "string"), ("uri_sha256", "string")]),
 }
 
 ENGINE_ORACLE_QUERIES = tuple(_SPECS)
 
 
-def _expected_dir(sf_dir: str, n_docs: int) -> str:
-    from docling_core_spark.corpus import CORPUS_VERSION
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        os.environ.get("SPARK_GRAFT_TMP", "/tmp"),
-        f"docling_oracle_{base}_{n_docs}"
-        f"_v{CORPUS_VERSION}.{ORACLE_VERSION}")
-
-
 def ensure_expected(name: str, sf_dir: str, n_docs: int) -> str:
     """Materialize the expected rows for ``name`` (idempotent; cached
     on disk keyed by corpus + oracle version)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    from docling_core_spark.queries import corpus_cache_path
 
-    row_fn, cols, _ = _SPECS[name]
-    d = _expected_dir(sf_dir, n_docs)
-    path = os.path.join(d, f"{name}.parquet")
-    marker = os.path.join(d, f"{name}._SUCCESS")
-    if os.path.exists(marker):
-        return path
-    rows = row_fn(n_docs)
-    arrays = []
-    for col, typ in cols:
-        vals = [r[col] for r in rows]
-        arrays.append(pa.array(vals, getattr(pa, typ)()))
-    table = pa.Table.from_arrays(arrays, names=[c for c, _ in cols])
-    os.makedirs(d, exist_ok=True)
-    tmp = path + ".tmp"
-    pq.write_table(table, tmp)
-    os.replace(tmp, path)
-    open(marker, "w").close()
-    return path
+    row_fn, cols = _SPECS[name]
+
+    def build():
+        import pyarrow as pa
+
+        rows = row_fn(n_docs)
+        return pa.Table.from_arrays(
+            [pa.array([r[c] for r in rows], getattr(pa, typ)())
+             for c, typ in cols],
+            names=[c for c, _ in cols])
+
+    return materialize_table(corpus_cache_path(
+        f"oracle_{name}", sf_dir, ORACLE_VERSION, n_docs), build)
 
 
 def oracle_sql_for(name: str, sf_dir: str, n_docs: int) -> str:
     path = ensure_expected(name, sf_dir, n_docs)
-    _, cols, final_sql = _SPECS[name]
-    if final_sql is not None:
-        return (f"WITH t AS (SELECT * FROM read_parquet('{path}')) "
-                + final_sql)
-    col_list = ", ".join(c for c, _ in cols)
-    return f"SELECT {col_list} FROM read_parquet('{path}')"
+    col_list = ", ".join(c for c, _ in _SPECS[name][1])
+    return f"SELECT {col_list} FROM read_parquet('{path}/*.parquet')"
 
 
 # ----------------------------------------------------------------------
@@ -984,12 +911,6 @@ def _load_assets() -> tuple:
 def ensure_token_counts_real(sf_dir: str) -> str:
     """Materialize the independent-implementation expected rows for
     token_counts_real, keyed by the documents parquet fingerprint."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    base = os.path.basename(os.path.normpath(sf_dir))
     # asset overrides change the expected counts - key the cache on
     # them too (empty suffix for the vendored default)
     akey = ""
@@ -999,147 +920,95 @@ def ensure_token_counts_real(sf_dir: str) -> str:
         import hashlib
 
         akey = "_a" + hashlib.sha1(ov.encode()).hexdigest()[:10]
-    d = os.path.join(
-        os.environ.get("SPARK_GRAFT_TMP", "/tmp"),
-        f"docling_oracle_tokreal_{base}_{st.st_mtime_ns}_{st.st_size}"
-        f"_v{ORACLE_VERSION}{akey}")
-    path = os.path.join(d, "token_counts_real.parquet")
-    marker = path + "._SUCCESS"
-    if os.path.exists(marker):
-        return path
-    vocab, ranks = _load_assets()
-    tries = build_wp_trie(vocab)
-    t = pq.read_table(src, columns=["doc_id", "text"])
-    ids = t.column("doc_id").to_pylist()
-    texts = t.column("text").to_pylist()
-    wp = [oracle_wordpiece_count(x, tries) for x in texts]
-    bp = [oracle_bpe_count(x, ranks) for x in texts]
-    out = pa.Table.from_arrays(
-        [pa.array(ids, pa.int64()), pa.array(wp, pa.int64()),
-         pa.array(bp, pa.int64())],
-        names=["doc_id", "wp_tokens", "bpe_tokens"])
-    os.makedirs(d, exist_ok=True)
-    tmp = path + ".tmp"
-    pq.write_table(out, tmp)
-    os.replace(tmp, path)
-    open(marker, "w").close()
-    return path
+
+    def build():
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        vocab, ranks = _load_assets()
+        tries = build_wp_trie(vocab)
+        t = pq.read_table(os.path.join(sf_dir, "documents.parquet"),
+                          columns=["doc_id", "text"])
+        texts = t.column("text").to_pylist()
+        return pa.Table.from_arrays(
+            [pa.array(t.column("doc_id").to_pylist(), pa.int64()),
+             pa.array([oracle_wordpiece_count(x, tries) for x in texts],
+                      pa.int64()),
+             pa.array([oracle_bpe_count(x, ranks) for x in texts],
+                      pa.int64())],
+            names=["doc_id", "wp_tokens", "bpe_tokens"])
+
+    return materialize_table(scratch_path(
+        f"docling_oracle_tokreal_{source_key(sf_dir)}"
+        f"_v{ORACLE_VERSION}{akey}"), build)
 
 
 def sql_token_counts_real(sf_dir: str) -> str:
     path = ensure_token_counts_real(sf_dir)
     return (f"SELECT doc_id, wp_tokens, bpe_tokens "
-            f"FROM read_parquet('{path}') ORDER BY doc_id")
+            f"FROM read_parquet('{path}/*.parquet') ORDER BY doc_id")
+
+
+def _ensure_sidecar_validation(kind: str, sf_dir: str, synth, corrupt,
+                               validators) -> str:
+    """Materialize the expected ``kind`` sidecar-validation rows:
+    single-process synthesize -> corrupt -> validate over the documents
+    parquet (the same pure functions the Spark stage runs), keyed by
+    the documents fingerprint."""
+    def build():
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from docling_core_spark.rectypes import screen_payload
+
+        t = pq.read_table(os.path.join(sf_dir, "documents.parquet"),
+                          columns=["doc_id", "text"])
+        rows = []
+        for doc_id, text in zip(t.column("doc_id").to_pylist(),
+                                t.column("text").to_pylist()):
+            k, js = synth(int(doc_id), text or "")
+            es = screen_payload(validators, k, corrupt(int(doc_id), k, js))
+            rows.append((int(doc_id), k, not es, len(es), "; ".join(es)))
+        types = [pa.int64(), pa.string(), pa.bool_(), pa.int32(),
+                 pa.string()]
+        return pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows], typ)
+             for i, typ in enumerate(types)],
+            names=["doc_id", "kind", "is_valid", "n_errors", "errors"])
+
+    return materialize_table(scratch_path(
+        f"docling_oracle_{kind}_{source_key(sf_dir)}_v{ORACLE_VERSION}"),
+        build)
+
+
+def _sql_sidecar_validation(path: str) -> str:
+    return (f"SELECT doc_id, kind, is_valid, n_errors, errors "
+            f"FROM read_parquet('{path}/*.parquet') ORDER BY doc_id")
 
 
 def ensure_rec_validation(sf_dir: str) -> str:
-    """Materialize the expected rec_validation rows: single-process
-    synthesize -> corrupt -> validate over the documents parquet
-    (same pure functions the Spark stage runs; the validators
-    themselves are parity-locked to the live reference models in
-    tests/test_rectypes.py). Keyed by the documents fingerprint."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    """Expected rec_validation rows (validators parity-locked to the
+    live reference models in tests/test_rectypes.py)."""
+    from docling_core_spark.rectypes import (VALIDATORS, corrupt_rec,
+                                             synth_rec_payload)
 
-    from docling_core_spark.rectypes import (
-        VALIDATORS,
-        corrupt_rec,
-        screen_payload,
-        synth_rec_payload,
-    )
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    base = os.path.basename(os.path.normpath(sf_dir))
-    d = os.path.join(
-        os.environ.get("SPARK_GRAFT_TMP", "/tmp"),
-        f"docling_oracle_recval_{base}_{st.st_mtime_ns}_{st.st_size}"
-        f"_v{ORACLE_VERSION}")
-    path = os.path.join(d, "rec_validation.parquet")
-    marker = path + "._SUCCESS"
-    if os.path.exists(marker):
-        return path
-    t = pq.read_table(src, columns=["doc_id", "text"])
-    rows = []
-    for doc_id, text in zip(t.column("doc_id").to_pylist(),
-                            t.column("text").to_pylist()):
-        kind, js = synth_rec_payload(int(doc_id), text or "")
-        es = screen_payload(VALIDATORS, kind,
-                            corrupt_rec(int(doc_id), kind, js))
-        rows.append((int(doc_id), kind, not es, len(es),
-                     "; ".join(es)))
-    out = pa.Table.from_arrays(
-        [pa.array([r[0] for r in rows], pa.int64()),
-         pa.array([r[1] for r in rows], pa.string()),
-         pa.array([r[2] for r in rows], pa.bool_()),
-         pa.array([r[3] for r in rows], pa.int32()),
-         pa.array([r[4] for r in rows], pa.string())],
-        names=["doc_id", "kind", "is_valid", "n_errors", "errors"])
-    os.makedirs(d, exist_ok=True)
-    tmp = path + ".tmp"
-    pq.write_table(out, tmp)
-    os.replace(tmp, path)
-    open(marker, "w").close()
-    return path
+    return _ensure_sidecar_validation(
+        "recval", sf_dir, synth_rec_payload, corrupt_rec, VALIDATORS)
 
 
 def sql_rec_validation(sf_dir: str) -> str:
-    path = ensure_rec_validation(sf_dir)
-    return (f"SELECT doc_id, kind, is_valid, n_errors, errors "
-            f"FROM read_parquet('{path}') ORDER BY doc_id")
+    return _sql_sidecar_validation(ensure_rec_validation(sf_dir))
 
 
 def ensure_search_validation(sf_dir: str) -> str:
-    """Expected search_meta_validation rows: single-process
-    synthesize -> corrupt -> validate (searchtypes.py pure functions;
-    validators parity-locked to the live reference Meta/Generic/
-    Package models in tests/test_searchtypes.py)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    """Expected search_meta_validation rows (validators parity-locked
+    to the live reference models in tests/test_searchtypes.py)."""
+    from docling_core_spark.searchtypes import (VALIDATORS, corrupt_search,
+                                                synth_search_payload)
 
-    from docling_core_spark.rectypes import screen_payload
-    from docling_core_spark.searchtypes import (
-        VALIDATORS,
-        corrupt_search,
-        synth_search_payload,
-    )
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    base = os.path.basename(os.path.normpath(sf_dir))
-    d = os.path.join(
-        os.environ.get("SPARK_GRAFT_TMP", "/tmp"),
-        f"docling_oracle_searchval_{base}_{st.st_mtime_ns}_{st.st_size}"
-        f"_v{ORACLE_VERSION}")
-    path = os.path.join(d, "search_validation.parquet")
-    marker = path + "._SUCCESS"
-    if os.path.exists(marker):
-        return path
-    t = pq.read_table(src, columns=["doc_id", "text"])
-    rows = []
-    for doc_id, text in zip(t.column("doc_id").to_pylist(),
-                            t.column("text").to_pylist()):
-        kind, js = synth_search_payload(int(doc_id), text or "")
-        es = screen_payload(VALIDATORS, kind,
-                            corrupt_search(int(doc_id), kind, js))
-        rows.append((int(doc_id), kind, not es, len(es),
-                     "; ".join(es)))
-    out = pa.Table.from_arrays(
-        [pa.array([r[0] for r in rows], pa.int64()),
-         pa.array([r[1] for r in rows], pa.string()),
-         pa.array([r[2] for r in rows], pa.bool_()),
-         pa.array([r[3] for r in rows], pa.int32()),
-         pa.array([r[4] for r in rows], pa.string())],
-        names=["doc_id", "kind", "is_valid", "n_errors", "errors"])
-    os.makedirs(d, exist_ok=True)
-    tmp = path + ".tmp"
-    pq.write_table(out, tmp)
-    os.replace(tmp, path)
-    open(marker, "w").close()
-    return path
+    return _ensure_sidecar_validation(
+        "searchval", sf_dir, synth_search_payload, corrupt_search, VALIDATORS)
 
 
 def sql_search_validation(sf_dir: str) -> str:
-    path = ensure_search_validation(sf_dir)
-    return (f"SELECT doc_id, kind, is_valid, n_errors, errors "
-            f"FROM read_parquet('{path}') ORDER BY doc_id")
+    return _sql_sidecar_validation(ensure_search_validation(sf_dir))

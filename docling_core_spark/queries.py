@@ -30,10 +30,14 @@ from pyspark.sql import functions as F
 
 from docling_core_spark.engine import (
     chunk_documents,
-    doc_stats,
     export_documents,
     map_rows,
     synth_documents,
+)
+from docling_core_spark.io.materialize import (
+    materialize_df,
+    materialize_table,
+    scratch_path,
 )
 
 # corpus sizing: ~5000 docs per sf unit keeps bench meaningful but quick
@@ -45,14 +49,16 @@ def corpus_docs_for(sf_dir: str) -> int:
     return _SF_DOCS.get(base, 500)
 
 
-def corpus_path(sf_dir: str) -> str:
+def corpus_cache_path(kind: str, sf_dir: str, *versions) -> str:
+    """The one name for a table derived from this sf's synthetic
+    corpus: keyed on the sf, its doc count, ``CORPUS_VERSION`` and the
+    deriving step's own ``versions``."""
     from docling_core_spark.corpus import CORPUS_VERSION
 
-    n_docs = corpus_docs_for(sf_dir)
-    return os.path.join(
-        os.environ.get("SPARK_GRAFT_TMP", "/tmp"),
-        f"docling_corpus_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{n_docs}_v{CORPUS_VERSION}.parquet")
+    v = ".".join(str(x) for x in (CORPUS_VERSION,) + versions)
+    return scratch_path(
+        f"docling_{kind}_{os.path.basename(os.path.normpath(sf_dir))}"
+        f"_{corpus_docs_for(sf_dir)}_v{v}.parquet")
 
 
 def ensure_corpus_local(sf_dir: str) -> str:
@@ -60,25 +66,22 @@ def ensure_corpus_local(sf_dir: str) -> str:
     by the DuckDB oracles, which may run before any Spark query has
     cached it. Rows are a pure function of (seed, index), so this is
     bit-identical to the Spark-side writer."""
-    path = corpus_path(sf_dir)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    def build():
+        import pyarrow as pa
 
-    from docling_core_spark.corpus import gen_corpus
+        from docling_core_spark.corpus import gen_corpus
 
-    rows = gen_corpus(corpus_docs_for(sf_dir), seed=42)
-    span_t = pa.struct([("kind", pa.string()), ("text", pa.string()),
-                        ("media_ref", pa.string()), ("offset", pa.int32())])
-    table = pa.table({
-        "doc_id": pa.array([r["doc_id"] for r in rows], pa.string()),
-        "spans": pa.array([r["spans"] for r in rows], pa.list_(span_t)),
-    })
-    os.makedirs(path, exist_ok=True)
-    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-    open(os.path.join(path, "_SUCCESS"), "w").close()
-    return path
+        rows = gen_corpus(corpus_docs_for(sf_dir), seed=42)
+        span_t = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                            ("media_ref", pa.string()),
+                            ("offset", pa.int32())])
+        return pa.table({
+            "doc_id": pa.array([r["doc_id"] for r in rows], pa.string()),
+            "spans": pa.array([r["spans"] for r in rows],
+                              pa.list_(span_t)),
+        })
+
+    return materialize_table(corpus_cache_path("corpus", sf_dir), build)
 
 
 def corpus_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,11 +89,9 @@ def corpus_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet (stand-in for the Iceberg documents table) and read back -
     so every query sees the production shape: JVM columnar scan feeding
     the UDF, and generation cost is paid once per process fleet."""
-    path = corpus_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        synth_documents(spark, corpus_docs_for(sf_dir), seed=42) \
-            .write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return materialize_df(
+        spark, corpus_cache_path("corpus", sf_dir),
+        lambda: synth_documents(spark, corpus_docs_for(sf_dir), seed=42))
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -154,10 +155,6 @@ def q_chunks_contextualized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_export_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     return export_documents(corpus_df(spark, sf_dir), fmt="md")
-
-
-def q_doc_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return doc_stats(corpus_df(spark, sf_dir))
 
 
 def q_parse_docjson(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,66 +378,6 @@ def q_append_child(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exploded_span_rows(out)
 
 
-def q_bbox_overlap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geometry at scale: synthetic per-span bboxes (model/doc.py
-    node_bbox), IoU of consecutive items within each doc - pure JVM
-    column math over the exploded span table (geometry.iou_col), one
-    self-join on (doc_id, offset+1)."""
-    from docling_core_spark.model.geometry import iou_col, overlaps_col
-
-    docs = corpus_df(spark, sf_dir)
-    s = (docs.select("doc_id", F.explode("spans").alias("s"))
-         .select("doc_id", F.col("s.offset").alias("off"))
-         .withColumn("l", (F.col("off") * 37 % 512).cast("double"))
-         .withColumn("t", (F.col("off") * 53 % 704).cast("double"))
-         .withColumn("bb", F.struct(
-             F.col("l"),
-             F.col("t"),
-             (F.col("l") + 40.0 + F.col("off") % 60).alias("r"),
-             (F.col("t") + 14.0).alias("b"))))
-    a = s.select("doc_id", F.col("off").alias("off_a"),
-                 F.col("bb").alias("ba"))
-    b = s.select("doc_id", (F.col("off") - 1).alias("off_a"),
-                 F.col("bb").alias("bbx"))
-    pairs = a.join(b, ["doc_id", "off_a"])
-    return (pairs.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_pairs"),
-                 F.sum(overlaps_col(F.col("ba"), F.col("bbx"))
-                       .cast("int")).cast("long").alias("n_overlapping"),
-                 F.round(F.sum(iou_col(F.col("ba"), F.col("bbx"))), 4)
-                 .alias("sum_iou"))
-            .orderBy("doc_id"))
-
-
-def _sql_bbox_overlap_stats(sf_dir: str) -> str:
-    path = ensure_corpus_local(sf_dir)
-    return f"""
-WITH s AS (SELECT doc_id, unnest(spans) AS sp
-           FROM read_parquet('{path}/*.parquet')),
-g AS (SELECT doc_id, sp.offset AS off,
-             CAST(sp.offset * 37 % 512 AS DOUBLE) AS l,
-             CAST(sp.offset * 53 % 704 AS DOUBLE) AS t
-      FROM s),
-bb AS (SELECT doc_id, off, l, t,
-              l + 40.0 + (off % 60) AS r, t + 14.0 AS b FROM g),
-p AS (
-  SELECT a.doc_id,
-         GREATEST(LEAST(a.r, x.r) - GREATEST(a.l, x.l), 0) *
-         GREATEST(LEAST(a.b, x.b) - GREATEST(a.t, x.t), 0) AS inter,
-         (LEAST(a.r, x.r) - GREATEST(a.l, x.l) > 0 AND
-          LEAST(a.b, x.b) - GREATEST(a.t, x.t) > 0) AS ov,
-         ABS(a.r-a.l)*ABS(a.b-a.t) + ABS(x.r-x.l)*ABS(x.b-x.t) AS areas
-  FROM bb a JOIN bb x ON a.doc_id = x.doc_id AND x.off = a.off + 1)
-SELECT doc_id, COUNT(*) AS n_pairs,
-       CAST(SUM(CASE WHEN ov THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_overlapping,
-       ROUND(SUM(inter / (areas - inter + 1.0e-6)), 4) AS sum_iou
-FROM p GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-
-
 def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 analogue: top unshipped orders by revenue. customer is
     the small side (broadcast); orders|x|lineitem co-shuffle on
@@ -473,49 +410,6 @@ WHERE c_mktsegment = 'BUILDING'
 GROUP BY l_orderkey, o_orderdate
 ORDER BY revenue DESC, o_orderdate, l_orderkey
 LIMIT 10
-"""
-
-
-def q_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 analogue: revenue by nation within one region for a
-    date window, with the local-supplier condition (customer and
-    supplier share the nation). All four dims broadcast; the only big
-    co-shuffle is orders |x| lineitem on orderkey."""
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")))
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-            .join(F.broadcast(supp),
-                  (li.l_suppkey == supp.s_suppkey)
-                  & (cust.c_nationkey == supp.s_nationkey))
-            .join(F.broadcast(nation),
-                  cust.c_nationkey == nation.n_nationkey)
-            .join(F.broadcast(region),
-                  nation.n_regionkey == region.r_regionkey)
-            .groupBy("n_name")
-            .agg(F.round(F.sum(F.col("l_extendedprice")
-                               * (1 - F.col("l_discount"))), 2)
-                 .alias("revenue"))
-            .orderBy(F.desc("revenue"), "n_name"))
-
-
-SQL_REGIONAL_REVENUE = """
-SELECT n_name,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM customer, orders, lineitem, supplier, nation, region
-WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-  AND r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1998-01-01'
-GROUP BY n_name ORDER BY revenue DESC, n_name
 """
 
 
@@ -570,25 +464,6 @@ FROM pu GROUP BY n_sessions ORDER BY n_sessions
 """
 
 
-def q_doc_span_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 largest documents by span count - the mega-document skew
-    profile that motivates salting + outlier page-split (SURVEY §4.2).
-    size() on the array column needs no explode: the scan emits list
-    lengths straight off parquet offsets."""
-    docs = corpus_df(spark, sf_dir)
-    return (docs.select("doc_id", F.size("spans").alias("n_spans"))
-            .orderBy(F.desc("n_spans"), "doc_id").limit(20))
-
-
-def _sql_doc_span_skew(sf_dir: str) -> str:
-    path = ensure_corpus_local(sf_dir)
-    return f"""
-SELECT doc_id, CAST(len(spans) AS INTEGER) AS n_spans
-FROM read_parquet('{path}/*.parquet')
-ORDER BY n_spans DESC, doc_id LIMIT 20
-"""
-
-
 def _oracle_sf_dir() -> str:
     """The sf the driver's DuckDB correctness pass runs at (sf0.01);
     tests override via TEST_SF_DIR so both sides stay aligned."""
@@ -623,17 +498,6 @@ def q_extract_range_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _canon_chunks(chunk_documents(
         extract_spans_range(corpus_df(spark, sf_dir), 2, 30), mode="hier"))
-
-
-def q_media_feature_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: corpus -> media table (binary payloads) ->
-    stubbed decode + feature extraction -> per-kind rollup. The oracle
-    aggregates in DuckDB over single-process-materialized feature rows
-    (pyoracle.py) - the byte-level decode itself is not SQL-expressible
-    but its outputs are."""
-    from docling_core_spark.mediaops import media_feature_stats
-
-    return media_feature_stats(corpus_df(spark, sf_dir))
 
 
 def q_export_doctags(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1211,22 +1075,21 @@ def registry() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
     # r5 rebalance: promoting mix_sources/bpe_train grew the head to
     # 27, so the per-round pool window is 23 and an exact two-round
     # cover needs a 46-entry pool. media_feature_stats and
-    # doc_pipeline_stats retire (both stats-family rows the r3
+    # doc_pipeline_stats retired (both stats-family rows the r3
     # VERDICT called redundant filler: media plumbing stays driver-
     # checked via rehome_embed/rehome_refs plus mediaops pytest
     # parity, and every constituent of the pipeline-stats composite
-    # has its own driver row); their q_ builders stay for API users.
+    # has its own driver row).
     pool = [
         ("chunks_contextualized", q_chunks_contextualized),
         ("extract_range_chunks", q_extract_range_chunks),
     ]
-    # ann_ivf_topk (fixed-grid IVF) retires r5: the trained variant
+    # ann_ivf_topk (fixed-grid IVF) retired r5: the trained variant
     # ann_ivf_kmeans_topk is the same broadcast-centroid/map-side-
     # min_by plan with learned cells (strictly the production shape),
     # and the materialized-index serving path is pytest-certified in
-    # tests/test_annindex.py; the q_/SQL builders stay for API users.
-    pool += [(k, v) for k, v in textops.REGISTRY.items()
-             if k != "ann_ivf_topk"]
+    # tests/test_annindex.py.
+    pool += list(textops.REGISTRY.items())
     pool += [
         # VERDICT r4 item 5: one row certifies BOTH dedup_retain_over
         # modes (window vs keys-only aggregation + survivor semi-join)
@@ -1353,7 +1216,6 @@ def oracles() -> Dict[str, str]:
         "pricing_summary": SQL_PRICING_SUMMARY,
         "nation_revenue": SQL_NATION_REVENUE,
         "shipping_priority": SQL_SHIPPING_PRIORITY,
-        "regional_revenue": SQL_REGIONAL_REVENUE,
         "user_sessions": SQL_USER_SESSIONS,
         "exact_dup_groups": SQL_EXACT_DUP_GROUPS,
         "knn_cosine": SQL_KNN_COSINE,
@@ -1381,9 +1243,6 @@ def oracles() -> Dict[str, str]:
     out["search_meta_validation"] = sql_search_validation(sf)
     out["caption_resolution"] = _sql_caption_resolution(sf)
     out["redact_spans"] = _sql_redact_spans(sf)
-    # bbox_overlap_stats + doc_span_skew retired r4 session 12 (see
-    # registry() notes); their q_/SQL builders stay for API users,
-    # like other retired rows
     from docling_core_spark.pdfpage import (
         sql_pdf_cells_in_bbox,
         sql_pdf_crop_text,
@@ -1393,8 +1252,4 @@ def oracles() -> Dict[str, str]:
     out["pdf_cells_in_bbox"] = sql_pdf_cells_in_bbox(sf)
     out["pdf_crop_text"] = sql_pdf_crop_text(sf)
     out["pdf_textlines"] = sql_pdf_textlines(sf)
-    # the driver contract pairs oracles 1:1 with registry entries;
-    # retired rows keep their q_/SQL builders for API users but must
-    # not surface here (r5: media_feature_stats, doc_pipeline_stats)
-    reg = set(registry())
-    return {k: v for k, v in out.items() if k in reg}
+    return out

@@ -365,38 +365,24 @@ def media_df(spark, sf_dir: str):
     """The media table, materialized once per sf - in production this
     IS a stored table (object-store payload index), so queries should
     scan it, not re-synthesize it."""
-    import os
-
+    from docling_core_spark.io.materialize import materialize_df
     from docling_core_spark.mediaops import media_table
-    from docling_core_spark.queries import corpus_df, corpus_docs_for
+    from docling_core_spark.queries import corpus_cache_path, corpus_df
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        os.environ.get("SPARK_GRAFT_TMP", "/tmp"),
-        f"docling_media_{base}_{corpus_docs_for(sf_dir)}"
-        f"_v{ATTACH_VERSION}.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        media_table(corpus_df(spark, sf_dir)) \
-            .write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return materialize_df(
+        spark, corpus_cache_path("media", sf_dir, ATTACH_VERSION),
+        lambda: media_table(corpus_df(spark, sf_dir)))
 
 
 def attached_corpus_df(spark, sf_dir: str):
     """Corpus with file-URI ImageRefs attached, materialized once per
     sf (input preparation, not part of the measured re-homing work)."""
-    import os
+    from docling_core_spark.io.materialize import materialize_df
+    from docling_core_spark.queries import corpus_cache_path, corpus_df
 
-    from docling_core_spark.queries import corpus_df, corpus_docs_for
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        os.environ.get("SPARK_GRAFT_TMP", "/tmp"),
-        f"docling_attached_{base}_{corpus_docs_for(sf_dir)}"
-        f"_v{ATTACH_VERSION}.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        attach_images(corpus_df(spark, sf_dir)) \
-            .write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return materialize_df(
+        spark, corpus_cache_path("attached", sf_dir, ATTACH_VERSION),
+        lambda: attach_images(corpus_df(spark, sf_dir)))
 
 
 # ----------------------------------------------------------------------

@@ -573,20 +573,11 @@ def jaccard_pairs_prefix(sh_rows: DataFrame,
 SHINGLE_INDEX_VERSION = 1
 
 
-def _source_identity(sf_dir: str) -> str:
-    """Short digest of the documents table's identity (absolute path +
-    size + mtime) so a cached derived table can never be served for a
-    different or regenerated corpus that shares a basename - the local
-    analogue of keying an Iceberg intermediate by source snapshot id."""
-    import hashlib
+def _shingle_index_path(sf_dir: str) -> str:
+    from docling_core_spark.io.materialize import scratch_path, source_key
 
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    try:
-        st = os.stat(src)
-        ident = f"{src}|{st.st_size}|{int(st.st_mtime)}"
-    except OSError:
-        ident = src
-    return hashlib.sha1(ident.encode()).hexdigest()[:12]
+    return scratch_path(f"docling_shingles_{source_key(sf_dir)}"
+                        f"_v{SHINGLE_INDEX_VERSION}.parquet")
 
 
 def shingle_index_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -595,29 +586,22 @@ def shingle_index_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer (df counts, prefix ranking, verification) runs off a
     columnar scan - at cluster scale this is an Iceberg intermediate
     table bucketed by sh."""
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        os.environ.get("SPARK_GRAFT_TMP", "/tmp"),
-        f"docling_shingles_{base}_{_source_identity(sf_dir)}"
-        f"_v{SHINGLE_INDEX_VERSION}.parquet")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _shingle_rows(spark, sf_dir).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    from docling_core_spark.io.materialize import materialize_df
+
+    return materialize_df(spark, _shingle_index_path(sf_dir),
+                          lambda: _shingle_rows(spark, sf_dir))
 
 
 def shingle_index_stats(spark: SparkSession, sf_dir: str) -> dict:
     """Write-side table statistics for the shingle index (what an
     Iceberg table's column stats would carry): computed ONCE when the
-    index is materialized and served from a sidecar afterwards, so
-    cost-based plan selection reads a file instead of running a
-    stats job per query (ADVICE r2)."""
+    index is materialized and served afterwards from ``_stats.json``
+    inside the index directory (a rebuilt index drops it), so
+    cost-based plan selection reads a file instead of running a stats
+    job per query (ADVICE r2)."""
     import json
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    stats_path = os.path.join(
-        os.environ.get("SPARK_GRAFT_TMP", "/tmp"),
-        f"docling_shingles_{base}_{_source_identity(sf_dir)}"
-        f"_v{SHINGLE_INDEX_VERSION}.stats.json")
+    stats_path = os.path.join(_shingle_index_path(sf_dir), "_stats.json")
     if os.path.exists(stats_path):
         with open(stats_path) as fh:
             return json.load(fh)
@@ -987,98 +971,16 @@ LIMIT 10
 
 
 # ----------------------------------------------------------------------
-# ANN, IVF variant: coarse quantizer cells + probed exact re-rank
+# ANN, trained-IVF variant: coarse quantizer cells + probed exact
+# re-rank, with Lloyd k-means refinement of the quantizer in exact
+# integer arithmetic
 # ----------------------------------------------------------------------
-
-N_CELLS = 8
-N_PROBES = 3
-
-_QINT = ("transform({c}, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) "
-         "AS LONG))")
-_L2Q = ("aggregate(zip_with(qa, qb, (x, y) -> (x - y) * (x - y)), 0L, "
-        "(a, v) -> a + v)")
-
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: the first N_CELLS vectors act as coarse
-    centroids; every vector is assigned to its nearest centroid
-    (integer-quantized L2, exact and engine-independent), the query
-    probes its N_PROBES nearest cells, and only those cells' members
-    get the exact cosine re-rank. At scale the cell id becomes the
-    partition/bucket key, so a query touches N_PROBES partitions
-    instead of the full corpus - the classic IVF trade."""
-    from pyspark.sql import Window
-
-    emb = (_t(spark, sf_dir, "embeddings")
-           .select("vec_id", "embedding",
-                   F.expr(_QINT.format(c="embedding")).alias("qa")))
-    cent = (emb.filter(F.col("vec_id") < N_CELLS)
-            .select(F.col("vec_id").alias("cid"),
-                    F.col("qa").alias("qb")))
-    dists = (emb.crossJoin(F.broadcast(cent))
-             .withColumn("d2", F.expr(_L2Q)))
-    w = Window.partitionBy("vec_id").orderBy("d2", "cid")
-    assigned = (dists.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .select("vec_id", "embedding", F.col("cid").alias("cell")))
-    probe_cells = (dists.filter(F.col("vec_id") == 0)
-                   .orderBy("d2", "cid").limit(N_PROBES)
-                   .select(F.col("cid").alias("cell")))
-    q = (emb.filter(F.col("vec_id") == 0)
-         .select(F.col("embedding").alias("eb")))
-    cand = (assigned.join(F.broadcast(probe_cells), "cell")
-            .filter(F.col("vec_id") != 0)
-            .crossJoin(F.broadcast(q)))
-    cos = (F.expr(_DOT_SPARK.replace("ea", "embedding"))
-           / (F.expr(_NORM_SPARK.format(c="embedding"))
-              * F.expr(_NORM_SPARK.format(c="eb"))))
-    return (cand.select("vec_id", F.col("cell").cast("long").alias("cell"),
-                        _r4(cos).alias("cos_sim"))
-            .orderBy(F.desc("cos_sim"), "vec_id")
-            .limit(10))
-
-
-SQL_ANN_IVF_TOPK = f"""
-WITH e AS (
-  SELECT vec_id, embedding,
-         list_transform(embedding,
-             x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT)) AS qa
-  FROM embeddings),
-cent AS (SELECT vec_id AS cid, qa AS qb FROM e WHERE vec_id < {N_CELLS}),
-d AS (
-  SELECT e.vec_id, e.embedding, cent.cid,
-         list_sum(list_transform(range(0, 64),
-             i -> (qa[i+1] - qb[i+1]) * (qa[i+1] - qb[i+1]))) AS d2
-  FROM e, cent),
-assigned AS (
-  SELECT vec_id, embedding, cid AS cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY d2, cid) AS rn FROM d)
-  WHERE rn = 1),
-probes AS (
-  SELECT cid AS cell FROM d WHERE vec_id = 0 ORDER BY d2, cid
-  LIMIT {N_PROBES}),
-q AS (SELECT embedding AS qemb FROM e WHERE vec_id = 0)
-SELECT a.vec_id, CAST(a.cell AS BIGINT) AS cell,
-       {_sql_r(_COS_DUCK.format(a='a.embedding', b='qemb'), 4)} AS cos_sim
-FROM assigned a JOIN probes p ON a.cell = p.cell, q
-WHERE a.vec_id <> 0
-ORDER BY cos_sim DESC, a.vec_id
-LIMIT 10
-"""
-
-
-# ----------------------------------------------------------------------
-# ANN, trained-IVF variant: Lloyd k-means refinement of the coarse
-# quantizer, in exact integer arithmetic
-# ----------------------------------------------------------------------
-# The plain IVF query above seeds cells with the first N_CELLS vectors
-# (the "demo contract"); this variant actually TRAINS the quantizer:
-# N_KMEANS_ITERS rounds of Lloyd's algorithm over the integer-quantized
-# vectors, with the per-dimension centroid mean rounded half-up to an
-# integer so every quantity in the pipeline stays an exact BIGINT and
-# the DuckDB oracle reproduces the identical cells bit-for-bit (float
-# means would drift across engines at assignment boundaries).
+# The quantizer is TRAINED: N_KMEANS_ITERS rounds of Lloyd's algorithm
+# over the integer-quantized vectors, with the per-dimension centroid
+# mean rounded half-up to an integer so every quantity in the pipeline
+# stays an exact BIGINT and the DuckDB oracle reproduces the identical
+# cells bit-for-bit (float means would drift across engines at
+# assignment boundaries).
 #
 # round-half-up(s / c) = floor((2s + c) / (2c)), computed with the
 # engine-independent floor-division identity
@@ -1087,7 +989,14 @@ LIMIT 10
 # identity yields the same floor on both, and the final division is
 # exact (the numerator is a multiple of b).
 
+N_CELLS = 8
+N_PROBES = 3
 N_KMEANS_ITERS = 2
+
+_QINT = ("transform({c}, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) "
+         "AS LONG))")
+_L2Q = ("aggregate(zip_with(qa, qb, (x, y) -> (x - y) * (x - y)), 0L, "
+        "(a, v) -> a + v)")
 
 
 def _ivf_assign(dists: DataFrame) -> DataFrame:
@@ -1233,10 +1142,10 @@ _IVF_CENT_CACHE: dict = {}
 
 def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained-IVF ANN: k-means-refined cells (exact integer Lloyd
-    rounds, see ivf_kmeans_fit), then the same probe + exact-cosine
-    re-rank tail as q_ann_ivf_topk. At scale the trained cell id is
-    the partition/bucket key; training cost amortizes over every
-    query served from the index."""
+    rounds, see ivf_kmeans_fit), then the query probes its N_PROBES
+    nearest cells and re-ranks only their members by exact cosine. At
+    scale the trained cell id is the partition/bucket key; training
+    cost amortizes over every query served from the index."""
     emb = (_t(spark, sf_dir, "embeddings")
            .select("vec_id", "embedding",
                    F.expr(_QINT.format(c="embedding")).alias("qa")))
@@ -3758,7 +3667,6 @@ REGISTRY = {
     "simhash_dups": q_simhash_dups,
     "embedding_top_pairs": q_embedding_top_pairs,
     "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
     "ann_ivf_kmeans_topk": q_ann_ivf_kmeans_topk,
     "dup_clusters": q_dup_clusters,
     "dedup_retention": q_dedup_retention,
@@ -3773,7 +3681,6 @@ ORACLES = {
     "simhash_dups": SQL_SIMHASH_DUPS,
     "embedding_top_pairs": SQL_EMBEDDING_TOP_PAIRS,
     "ann_lsh_topk": SQL_ANN_LSH_TOPK,
-    "ann_ivf_topk": SQL_ANN_IVF_TOPK,
     "ann_ivf_kmeans_topk": SQL_ANN_IVF_KMEANS_TOPK,
     "dup_clusters": sql_dup_clusters(),
     "dedup_retention": sql_dedup_retention(),

@@ -21,13 +21,14 @@ driver-oracle-checked as a standalone query):
                          importance-weight selection against the
                          bench target (--dsir-top-frac). Global by
                          nature (one shuffle on the hash); committed
-                         atomically via parquet _SUCCESS - rerun
+                         once by io/materialize.py (leftovers of a
+                         cut attempt are removed first) - a rerun
                          skips it when committed.
     stage3/  pack        pack_over: GPT-style concat-and-chunk
                          sequence packing (two-phase distributed
                          cumsum) of the clean text stream into
-                         --seq-len token sequences. Also _SUCCESS
-                         committed.
+                         --seq-len token sequences. Committed the
+                         same way.
 
 Build the code archive once, then submit (local or cluster master):
 
@@ -54,10 +55,6 @@ from __future__ import annotations
 
 import argparse
 import os
-
-
-def _committed(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 def main() -> None:
@@ -107,6 +104,7 @@ def main() -> None:
 
     from docling_core_spark.io.checkpoint import (read_output,
                                                   run_resumable)
+    from docling_core_spark.io.materialize import materialize_df
     from docling_core_spark.textops import (decontaminate_over,
                                             dedup_retain_over,
                                             dsir_weights_over,
@@ -129,8 +127,7 @@ def main() -> None:
     n_clean = clean.count()
 
     # ---- stage 2: global dedup (+ decontamination), one commit -----
-    s2_dir = os.path.join(args.output, "stage2")
-    if not _committed(s2_dir):
+    def dedup():
         ded = dedup_retain_over(clean, mode=args.dedup_mode)
         if args.bench:
             bench = spark.read.parquet(args.bench)
@@ -198,18 +195,17 @@ def main() -> None:
                     print(f"DSIR: dropping {n_unscored} docs with no "
                           f"extractable words (unscorable)")
                 ded = scored.filter(F.col("avg_log_weight") >= thr)
-        # overwrite is idempotent; _SUCCESS is the commit point
-        ded.drop("partition_id").write.mode("overwrite").parquet(s2_dir)
-    retained = spark.read.parquet(s2_dir)
+        return ded.drop("partition_id")
+
+    retained = materialize_df(spark, os.path.join(args.output, "stage2"),
+                              dedup)
     n_retained = retained.count()
 
     # ---- stage 3: sequence packing, one commit ---------------------
-    s3_dir = os.path.join(args.output, "stage3")
-    if not _committed(s3_dir):
-        packed = pack_over(retained, text_col="clean_text",
-                           seq_len=args.seq_len)
-        packed.write.mode("overwrite").parquet(s3_dir)
-    packed = spark.read.parquet(s3_dir)
+    packed = materialize_df(
+        spark, os.path.join(args.output, "stage3"),
+        lambda: pack_over(retained, text_col="clean_text",
+                          seq_len=args.seq_len))
     stats = packed.agg(
         F.count(F.lit(1)).alias("docs"),
         F.sum("n_tokens").alias("tokens"),
