@@ -18,19 +18,17 @@ rows. Output batches are built column-wise with Arrow types taken from
 the declared Spark schema; a ``spans`` output column is packed from flat
 child arrays.
 
-Stages that stay hand-written, because they carry state or I/O the
-runner has no switch for:
+Stages that stay hand-written, because they carry state the runner
+has no switch for:
 
-* ``rehome`` (5 stages): payload joins and witness batches;
-* ``mediaops`` (4 stages): ``mapInPandas`` over binary media;
 * ``extraction.layout_spark`` ``extract_layout_packed``,
   ``extract_layout_packed_files`` and ``extract_layout_shards``: a
   document carried across batches in partition order, and shard file
   writes;
-* ``io.ingest._remote_streams``: network I/O;
-* ``pdfpage.synth_pdf_cells``: page cells appended straight into the
-  column buffers its single-process oracle shares;
 * ``textops.embedding_top_pairs``: grouped ``applyInPandas``.
+
+tests/test_stage_runner.py fails on any other direct ``mapInArrow`` or
+``mapInPandas`` call.
 
 Scale design:
 * generation/chunking are embarrassingly parallel over rows; cost skew

@@ -14,24 +14,22 @@ this container, so the decode step is STUBBED: ``decode=\"real\"``
 raises NotImplementedError at the exact call site a production build
 would fill in, and the default ``decode=\"fake\"`` derives
 deterministic pseudo-features from the payload bytes. Everything
-Spark-side - schema, Arrow batching, mapInPandas signature, partition
+Spark-side - schema, Arrow batching, per-row stage signature, partition
 strategy - is real and tested.
 
 Scale notes: feature extraction is embarrassingly parallel over media
-rows (mapInPandas, zero shuffle); joining features back onto documents
-broadcasts nothing big because the join key (media_ref) is carried by
-both sides and AQE picks the strategy; payload skew (one 4 GB video
-among thumbnails) is defused the same way as mega-documents - small
-Arrow batches (``spark.sql.execution.arrow.maxRecordsPerBatch``) and
-byte-size-aware repartition before the UDF.
+rows (one ``engine.map_rows`` stage, zero shuffle); joining features
+back onto documents broadcasts nothing big because the join key
+(media_ref) is carried by both sides and AQE picks the strategy;
+payload skew (one 4 GB video among thumbnails) is defused the same way
+as mega-documents - small Arrow batches
+(``spark.sql.execution.arrow.maxRecordsPerBatch``) and byte-size-aware
+repartition before the UDF.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,6 +42,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from docling_core_spark.engine import map_rows
 
 MEDIA_SCHEMA = StructType([
     StructField("media_ref", StringType(), False),
@@ -100,20 +100,11 @@ def media_table(docs: DataFrame) -> DataFrame:
                     & (F.col("media_ref") != ""))
             .distinct())
 
-    def attach(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs = pdf["media_ref"].tolist()
-            kinds = [_kind_for(r) for r in refs]
-            payloads = [_payload_for(r) for r in refs]
-            yield pd.DataFrame({
-                "media_ref": refs,
-                "kind": kinds,
-                "mimetype": [_MIME[k] for k in kinds],
-                "payload": payloads,
-                "n_bytes": [len(p) for p in payloads],
-            })
+    def row(ref):
+        kind, payload = _kind_for(ref), _payload_for(ref)
+        return [(ref, kind, _MIME[kind], payload, len(payload))]
 
-    return refs.mapInPandas(attach, schema=MEDIA_SCHEMA)
+    return map_rows(refs, ("media_ref",), MEDIA_SCHEMA, lambda: row)
 
 
 # ----------------------------------------------------------------------
@@ -168,57 +159,41 @@ def feature_row(ref: str, kind: str, payload: bytes,
 
 def extract_media_features(media: DataFrame, decode: str = "fake"
                            ) -> DataFrame:
-    """media -> per-item features via one mapInPandas stage (Arrow
-    batches; no shuffle). ``byte_mean``/``phash16`` come from the raw
-    bytes and are real computations either way; geometry/duration come
-    from the (stubbed) decoder."""
+    """media -> per-item features via one per-row Arrow stage (no
+    shuffle). ``byte_mean``/``phash16`` come from the raw bytes and are
+    real computations either way; geometry/duration come from the
+    (stubbed) decoder."""
     if decode not in ("fake", "real"):
         raise ValueError(decode)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decoder = _decode_fake if decode == "fake" else _decode_real
-        for pdf in batches:
-            rows = [feature_row(ref, kind, bytes(payload), decoder)
-                    for ref, kind, payload in zip(
-                        pdf["media_ref"], pdf["kind"], pdf["payload"])]
-            yield pd.DataFrame(rows)
+    decoder = _decode_fake if decode == "fake" else _decode_real
 
-    return media.mapInPandas(run, schema=FEATURES_SCHEMA)
+    def row(ref, kind, payload):
+        return [tuple(feature_row(ref, kind, payload, decoder).values())]
+
+    return map_rows(media, ("media_ref", "kind", "payload"),
+                    FEATURES_SCHEMA, lambda: row)
 
 
 def resize_images(media: DataFrame, width: int, height: int,
                   decode: str = "fake") -> DataFrame:
     """Image resize plumbing: filters to images, runs the (stubbed)
-    decode-resize-reencode round trip per Arrow batch. The fake path
+    decode-resize-reencode round trip per image. The fake path
     re-hashes the payload with the target geometry so outputs are
     deterministic and size-bounded."""
     if decode == "real":
         # keep the failure at the operator boundary, not mid-job
         _decode_real("image", b"")
 
-    out_schema = StructType([
-        StructField("media_ref", StringType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
+    def row(ref, payload):
+        return [(ref, width, height, hashlib.md5(
+            payload + f"{width}x{height}".encode()).digest() * 4)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs = pdf["media_ref"].tolist()
-            payloads = [
-                hashlib.md5(bytes(p) + f"{width}x{height}".encode())
-                .digest() * 4
-                for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_ref": refs,
-                "width": [width] * len(refs),
-                "height": [height] * len(refs),
-                "payload": payloads,
-            })
-
-    return (media.filter(F.col("kind") == "image")
-            .mapInPandas(run, schema=out_schema))
+    return map_rows(media.filter(F.col("kind") == "image"),
+                    ("media_ref", "payload"),
+                    "media_ref string NOT NULL, width int NOT NULL, "
+                    "height int NOT NULL, payload binary NOT NULL",
+                    lambda: row)
 
 
 def sample_frames(media: DataFrame, every_n: int = 30,
@@ -229,28 +204,16 @@ def sample_frames(media: DataFrame, every_n: int = 30,
     if decode == "real":
         _decode_real("video", b"")
 
-    out_schema = StructType([
-        StructField("media_ref", StringType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
+    def row(ref, payload):
+        n_frames = _decode_fake("video", payload)["n_frames"]
+        return [(ref, fi, hashlib.md5(
+            payload + fi.to_bytes(4, "little")).digest())
+            for fi in range(0, n_frames, every_n)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, idxs, payloads = [], [], []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                payload = bytes(payload)
-                meta = _decode_fake("video", payload)
-                for fi in range(0, meta["n_frames"], every_n):
-                    refs.append(ref)
-                    idxs.append(fi)
-                    payloads.append(hashlib.md5(
-                        payload + fi.to_bytes(4, "little")).digest())
-            yield pd.DataFrame({"media_ref": refs, "frame_idx": idxs,
-                                "payload": payloads})
-
-    return (media.filter(F.col("kind") == "video")
-            .mapInPandas(run, schema=out_schema))
+    return map_rows(media.filter(F.col("kind") == "video"),
+                    ("media_ref", "payload"),
+                    "media_ref string NOT NULL, frame_idx int NOT NULL, "
+                    "payload binary NOT NULL", lambda: row)
 
 
 # ----------------------------------------------------------------------

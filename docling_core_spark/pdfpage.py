@@ -168,12 +168,6 @@ _CELL_COLS = ("doc_id", "page_no", "unit", "idx", "text",
               "coord_origin", "font_name", "text_direction",
               "page_w", "page_h")
 
-_CELL_SCHEMA = ("doc_id string, page_no int, unit string, idx int, "
-                "text string, rx0 double, ry0 double, rx1 double, "
-                "ry1 double, rx2 double, ry2 double, rx3 double, "
-                "ry3 double, coord_origin string, font_name string, "
-                "text_direction string, page_w double, page_h double")
-
 
 def _arrow_cell_schema():
     import pyarrow as pa
@@ -192,8 +186,7 @@ def _arrow_cell_schema():
 def _append_cell_rows(cols: Dict[str, list], doc_index: int,
                       page: dict) -> None:
     """Flatten one synthetic page into the columnar cell layout (the
-    single definition of the cell-row shape, shared by the Spark
-    generator and the DuckDB-oracle materializer)."""
+    single definition of the cell-row shape)."""
     w, h = page["dimension"]
     for unit, cells in (("word", page["words"]),
                         ("line", page["lines"])):
@@ -211,27 +204,6 @@ def _append_cell_rows(cols: Dict[str, list], doc_index: int,
             cols["text_direction"].append(c["text_direction"])
             cols["page_w"].append(w)
             cols["page_h"].append(h)
-
-
-def synth_pdf_cells(spark: SparkSession, n_docs: int,
-                    seed: int = 42) -> DataFrame:
-    """Distributed generator: each executor derives its pages from
-    (seed, index) - no shuffle, linear scale-out (same pattern as
-    engine.synth_documents)."""
-    import pyarrow as pa
-
-    arrow_schema = _arrow_cell_schema()
-
-    def gen(batches):
-        for batch in batches:
-            cols: Dict[str, list] = {k: [] for k in _CELL_COLS}
-            for i in batch.column("id").to_pylist():
-                _append_cell_rows(cols, int(i), gen_page_cells(int(i), 1,
-                                                               seed))
-            yield pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
-
-    return (spark.range(0, n_docs)
-            .mapInArrow(gen, _CELL_SCHEMA))
 
 
 # ----------------------------------------------------------------------

@@ -34,11 +34,12 @@ from __future__ import annotations
 
 import base64
 import hashlib
-from typing import Dict, Iterator, List, Optional, Tuple
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from docling_core_spark.engine import SPAN_STRUCT, map_rows
 from docling_core_spark.model.spans import (
     encode_image_ref,
     parse_image_ref,
@@ -174,6 +175,39 @@ def _doc_payloads(docs: DataFrame, media: DataFrame) -> DataFrame:
                 .alias("_payloads")))
 
 
+_WITNESS_SCHEMA = ("doc_id string, media_ref string, mimetype string, "
+                   "dpi int, width double, height double, "
+                   "uri_scheme string, uri_sha256 string")
+
+
+def _rehome(docs: DataFrame, rewrite, emit: str,
+            media: Optional[DataFrame] = None) -> DataFrame:
+    """One per-document stage: ``rewrite(spans, payloads)`` over each
+    document's span dicts, emitting the rewritten documents
+    (``emit='docs'``) or their ImageRef witness rows (``'witness'``).
+    With ``media``, ``payloads`` is the document's media_ref -> bytes
+    map from the payload join; without, it is empty."""
+    if emit not in ("docs", "witness"):
+        raise ValueError(f"unknown emit {emit!r}")
+    schema = (_WITNESS_SCHEMA if emit == "witness" else
+              f"doc_id string, spans "
+              f"{docs.schema['spans'].dataType.simpleString()}")
+    cols: Tuple[str, ...] = ("doc_id", "spans")
+    if media is not None:
+        docs = docs.join(_doc_payloads(docs, media), "doc_id", "left")
+        cols += ("_payloads",)
+
+    def row(doc_id, spans, pmap=None):
+        spans = rewrite([dict(zip(SPAN_STRUCT.names, s)) for s in spans],
+                        dict(pmap or ()))
+        if emit == "witness":
+            return [tuple(r.values())
+                    for r in image_ref_rows_py(doc_id, spans)]
+        return [(doc_id, spans)]
+
+    return map_rows(docs, cols, schema, lambda: row)
+
+
 def embed_pictures(docs: DataFrame, media: DataFrame,
                    emit: str = "docs") -> DataFrame:
     """(doc_id, spans) with file-URI images -> embedded data URIs.
@@ -181,56 +215,7 @@ def embed_pictures(docs: DataFrame, media: DataFrame,
     ``emit='witness'`` fuses the per-picture ImageRef projection
     (image_ref_rows) into the same Arrow stage - the embedded span
     arrays (payload-sized after base64) never cross the boundary."""
-    import pyarrow as pa
-
-    joined = docs.join(_doc_payloads(docs, media), "doc_id", "left")
-    out_type = docs.schema["spans"].dataType.simpleString()
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            tbl = batch.to_pydict()
-            new_spans = []
-            for spans, pmap in zip(tbl["spans"], tbl["_payloads"]):
-                payloads = dict(pmap) if pmap else {}
-                new_spans.append(embed_spans(spans, payloads))
-            if emit == "witness":
-                yield _witness_batch(pa, tbl["doc_id"], new_spans)
-            else:
-                yield pa.RecordBatch.from_pydict(
-                    {"doc_id": tbl["doc_id"], "spans": new_spans},
-                    schema=pa.schema([
-                        ("doc_id", pa.string()),
-                        ("spans", batch.schema.field("spans").type)]))
-
-    sel = joined.select("doc_id", "spans", "_payloads")
-    if emit == "witness":
-        return sel.mapInArrow(run, _WITNESS_SCHEMA)
-    return sel.mapInArrow(run, f"doc_id string, spans {out_type}")
-
-
-_WITNESS_SCHEMA = ("doc_id string, media_ref string, mimetype string, "
-                   "dpi int, width double, height double, "
-                   "uri_scheme string, uri_sha256 string")
-
-
-def _witness_batch(pa, doc_ids, span_lists):
-    cols = {k: [] for k in ("doc_id", "media_ref", "mimetype", "dpi",
-                            "width", "height", "uri_scheme",
-                            "uri_sha256")}
-    for did, spans in zip(doc_ids, span_lists):
-        for r in image_ref_rows_py(did, spans):
-            for k, v in r.items():
-                cols[k].append(v)
-    return pa.RecordBatch.from_arrays(
-        [pa.array(cols["doc_id"], pa.string()),
-         pa.array(cols["media_ref"], pa.string()),
-         pa.array(cols["mimetype"], pa.string()),
-         pa.array(cols["dpi"], pa.int32()),
-         pa.array(cols["width"], pa.float64()),
-         pa.array(cols["height"], pa.float64()),
-         pa.array(cols["uri_scheme"], pa.string()),
-         pa.array(cols["uri_sha256"], pa.string())],
-        names=list(cols))
+    return _rehome(docs, embed_spans, emit, media)
 
 
 def reference_pictures(docs: DataFrame, image_dir: str = "artifacts",
@@ -240,56 +225,22 @@ def reference_pictures(docs: DataFrame, image_dir: str = "artifacts",
     ``emit='docs'`` returns the rewritten documents; ``emit='files'``
     returns the image write-set (doc_id, path, n_bytes, sha256) - the
     object-store manifest a sink stage would PUT; ``emit='witness'``
-    fuses the ImageRef projection into the stage."""
-    import pyarrow as pa
+    fuses the ImageRef projection into the stage. Any other ``emit``
+    raises ValueError."""
+    if emit != "files":
+        return _rehome(docs, lambda s, _: reference_spans(s, image_dir)[0],
+                       emit)
 
-    out_type = docs.schema["spans"].dataType.simpleString()
+    def row(doc_id, spans):
+        _, files = reference_spans([dict(zip(SPAN_STRUCT.names, s))
+                                    for s in spans], image_dir)
+        return [(doc_id, path, len(payload),
+                 hashlib.sha256(payload).hexdigest())
+                for path, payload in files]
 
-    def run_docs(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            tbl = batch.to_pydict()
-            new_spans = [reference_spans(s, image_dir)[0]
-                         for s in tbl["spans"]]
-            yield pa.RecordBatch.from_pydict(
-                {"doc_id": tbl["doc_id"], "spans": new_spans},
-                schema=pa.schema([
-                    ("doc_id", pa.string()),
-                    ("spans", batch.schema.field("spans").type)]))
-
-    def run_files(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            tbl = batch.to_pydict()
-            doc_ids, paths, sizes, shas = [], [], [], []
-            for did, spans in zip(tbl["doc_id"], tbl["spans"]):
-                _, files = reference_spans(spans, image_dir)
-                for path, payload in files:
-                    doc_ids.append(did)
-                    paths.append(path)
-                    sizes.append(len(payload))
-                    shas.append(hashlib.sha256(payload).hexdigest())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, pa.string()),
-                 pa.array(paths, pa.string()),
-                 pa.array(sizes, pa.int64()),
-                 pa.array(shas, pa.string())],
-                names=["doc_id", "path", "n_bytes", "sha256"])
-
-    def run_witness(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            tbl = batch.to_pydict()
-            new_spans = [reference_spans(s, image_dir)[0]
-                         for s in tbl["spans"]]
-            yield _witness_batch(pa, tbl["doc_id"], new_spans)
-
-    if emit == "files":
-        return docs.select("doc_id", "spans").mapInArrow(
-            run_files,
-            "doc_id string, path string, n_bytes long, sha256 string")
-    if emit == "witness":
-        return docs.select("doc_id", "spans").mapInArrow(
-            run_witness, _WITNESS_SCHEMA)
-    return docs.select("doc_id", "spans").mapInArrow(
-        run_docs, f"doc_id string, spans {out_type}")
+    return map_rows(docs, ("doc_id", "spans"),
+                    "doc_id string, path string, n_bytes long, "
+                    "sha256 string", lambda: row)
 
 
 def embed_then_reference_pictures(docs: DataFrame, media: DataFrame,
@@ -307,55 +258,16 @@ def embed_then_reference_pictures(docs: DataFrame, media: DataFrame,
     fuser would do automatically; PySpark's planner does not fuse
     adjacent MapInArrow nodes, so the pipeline-shaped API does it
     explicitly."""
-    import pyarrow as pa
-
-    joined = docs.join(_doc_payloads(docs, media), "doc_id", "left")
-    out_type = docs.schema["spans"].dataType.simpleString()
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            tbl = batch.to_pydict()
-            new_spans = []
-            for spans, pmap in zip(tbl["spans"], tbl["_payloads"]):
-                payloads = dict(pmap) if pmap else {}
-                new_spans.append(
-                    reference_spans(embed_spans(spans, payloads),
-                                    image_dir)[0])
-            if emit == "witness":
-                yield _witness_batch(pa, tbl["doc_id"], new_spans)
-            else:
-                yield pa.RecordBatch.from_pydict(
-                    {"doc_id": tbl["doc_id"], "spans": new_spans},
-                    schema=pa.schema([
-                        ("doc_id", pa.string()),
-                        ("spans", batch.schema.field("spans").type)]))
-
-    sel = joined.select("doc_id", "spans", "_payloads")
-    if emit == "witness":
-        return sel.mapInArrow(run, _WITNESS_SCHEMA)
-    return sel.mapInArrow(run, f"doc_id string, spans {out_type}")
+    return _rehome(
+        docs, lambda s, p: reference_spans(embed_spans(s, p), image_dir)[0],
+        emit, media)
 
 
 def attach_images(docs: DataFrame,
                   dir_prefix: str = "artifacts") -> DataFrame:
     """Synthetic ingestion step: file-URI ImageRefs on every picture."""
-    import pyarrow as pa
-
-    out_type = docs.schema["spans"].dataType.simpleString()
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            tbl = batch.to_pydict()
-            new_spans = [attach_file_images(s, dir_prefix)
-                         for s in tbl["spans"]]
-            yield pa.RecordBatch.from_pydict(
-                {"doc_id": tbl["doc_id"], "spans": new_spans},
-                schema=pa.schema([
-                    ("doc_id", pa.string()),
-                    ("spans", batch.schema.field("spans").type)]))
-
-    return docs.select("doc_id", "spans").mapInArrow(
-        run, f"doc_id string, spans {out_type}")
+    return _rehome(docs, lambda s, _: attach_file_images(s, dir_prefix),
+                   "docs")
 
 
 ATTACH_VERSION = 1
@@ -392,14 +304,7 @@ def attached_corpus_df(spark, sf_dir: str):
 def image_ref_rows(docs: DataFrame) -> DataFrame:
     """Canonical scalar projection of every picture ImageRef: the
     driver-checkable witness of a re-homing pass."""
-    import pyarrow as pa
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            tbl = batch.to_pydict()
-            yield _witness_batch(pa, tbl["doc_id"], tbl["spans"])
-
-    return docs.select("doc_id", "spans").mapInArrow(run, _WITNESS_SCHEMA)
+    return _rehome(docs, lambda s, _: s, "witness")
 
 
 def image_ref_rows_py(doc_id: str, spans: List[dict]) -> List[dict]:

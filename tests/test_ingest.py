@@ -5,9 +5,11 @@ jobs/ingest_files.py)."""
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import subprocess
 import sys
+import time
 
 import pytest
 
@@ -189,6 +191,49 @@ def test_ingest_streams_local_tree(spark, tmp_path):
     assert bytes(rows["img.png"]["content"]) == b"\x89PNG-fake"
     assert rows["note.txt"]["n_bytes"] == len(b"first para\n\nsecond para")
 
+
+def test_fetch_url_times_out_on_a_stalled_origin(monkeypatch):
+    """An origin that sends nothing fails the fetch within the read
+    timeout instead of hanging the task."""
+    import requests
+
+    from docling_core_spark.io import ingest
+    from tests.loopback import serve_once
+
+    monkeypatch.setattr(ingest, "FETCH_TIMEOUT_S", (2.0, 0.2))
+    url = serve_once(b"late", stall_s=2.0)
+    t0 = time.monotonic()
+    with pytest.raises(requests.Timeout):
+        ingest._fetch_url(url)
+    assert time.monotonic() - t0 < 1.5
+
+
+def test_fetch_url_caps_the_body(monkeypatch):
+    """A body past FETCH_MAX_BYTES raises an error naming the URL; a
+    body at the cap is returned whole."""
+    from docling_core_spark.io import ingest
+    from tests.loopback import serve_once
+
+    monkeypatch.setattr(ingest, "FETCH_MAX_BYTES", 1000)
+    assert ingest._fetch_url(serve_once(b"x" * 1000)) == ("doc.txt",
+                                                          b"x" * 1000)
+    url = serve_once(b"x" * 200_000)
+    with pytest.raises(ValueError, match=re.escape(url)):
+        ingest._fetch_url(url)
+
+
+def test_ingest_streams_url(spark):
+    """A URL source is fetched on an executor into one stream row with
+    the served bytes and the URL-resolved name."""
+    from docling_core_spark.io.ingest import ingest_streams
+    from tests.loopback import serve_once
+
+    body = b"<html><body><p>remote</p></body></html>"
+    url = serve_once(body, name="page.html")
+    (row,) = ingest_streams(spark, [url]).collect()
+    assert (row["doc_id"], row["name"], row["fmt"], row["n_bytes"],
+            bytes(row["content"])) == (url, "page.html", "html",
+                                       len(body), body)
 
 def test_ingest_spans_dispatch(spark, tmp_path):
     """Tree -> spans: the html arm matches extract_spans exactly, the

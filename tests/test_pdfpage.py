@@ -174,17 +174,26 @@ def test_textlines_parity(doc_index):
     assert got == want
 
 
-def test_spark_matches_single_process(spark):
+def test_spark_matches_single_process(spark, tmp_path):
     import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from docling_core_spark.pdfpage import (
+        _CELL_COLS,
+        _append_cell_rows,
+        _arrow_cell_schema,
         cells_in_bbox,
         crop_text,
-        synth_pdf_cells,
         textlines,
     )
 
-    cells = synth_pdf_cells(spark, 30)
+    cols = {k: [] for k in _CELL_COLS}
+    for i in range(30):
+        _append_cell_rows(cols, i, gen_page_cells(i))
+    pq.write_table(pa.Table.from_pydict(cols, schema=_arrow_cell_schema()),
+                   str(tmp_path / "cells.parquet"))
+    cells = spark.read.parquet(str(tmp_path / "cells.parquet"))
     bbox = BBOXES[0]
     got = (cells_in_bbox(cells, bbox)
            .select("doc_id", "idx", "text").toPandas()

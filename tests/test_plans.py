@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -325,3 +326,18 @@ def test_span_stage_is_one_arrow_stage_over_pruned_scan(
     assert read_schema.split("ReadSchema: ")[1] == (
         "struct<doc_id:string,spans:array<struct<kind:string,"
         "text:string,media_ref:string,offset:int>>>")
+
+
+def test_media_features_run_on_arrow_stages(spark, wide_docs_path):
+    """media_table >> extract_media_features: one MapInArrow per stage
+    and no MapInPandas; the features stage reads only the columns it
+    decodes."""
+    from docling_core_spark.mediaops import extract_media_features, media_table
+
+    p = _explain(extract_media_features(
+        media_table(spark.read.parquet(wide_docs_path))))
+    tree = p.split("(1)")[0]
+    assert "MapInPandas" not in p
+    assert tree.count("MapInArrow") == 2
+    inputs = re.findall(r"\(\d+\) MapInArrow\nInput \[\d+\]: \[(.*)\]", p)
+    assert re.sub(r"#\d+L?", "", inputs[-1]) == "media_ref, kind, payload"

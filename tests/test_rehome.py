@@ -7,6 +7,8 @@ import base64
 import hashlib
 import json
 
+import pytest
+
 from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.mediaops import _payload_for
 from docling_core_spark.model.spans import (
@@ -267,7 +269,7 @@ def test_spark_rehome_matches_oracle(spark):
 def test_spark_fused_embed_reference_matches_chained(spark):
     """embed_then_reference_pictures (one Arrow stage) must emit the
     exact rows of the two-stage embed_pictures >> reference_pictures
-    chain, in both witness and spans emit modes."""
+    chain, in both witness and docs emit modes."""
     import pandas as pd
 
     from docling_core_spark.engine import synth_documents
@@ -291,9 +293,51 @@ def test_spark_fused_embed_reference_matches_chained(spark):
         return (pdf[cols].sort_values(cols, kind="mergesort")
                 .reset_index(drop=True))
 
-    for emit in ("witness", "spans"):
+    for emit in ("witness", "docs"):
         chained = reference_pictures(
             embed_pictures(docs, media), "artifacts", emit=emit)
         fused = embed_then_reference_pictures(
             docs, media, "artifacts", emit=emit)
         pd.testing.assert_frame_equal(canon(fused), canon(chained))
+
+
+
+def test_spark_reference_files_match_reference_spans(spark):
+    """emit='files' is reference_spans' write-set per document: one
+    (path, n_bytes, sha256) row per imaged picture."""
+    from docling_core_spark.engine import DOCUMENTS_SCHEMA
+    from docling_core_spark.rehome import reference_pictures
+
+    embedded, want = [], []
+    for i in range(20):
+        spans = attach_file_images(gen_doc_spans(i, seed=42))
+        spans = embed_spans(spans, _payloads(spans))
+        embedded.append((f"doc_{i}", [
+            (s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in spans]))
+        want.extend((f"doc_{i}", path, len(payload),
+                     hashlib.sha256(payload).hexdigest())
+                    for path, payload in reference_spans(spans, "imgdir")[1])
+    docs = spark.createDataFrame(embedded, DOCUMENTS_SCHEMA)
+    got = [tuple(r) for r in
+           reference_pictures(docs, "imgdir", emit="files").collect()]
+    assert want and sorted(got) == sorted(want)
+
+
+@pytest.mark.parametrize("op,bad", [
+    ("embed_pictures", ("bogus", "spans", "files")),
+    ("reference_pictures", ("bogus", "spans")),
+    ("embed_then_reference_pictures", ("bogus", "spans", "files")),
+])
+def test_unknown_emit_raises(spark, op, bad):
+    """Every rehome operator rejects an emit outside its documented
+    set instead of silently returning the rewritten documents."""
+    from docling_core_spark import rehome
+    from docling_core_spark.engine import DOCUMENTS_SCHEMA
+
+    docs = spark.createDataFrame([], DOCUMENTS_SCHEMA)
+    media = spark.createDataFrame([], "media_ref string, payload binary")
+    args = (docs,) if op == "reference_pictures" else (docs, media)
+    for emit in bad:
+        with pytest.raises(ValueError, match="emit"):
+            getattr(rehome, op)(*args, emit=emit)

@@ -26,10 +26,13 @@ N_DOCS = 4
 class _Recorder:
     """Stands in for a SparkSession and its DataFrames: records every
     mapInArrow as (input columns, closure, declared schema); every
-    other method returns the recorder itself."""
+    other method returns the recorder itself. Its ``schema`` is the
+    documents table's."""
 
     class sparkContext:
         defaultParallelism = 2
+
+    schema = engine.DOCUMENTS_SCHEMA
 
     def __init__(self) -> None:
         self.stages = []
@@ -137,13 +140,82 @@ def _streams():
                            b"<html><body><p>para</p></body></html>"])
 
 
+def _attached_spans(i):
+    from docling_core_spark.rehome import attach_file_images
+
+    return attach_file_images(gen_doc_spans(i, seed=42))
+
+
+def _media_payloads(spans):
+    from docling_core_spark.mediaops import _payload_for
+
+    return {s["media_ref"]: _payload_for(s["media_ref"]) for s in spans
+            if s["kind"].startswith(("picture", "chart"))
+            and s["media_ref"]}
+
+
+def _attached():
+    return _docs_batch(spans_of=_attached_spans)
+
+
+def _attached_with_payloads():
+    """Attached docs joined with their ``_payloads`` map column."""
+    docs = _attached()
+    pmaps = [list(_media_payloads(_attached_spans(i)).items())
+             for i in range(N_DOCS)]
+    return pa.RecordBatch.from_arrays(
+        [*docs.columns, pa.array(pmaps, pa.map_(pa.string(), pa.binary()))],
+        names=[*docs.schema.names, "_payloads"])
+
+
+def _embedded():
+    from docling_core_spark.rehome import embed_spans
+
+    def spans_of(i):
+        spans = _attached_spans(i)
+        return embed_spans(spans, _media_payloads(spans))
+    return _docs_batch(spans_of=spans_of)
+
+
+_MEDIA_REFS = [f"img_{i}" for i in range(N_DOCS)]
+
+
+def _media_refs():
+    return _batch(media_ref=_MEDIA_REFS)
+
+
+def _media():
+    from docling_core_spark.mediaops import _kind_for, _payload_for
+
+    return _batch(media_ref=_MEDIA_REFS,
+                  kind=[_kind_for(r) for r in _MEDIA_REFS],
+                  payload=[_payload_for(r) for r in _MEDIA_REFS])
+
+
+def _media_ref_payloads():
+    return _media().select(["media_ref", "payload"])
+
+
+def _urls():
+    from tests.loopback import serve_once
+
+    return _batch(doc_id=[serve_once(b"served body")])
+
+
 def _stages():
     """Every stage on the runner: (name, build(recorder), the input
     batch of each mapInArrow it records, in order)."""
-    from docling_core_spark import legacy, queries, validation, visualize
+    from docling_core_spark import (
+        legacy,
+        mediaops,
+        queries,
+        rehome,
+        validation,
+        visualize,
+    )
     from docling_core_spark.extraction import layout_spark
     from docling_core_spark.extraction import spark as xspark
-    from docling_core_spark.io.ingest import ingest_spans
+    from docling_core_spark.io.ingest import _remote_streams, ingest_spans
     from docling_core_spark.legacytypes import validate_legacy_df
     from docling_core_spark.rectypes import validate_records_df
     from docling_core_spark.searchtypes import validate_search_df
@@ -196,6 +268,33 @@ def _stages():
          lambda r: queries.q_search_validation(r, "sf"),
          [_id_texts, _search_payloads]),
         ("ingest_spans", ingest_spans, [_streams]),
+        ("_remote_streams", lambda r: _remote_streams(r, ["url"]),
+         [_urls]),
+        ("attach_images", rehome.attach_images, [_docs_batch]),
+        ("embed_pictures", lambda r: rehome.embed_pictures(r, r),
+         [_attached_with_payloads]),
+        ("embed_pictures_witness",
+         lambda r: rehome.embed_pictures(r, r, emit="witness"),
+         [_attached_with_payloads]),
+        ("reference_pictures", rehome.reference_pictures, [_embedded]),
+        ("reference_pictures_files",
+         lambda r: rehome.reference_pictures(r, emit="files"), [_embedded]),
+        ("reference_pictures_witness",
+         lambda r: rehome.reference_pictures(r, emit="witness"),
+         [_embedded]),
+        ("embed_then_reference_pictures",
+         lambda r: rehome.embed_then_reference_pictures(r, r),
+         [_attached_with_payloads]),
+        ("embed_then_reference_pictures_docs",
+         lambda r: rehome.embed_then_reference_pictures(r, r, emit="docs"),
+         [_attached_with_payloads]),
+        ("image_ref_rows", rehome.image_ref_rows, [_attached]),
+        ("media_table", mediaops.media_table, [_media_refs]),
+        ("extract_media_features", mediaops.extract_media_features,
+         [_media]),
+        ("resize_images", lambda r: mediaops.resize_images(r, 8, 8),
+         [_media_ref_payloads]),
+        ("sample_frames", mediaops.sample_frames, [_media_ref_payloads]),
     ]
 
 
@@ -280,6 +379,30 @@ def test_spans_output_round_trips_through_decode():
         assert doc_id == f"doc_{i:012d}"
         assert tuples == [(s["kind"], s["text"], s["media_ref"],
                            s["offset"]) for s in gen_doc_spans(i, seed=42)]
+
+
+def test_only_the_runner_calls_map_in_arrow():
+    """Every per-row stage goes through engine.map_rows: outside
+    engine.py and extraction/layout_spark.py (a document carried across
+    batches, shard file writes), no module calls mapInArrow or
+    mapInPandas."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    exempt = {"docling_core_spark/engine.py",
+              "docling_core_spark/extraction/layout_spark.py"}
+    sites = []
+    for path in sorted([*root.glob("docling_core_spark/**/*.py"),
+                        *root.glob("jobs/**/*.py")]):
+        rel = path.relative_to(root).as_posix()
+        if rel in exempt:
+            continue
+        sites += [f"{rel}:{node.lineno} {node.attr}"
+                  for node in ast.walk(ast.parse(path.read_text(), rel))
+                  if isinstance(node, ast.Attribute)
+                  and node.attr in ("mapInArrow", "mapInPandas")]
+    assert not sites, sites
 
 
 @pytest.mark.parametrize("module,fn,ok_col", [
