@@ -9,18 +9,28 @@ Re-implements HybridChunker (transforms/chunker/hybrid_chunker.py):
      semsplit.recursive_split)
   4. optional greedy merge of adjacent chunks with identical headings
      (_merge_chunks_with_matching_metadata, :249-296)
+
+Steps 2-4 have two implementations with identical output: the
+reference-shaped path, which re-serializes and re-counts every candidate
+and is the oracle of the tests, and the fast path for whitespace-
+separable tokenizers, which carries each chunk's token count from step
+to step and serializes each doc item once (see the block comment above
+_ItemCache).
 """
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
 from docling_core_spark.chunking.hierarchical import (
     Chunk,
     contextualize,
     hierarchical_chunk,
 )
-from docling_core_spark.chunking.semsplit import recursive_split
+from docling_core_spark.chunking.semsplit import (
+    _split_counted,
+    recursive_split,
+)
 from docling_core_spark.chunking.tokenizer import RegexTokenizer
 from docling_core_spark.model.doc import Doc
 from docling_core_spark.serializers.markdown import chunking_serializer
@@ -73,8 +83,8 @@ def _split_by_doc_items(ser, tok, max_tokens: int, chunk: Chunk
     return chunks
 
 
-def _split_using_plain_text(tok, max_tokens: int, chunk: Chunk,
-                            separable: bool = False) -> List[Chunk]:
+def _split_using_plain_text(tok, max_tokens: int, chunk: Chunk
+                            ) -> List[Chunk]:
     """hybrid_chunker.py:220-247."""
     total = _count_chunk_tokens(tok, chunk)
     if total <= max_tokens:
@@ -86,10 +96,9 @@ def _split_using_plain_text(tok, max_tokens: int, chunk: Chunk,
         # headings alone exceed the budget: drop them and retry (:230-239)
         return _split_using_plain_text(
             tok, max_tokens,
-            Chunk(text=chunk.text, headings=None, items=chunk.items),
-            separable)
+            Chunk(text=chunk.text, headings=None, items=chunk.items))
     segments = recursive_split(chunk.text, available, tok.count_tokens,
-                               separable=separable, _count=text_len)
+                               _count=text_len)
     return [Chunk(text=s, headings=chunk.headings, items=chunk.items)
             for s in segments]
 
@@ -138,30 +147,36 @@ def _merge_peers(tok, max_tokens: int, chunks: List[Chunk]) -> List[Chunk]:
 # Fast path: exact-equivalent O(n) windowing for whitespace-separable
 # tokenizers. The reference re-serializes and re-counts the whole
 # candidate window on every growth step (hybrid_chunker.py:189-218) and
-# every peer-merge extension (:276); with
-# count(a + "\n" + b) == count(a) + count(b) the candidate count is a
-# running sum over cached per-item counts, and texts are only built for
-# chunks actually emitted. Output is bit-identical to the slow path
-# (tests/test_hybrid_fastpath.py + reference parity suite).
+# every peer-merge extension (:276). With
+# count(a + "\n" + b) == count(a) + count(b):
+# * a contextualized count is heads + text count, so each step hands the
+#   next (chunk, text count) pairs and no text is counted twice: a
+#   window's count is a running sum of per-item counts, an oversized
+#   text's segments come back counted from the splitter, and the merge
+#   adds carried counts;
+# * each item is serialized once: its text is read from the record the
+#   hierarchical pass left on the serializer (``item_texts``), and only
+#   items that pass did not render standalone are serialized again.
+# Texts are built only for chunks actually emitted. Output is
+# bit-identical to the slow path (tests/test_hybrid_fastpath.py +
+# reference parity suite).
 # ----------------------------------------------------------------------
 
 class _ItemCache:
-    """Per-doc memo of serialize(item).text and its token count."""
+    """Per-doc memo of each item's serialized text token count."""
 
-    __slots__ = ("ser", "tok", "texts", "counts")
+    __slots__ = ("ser", "tok", "counts")
 
     def __init__(self, ser, tok):
         self.ser = ser
         self.tok = tok
-        self.texts = {}
         self.counts = {}
 
     def text(self, item) -> str:
-        k = id(item)
-        t = self.texts.get(k)
+        t = self.ser.item_texts.get(id(item))
         if t is None:
+            # serialize records it for the next lookup
             t = self.ser.serialize(node=item).text
-            self.texts[k] = t
         return t
 
     def count(self, item) -> int:
@@ -199,13 +214,15 @@ def _window_chunk(cache: _ItemCache, chunk: Chunk, start: int, end: int
 
 
 def _split_by_doc_items_fast(cache: _ItemCache, tok, max_tokens: int,
-                             chunk: Chunk, hmemo: dict) -> List[Chunk]:
+                             chunk: Chunk, heads: int
+                             ) -> List[Tuple[Chunk, int]]:
+    """_split_by_doc_items on running counts; ``heads`` is the headings'
+    count. Returns (window, text count) pairs."""
     n = len(chunk.items)
-    heads = _headings_count(tok, chunk.headings, hmemo)
     if n == 1:
-        # single-item: candidate count = heads + count(chunk.text)
-        return [chunk]  # fits or not, reference emits it unchanged
-    chunks: List[Chunk] = []
+        # fits or not, the reference emits a single-item chunk unchanged
+        return [(chunk, tok.count_tokens(chunk.text))]
+    out: List[Tuple[Chunk, int]] = []
     ws = we = 0
     cur = heads + cache.count(chunk.items[0])
     while we < n:
@@ -214,46 +231,67 @@ def _split_by_doc_items_fast(cache: _ItemCache, tok, max_tokens: int,
                 we += 1
                 cur += cache.count(chunk.items[we])
                 continue
-            chunks.append(_window_chunk(cache, chunk, ws, we))
+            out.append((_window_chunk(cache, chunk, ws, we), cur - heads))
             break
         elif ws == we:
-            chunks.append(_window_chunk(cache, chunk, ws, we))
+            out.append((_window_chunk(cache, chunk, ws, we), cur - heads))
             we += 1
             ws = we
             if we < n:
                 cur = heads + cache.count(chunk.items[we])
         else:
-            chunks.append(_window_chunk(cache, chunk, ws, we - 1))
+            last = cache.count(chunk.items[we])
+            out.append((_window_chunk(cache, chunk, ws, we - 1),
+                        cur - last - heads))
             ws = we
-            cur = heads + cache.count(chunk.items[we])
-    return chunks
+            cur = heads + last
+    return out
 
 
-def _merge_peers_fast(tok, max_tokens: int, chunks: List[Chunk],
-                      hmemo: dict) -> List[Chunk]:
-    """Incremental-count version of _merge_peers (exact same grouping)."""
+def _split_using_plain_text_fast(tok, max_tokens: int, chunk: Chunk,
+                                 count: int, heads: int
+                                 ) -> List[Tuple[Chunk, int]]:
+    """_split_using_plain_text on the carried text ``count``: the
+    contextualized count is ``heads + count``."""
+    if heads + count <= max_tokens:
+        return [(chunk, count)]
+    available = max_tokens - heads
+    if available <= 0:
+        # headings alone exceed the budget: drop them and retry (:230-239)
+        return _split_using_plain_text_fast(
+            tok, max_tokens,
+            Chunk(text=chunk.text, headings=None, items=chunk.items),
+            count, 0)
+    return [(Chunk(text=s, headings=chunk.headings, items=chunk.items), c)
+            for s, c in _split_counted(chunk.text, available,
+                                       tok.count_tokens, True, count)]
+
+
+def _merge_peers_fast(tok, max_tokens: int,
+                      pairs: List[Tuple[Chunk, int]], hmemo: dict
+                      ) -> List[Chunk]:
+    """_merge_peers on carried text counts (exact same grouping)."""
     output: List[Chunk] = []
-    n = len(chunks)
+    n = len(pairs)
     i = 0
-    text_counts = [tok.count_tokens(c.text) for c in chunks]
     while i < n:
-        headings = chunks[i].headings
-        run_count = _headings_count(tok, headings, hmemo) + text_counts[i]
+        headings = pairs[i][0].headings
+        run_count = _headings_count(tok, headings, hmemo) + pairs[i][1]
         j = i + 1
-        while j < n and chunks[j].headings == headings:
-            cand = run_count + text_counts[j]
+        while j < n and pairs[j][0].headings == headings:
+            cand = run_count + pairs[j][1]
             if cand <= max_tokens:
                 run_count = cand
                 j += 1
             else:
                 break
         if j == i + 1:
-            output.append(chunks[i])
+            output.append(pairs[i][0])
         else:
-            merged_items = [it for c in chunks[i:j] for it in c.items]
+            chks = [c for c, _ in pairs[i:j]]
             output.append(Chunk(
-                text=DELIM.join(c.text for c in chunks[i:j]),
-                headings=headings, items=merged_items))
+                text=DELIM.join(c.text for c in chks),
+                headings=headings, items=[it for c in chks for it in c.items]))
         i = j
     return output
 
@@ -276,13 +314,13 @@ def hybrid_chunk(doc: Doc, tokenizer=None, max_tokens: Optional[int] = None,
     if use_fast:
         cache = _ItemCache(ser, tok)
         hmemo: dict = {}
-        res = [x for c in res
-               for x in _split_by_doc_items_fast(cache, tok, mt, c, hmemo)]
-        res = [x for c in res
-               for x in _split_using_plain_text(tok, mt, c, separable=True)]
+        pairs = [p for c in res for p in _split_by_doc_items_fast(
+            cache, tok, mt, c, _headings_count(tok, c.headings, hmemo))]
+        pairs = [p for c, n in pairs for p in _split_using_plain_text_fast(
+            tok, mt, c, n, _headings_count(tok, c.headings, hmemo))]
         if merge_peers:
-            res = _merge_peers_fast(tok, mt, res, hmemo)
-        return res
+            return _merge_peers_fast(tok, mt, pairs, hmemo)
+        return [c for c, _ in pairs]
     res = [x for c in res for x in _split_by_doc_items(ser, tok, mt, c)]
     res = [x for c in res for x in _split_using_plain_text(tok, mt, c)]
     if merge_peers:

@@ -53,20 +53,23 @@ def recursive_split(text: str, max_tokens: int,
     attached at piece boundaries). It turns the quadratic merge-loop
     counting into running sums with IDENTICAL output.
     """
-    total = _count if _count >= 0 else count_tokens(text)
+    return [s for s, _ in _split_counted(text, max_tokens, count_tokens,
+                                         separable, _count)]
+
+
+def _split_counted(text: str, max_tokens: int,
+                   count_tokens: Callable[[str], int], separable: bool,
+                   count: int) -> List[Tuple[str, int]]:
+    """``recursive_split`` with each piece's token count: (piece,
+    count) pairs. ``count`` is count_tokens(text) when the caller holds
+    it, else -1."""
+    total = count if count >= 0 else count_tokens(text)
     if total <= max_tokens:
-        return [text] if text else []
+        return [(text, total)] if text else []
 
     splitter, is_ws = _pick_splitter(text)
     if not splitter:
-        # hard cut: bisect by characters (counts not piece-separable)
-        mid = len(text) // 2
-        if mid == 0:
-            return [text]
-        return (recursive_split(text[:mid], max_tokens, count_tokens,
-                                separable)
-                + recursive_split(text[mid:], max_tokens, count_tokens,
-                                  separable))
+        return _hard_cut(text, total, max_tokens, count_tokens, separable)
 
     if is_ws:
         raw = text.split(splitter)
@@ -117,20 +120,28 @@ def recursive_split(text: str, max_tokens: int,
 
     if len(merged) == 1 and merged[0] == text:
         # no progress possible with this splitter: hard character cut
-        mid = len(text) // 2
-        if mid == 0:
-            return [text]
-        return (recursive_split(text[:mid], max_tokens, count_tokens,
-                                separable)
-                + recursive_split(text[mid:], max_tokens, count_tokens,
-                                  separable))
+        return _hard_cut(text, total, max_tokens, count_tokens, separable)
 
-    out: List[str] = []
+    out: List[Tuple[str, int]] = []
     for m, mc in zip(merged, merged_counts):
         c = mc if mc >= 0 else count_tokens(m)
         if c <= max_tokens:
-            out.append(m)
+            out.append((m, c))
         else:
-            out.extend(recursive_split(m, max_tokens, count_tokens,
-                                       separable, _count=c))
+            out.extend(_split_counted(m, max_tokens, count_tokens,
+                                      separable, c))
     return out
+
+
+def _hard_cut(text: str, total: int, max_tokens: int,
+              count_tokens: Callable[[str], int], separable: bool
+              ) -> List[Tuple[str, int]]:
+    """Bisect by characters; each half is counted afresh (counts are
+    not piece-separable at an arbitrary character)."""
+    mid = len(text) // 2
+    if mid == 0:
+        return [(text, total)]
+    return (_split_counted(text[:mid], max_tokens, count_tokens,
+                           separable, -1)
+            + _split_counted(text[mid:], max_tokens, count_tokens,
+                             separable, -1))

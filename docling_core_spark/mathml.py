@@ -4,7 +4,7 @@ The reference converts formula text with ``latex2mathml.converter.
 convert_to_element`` (transforms/serializer/html.py:256-334) and falls
 back to ``<pre>`` when the converter raises. That package is not in
 this container, so this module implements the conversion FROM SCRATCH
-for the LaTeX-math grammar subset below, reproducing latex2mathml's
+for the LaTeX-math grammar subset below, following latex2mathml's
 published output conventions:
 
 * every run wrapped in a top-level ``<mrow>``;
@@ -32,12 +32,17 @@ published output conventions:
 * (r5) accents ``\\hat/\\bar/\\vec/\\tilde/\\dot/\\overrightarrow``
   -> ``<mover>`` with a non-stretchy accent ``<mo>``.
 
-Fidelity is pinned BYTE-FOR-BYTE against the reference's committed
-goldens, which were generated with the real latex2mathml
-(test/data/docling_document/export/formula_mathml.html and the
+What is pinned BYTE-FOR-BYTE against the reference's committed
+goldens, which were generated with the real latex2mathml, is the pre-r5
+subset those goldens exercise: ``\\frac{1}{x}``
+(test/data/docling_document/export/formula_mathml.html) and the
 ``E=mc^2`` inline/block exports inside test/data/doc/
-constructed_doc*.html) - see tests/test_mathml.py. Grammar outside the
-subset raises :class:`UnsupportedLatex`, which callers translate into
+constructed_doc*.html - see tests/test_mathml.py. The r5 matrix,
+``cases`` and accent output (and the r4 fences, roots and ``\\text``)
+is checked only against hand-written fragments in that test:
+latex2mathml is not importable here, so those conventions are not
+confirmed against the real converter. Grammar outside the subset
+raises :class:`UnsupportedLatex`, which callers translate into
 the reference's own exception fallback (``<pre>``): a stock install
 would convert more grammar than we pin, and that residual divergence
 is the documented limit of this implementation, not hidden behind a

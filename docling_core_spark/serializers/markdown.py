@@ -179,6 +179,12 @@ class MarkdownSerializer:
         self._excluded: Optional[Set[int]] = None
         self._base_excluded: Optional[Set[int]] = None
         self._captions_of_some_item = doc.captions_of_some_item()
+        # id(node) -> text of each non-group node ``serialize`` rendered,
+        # bar inline code and formulas: in markdown each entry equals a
+        # fresh ``serialize(node=node).text``, so the hybrid chunker reads
+        # item texts here. ``serialize`` never reads it; nothing reads it
+        # on the html and doctags subclasses, which render text by scope.
+        self.item_texts: dict = {}
 
     # ------------------------------------------------------------------
     def get_excluded_refs(self) -> Set[int]:
@@ -348,22 +354,33 @@ class MarkdownSerializer:
                                         my_visited)
         if kind == K_INLINE_GROUP:
             return self._serialize_inline(node, list_level, my_visited)
+        if kind == "page_break":
+            return SerResult(_PB_SENTINEL.format(node.level, node.page_no))
+        res = self._serialize_item(node, is_inline_scope, my_visited)
+        # only code and formulas render differently in an inline scope;
+        # no item's text depends on list_level or on the visited set
+        if not (is_inline_scope and kind in (K_CODE, K_FORMULA)):
+            self.item_texts[id(node)] = res.text
+        return res
+
+    def _serialize_item(self, node: Node, is_inline_scope: bool,
+                        visited: Set[int]) -> SerResult:
+        """The non-group half of ``serialize``'s dispatch."""
+        kind = node.kind
         if kind == K_TABLE:
-            return self._serialize_table(node, my_visited)
+            return self._serialize_table(node, visited)
         if kind == K_PICTURE:
             return self._serialize_picture(node)
         if kind == "key_value_region":
             return self._serialize_key_value(node)
         if kind == "form":
             return self._serialize_form(node)
-        if kind == "page_break":
-            return SerResult(_PB_SENTINEL.format(node.level, node.page_no))
         # text-like items
         if id(node) in self._captions_of_some_item:
             return _ser()  # handled by owning floating item (common.py:340)
         if id(node) in self.get_excluded_refs():
             return _ser()
-        return self._serialize_text(node, is_inline_scope, my_visited)
+        return self._serialize_text(node, is_inline_scope, visited)
 
     # ------------------------------------------------------------------
     def get_parts(self, node: Optional[Node] = None, list_level: int = 0,

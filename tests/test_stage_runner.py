@@ -439,11 +439,16 @@ class _Capture:
 
 def test_chunk_closure_looks_up_traced_names_at_call_time(monkeypatch):
     """perfbench/inproc.py times chunk_documents' closure by patching
-    five module attributes after the closure is built. Each must be
-    looked up when the closure runs; one bound at import time would
-    move its time into the benchmark's output-build layer."""
+    five module attributes and two class attributes after the closure
+    is built. Each must be looked up when the closure runs; one bound at
+    import time would move its time into the benchmark's output-build
+    layer, and token counting that goes around
+    ``RegexTokenizer.count_tokens`` would hide from the tokenizer
+    layer."""
     from docling_core_spark.chunking import hybrid as hybrid_mod
+    from docling_core_spark.chunking.tokenizer import RegexTokenizer
     from docling_core_spark.model import spans as spans_mod
+    from docling_core_spark.serializers.markdown import MarkdownSerializer
 
     fn = engine.chunk_documents(_Capture(), mode="hybrid", max_tokens=64)
     batches = [_docs_batch(20)]
@@ -454,12 +459,16 @@ def test_chunk_closure_looks_up_traced_names_at_call_time(monkeypatch):
                       (engine, "_origin_struct"),
                       (engine, "_chunk_record_batch"),
                       (spans_mod, "doc_from_spans"),
-                      (hybrid_mod, "hybrid_chunk")]:
+                      (hybrid_mod, "hybrid_chunk"),
+                      (MarkdownSerializer, "serialize"),
+                      (RegexTokenizer, "count_tokens")]:
         def counted(*a, _orig=getattr(obj, attr), _name=attr, **kw):
             calls[_name] = calls.get(_name, 0) + 1
             return _orig(*a, **kw)
         monkeypatch.setattr(obj, attr, counted)
     assert _run(fn, batches) == want
+    assert calls.pop("serialize", 0) > 0
+    assert calls.pop("count_tokens", 0) > 0
     assert calls == {"_iter_span_tuples": 1, "_origin_struct": 20,
                      "_chunk_record_batch": 1, "doc_from_spans": 20,
                      "hybrid_chunk": 20}
