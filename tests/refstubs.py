@@ -16,15 +16,27 @@ them with minimal shims BEFORE importing:
                    (chunking/semsplit.py), same reasoning as tabulate
 
 This module must be imported before any ``docling_core`` import.
+
+Tests reach the reference only through ``reference()`` (the library and
+the oracle built on it) and ``reference_data()`` (the checkout's
+committed test data), at the moment they use it. Where the checkout is
+absent, the calling test is skipped with a reason that names it; the
+rest of its module still collects and runs. Where the checkout is
+present, both return as usual, so a broken reference fails loudly.
 """
 
 from __future__ import annotations
 
 import importlib.metadata
+import importlib.util
+import os
 import sys
 import types
 
+import pytest
+
 REFERENCE_PATH = "/root/reference"
+REFERENCE_DATA = os.path.join(REFERENCE_PATH, "test", "data")
 
 
 def _stub(name: str, **attrs) -> types.ModuleType:
@@ -116,6 +128,46 @@ def install() -> None:
     _stub("latex2mathml", converter=conv)
 
     sys.path.insert(0, REFERENCE_PATH)
+
+
+def reference():
+    """The live oracle module (tests/oracle.py, built on docling_core).
+
+    Skips the calling test where ``docling_core`` cannot be found, which
+    is the case exactly when the reference checkout is absent. With the
+    library findable the import runs unguarded.
+    """
+    install()
+    if importlib.util.find_spec("docling_core") is None:
+        pytest.skip("reference library docling_core not found "
+                    f"(expected its checkout at {REFERENCE_PATH})")
+    import tests.oracle
+
+    return tests.oracle
+
+
+def reference_data(path: str = "") -> str:
+    """``path`` under ``REFERENCE_DATA``, the checkout's test/data.
+
+    Skips the calling test where that directory is absent. Only the
+    directory is checked, so a fixture missing from a present checkout
+    still fails where the test reads it.
+    """
+    if not os.path.isdir(REFERENCE_DATA):
+        pytest.skip("reference test data not found "
+                    f"(expected {REFERENCE_DATA})")
+    return os.path.join(REFERENCE_DATA, path)
+
+
+def oracle_fn(name: str):
+    """``tests.oracle.<name>``, looked up through ``reference()`` when
+    called: a test module can bind it at import time and reach the
+    reference only in the tests that call it."""
+    def call(*args, **kwargs):
+        return getattr(reference(), name)(*args, **kwargs)
+
+    call.__name__ = call.__qualname__ = name
+    return call
 
 
 install()

@@ -15,9 +15,6 @@ import warnings
 
 import pytest
 
-import tests.refstubs  # noqa: F401
-from tests.oracle import build_doc, reference_markdown
-
 from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.docops import (
     APPEND_CHILD_KINDS,
@@ -28,6 +25,10 @@ from docling_core_spark.docops import (
 from docling_core_spark.engine import DOCUMENTS_SCHEMA
 from docling_core_spark.model.spans import doc_from_spans, spans_from_doc
 from docling_core_spark.serializers.markdown import export_to_markdown
+from tests.refstubs import oracle_fn, reference
+
+build_doc = oracle_fn("build_doc")
+reference_markdown = oracle_fn("reference_markdown")
 
 warnings.filterwarnings("ignore")
 
@@ -37,12 +38,14 @@ NEW_SPAN = ("text", NEW_TEXT, "", 0)
 
 
 def _resolve(doc, ref: str):
+    reference()
     from docling_core.types.doc.document import RefItem
 
     return RefItem(cref=ref).resolve(doc)
 
 
 def _new_item():
+    reference()
     from docling_core.types.doc.document import TextItem
 
     return TextItem(self_ref="#", label="text", text=NEW_TEXT,
@@ -118,6 +121,7 @@ def test_append_child_group_parent_becomes_last_child():
         "end_group", "text"]
     doc_m, r2o = build_doc("d", spans)
     by_offset = {v: k for k, v in r2o.items()}
+    reference()
     from docling_core.types.doc.document import ListItem
 
     doc_m.append_child_item(

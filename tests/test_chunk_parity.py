@@ -9,17 +9,16 @@ from __future__ import annotations
 
 import pytest
 
-from tests.oracle import (
-    build_doc,
-    reference_hierarchical_chunks,
-    reference_hybrid_chunks,
-)
-
 from docling_core_spark.chunking.hierarchical import hierarchical_chunk
 from docling_core_spark.chunking.hybrid import hybrid_chunk
 from docling_core_spark.chunking.tokenizer import RegexTokenizer
 from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.model.spans import doc_from_spans
+from tests.refstubs import oracle_fn, reference
+
+build_doc = oracle_fn("build_doc")
+reference_hierarchical_chunks = oracle_fn("reference_hierarchical_chunks")
+reference_hybrid_chunks = oracle_fn("reference_hybrid_chunks")
 
 N_DOCS = 60
 
@@ -64,7 +63,7 @@ def test_hybrid_parity(i, max_tokens, merge):
 def test_contextualize_parity(i):
     """C4: the embed-ready string matches the reference's
     HybridChunker.contextualize chunk-for-chunk."""
-    from tests.oracle import OracleTokenizer
+    OracleTokenizer = reference().OracleTokenizer
 
     from docling_core_spark.chunking.hierarchical import contextualize
     from docling_core_spark.chunking.hybrid import hybrid_chunk

@@ -6,8 +6,6 @@ import warnings
 
 import pytest
 
-from tests.oracle import build_doc
-
 from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.model.doc import K_TABLE
 from docling_core_spark.model.otsl import dataframe_like, parse_otsl
@@ -16,6 +14,9 @@ from docling_core_spark.serializers.debug import (
     export_to_element_tree,
     table_dataframe,
 )
+from tests.refstubs import oracle_fn
+
+build_doc = oracle_fn("build_doc")
 
 warnings.filterwarnings("ignore")
 

@@ -12,18 +12,17 @@ from __future__ import annotations
 
 import pytest
 
-from tests.oracle import (
-    build_doc,
-    reference_hierarchical_chunks,
-    reference_markdown,
-)
-
 from docling_core_spark.chunking.hierarchical import hierarchical_chunk
 from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.model.spans import doc_from_spans
 from docling_core_spark.serializers.docjson import export_to_docjson
 from docling_core_spark.serializers.markdown import export_to_markdown
 from docling_core_spark.sources.docjson import docjson_to_spans
+from tests.refstubs import oracle_fn, reference
+
+build_doc = oracle_fn("build_doc")
+reference_hierarchical_chunks = oracle_fn("reference_hierarchical_chunks")
+reference_markdown = oracle_fn("reference_markdown")
 
 N_DOCS = 60
 
@@ -57,6 +56,7 @@ def test_import_reference_json(i):
 
 @pytest.mark.parametrize("i", range(N_DOCS))
 def test_export_json_loads_in_reference(i):
+    reference()
     from docling_core.types.doc.document import DoclingDocument
 
     eng, _ = _engine_doc(i)
@@ -88,6 +88,7 @@ def test_round_trip_json_json():
 def test_export_yaml_loads_in_reference():
     import yaml as _yaml
 
+    reference()
     from docling_core.types.doc.document import DoclingDocument
     from docling_core_spark.serializers.docjson import export_to_docyaml_str
 

@@ -6,8 +6,6 @@ import warnings
 
 import pytest
 
-from tests.oracle import build_doc, reference_markdown
-
 from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.docops import (
     concatenate_documents,
@@ -16,6 +14,10 @@ from docling_core_spark.docops import (
 from docling_core_spark.engine import chunk_documents, synth_documents
 from docling_core_spark.model.spans import doc_from_spans
 from docling_core_spark.serializers.markdown import export_to_markdown
+from tests.refstubs import oracle_fn, reference
+
+build_doc = oracle_fn("build_doc")
+reference_markdown = oracle_fn("reference_markdown")
 
 warnings.filterwarnings("ignore")
 
@@ -62,6 +64,7 @@ def test_concatenate_matches_reference_distinct_docs(spark):
     formulas merge, captions detach). The engine keeps the clean
     order-preserving semantics, which coincides with the reference
     wherever the reference is uncorrupted."""
+    reference()
     from docling_core.types.doc.document import DoclingDocument
 
     span_sets = [_distinct_spans("alpha"), _distinct_spans("beta"),

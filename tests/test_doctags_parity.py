@@ -4,11 +4,12 @@ from __future__ import annotations
 
 import pytest
 
-from tests.oracle import build_doc
-
 from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.model.spans import doc_from_spans
 from docling_core_spark.serializers.doctags import export_to_doctags
+from tests.refstubs import oracle_fn
+
+build_doc = oracle_fn("build_doc")
 
 N_DOCS = 60
 

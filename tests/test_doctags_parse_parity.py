@@ -12,20 +12,13 @@ from __future__ import annotations
 
 import pytest
 
-import tests.refstubs  # noqa: F401
-import tests.oracle  # noqa: F401  (applies the add_page pydantic fix)
-
-from docling_core.transforms.chunker.hierarchical_chunker import (
-    HierarchicalChunker,
-)
-from docling_core.types.doc.document import DoclingDocument, DocTagsDocument
-
 from docling_core_spark.chunking.hierarchical import hierarchical_chunk
 from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.model.spans import doc_from_spans
 from docling_core_spark.serializers.doctags import export_to_doctags
 from docling_core_spark.serializers.markdown import export_to_markdown
 from docling_core_spark.sources.doctags import doctags_to_spans
+from tests.refstubs import reference
 
 N_DOCS = 50
 
@@ -40,6 +33,15 @@ def _doctags_for(i: int) -> str:
 
 
 def _ref_chunks(doctags: str):
+    reference()  # also applies the oracle's add_page pydantic fix
+    from docling_core.transforms.chunker.hierarchical_chunker import (
+        HierarchicalChunker,
+    )
+    from docling_core.types.doc.document import (
+        DoclingDocument,
+        DocTagsDocument,
+    )
+
     dtd = DocTagsDocument.from_multipage_doctags_and_images(doctags, None)
     doc = DoclingDocument.load_from_doctags(dtd)
     return [(c.text, list(c.meta.headings) if c.meta.headings else None)
@@ -71,6 +73,12 @@ def test_parse_markdown_parity(i):
 
 def test_chart_parse_reference_crash():
     """Document the deviation: reference crashes, this engine parses."""
+    reference()
+    from docling_core.types.doc.document import (
+        DoclingDocument,
+        DocTagsDocument,
+    )
+
     dt = ("<doctag><chart><loc_10><loc_10><loc_100><loc_100><bar_chart>"
           "<fcel>a<fcel>b<nl><fcel>1<fcel>2<nl></chart></doctag>")
     dtd = DocTagsDocument.from_multipage_doctags_and_images(dt, None)

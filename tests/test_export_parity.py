@@ -4,14 +4,18 @@ from __future__ import annotations
 
 import pytest
 
-from tests.oracle import build_doc, reference_markdown, reference_text
-
 from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.model.spans import doc_from_spans
 from docling_core_spark.serializers.markdown import (
     export_to_markdown,
     export_to_text,
 )
+from tests.refstubs import oracle_fn
+
+build_doc = oracle_fn("build_doc")
+reference_html = oracle_fn("reference_html")
+reference_markdown = oracle_fn("reference_markdown")
+reference_text = oracle_fn("reference_text")
 
 N_DOCS = 60
 
@@ -60,7 +64,6 @@ def test_page_filter_markdown_parity(i):
 
 
 def test_html_parity_all():
-    from tests.oracle import reference_html
     from docling_core_spark.serializers.html import export_to_html
 
     for i in range(N_DOCS):
@@ -70,7 +73,6 @@ def test_html_parity_all():
 
 @pytest.mark.parametrize("i", range(0, N_DOCS, 5))
 def test_sliced_html_parity(i):
-    from tests.oracle import reference_html
     from docling_core_spark.serializers.html import export_to_html
 
     engine_doc, ref_doc = _doc(i)
@@ -80,7 +82,6 @@ def test_sliced_html_parity(i):
 
 @pytest.mark.parametrize("i", range(0, N_DOCS, 5))
 def test_page_filter_html_parity(i):
-    from tests.oracle import reference_html
     from docling_core_spark.serializers.html import export_to_html
 
     engine_doc, ref_doc = _doc(i)
@@ -103,8 +104,6 @@ def test_corpus_exercises_formatting():
 
 
 def test_formatting_renders():
-    from tests.oracle import reference_html
-
     from docling_core_spark.serializers.html import export_to_html
 
     found_md = found_html = False
@@ -127,7 +126,6 @@ def test_split_page_html_parity():
     from docling_core_spark.corpus import gen_doc_spans
     from docling_core_spark.model.spans import doc_from_spans
     from docling_core_spark.serializers.html import export_to_html
-    from tests.oracle import build_doc
 
     for i in range(0, 60, 5):
         spans = gen_doc_spans(i, seed=42)

@@ -8,15 +8,17 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-import tests.refstubs  # noqa: F401
-from tests.oracle import build_doc, reference_hierarchical_chunks
-
 from docling_core_spark.chunking.hierarchical import hierarchical_chunk
 from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.model.spans import doc_from_spans
 from docling_core_spark.serializers.doctags import export_to_doctags
 from docling_core_spark.serializers.html import export_to_html
 from docling_core_spark.serializers.markdown import export_to_markdown
+from tests.refstubs import oracle_fn
+
+build_doc = oracle_fn("build_doc")
+reference_hierarchical_chunks = oracle_fn("reference_hierarchical_chunks")
+reference_hybrid_chunks = oracle_fn("reference_hybrid_chunks")
 
 
 @given(st.integers(min_value=0, max_value=2**31 - 1),
@@ -44,8 +46,6 @@ def test_random_corpus_doc_full_parity(seed, idx):
        st.sampled_from([16, 64, 256]))
 @settings(max_examples=25, deadline=None)
 def test_random_corpus_doc_hybrid_parity(seed, idx, max_tokens):
-    from tests.oracle import reference_hybrid_chunks
-
     from docling_core_spark.chunking.hybrid import hybrid_chunk
     from docling_core_spark.chunking.tokenizer import RegexTokenizer
 

@@ -8,21 +8,19 @@ import random
 
 import pytest
 
-import tests.refstubs  # noqa: F401
-
-from docling_core.types.doc.base import BoundingBox, CoordOrigin, Size
-
 from docling_core_spark.model.geometry import (
     BBox,
     Size as ESize,
     column_bounding_boxes,
     row_bounding_boxes,
 )
+from tests.refstubs import reference
 
 N_PAIRS = 300
 
 
-def _pair(rng, origin):
+def _coords(rng, origin):
+    """Two random (l, t, r, b) boxes in the ``origin`` convention."""
     def one():
         l = rng.uniform(0, 500)
         w = rng.uniform(0, 200)
@@ -31,7 +29,14 @@ def _pair(rng, origin):
         if origin == "TOPLEFT":
             return (l, t, l + w, t + h)
         return (l, t + h, l + w, t)  # BOTTOMLEFT: b <= t
-    a, b = one(), one()
+    return one(), one()
+
+
+def _pair(rng, origin):
+    reference()
+    from docling_core.types.doc.base import BoundingBox, CoordOrigin
+
+    a, b = _coords(rng, origin)
     co = (CoordOrigin.TOPLEFT if origin == "TOPLEFT"
           else CoordOrigin.BOTTOMLEFT)
     ra = BoundingBox(l=a[0], t=a[1], r=a[2], b=a[3], coord_origin=co)
@@ -75,6 +80,9 @@ def test_binary_ops_parity(origin):
 
 @pytest.mark.parametrize("origin", ["TOPLEFT", "BOTTOMLEFT"])
 def test_transforms_parity(origin):
+    reference()
+    from docling_core.types.doc.base import Size
+
     rng = random.Random(11)
     for _ in range(100):
         ra, _, ea, _ = _pair(rng, origin)
@@ -93,6 +101,9 @@ def test_transforms_parity(origin):
 
 
 def test_enclosing_and_from_tuple():
+    reference()
+    from docling_core.types.doc.base import BoundingBox, CoordOrigin
+
     rng = random.Random(13)
     for origin in ("TOPLEFT", "BOTTOMLEFT"):
         co = (CoordOrigin.TOPLEFT if origin == "TOPLEFT"
@@ -121,6 +132,8 @@ def test_mixed_origin_raises():
 
 def test_row_col_bboxes_parity():
     """TB7 vs. the reference TableData.get_row/column_bounding_boxes."""
+    reference()
+    from docling_core.types.doc.base import BoundingBox, CoordOrigin
     from docling_core.types.doc.document import TableCell, TableData
 
     rng = random.Random(17)
@@ -174,7 +187,8 @@ def test_spark_column_builders(spark):
     rng = random.Random(23)
     rows = []
     for _ in range(200):
-        _, _, ea, eb = _pair(rng, "TOPLEFT")
+        a, b = _coords(rng, "TOPLEFT")
+        ea, eb = BBox(*a, "TOPLEFT"), BBox(*b, "TOPLEFT")
         rows.append((ea.as_tuple(), eb.as_tuple()))
     df = spark.createDataFrame(
         [((a[0], a[1], a[2], a[3]), (b[0], b[1], b[2], b[3]))

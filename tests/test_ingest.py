@@ -13,7 +13,7 @@ import time
 
 import pytest
 
-import tests.refstubs  # noqa: F401  (stub the reference's heavy deps)
+from tests.refstubs import reference
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit")
@@ -49,14 +49,16 @@ def test_remote_filename_matches_reference(url, headers):
     is the oracle)."""
     from pydantic import AnyHttpUrl, TypeAdapter
 
+    from docling_core_spark.io.ingest import resolve_remote_filename
+
+    got = resolve_remote_filename(url, dict(headers))
+    reference()
     from docling_core.utils.file import (
         resolve_remote_filename as ref_resolve,
     )
-    from docling_core_spark.io.ingest import resolve_remote_filename
 
     ref = ref_resolve(TypeAdapter(AnyHttpUrl).validate_python(url),
                       dict(headers))
-    got = resolve_remote_filename(url, dict(headers))
     # one deliberate divergence: for a bare trailing-slash dir URL the
     # reference returns the fallback too (Path('').name == ''), so
     # parity must hold everywhere
@@ -69,10 +71,12 @@ def test_remote_filename_first_directive_wins():
     consulted; parity checked against the live function."""
     from pydantic import AnyHttpUrl, TypeAdapter
 
+    from docling_core_spark.io.ingest import resolve_remote_filename
+
+    reference()
     from docling_core.utils.file import (
         resolve_remote_filename as ref_resolve,
     )
-    from docling_core_spark.io.ingest import resolve_remote_filename
 
     url = "https://x.example/a/b/report.pdf"
     hdr = {"Content-Disposition": "a; filename=; filename=real.pdf"}

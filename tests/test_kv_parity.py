@@ -5,9 +5,6 @@ doctags cell format (parse_key_value_item, document.py:4827-4914)."""
 
 from __future__ import annotations
 
-import tests.refstubs  # noqa: F401  (must precede docling_core import)
-from tests.oracle import build_doc
-
 from docling_core_spark.model.kv import (
     TO_CHILD,
     TO_VALUE,
@@ -22,6 +19,10 @@ from docling_core_spark.serializers.doctags import export_to_doctags
 from docling_core_spark.serializers.html import export_to_html
 from docling_core_spark.sources.docjson import docjson_to_spans
 from docling_core_spark.sources.doctags import doctags_to_spans
+from tests.refstubs import oracle_fn, reference
+
+build_doc = oracle_fn("build_doc")
+reference_hierarchical_chunks = oracle_fn("reference_hierarchical_chunks")
 
 KV_FLAT = ("<key_0>Name<link_1></key_0><value_1>Alice</value_1>"
            "<key_2>Age<link_3></key_2><value_3>42</value_3>")
@@ -69,6 +70,7 @@ def test_doctags_and_html_parity():
 
 
 def test_docjson_round_trip_and_reference_load():
+    reference()
     from docling_core.types.doc.document import DoclingDocument
 
     eng, ref = _doc(KV_TREE)
@@ -93,6 +95,7 @@ def test_doctags_parse_flattens_links_like_reference():
     assert links and all(l.label == TO_VALUE for l in links)
 
     # and the reference parses OUR doctags into the same graph
+    reference()
     from docling_core.types.doc.document import (
         DocTagsDocument,
         DoclingDocument,
@@ -145,6 +148,7 @@ def test_form_parity_all_formats():
 
 
 def test_form_docjson_round_trip():
+    reference()
     from docling_core.types.doc.document import DoclingDocument
 
     eng, _ = _form_doc(KV_TREE)
@@ -158,8 +162,6 @@ def test_form_docjson_round_trip():
 
 
 def test_form_chunk_parity():
-    from tests.oracle import reference_hierarchical_chunks
-
     from docling_core_spark.chunking.hierarchical import hierarchical_chunk
 
     eng, ref = _form_doc(KV_FLAT)
@@ -201,6 +203,7 @@ def test_picture_annotation_parity():
     paragraphs before the placeholder, html puts annotation divs in the
     figcaption, doctags emits only the first <smiles> (descriptions
     dropped), docjson carries both - all byte-equal to the reference."""
+    reference()
     from docling_core.types.doc.document import DoclingDocument
 
     from docling_core_spark.serializers.markdown import export_to_markdown
@@ -237,11 +240,11 @@ def test_table_annotation_parity():
     renders it between captions and the table (standard mode only -
     triplet/chunking render none), html as a div in <caption>, doctags
     nothing, docjson carries it both ways."""
+    reference()
     from docling_core.types.doc.document import DoclingDocument
 
     from docling_core_spark.chunking.hierarchical import hierarchical_chunk
     from docling_core_spark.serializers.markdown import export_to_markdown
-    from tests.oracle import reference_hierarchical_chunks
 
     spans = [{"kind": "table",
               "text": ("<ched>h1<ched>h2<nl><fcel>x<fcel>y<nl>"

@@ -7,24 +7,14 @@ import json
 
 import pytest
 
-import tests.refstubs as refstubs
-
-refstubs.install()
-
-from docling_core.types.legacy_doc.document import (  # noqa: E402
-    ExportedCCSDocument as DsDocument,
-)
-from docling_core.utils.legacy import (  # noqa: E402
-    docling_document_to_legacy,
-    legacy_to_docling_document,
-)
-
-from docling_core_spark.corpus import gen_doc_spans  # noqa: E402
-from docling_core_spark.legacy import (  # noqa: E402
+from docling_core_spark.corpus import gen_doc_spans
+from docling_core_spark.legacy import (
     legacy_to_spans,
     spans_to_legacy,
 )
-from tests.oracle import build_doc  # noqa: E402
+from tests.refstubs import oracle_fn, reference, reference_data
+
+build_doc = oracle_fn("build_doc")
 
 
 def _tuples(spans):
@@ -32,11 +22,27 @@ def _tuples(spans):
             for s in spans]
 
 
+def _ref_legacy():
+    """The reference's legacy document model and its two converters."""
+    reference()
+    from docling_core.types.legacy_doc.document import (
+        ExportedCCSDocument,
+    )
+    from docling_core.utils.legacy import (
+        docling_document_to_legacy,
+        legacy_to_docling_document,
+    )
+
+    return (ExportedCCSDocument, docling_document_to_legacy,
+            legacy_to_docling_document)
+
+
 @pytest.mark.parametrize("doc_index", list(range(0, 60)))
 def test_to_legacy_dict_equals_reference(doc_index):
     """Engine legacy dict == the reference converter's model_dump for
     the same document - field for field, including table grids, span
     lists, page hashes and provenance."""
+    _, docling_document_to_legacy, _ = _ref_legacy()
     spans = gen_doc_spans(doc_index, seed=42)
     doc_id = f"doc_{doc_index:012d}"
     eng = spans_to_legacy(doc_id, _tuples(spans))
@@ -50,6 +56,7 @@ def test_to_legacy_dict_equals_reference(doc_index):
 def test_from_legacy_matches_reference(doc_index):
     """legacy -> spans -> reference build renders identically to the
     reference's own legacy_to_docling_document."""
+    DsDocument, _, legacy_to_docling_document = _ref_legacy()
     spans = gen_doc_spans(doc_index, seed=42)
     doc_id = f"doc_{doc_index:012d}"
     eng_legacy = spans_to_legacy(doc_id, _tuples(spans))
@@ -67,6 +74,7 @@ def test_from_legacy_matches_reference(doc_index):
 
 
 def test_reference_accepts_engine_legacy_json():
+    DsDocument, _, _ = _ref_legacy()
     spans = gen_doc_spans(7, seed=42)
     eng = spans_to_legacy("doc_7", _tuples(spans))
     ds = DsDocument.model_validate(eng)  # pydantic-valid legacy doc
@@ -77,7 +85,8 @@ def test_committed_reference_fixture_roundtrip():
     """The reference's own committed legacy fixture
     (test/data/legacy_doc/doc-export.json): our inverse conversion
     renders identically to the reference's."""
-    raw = open("/root/reference/test/data/legacy_doc/doc-export.json",
+    DsDocument, _, legacy_to_docling_document = _ref_legacy()
+    raw = open(reference_data("legacy_doc/doc-export.json"),
                encoding="utf-8").read()
     leg = DsDocument.model_validate_json(raw)
     want = legacy_to_docling_document(leg)
@@ -106,7 +115,8 @@ def _strip_cell_padding(legacy_dict: dict) -> dict:
                                   "doc-5.json", "doc-6.json",
                                   "doc-7.json"])
 def test_more_committed_fixtures(name):
-    raw = open(f"/root/reference/test/data/legacy_doc/{name}",
+    DsDocument, _, legacy_to_docling_document = _ref_legacy()
+    raw = open(reference_data(f"legacy_doc/{name}"),
                encoding="utf-8").read()
     legacy_dict = _strip_cell_padding(json.loads(raw))
     try:

@@ -10,11 +10,6 @@ import json
 
 import pytest
 
-import tests.refstubs  # noqa: F401
-
-from docling_core.types.legacy_doc.doc_ann import Annotation
-from docling_core.types.legacy_doc.doc_ocr import OcrOutput
-from docling_core.types.legacy_doc.doc_raw import RawPdf
 from docling_core_spark.legacytypes import (
     CORRUPTIONS,
     VALIDATORS,
@@ -24,12 +19,22 @@ from docling_core_spark.legacytypes import (
 )
 from pydantic import ValidationError
 
-LIVE = {"annotation": Annotation, "ocr": OcrOutput, "raw": RawPdf}
+from tests.refstubs import reference
+
+
+def _live_models() -> dict:
+    reference()
+    from docling_core.types.legacy_doc.doc_ann import Annotation
+    from docling_core.types.legacy_doc.doc_ocr import OcrOutput
+    from docling_core.types.legacy_doc.doc_raw import RawPdf
+
+    return {"annotation": Annotation, "ocr": OcrOutput, "raw": RawPdf}
 
 
 def _live_ok(kind: str, payload: dict) -> bool:
+    model = _live_models()[kind]
     try:
-        LIVE[kind].model_validate(payload)
+        model.model_validate(payload)
         return True
     except ValidationError:
         return False

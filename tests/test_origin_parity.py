@@ -4,11 +4,11 @@ rows identically to the reference library."""
 
 from __future__ import annotations
 
-import tests.refstubs  # noqa: F401
-
 from docling_core_spark.corpus import gen_corpus
 from docling_core_spark.model.spans import doc_from_spans, spans_from_doc
-from tests.oracle import build_doc
+from tests.refstubs import oracle_fn, reference, reference_data
+
+build_doc = oracle_fn("build_doc")
 
 
 def _tuples(spans):
@@ -42,6 +42,7 @@ def test_origin_codec_round_trip():
 def test_origin_matches_reference_docmeta():
     """Reference HierarchicalChunker attaches doc.origin to every
     chunk's meta (hierarchical_chunker.py:241-258); ours must agree."""
+    reference()
     from docling_core.transforms.chunker.hierarchical_chunker import (
         HierarchicalChunker,
     )
@@ -69,6 +70,7 @@ def test_origin_docjson_round_trip():
     and our importer reads it back bit-equal (uint64 hash included)."""
     import json
 
+    reference()
     from docling_core.types.doc.document import DoclingDocument
 
     from docling_core_spark.serializers.docjson import (
@@ -97,7 +99,7 @@ def test_reference_fixture_origin_imported():
     from docling_core_spark.sources.docjson import docjson_to_spans
 
     raw = json.load(open(
-        "/root/reference/test/data/chunker/2_inp_dl_doc.json"))
+        reference_data("chunker/2_inp_dl_doc.json")))
     spans = docjson_to_spans(raw)
     doc = doc_from_spans("wiki", _tuples(spans))
     assert doc.origin == {

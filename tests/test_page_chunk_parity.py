@@ -4,11 +4,13 @@ from __future__ import annotations
 
 import pytest
 
-from tests.oracle import build_doc, reference_page_chunks
-
 from docling_core_spark.chunking.page import page_chunk
 from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.model.spans import doc_from_spans
+from tests.refstubs import oracle_fn
+
+build_doc = oracle_fn("build_doc")
+reference_page_chunks = oracle_fn("reference_page_chunks")
 
 N_DOCS = 60
 

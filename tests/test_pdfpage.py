@@ -8,24 +8,7 @@ import random
 
 import pytest
 
-import tests.refstubs as refstubs
-
-refstubs.install()
-
-from docling_core.types.doc.base import (  # noqa: E402
-    BoundingBox,
-    CoordOrigin,
-)
-from docling_core.types.doc.page import (  # noqa: E402
-    BoundingRectangle,
-    PdfPageBoundaryType,
-    PdfPageGeometry,
-    SegmentedPdfPage,
-    TextCell,
-    TextCellUnit,
-)
-
-from docling_core_spark.pdfpage import (  # noqa: E402
+from docling_core_spark.pdfpage import (
     BOTTOMLEFT,
     TOPLEFT,
     gen_page_cells,
@@ -41,6 +24,7 @@ from docling_core_spark.pdfpage import (  # noqa: E402
     rect_to_bbox,
     rect_width,
 )
+from tests.refstubs import reference
 
 
 def _rand_quads(n=200, seed=9):
@@ -62,6 +46,10 @@ def _rand_quads(n=200, seed=9):
 
 
 def _ref_rect(q, origin=BOTTOMLEFT) -> BoundingRectangle:
+    reference()
+    from docling_core.types.doc.base import CoordOrigin
+    from docling_core.types.doc.page import BoundingRectangle
+
     return BoundingRectangle(
         r_x0=q[0], r_y0=q[1], r_x1=q[2], r_y1=q[3],
         r_x2=q[4], r_y2=q[5], r_x3=q[6], r_y3=q[7],
@@ -93,6 +81,10 @@ def test_rect_geometry_parity_topleft():
 
 
 def test_rect_bbox_roundtrip_and_flip():
+    reference()
+    from docling_core.types.doc.base import BoundingBox, CoordOrigin
+    from docling_core.types.doc.page import BoundingRectangle
+
     for q in _rand_quads(50, seed=5):
         ref = _ref_rect(q)
         flipped = ref.to_top_left_origin(792.0)
@@ -109,6 +101,16 @@ def test_rect_bbox_roundtrip_and_flip():
 
 
 def _ref_page(page: dict) -> SegmentedPdfPage:
+    reference()
+    from docling_core.types.doc.base import BoundingBox, CoordOrigin
+    from docling_core.types.doc.page import (
+        BoundingRectangle,
+        PdfPageBoundaryType,
+        PdfPageGeometry,
+        SegmentedPdfPage,
+        TextCell,
+    )
+
     def cell(c):
         return TextCell(index=c["index"], text=c["text"], orig=c["text"],
                         rect=_ref_rect(c["quad"]), from_ocr=False)
@@ -136,6 +138,10 @@ BBOXES = [(100.0, 760.0, 400.0, 600.0), (0.0, 792.0, 612.0, 0.0),
 
 @pytest.mark.parametrize("doc_index", [0, 1, 5, 17, 33])
 def test_cells_in_bbox_parity(doc_index):
+    reference()
+    from docling_core.types.doc.base import BoundingBox, CoordOrigin
+    from docling_core.types.doc.page import TextCellUnit
+
     page = gen_page_cells(doc_index)
     ref_page = _ref_page(page)
     for l, t, r, b in BBOXES:
@@ -150,6 +156,10 @@ def test_cells_in_bbox_parity(doc_index):
 
 @pytest.mark.parametrize("doc_index", [0, 2, 9, 41])
 def test_crop_text_parity(doc_index):
+    reference()
+    from docling_core.types.doc.base import BoundingBox, CoordOrigin
+    from docling_core.types.doc.page import TextCellUnit
+
     page = gen_page_cells(doc_index)
     ref_page = _ref_page(page)
     for l, t, r, b in BBOXES:
@@ -162,6 +172,9 @@ def test_crop_text_parity(doc_index):
 
 @pytest.mark.parametrize("doc_index", [0, 7])
 def test_textlines_parity(doc_index):
+    reference()
+    from docling_core.types.doc.page import TextCellUnit
+
     page = gen_page_cells(doc_index)
     ref_page = _ref_page(page)
     want = ref_page.export_to_textlines(TextCellUnit.LINE,
@@ -228,6 +241,10 @@ def test_segmented_page_json_interop():
     """Engine cell rows -> reference-schema JSON: the live
     SegmentedPdfPage loads it and its get_cells_in_bbox equals the
     engine's columnar selection."""
+    reference()
+    from docling_core.types.doc.base import BoundingBox, CoordOrigin
+    from docling_core.types.doc.page import SegmentedPdfPage, TextCellUnit
+
     from docling_core_spark.pdfpage import page_to_segmented_json
 
     page = gen_page_cells(3)

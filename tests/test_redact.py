@@ -15,14 +15,15 @@ import warnings
 
 import pytest
 
-import tests.refstubs  # noqa: F401  (must precede docling_core import)
-from tests.oracle import build_doc, reference_markdown
-
 from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.docops import redact_spans
 from docling_core_spark.engine import DOCUMENTS_SCHEMA
 from docling_core_spark.model.spans import doc_from_spans
 from docling_core_spark.serializers.markdown import export_to_markdown
+from tests.refstubs import oracle_fn, reference
+
+build_doc = oracle_fn("build_doc")
+reference_markdown = oracle_fn("reference_markdown")
 
 warnings.filterwarnings("ignore")
 
@@ -30,6 +31,7 @@ N = 24
 
 
 def _labels_for(kinds):
+    reference()
     from docling_core.types.doc.labels import DocItemLabel
 
     m = {"code": DocItemLabel.CODE, "formula": DocItemLabel.FORMULA,
@@ -86,6 +88,7 @@ def test_redact_group_kind_removes_bracketed_range(spark):
     limitation, so no parity target exists. The engine handles the
     same delete consistently (the rich cell simply loses its
     sub-item)."""
+    reference()
     from docling_core.types.doc.labels import GroupLabel
 
     checked = 0
@@ -234,6 +237,7 @@ def test_redact_page_break_survives_deleted_bracket_range(spark):
         {"kind": "end_group", "text": "", "media_ref": "", "offset": 5},
         {"kind": "text", "text": "after", "media_ref": "", "offset": 6},
     ]
+    reference()
     from docling_core.types.doc.labels import GroupLabel
 
     doc, _ = build_doc("d", spans)

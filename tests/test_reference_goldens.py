@@ -33,22 +33,23 @@ from docling_core_spark.sources.docjson import (
     docjson_to_spans,
     docyaml_to_spans,
 )
+from tests.refstubs import REFERENCE_DATA, reference, reference_data
 
-BASE = "/root/reference/test/data"
+BASE = REFERENCE_DATA
 _LOC = re.compile(r"<loc_\d+>")
 
 
 def _doc_from(path: str, name: str):
     if path.endswith(".yaml"):
-        spans = docyaml_to_spans(open(f"{BASE}/{path}").read())
+        spans = docyaml_to_spans(open(reference_data(path)).read())
     else:
-        spans = docjson_to_spans(json.load(open(f"{BASE}/{path}")))
+        spans = docjson_to_spans(json.load(open(reference_data(path))))
     return doc_from_spans(name, [(s["kind"], s["text"], s["media_ref"],
                                   s["offset"]) for s in spans])
 
 
 def _golden(path: str) -> str:
-    return open(f"{BASE}/{path}", encoding="utf-8").read().rstrip()
+    return open(reference_data(path), encoding="utf-8").read().rstrip()
 
 
 def test_hierarchical_chunker_golden():
@@ -133,20 +134,19 @@ def test_enriched_doctags_parse_matches_reference_parser():
     """Real doctags INPUT fixture (2408.09869v3_enriched.dt): our
     stream parser (S5) and the reference's load_from_doctags must
     produce identical markdown."""
-    import tests.refstubs  # noqa: F401
-    import tests.oracle  # noqa: F401  (add_page patch)
+    from docling_core_spark.sources.doctags import doctags_to_spans
+
+    dt = open(reference_data("doc/2408.09869v3_enriched.dt")).read()
+    spans = doctags_to_spans(dt)
+    assert len(spans) == 210
+    eng = doc_from_spans("d", [(s["kind"], s["text"], s["media_ref"],
+                                s["offset"]) for s in spans])
+    reference()  # also applies the oracle's add_page patch
     from docling_core.types.doc.document import (
         DocTagsDocument,
         DoclingDocument,
     )
 
-    from docling_core_spark.sources.doctags import doctags_to_spans
-
-    dt = open(f"{BASE}/doc/2408.09869v3_enriched.dt").read()
-    spans = doctags_to_spans(dt)
-    assert len(spans) == 210
-    eng = doc_from_spans("d", [(s["kind"], s["text"], s["media_ref"],
-                                s["offset"]) for s in spans])
     dtd = DocTagsDocument.from_multipage_doctags_and_images(dt, None)
     ref = DoclingDocument.load_from_doctags(dtd)
     assert export_to_markdown(eng) == ref.export_to_markdown()
@@ -158,19 +158,18 @@ def test_doctags_load_fixtures_match_reference_parser(name):
     """test_doctags_load fixtures: stream-parse each real doctags file
     and match the reference parser's markdown AND html (doc name
     'Document' = load_from_doctags default)."""
-    import tests.refstubs  # noqa: F401
-    import tests.oracle  # noqa: F401
+    from docling_core_spark.sources.doctags import doctags_to_spans
+
+    dt = open(reference_data(f"doc/{name}")).read()
+    spans = doctags_to_spans(dt)
+    eng = doc_from_spans("Document", [(s["kind"], s["text"], s["media_ref"],
+                                       s["offset"]) for s in spans])
+    reference()
     from docling_core.types.doc.document import (
         DocTagsDocument,
         DoclingDocument,
     )
 
-    from docling_core_spark.sources.doctags import doctags_to_spans
-
-    dt = open(f"{BASE}/doc/{name}").read()
-    spans = doctags_to_spans(dt)
-    eng = doc_from_spans("Document", [(s["kind"], s["text"], s["media_ref"],
-                                       s["offset"]) for s in spans])
     dtd = DocTagsDocument.from_multipage_doctags_and_images(dt, None)
     ref = DoclingDocument.load_from_doctags(dtd)
     assert export_to_markdown(eng) == ref.export_to_markdown()
@@ -227,10 +226,9 @@ def _fixture_docs():
 
 @pytest.mark.parametrize("name", _fixture_docs())
 def test_import_fidelity_sweep(name):
-    import tests.refstubs  # noqa: F401
-    import tests.oracle  # noqa: F401
     import yaml as _yaml
 
+    reference()
     from docling_core.types.doc.document import DoclingDocument
 
     raw = open(f"{BASE}/doc/{name}", encoding="utf-8").read()

@@ -178,9 +178,9 @@ def test_witness_rows_shape():
 # ----------------------------------------------------------------------
 
 def test_reference_loads_rehomed_json():
-    import tests.refstubs  # noqa: F401 - must precede docling_core
+    from tests.refstubs import reference
 
-    tests.refstubs.install()
+    reference()
     from docling_core.types.doc.document import DoclingDocument
 
     from docling_core_spark.serializers.docjson import export_to_docjson

@@ -7,24 +7,20 @@ from __future__ import annotations
 
 import json
 
-import pytest
-
-import tests.refstubs as refstubs
-
-refstubs.install()
-
-from docling_core_spark.search_mapper import (  # noqa: E402
+from docling_core_spark.search_mapper import (
     JsonSchemaToSearchMapper,
     _collapse_arrays,
     _merge_unions,
     _prune_empty,
     inline_refs,
 )
+from tests.refstubs import REFERENCE_DATA, reference
 
-_GT = "/root/reference/test/data/json_schemas"
+_GT = f"{REFERENCE_DATA}/json_schemas"
 
 
 def test_document_index_definition_matches_committed_gt():
+    reference()
     from docling_core.types.legacy_doc.document import ExportedCCSDocument
 
     mapper = JsonSchemaToSearchMapper(
@@ -48,10 +44,9 @@ def test_document_index_definition_matches_committed_gt():
 
 
 def test_record_index_definition_matches_committed_gt():
-    try:
-        from docling_core.types.rec.record import Record
-    except Exception:
-        pytest.skip("rec models unavailable")
+    reference()
+    from docling_core.types.rec.record import Record
+
     _meta = {
         "aliases": [".production", "ccc"],
         "created": "2022-11-03T11:22:32.432+00:00",

@@ -21,8 +21,6 @@ import warnings
 
 import pytest
 
-import tests.refstubs  # noqa: F401
-
 from docling_core_spark.searchtypes import (
     corrupt_search,
     synth_search_payload,
@@ -30,10 +28,11 @@ from docling_core_spark.searchtypes import (
     validate_meta,
     validate_package,
 )
+from tests.refstubs import REFERENCE_DATA, reference, reference_data
 
 warnings.filterwarnings("ignore")
 
-REF = "/root/reference/test/data/search"
+REF = f"{REFERENCE_DATA}/search"
 
 TAXONOMY = ("Public", "PI")
 DOMAIN = ("Science", "Technology", "History", "Art", "Literature",
@@ -43,6 +42,7 @@ DOMAIN = ("Science", "Technology", "History", "Art", "Literature",
 def _ref_meta():
     from typing import Literal
 
+    reference()
     from docling_core.search.meta import Meta
 
     return Meta[Literal["Public", "PI"],
@@ -117,7 +117,7 @@ def test_meta_error_fixture_gold_ordering():
         return out
 
     for fname, want in gold.items():
-        with open(f"{REF}/{fname}", encoding="utf-8") as fh:
+        with open(reference_data(f"search/{fname}"), encoding="utf-8") as fh:
             errs = validate_meta(json.load(fh),
                                  classification=TAXONOMY, domain=DOMAIN)
         got = collapse(_engine_top_locs(errs, "meta"))
@@ -143,6 +143,7 @@ def test_generic_reference_inputs():
     assert validate_generic(ok_min) == []
     assert validate_generic(bad) != []
 
+    reference()
     from docling_core.types import Generic
     from pydantic import ValidationError
 
@@ -153,6 +154,7 @@ def test_generic_reference_inputs():
 
 
 def test_package_semver():
+    reference()
     from docling_core.search.package import Package
     from pydantic import ValidationError
 
@@ -179,6 +181,7 @@ def test_package_semver():
 def _ref_verdict_for(kind: str, payload: str) -> bool:
     from pydantic import ValidationError
 
+    reference()
     from docling_core.search.meta import Meta
     from docling_core.search.package import Package
     from docling_core.types import Generic

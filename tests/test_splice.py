@@ -13,9 +13,6 @@ import warnings
 
 import pytest
 
-import tests.refstubs  # noqa: F401
-from tests.oracle import build_doc, reference_markdown
-
 from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.docops import (
     graft_documents,
@@ -25,6 +22,10 @@ from docling_core_spark.docops import (
 from docling_core_spark.engine import DOCUMENTS_SCHEMA
 from docling_core_spark.model.spans import doc_from_spans
 from docling_core_spark.serializers.markdown import export_to_markdown
+from tests.refstubs import oracle_fn, reference
+
+build_doc = oracle_fn("build_doc")
+reference_markdown = oracle_fn("reference_markdown")
 
 warnings.filterwarnings("ignore")
 
@@ -33,6 +34,7 @@ NEW_TEXT = "SPLICED sentinel paragraph"
 
 
 def _resolve(doc, ref: str):
+    reference()
     from docling_core.types.doc.document import RefItem
 
     return RefItem(cref=ref).resolve(doc)
@@ -80,6 +82,7 @@ def test_insert_after_matches_reference(spark):
 
 
 def test_replace_matches_reference(spark):
+    reference()
     from docling_core.types.doc.document import TextItem
 
     checked = 0
@@ -356,6 +359,7 @@ def test_replace_every_anchor_exhaustive(spark):
     substitution the reference intends, so those anchors assert
     engine well-formedness instead of byte parity (documented
     divergence, like the graft RefItem bug)."""
+    reference()
     from docling_core.types.doc.document import TextItem
 
     checked = ref_broken = 0
@@ -410,6 +414,7 @@ def test_subtree_crosses_page_break_to_attached_child(spark):
     (model/spans.py:390-396), so [table, page_break:2, text+child] is
     a legal subtree. Replace must take the child with the table while
     the page break survives; parity vs the live replace_item."""
+    reference()
     from docling_core.types.doc.document import TextItem
 
     doc_m, r2o = build_doc("d", _PB_SPANS)

@@ -26,9 +26,9 @@ def _doc_json(i: int) -> str:
 
 
 def _ref_accepts(js: dict) -> bool:
-    import tests.refstubs
+    from tests.refstubs import reference
 
-    tests.refstubs.install()
+    reference()
     from docling_core.types.doc.document import DoclingDocument
 
     try:

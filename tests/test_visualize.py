@@ -8,19 +8,17 @@ import sys
 
 import pytest
 
-import tests.refstubs as refstubs
-
-refstubs.install()
-
-from docling_core_spark.corpus import gen_doc_spans  # noqa: E402
-from docling_core_spark.model.doc import PAGE_H, PAGE_W  # noqa: E402
-from docling_core_spark.visualize import (  # noqa: E402
+from docling_core_spark.corpus import gen_doc_spans
+from docling_core_spark.model.doc import PAGE_H, PAGE_W
+from docling_core_spark.visualize import (
     CHAR_H,
     CHAR_W,
     layout_draw_rows,
     reading_order_rows,
 )
-from tests.oracle import build_doc  # noqa: E402
+from tests.refstubs import oracle_fn, reference
+
+build_doc = oracle_fn("build_doc")
 
 
 class FakeImage:
@@ -80,6 +78,7 @@ def _install_recording_pil():
 def _ref_doc_with_page_images(doc_id, spans):
     from pathlib import Path
 
+    reference()
     from docling_core.types.doc.document import ImageRef, Size
 
     doc, _ = build_doc(doc_id, spans)
@@ -141,6 +140,7 @@ def _engine_rows_by_page(rows):
 @pytest.mark.parametrize("doc_index", [0, 1, 3, 7, 17, 42])
 def test_layout_visualizer_parity(doc_index):
     _install_recording_pil()
+    reference()
     from docling_core.transforms.visualizer.layout_visualizer import (
         LayoutVisualizer,
     )
@@ -160,6 +160,7 @@ def test_layout_visualizer_parity(doc_index):
 @pytest.mark.parametrize("doc_index", [0, 2, 5, 11])
 def test_reading_order_visualizer_parity(doc_index):
     _install_recording_pil()
+    reference()
     from docling_core.transforms.visualizer.reading_order_visualizer import (
         ReadingOrderVisualizer,
     )
@@ -207,6 +208,7 @@ def test_table_visualizer_parity(doc_index):
     reference TableData, the live TableVisualizer's draw calls equal
     the engine rows."""
     _install_recording_pil()
+    reference()
     from docling_core.transforms.visualizer.table_visualizer import (
         TableVisualizer,
     )
@@ -248,6 +250,7 @@ def test_key_value_visualizer_parity(doc_index):
     geometry on the reference GraphCells, the live KeyValueVisualizer
     draws identically (cell rects + tags, TO_VALUE link arrows)."""
     _install_recording_pil()
+    reference()
     from docling_core.transforms.visualizer.key_value_visualizer import (
         KeyValueVisualizer,
     )

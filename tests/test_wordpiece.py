@@ -195,10 +195,9 @@ def test_hybrid_parity_reference_with_wordpiece():
     produce the same chunks as our hybrid pipeline with the same
     counter - exercising the exact (non-separable) path on both sides
     with a real tokenizer algorithm."""
-    import tests.refstubs as refstubs
+    from tests.refstubs import reference
 
-    refstubs.install()
-    from tests.oracle import build_doc, reference_hybrid_chunks
+    build_doc = reference().build_doc
 
     from docling_core_spark.chunking.hybrid import hybrid_chunk
     from docling_core_spark.corpus import gen_doc_spans
