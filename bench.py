@@ -10,8 +10,13 @@ fused mapInPandas stage, zero shuffles. Python workers are warmed
 before timing (cold-start amortizes to noise on a long-running
 cluster).
 
-Scaling-efficiency evidence (N vs 4N cores) is produced by
-bench_scaling.py and recorded in BENCH/BASELINE.md.
+The 73-query sweep is bracketed by a fixed no-op Spark job (a count
+over a cached 1k-row frame, best of 3) timed before and after it
+(``sweep_controls``), so scheduler and box drift across the sweep can
+be told from query drift.
+
+Scaling-efficiency evidence (N vs kN cores) is ``scaling_eff`` from
+``perfbench/run.py --workload chunk_hybrid --trace 1``.
 """
 
 from __future__ import annotations
@@ -119,6 +124,18 @@ def main() -> None:
     n_chunks = chunk_documents(docs, mode="hybrid", max_tokens=64).count()
     times["chunks_hybrid"] = round(time.perf_counter() - t0, 3)
 
+    noop = spark.range(1000).cache()
+    noop.count()
+
+    def sweep_control() -> float:
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            noop.count()
+            best = min(best, time.perf_counter() - t0)
+        return round(best, 4)
+
+    sweep_controls = [sweep_control()]
     reg = registry()
     for name, fn in reg.items():
         if name == "chunks_hybrid":
@@ -138,6 +155,7 @@ def main() -> None:
         except Exception as exc:  # pragma: no cover
             times[name] = -1.0
             print(f"# bench error in {name}: {exc}", file=sys.stderr)
+    sweep_controls.append(sweep_control())
 
     docs_per_sec = n_big / headline_secs if headline_secs > 0 else 0.0
     print(json.dumps({
@@ -160,6 +178,8 @@ def main() -> None:
         # 5-run attempts the good-window gate took (max 3)
         "headline_window_controls": list(window),
         "headline_attempts": attempts,
+        # the no-op job's seconds before and after the query sweep
+        "sweep_controls": sweep_controls,
     }))
     spark.stop()
 

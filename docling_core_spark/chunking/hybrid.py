@@ -296,6 +296,16 @@ def _merge_peers_fast(tok, max_tokens: int,
     return output
 
 
+def check_budget(max_tokens: int) -> None:
+    """Reject a token budget below 1: the plain-text step would drop the
+    headings and retry with a budget that still fits nothing, forever.
+    The stage builders call this on the driver, so a bad budget fails
+    before any Spark job runs."""
+    if max_tokens < 1:
+        raise ValueError(f"hybrid chunking needs max_tokens >= 1, "
+                         f"got {max_tokens}")
+
+
 def hybrid_chunk(doc: Doc, tokenizer=None, max_tokens: Optional[int] = None,
                  merge_peers: bool = True, fast: Optional[bool] = None
                  ) -> List[Chunk]:
@@ -304,9 +314,15 @@ def hybrid_chunk(doc: Doc, tokenizer=None, max_tokens: Optional[int] = None,
     ``fast=None`` auto-selects the O(n) path when the tokenizer declares
     whitespace separability; ``fast=False`` forces the reference-shaped
     quadratic path (used by equivalence tests).
+
+    A budget below 1 (``max_tokens``, else the tokenizer's) raises
+    ValueError. This diverges from the reference, whose plain-text
+    step (hybrid_chunker.py:230-239) recurses without end on such a
+    budget, as the slow path here would.
     """
     tok = tokenizer if tokenizer is not None else RegexTokenizer()
     mt = max_tokens if max_tokens is not None else tok.get_max_tokens()
+    check_budget(mt)
     ser = chunking_serializer(doc)
     res = hierarchical_chunk(doc, ser=ser)
     use_fast = (getattr(tok, "whitespace_separable", False)

@@ -157,7 +157,7 @@ def _href(rng: random.Random, doc_index: int) -> str:
 
 
 # bump when the generator's output changes: materialized corpus caches
-# (queries.corpus_cache_path, bench_scaling) key on this so stale
+# (queries.corpus_cache_path, perfbench/corpora.py) key on this so stale
 # parquet can't silently diverge from the in-process generator
 CORPUS_VERSION = 9
 

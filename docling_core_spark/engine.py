@@ -44,6 +44,7 @@ Scale design:
 
 from __future__ import annotations
 
+import functools
 from itertools import accumulate
 from typing import Callable, Optional, Sequence, Union
 
@@ -214,9 +215,20 @@ def _origin_struct(doc) -> Optional[dict]:
 
 
 def _chunker(mode: str, max_tokens: int, merge_peers: bool = True):
-    """The chunk-mode dispatch every chunk stage shares: Doc -> chunks
-    for ``mode`` ("hybrid", "page", anything else hierarchical). Call
-    it once per task: it imports lazily and builds the tokenizer."""
+    """The chunk-mode dispatch every chunk stage shares, called on the
+    driver when the stage is built, so a hybrid budget below 1 fails
+    before any job runs. Returns the per-task ``_make_chunker``."""
+    if mode == "hybrid":
+        from docling_core_spark.chunking.hybrid import check_budget
+
+        check_budget(max_tokens)
+    return functools.partial(_make_chunker, mode, max_tokens, merge_peers)
+
+
+def _make_chunker(mode: str, max_tokens: int, merge_peers: bool):
+    """Doc -> chunks for ``mode`` ("hybrid", "page", anything else
+    hierarchical). Call it once per task: it imports lazily and builds
+    the tokenizer."""
     if mode == "hybrid":
         from docling_core_spark.chunking.hybrid import hybrid_chunk
         from docling_core_spark.chunking.tokenizer import RegexTokenizer
@@ -238,10 +250,12 @@ def _chunk_task(mode: str, max_tokens: int, merge_peers: bool,
     """Per-task factory of the chunk-row function: (doc_id, spans) ->
     CHUNKS_SCHEMA rows. With ``to_spans`` the second column is a
     payload string that ``to_spans`` parses to span dicts first."""
+    make_chunker = _chunker(mode, max_tokens, merge_peers)
+
     def task():
         from docling_core_spark.model.spans import doc_from_spans, span_tuples
 
-        chunk = _chunker(mode, max_tokens, merge_peers)
+        chunk = make_chunker()
 
         def row(doc_id, spans):
             if to_spans is not None:
@@ -350,10 +364,12 @@ def contextualize_chunks(chunks: DataFrame, delim: str = "\n"
 def doc_stats(df: DataFrame, mode: str = "hybrid", max_tokens: int = 64
               ) -> DataFrame:
     """Per-doc span/chunk/char counts - cheap lineage-style metrics."""
+    make_chunker = _chunker(mode, max_tokens)
+
     def task():
         from docling_core_spark.model.spans import doc_from_spans
 
-        chunk = _chunker(mode, max_tokens)
+        chunk = make_chunker()
 
         def row(doc_id, spans):
             chunks = chunk(doc_from_spans(doc_id, spans))

@@ -75,6 +75,20 @@ def test_fast_equals_slow_hostile_text(spans, max_tokens, merge):
     assert fast == slow
 
 
+@pytest.mark.parametrize("fast", [None, False])
+@pytest.mark.parametrize("max_tokens", [0, -3])
+def test_budget_below_one_is_rejected(fast, max_tokens):
+    """Dropping the headings cannot make a budget below 1 fit anything,
+    so both paths raise up front instead of retrying without end; the
+    tokenizer's own budget is checked when max_tokens is not given."""
+    doc = doc_from_spans("d", [("text", "hello world", " ", 0)])
+    with pytest.raises(ValueError, match=f"got {max_tokens}"):
+        hybrid_chunk(doc, tokenizer=RegexTokenizer(max_tokens), fast=fast)
+    with pytest.raises(ValueError, match=f"got {max_tokens}"):
+        hybrid_chunk(doc, tokenizer=RegexTokenizer(64),
+                     max_tokens=max_tokens, fast=fast)
+
+
 def test_fast_path_counts_and_serializes_each_text_once(monkeypatch):
     """The reference-shaped loop recounts every candidate window and
     re-serializes every item; the fast path carries counts between its

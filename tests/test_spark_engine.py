@@ -14,6 +14,7 @@ from docling_core_spark.engine import (
     chunk_documents,
     doc_stats,
     export_documents,
+    parse_and_chunk,
     synth_documents,
 )
 from docling_core_spark.model.spans import doc_from_spans
@@ -153,3 +154,31 @@ def test_null_and_empty_spans_rows(spark):
                export_documents(df, fmt="md").collect()}
     assert exports["d1"] == "# T\n\nbody"
     assert exports["d2"] == "" and exports["d3"] == ""
+
+
+def test_hybrid_budget_below_one_fails_at_stage_build(spark):
+    """A hybrid stage with max_tokens < 1 raises while it is built on
+    the driver, before any Spark job runs; hier and page ignore
+    max_tokens and still build."""
+    from docling_core_spark.sources.doctags import doctags_to_spans
+
+    sc = spark.sparkContext
+    group = "hybrid-budget-check"
+    sc.setJobGroup(group, "stage builds only")
+    try:
+        docs = synth_documents(spark, 4, seed=42, partitions=1)
+        text = docs.selectExpr("doc_id", "'' AS doctags")
+        builds = [
+            lambda mode: chunk_documents(docs, mode=mode, max_tokens=0),
+            lambda mode: parse_and_chunk(text, doctags_to_spans, "doctags",
+                                         mode=mode, max_tokens=0),
+            lambda mode: doc_stats(docs, mode=mode, max_tokens=0),
+        ]
+        for build in builds:
+            with pytest.raises(ValueError, match="got 0"):
+                build("hybrid")
+            for mode in ("hier", "page"):
+                build(mode)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setJobGroup(None, None)
