@@ -6,7 +6,7 @@ Headline metric (BASELINE.json): docs/sec hybrid-chunking throughput.
 Measured the way production runs at 100 TB: the span corpus is
 materialized once as parquet (stand-in for the Iceberg documents
 table), then chunking reads it - a JVM-side columnar scan feeding ONE
-fused mapInPandas stage, zero shuffles. Python workers are warmed
+fused mapInArrow stage, zero shuffles. Python workers are warmed
 before timing (cold-start amortizes to noise on a long-running
 cluster).
 

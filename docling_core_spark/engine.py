@@ -21,10 +21,9 @@ child arrays.
 Stages that stay hand-written, because they carry state the runner
 has no switch for:
 
-* ``extraction.layout_spark`` ``extract_layout_packed``,
-  ``extract_layout_packed_files`` and ``extract_layout_shards``: a
-  document carried across batches in partition order, and shard file
-  writes;
+* ``extraction.layout_spark`` ``extract_layout_packed`` and
+  ``extract_layout_packed_files``: a document carried across batches
+  in partition order;
 * ``textops.embedding_top_pairs``: grouped ``applyInPandas``.
 
 tests/test_stage_runner.py fails on any other direct ``mapInArrow`` or

@@ -16,7 +16,8 @@ Two production shapes:
   shuffle is the inherent minimum for a grouped parse, skew from
   mega-documents is bounded by the document's own page count (a
   document is parsed alone, not joined), and AQE sizes the reduce
-  side.
+  side. A doc-grouped print table on disk skips the repartition
+  (``extract_layout_packed_files``): its tasks read whole files.
 
 **Why packed page rows, not word rows.** The cells table is one row
 per PAGE with the word texts packed into a single delimited string, a
@@ -62,16 +63,11 @@ CELLS_SCHEMA = ("doc_id string, page_no int, texts string, "
                 "xs1 array<double>, ys1 array<double>")
 SPANS_SCHEMA = ("doc_id string, ord int, kind string, text string, "
                 "media_ref string")
-# nested per-doc shape (the corpus's own doc-row shape); a JVM-side
-# view over the packed stage output below
-DOC_SPANS_SCHEMA = ("doc_id string, spans array<struct<"
-                    "ord:int, kind:string, text:string, "
-                    "media_ref:string>>")
 # what the Python stage actually emits: span fields packed per doc
 # (strings TEXT_SEP-joined, ords an int array), because the
 # Python->JVM Arrow boundary's per-string-value wall applies to the
 # OUTPUT too - packing turns ~4 string values per span into ~3 per
-# document; the JVM unpacks with split/arrays_zip (codegen, parallel)
+# document; the JVM unpacks with split/posexplode (codegen, parallel)
 PACKED_SPANS_SCHEMA = ("doc_id string, ords array<int>, "
                        "kinds string, texts string, refs string")
 STATS_SCHEMA = ("doc_id string, n_pages int, n_cells int, "
@@ -212,51 +208,18 @@ def extract_layout_packed(cells: DataFrame) -> DataFrame:
     return co.mapInArrow(_parse_cell_batches, PACKED_SPANS_SCHEMA)
 
 
-def extract_layout_docs(cells: DataFrame) -> DataFrame:
-    """Cell table -> per-document span rows (geometry-only parse),
-    nested ``DOC_SPANS_SCHEMA`` shape, from an arbitrary cells
-    DataFrame (see :func:`extract_layout_packed`)."""
-    return _unpack_spans(extract_layout_packed(cells))
-
-
-def _unpack_spans(packed: DataFrame) -> DataFrame:
-    """PACKED_SPANS_SCHEMA -> DOC_SPANS_SCHEMA, entirely JVM-side.
-
-    ``split`` runs once per document row; ``arrays_zip`` + a
-    positional struct cast rebuild the span structs without any
-    per-element expression (each child of arrays_zip is evaluated
-    once per row, so optimizer project-collapsing cannot reintroduce
-    a quadratic split)."""
-    from pyspark.sql import functions as F
-
-    from docling_core_spark.extraction.layout import TEXT_SEP
-
-    empty = F.array().cast("array<string>")
-
-    def arr(c: str):
-        # ords is the spine: a doc with 0 spans packs "" which would
-        # otherwise split to [""] and desync arrays_zip
-        return F.when(F.size("ords") == 0, empty) \
-                .otherwise(F.split(c, TEXT_SEP, -1))
-
-    spans = F.arrays_zip(
-        F.col("ords"), arr("kinds"), arr("texts"), arr("refs"),
-    ).cast("array<struct<ord:int,kind:string,text:string,"
-           "media_ref:string>>")
-    return packed.select("doc_id", spans.alias("spans"))
-
-
 def unpack_spans_flat(packed: DataFrame) -> DataFrame:
     """PACKED_SPANS_SCHEMA -> flat ``SPANS_SCHEMA`` rows, entirely
-    JVM-side - the flat twin of :func:`_unpack_spans`.
+    JVM-side.
 
-    Do NOT spell this ``_unpack_spans(...)`` + ``inline(spans)``: that
-    puts the whole computed ``cast(arrays_zip(split, split, split))``
-    expression under the Generate, and Catalyst's
-    InferFiltersFromGenerate clones it textually into an inferred
-    ``size(e) > 0 AND isnotnull(e)`` Filter - every split/zip/cast then
-    runs TWICE per document (same landmine family as the interpreted
-    HOF-lambda duplication documented in docops.py). Here the generator
+    Do NOT spell this as ``inline`` over a rebuilt array of span
+    structs: that puts the whole computed
+    ``cast(arrays_zip(split, split, split))`` expression under the
+    Generate, and Catalyst's InferFiltersFromGenerate clones it
+    textually into an inferred ``size(e) > 0 AND isnotnull(e)``
+    Filter - every split/zip/cast then runs TWICE per document (same
+    landmine family as the interpreted HOF-lambda duplication
+    documented in docops.py). Here the generator
     child is the plain ``ords`` ATTRIBUTE straight off the Python
     stage, so the inferred filter is a constant-time length check, the
     split arrays are computed once in a Project below the Generate
@@ -282,16 +245,6 @@ def unpack_spans_flat(packed: DataFrame) -> DataFrame:
                 F.col("rs")[F.col("pos")].alias("media_ref")))
 
 
-def extract_layout_docs_files(spark: SparkSession,
-                              path: str) -> DataFrame:
-    """Zero-shuffle parse of a doc-grouped print table on disk,
-    unpacked to the nested DOC_SPANS_SCHEMA view (see
-    :func:`extract_layout_packed_files` for the raw packed boundary -
-    a sink that stores doc-bucketed span shards should consume THAT
-    and skip the unpack entirely)."""
-    return _unpack_spans(extract_layout_packed_files(spark, path))
-
-
 def extract_layout_packed_files(spark: SparkSession,
                                 path: str) -> DataFrame:
     """Zero-shuffle parse of a doc-grouped print table on disk,
@@ -306,7 +259,9 @@ def extract_layout_packed_files(spark: SparkSession,
     between 0.5-0.66 and >=0.8 scaling efficiency at 8->32 cores).
     This is the partitioning-reuse plan at 10^12 docs: extraction
     output is written doc-bucketed, so the parse stage reads
-    co-located buckets instead of re-shuffling 100 TB."""
+    co-located buckets instead of re-shuffling 100 TB. The
+    ``layout_extract`` driver query runs this plan
+    (tests/test_plans.py pins it Exchange-free)."""
     files = sorted(
         os.path.join(path, f) for f in os.listdir(path)
         if f.endswith(".parquet"))
@@ -421,147 +376,13 @@ def _bin_dispatch(spark: SparkSession, bin_rows: List[tuple]):
     return spark.range(0, n, 1, n), get_bin
 
 
-SHARD_LINEAGE_SCHEMA = ("slot int, shard_path string, n_files int, "
-                        "n_docs int, n_spans long, "
-                        "doc_id_min string, doc_id_max string, "
-                        "wall_s double")
-
-
-def _write_slot_shards(rows, out_dir: str) -> Iterator:
-    """Parse and sink one packed shard PER SLOT present in ``rows``
-    (``(slot, path)`` pairs), yielding one lineage RecordBatch each.
-
-    Placement is exact by construction (one bin per ``parallelize``
-    slice, :func:`_bins_to_df`), but grouping by slot here stays as a
-    contract-independent guard: a partition that somehow held two bins
-    can never fuse them into one mislabeled shard — which would make a
-    later ``resume=True`` re-run the "missing" slot and duplicate its
-    docs.
-    """
-    import time as _time
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    if not rows:
-        return
-    by_slot: dict = {}
-    for s, p in rows:
-        by_slot.setdefault(s, []).append(p)
-    for slot in sorted(by_slot):
-        bin_files = by_slot[slot]
-        t0 = _time.perf_counter()
-
-        def cell_batches() -> Iterator:
-            for p in bin_files:
-                f = pq.ParquetFile(p)
-                yield from f.iter_batches(batch_size=2048)
-
-        out_batches = list(_parse_cell_batches(cell_batches()))
-        shard = os.path.join(out_dir, f"shard-{slot:05d}.parquet")
-        tmp = os.path.join(out_dir,
-                           f"_tmp-{slot:05d}-{uuid.uuid4().hex}")
-        if out_batches:
-            import pyarrow.compute as pc
-
-            tbl = pa.Table.from_batches(out_batches)
-            pq.write_table(tbl, tmp)
-            os.rename(tmp, shard)  # the commit point
-            n_docs = tbl.num_rows
-            n_spans = int(pc.sum(
-                pc.list_value_length(tbl.column("ords"))).as_py() or 0)
-            mm = pc.min_max(tbl.column("doc_id"))
-            dmin = mm["min"].as_py()
-            dmax = mm["max"].as_py()
-        else:
-            shard, n_docs, n_spans, dmin, dmax = None, 0, 0, None, None
-        wall = _time.perf_counter() - t0
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([slot], pa.int32()),
-             pa.array([shard], pa.string()),
-             pa.array([len(bin_files)], pa.int32()),
-             pa.array([n_docs], pa.int32()),
-             pa.array([n_spans], pa.int64()),
-             pa.array([dmin], pa.string()),
-             pa.array([dmax], pa.string()),
-             pa.array([round(wall, 3)], pa.float64())],
-            names=["slot", "shard_path", "n_files", "n_docs",
-                   "n_spans", "doc_id_min", "doc_id_max", "wall_s"])
-
-
-def extract_layout_shards(spark: SparkSession, path: str,
-                          out_dir: str,
-                          resume: bool = False) -> DataFrame:
-    """Parse a doc-grouped print table and SINK the packed spans to
-    doc-bucketed parquet shards, writing from the Python workers
-    themselves; only per-task lineage/metrics rows cross the
-    Python->JVM boundary.
-
-    This is the production sink plan at 10^12 docs: the packed span
-    payload never crosses the Arrow IPC socket into the JVM at all -
-    each task pyarrow-reads its LPT bin of print files, parses, and
-    pyarrow-writes ONE packed shard (write-then-rename, so a killed
-    task leaves only a ``_tmp`` orphan and rewriting is idempotent -
-    the same commit discipline as io/checkpoint.py, whose Iceberg
-    analogue is a snapshot commit). The returned lineage DataFrame is
-    the north-rule metrics table: (slot, shard_path, n_files, n_docs,
-    n_spans, doc_id_min/max, wall_s) per task. Measured motivation:
-    the count-only packed boundary still ships every span byte into
-    the JVM; under memory-bandwidth contention that crossing is the
-    one cost the equivalent no-Spark pool does not pay.
-
-    ``resume=True`` skips every slot whose committed shard already
-    exists (the bin->slot assignment is deterministic for a given
-    input listing: LPT over sorted file sizes), so a preempted run
-    re-executes only the missing slots — the north rule's
-    checkpoint-resume contract at the sink. The returned lineage
-    covers only the slots written THIS run; full accounting is the
-    shards themselves (or persist the lineage rows per run, as
-    io/checkpoint.py does for the chunking tier).
-
-    Reference has no equivalent (single-process, reference
-    docling_core/transforms/ serializes in-memory); the shard shape is
-    what :func:`extract_layout_packed_files` consumes back, so
-    downstream stages read co-located buckets instead of re-shuffling.
-    """
-    files = sorted(
-        os.path.join(path, f) for f in os.listdir(path)
-        if f.endswith(".parquet"))
-    sizes_by_file = {f: os.path.getsize(f) for f in files}
-    n_slots = _n_slots(spark, files, sizes_by_file)
-    os.makedirs(out_dir, exist_ok=True)
-
-    bin_rows = _lpt_bins(files, sizes_by_file, n_slots)
-    if resume:
-        done = {
-            rank for rank in range(n_slots)
-            if os.path.exists(
-                os.path.join(out_dir, f"shard-{rank:05d}.parquet"))}
-        bin_rows = [(rank, b) for rank, b in bin_rows
-                    if rank not in done]
-        if not bin_rows:
-            return spark.createDataFrame([], SHARD_LINEAGE_SCHEMA)
-    base, get_bin = _bin_dispatch(spark, bin_rows)
-
-    def run(id_batches: Iterator) -> Iterator:
-        rows = [(s, p) for b in id_batches
-                for i in b.column("id").to_pylist()
-                for s, bin_files in [get_bin(i)]
-                for p in bin_files]
-        yield from _write_slot_shards(rows, out_dir)
-
-    return base.mapInArrow(run, SHARD_LINEAGE_SCHEMA)
-
-
 def extract_layout(cells: DataFrame) -> DataFrame:
     """Cell table -> flat extracted span rows (``SPANS_SCHEMA``).
 
-    The flat view of :func:`extract_layout_docs`: the unpack runs
-    JVM-side (:func:`unpack_spans_flat` - posexplode on the packed
-    attribute, never inline over a computed array-of-structs), so the
-    expensive Python->JVM crossing stays in the packed doc-row
-    shape."""
+    :func:`extract_layout_packed` then :func:`unpack_spans_flat`: the
+    unpack runs JVM-side (posexplode on the packed attribute, never
+    inline over a computed array-of-structs), so the expensive
+    Python->JVM crossing stays in the packed doc-row shape."""
     return unpack_spans_flat(extract_layout_packed(cells))
 
 

@@ -11,8 +11,6 @@ Exempt, each with its own protocol:
 
 * ``io/checkpoint.run_resumable``: per-bucket lineage rows are the
   commit, so a resume redoes only the uncommitted buckets.
-* ``extraction/layout_spark._write_slot_shards``: an executor-side
-  rename commits each shard; a resume skips slots whose shard exists.
 * ``annindex``: a refit swap and an idempotent append need versioned
   directories behind a pointer file, not a marker.
 """

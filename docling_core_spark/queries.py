@@ -591,30 +591,6 @@ ORDER BY n_name
 """
 
 
-def q_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user rollup; at scale this is the canonical map-side-combine
-    aggregation keyed on a high-cardinality column."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.countDistinct("event_type").alias("n_types"),
-             F.round(F.max("value"), 4).alias("max_value"))
-        .orderBy("user_id")
-    )
-
-
-SQL_USER_ACTIVITY = """
-SELECT user_id,
-       COUNT(*)                 AS n_events,
-       COUNT(DISTINCT event_type) AS n_types,
-       ROUND(MAX(value), 4)     AS max_value
-FROM events
-GROUP BY user_id
-ORDER BY user_id
-"""
-
-
 # -------------------- training-data pipeline ops ----------------------
 
 def q_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -637,29 +613,6 @@ FROM documents
 GROUP BY md5(text)
 HAVING COUNT(*) > 1
 ORDER BY text_hash
-"""
-
-
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace token counting, fully JVM-side (no UDF)."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.select(
-            "doc_id",
-            F.size(F.split(F.trim(F.col("text")), r"\s+"))
-            .cast("long").alias("n_tokens"),
-            F.length("text").cast("long").alias("n_chars_exact"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-SQL_TOKEN_COUNTS = r"""
-SELECT doc_id,
-       len(string_split_regex(trim(text), '\s+'))  AS n_tokens,
-       CAST(length(text) AS BIGINT)                AS n_chars_exact
-FROM documents
-ORDER BY doc_id
 """
 
 

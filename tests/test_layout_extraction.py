@@ -352,19 +352,17 @@ def test_spark_layout_extract_files_plan_matches(spark, tmp_path):
     files of the doc-grouped print table) produces the same spans as
     the single-process projection, including docs split across many
     small Arrow batches inside one file."""
-    from pyspark.sql import functions as F
-
     from docling_core_spark.engine import synth_documents
     from docling_core_spark.extraction.layout_spark import (
-        extract_layout_docs_files,
+        extract_layout_packed_files,
         render_layout,
+        unpack_spans_flat,
     )
 
     docs = synth_documents(spark, n_docs=30, seed=42, partitions=5)
     path = str(tmp_path / "cells")
     render_layout(docs).write.mode("overwrite").parquet(path)
-    flat = (extract_layout_docs_files(spark, path)
-            .select("doc_id", F.inline("spans")))
+    flat = unpack_spans_flat(extract_layout_packed_files(spark, path))
     got = {(r["doc_id"], r["ord"]): (r["kind"], r["text"],
                                      r["media_ref"])
            for r in flat.collect()}
@@ -447,149 +445,8 @@ def test_pages_path_equals_tuples_path_adversarial():
 
 
 # ----------------------------------------------------------------------
-# Python-side shard sink (the production sink boundary)
+# zero-shuffle file dispatch (extract_layout_packed_files)
 # ----------------------------------------------------------------------
-
-def test_spark_layout_shard_sink_matches_and_commits(spark, tmp_path):
-    """extract_layout_shards writes packed shards from the Python
-    workers (the span payload never crosses the Arrow IPC boundary
-    into the JVM); one lineage/metrics row per task crosses instead.
-    Reading the shards back equals the direct packed parse, lineage
-    totals account for every doc and span, and a killed task's _tmp
-    orphan is invisible to read-back (write-then-rename commit)."""
-    import os
-
-    from docling_core_spark.engine import synth_documents
-    from docling_core_spark.extraction.layout_spark import (
-        extract_layout_packed_files,
-        extract_layout_shards,
-        render_layout,
-    )
-
-    docs = synth_documents(spark, n_docs=30, seed=42, partitions=5)
-    path = str(tmp_path / "cells")
-    render_layout(docs).write.mode("overwrite").parquet(path)
-    out = str(tmp_path / "shards")
-    lineage = extract_layout_shards(spark, path, out).collect()
-
-    direct = {r["doc_id"]: (list(r["ords"]), r["kinds"], r["texts"],
-                            r["refs"])
-              for r in extract_layout_packed_files(spark,
-                                                   path).collect()}
-    # a killed task's orphan must not change what a reader sees
-    (tmp_path / "shards" / "_tmp-99999-dead").write_bytes(b"junk")
-    got = {r["doc_id"]: (list(r["ords"]), r["kinds"], r["texts"],
-                         r["refs"])
-           for r in spark.read.parquet(
-               os.path.join(out, "shard-*.parquet")).collect()}
-    assert got == direct
-    assert sum(r["n_docs"] for r in lineage) == len(direct)
-    n_spans = sum(len(v[0]) for v in direct.values())
-    assert sum(r["n_spans"] for r in lineage) == n_spans
-    for r in lineage:
-        if r["n_docs"]:
-            assert r["doc_id_min"] <= r["doc_id_max"]
-            assert os.path.basename(r["shard_path"]).startswith("shard-")
-
-
-def test_spark_layout_shard_sink_resume_skips_committed(spark, tmp_path):
-    """resume=True re-executes only missing slots: committed shards
-    keep their bytes untouched (mtime-stable), a deleted shard is
-    rewritten, and the read-back after resume equals a full run."""
-    import os
-    import time
-
-    from docling_core_spark.engine import synth_documents
-    from docling_core_spark.extraction.layout_spark import (
-        extract_layout_shards,
-        render_layout,
-    )
-
-    docs = synth_documents(spark, n_docs=30, seed=42, partitions=5)
-    path = str(tmp_path / "cells")
-    render_layout(docs).write.mode("overwrite").parquet(path)
-    out = str(tmp_path / "shards")
-    extract_layout_shards(spark, path, out).collect()
-    shards = sorted(f for f in os.listdir(out)
-                    if f.startswith("shard-"))
-    assert len(shards) >= 2
-    full = {r["doc_id"]: r["texts"] for r in
-            spark.read.parquet(
-                os.path.join(out, "shard-*.parquet")).collect()}
-    victim = shards[0]
-    os.unlink(os.path.join(out, victim))
-    mtimes = {f: os.path.getmtime(os.path.join(out, f))
-              for f in shards[1:]}
-    time.sleep(0.05)
-    lineage = extract_layout_shards(spark, path, out,
-                                    resume=True).collect()
-    # only the victim slot ran
-    written = [r for r in lineage if r["n_docs"]]
-    assert [os.path.basename(r["shard_path"])
-            for r in written] == [victim]
-    for f, m in mtimes.items():
-        assert os.path.getmtime(os.path.join(out, f)) == m
-    got = {r["doc_id"]: r["texts"] for r in
-           spark.read.parquet(
-               os.path.join(out, "shard-*.parquet")).collect()}
-    assert got == full
-    # fully-committed dir: resume is a no-op with an empty lineage
-    assert extract_layout_shards(spark, path, out,
-                                 resume=True).count() == 0
-
-
-def test_shard_sink_mixed_slot_partition_writes_per_slot(
-        spark, tmp_path):
-    """A partition holding TWO slots (placement is now exact by
-    construction, but the writer must not DEPEND on that) must still
-    write one correctly-labeled shard per slot — never fuse both bins
-    into one shard under the first slot's name, which a later resume
-    would 'repair' by re-running the missing slot and duplicating
-    docs."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from docling_core_spark.engine import synth_documents
-    from docling_core_spark.extraction.layout_spark import (
-        _write_slot_shards,
-        render_layout,
-    )
-
-    docs = synth_documents(spark, n_docs=20, seed=7, partitions=4)
-    path = str(tmp_path / "cells")
-    render_layout(docs).write.mode("overwrite").parquet(path)
-    files = sorted(os.path.join(path, f) for f in os.listdir(path)
-                   if f.endswith(".parquet"))
-    assert len(files) >= 2
-    half = len(files) // 2
-    rows = ([(0, f) for f in files[:half]]
-            + [(1, f) for f in files[half:]])
-    out = str(tmp_path / "shards")
-    os.makedirs(out)
-    lineage = list(_write_slot_shards(rows, out))
-    assert [b.column("slot").to_pylist()[0] for b in lineage] == [0, 1]
-    shards = sorted(f for f in os.listdir(out)
-                    if f.startswith("shard-"))
-    assert shards == ["shard-00000.parquet", "shard-00001.parquet"]
-    # the two shards split the corpus exactly by bin membership
-    expect0 = set()
-    for f in files[:half]:
-        expect0 |= set(pq.read_table(f, columns=["doc_id"])
-                       .column("doc_id").to_pylist())
-    got0 = set(pq.read_table(os.path.join(out, shards[0]),
-                             columns=["doc_id"])
-               .column("doc_id").to_pylist())
-    got1 = set(pq.read_table(os.path.join(out, shards[1]),
-                             columns=["doc_id"])
-               .column("doc_id").to_pylist())
-    assert got0 == expect0
-    assert not (got0 & got1)
-    n_all = len({d for f in files
-                 for d in pq.read_table(f, columns=["doc_id"])
-                 .column("doc_id").to_pylist()})
-    assert len(got0 | got1) == n_all
-
 
 def test_bin_dispatch_one_task_per_bin_no_exchange(spark, tmp_path):
     """The bin->task placement is a Range-scan contract: partition i

@@ -383,26 +383,36 @@ def test_spans_output_round_trips_through_decode():
 
 def test_only_the_runner_calls_map_in_arrow():
     """Every per-row stage goes through engine.map_rows: outside
-    engine.py and extraction/layout_spark.py (a document carried across
-    batches, shard file writes), no module calls mapInArrow or
-    mapInPandas."""
+    engine.py, no module calls mapInArrow or mapInPandas, except the
+    two layout parse stages that carry a document across batches in
+    partition order (extract_layout_packed and
+    extract_layout_packed_files, one mapInArrow each)."""
     import ast
     from pathlib import Path
 
     root = Path(__file__).resolve().parents[1]
-    exempt = {"docling_core_spark/engine.py",
-              "docling_core_spark/extraction/layout_spark.py"}
-    sites = []
+    layout = "docling_core_spark/extraction/layout_spark.py"
+    allowed = {(layout, "extract_layout_packed", "mapInArrow"),
+               (layout, "extract_layout_packed_files", "mapInArrow")}
+    sites, kept = [], set()
     for path in sorted([*root.glob("docling_core_spark/**/*.py"),
                         *root.glob("jobs/**/*.py")]):
         rel = path.relative_to(root).as_posix()
-        if rel in exempt:
+        if rel == "docling_core_spark/engine.py":
             continue
-        sites += [f"{rel}:{node.lineno} {node.attr}"
-                  for node in ast.walk(ast.parse(path.read_text(), rel))
-                  if isinstance(node, ast.Attribute)
-                  and node.attr in ("mapInArrow", "mapInPandas")]
+        for top in ast.parse(path.read_text(), rel).body:
+            for node in ast.walk(top):
+                if not (isinstance(node, ast.Attribute)
+                        and node.attr in ("mapInArrow", "mapInPandas")):
+                    continue
+                site = (rel, getattr(top, "name", None), node.attr)
+                if site in allowed:
+                    kept.add(site)
+                else:
+                    sites.append(f"{rel}:{node.lineno} {site[1]} "
+                                 f"{node.attr}")
     assert not sites, sites
+    assert kept == allowed, allowed - kept
 
 
 @pytest.mark.parametrize("module,fn,ok_col", [
