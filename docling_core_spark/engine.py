@@ -30,9 +30,10 @@ tests/test_stage_runner.py fails on any other direct ``mapInArrow`` or
 ``mapInPandas`` call.
 
 Scale design:
-* generation/chunking are embarrassingly parallel over rows; cost skew
-  from mega-documents is defused by ``repartition(n)`` round-robin
-  before the stage (cheap vs. the stage cost) plus small Arrow batches.
+* generation/chunking are embarrassingly parallel over rows; a caller
+  with skewed input (few huge files, mega-documents) calls
+  ``df.repartition(n)`` before the stage (cheap vs. the stage cost);
+  small Arrow batches do the rest.
 * output explodes to one row per chunk inside the stage (no
   posexplode shuffle afterwards).
 * resumability (north rule): ``run_resumable`` splits the input into
@@ -268,21 +269,18 @@ def _chunk_task(mode: str, max_tokens: int, merge_peers: bool,
 
 
 def chunk_documents(df: DataFrame, mode: str = "hybrid",
-                    max_tokens: int = 64, merge_peers: bool = True,
-                    salt_partitions: Optional[int] = None) -> DataFrame:
+                    max_tokens: int = 64,
+                    merge_peers: bool = True) -> DataFrame:
     """documents(doc_id, spans) -> chunks(doc_id, chunk_idx, text,
     headings, span_refs).
 
     One fused mapInArrow stage: reconstruct tree + serialize + chunk +
     explode, per Arrow batch. Zero shuffles; both boundaries stay in
     Arrow (no pandas object columns - the output explode produces ~30x
-    more rows than docs, so the Arrow-native array build matters)."""
-    if salt_partitions:
-        # round-robin repartition: when upstream partitioning is skewed
-        # (few huge files, or a groupBy that emitted mega-documents),
-        # this rebalances rows across tasks; the chunker itself is
-        # per-row so any partitioning is semantically identical
-        df = df.select("doc_id", "spans").repartition(salt_partitions)
+    more rows than docs, so the Arrow-native array build matters).
+    The chunker is per-row, so a caller with skewed input calls
+    ``df.repartition(n)`` first; any partitioning gives the same
+    chunks."""
     return map_rows(df, ("doc_id", "spans"), CHUNKS_SCHEMA,
                     _chunk_task(mode, max_tokens, merge_peers))
 

@@ -420,10 +420,6 @@ def layout_cells_ensure(spark: SparkSession, sf_dir: str) -> str:
         lambda p: render_layout(corpus_df(spark, sf_dir)).write.parquet(p))
 
 
-def layout_cells_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(layout_cells_ensure(spark, sf_dir))
-
-
 # ----------------------------------------------------------------------
 # registry queries
 # ----------------------------------------------------------------------

@@ -6,9 +6,8 @@ as ONE fused ``mapInArrow`` stage - Arrow crosses the boundary once per
 batch, the output explodes to one row per extracted span inside the
 stage, and there is no shuffle anywhere in the path (a page is a
 self-contained unit of work). At cluster scale the input is an Iceberg
-scan; skew from mega-pages is defused the same way as the chunking path
-(round-robin ``repartition`` before the UDF - the ``salt_partitions``
-parameter of extract_pages).
+scan; a caller with skewed input (mega-pages clustered in one split)
+calls ``pages.repartition(n)`` before extract_pages, as for chunking.
 
 The synthetic page table is materialized once per (sf, version) as
 parquet - the production shape: extraction benchmarks measure the
@@ -36,15 +35,13 @@ def render_pages(docs: DataFrame) -> DataFrame:
                     task)
 
 
-def extract_pages(pages: DataFrame, html_col: str = "html",
-                  salt_partitions: int = 0) -> DataFrame:
+def extract_pages(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """(doc_id, html) -> exploded span rows
     (doc_id, ord, kind, text, media_ref): the extraction operator.
 
-    ``salt_partitions`` round-robin-rebalances skewed inputs before the
-    UDF (few huge crawl files, or mega-pages clustered in one split) -
-    same defusal as engine.chunk_documents; extraction is per-row, so
-    any partitioning is semantically identical."""
+    Extraction is per-row, so any partitioning gives the same rows; a
+    caller with skewed input (few huge crawl files, or mega-pages
+    clustered in one split) calls ``pages.repartition(n)`` first."""
     def task():
         from docling_core_spark.extraction.extract import extract_spans
 
@@ -52,9 +49,6 @@ def extract_pages(pages: DataFrame, html_col: str = "html",
             (d, r["offset"], r["kind"], r["text"], r["media_ref"])
             for r in extract_spans(h or "")[0]]
 
-    if salt_partitions:
-        pages = pages.select("doc_id", html_col).repartition(
-            salt_partitions)
     return map_rows(pages, ("doc_id", html_col),
                     "doc_id string, ord int, kind string, text string, "
                     "media_ref string", task)

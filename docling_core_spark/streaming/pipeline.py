@@ -21,8 +21,33 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from docling_core_spark.engine import DOCUMENTS_SCHEMA, chunk_documents
+
+
+def _file_stream(spark: SparkSession, schema, input_dir: str,
+                 max_files_per_trigger: Optional[int] = None
+                 ) -> DataFrame:
+    """Parquet file stream over ``input_dir``; ``max_files_per_trigger``
+    caps the files per micro-batch, so one drain runs several."""
+    reader = spark.readStream.schema(schema).format("parquet")
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger",
+                               str(max_files_per_trigger))
+    return reader.load(input_dir)
+
+
+def _parquet_sink(df: DataFrame, output_dir: str, checkpoint_dir: str):
+    """Start the availableNow append of ``df`` to parquet and return
+    the query. The sink's file log keeps output exactly-once."""
+    return (df.writeStream
+            .format("parquet")
+            .option("path", output_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())
 
 
 def stream_chunk_documents(
@@ -36,12 +61,8 @@ def stream_chunk_documents(
 
     The chunking transform is the exact batch operator - stateless
     mapInArrow stages are streaming-compatible as-is."""
-    reader = (spark.readStream.schema(DOCUMENTS_SCHEMA)
-              .format("parquet"))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    docs = reader.load(input_dir)
+    docs = _file_stream(spark, DOCUMENTS_SCHEMA, input_dir,
+                        max_files_per_trigger)
     return chunk_documents(docs, mode=mode, max_tokens=max_tokens)
 
 
@@ -59,14 +80,7 @@ def stream_once(
     log) - the micro-batch resume contract."""
     chunks = stream_chunk_documents(spark, input_dir, mode=mode,
                                     max_tokens=max_tokens)
-    q = (chunks.writeStream
-         .format("parquet")
-         .option("path", output_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _parquet_sink(chunks, output_dir, checkpoint_dir).awaitTermination()
 
 
 def stream_chunk_metrics(
@@ -87,8 +101,6 @@ def stream_chunk_metrics(
     counterpart of the per-bucket lineage rows in io/checkpoint.py.
     Late files (re-delivered beyond the delay) are dropped from the
     rollup but never from the chunk output, which is stateless."""
-    from pyspark.sql import functions as F
-
     chunks = stream_chunk_documents(spark, input_dir, mode=mode,
                                     max_tokens=max_tokens)
     stamped = chunks.withColumn("ingest_ts", F.current_timestamp())
@@ -144,17 +156,10 @@ def stream_extract_pages(
 ) -> DataFrame:
     """Streaming DataFrame of extracted span rows from a parquet
     page-file stream ((doc_id, html) rows)."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from docling_core_spark.extraction.spark import extract_pages
 
-    schema = StructType([StructField("doc_id", StringType(), False),
-                         StructField("html", StringType(), False)])
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    return extract_pages(reader.load(input_dir))
+    return extract_pages(_file_stream(spark, PAGES_STREAM_SCHEMA,
+                                      input_dir, max_files_per_trigger))
 
 
 def stream_extract_once(
@@ -167,14 +172,7 @@ def stream_extract_once(
     (Trigger.AvailableNow), append span parquet, stop. Re-invocation
     processes only newly-landed pages (checkpointed file log)."""
     spans = stream_extract_pages(spark, input_dir)
-    q = (spans.writeStream
-         .format("parquet")
-         .option("path", output_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _parquet_sink(spans, output_dir, checkpoint_dir).awaitTermination()
 
 
 def stream_extract_cells_once(
@@ -206,18 +204,13 @@ def stream_extract_cells_once(
     - ``batch`` surfaces as a partition column."""
     import os
 
-    from pyspark.sql import functions as F
-
     from docling_core_spark.extraction.layout_spark import (
         CELLS_SCHEMA,
         extract_layout,
     )
 
-    reader = spark.readStream.schema(CELLS_SCHEMA).format("parquet")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    cells = reader.load(input_dir)
+    cells = _file_stream(spark, CELLS_SCHEMA, input_dir,
+                         max_files_per_trigger)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         (extract_layout(batch_df)
@@ -239,38 +232,32 @@ def stream_extract_cells_once(
 # ----------------------------------------------------------------------
 
 DEDUP_OUT_SCHEMA = "fp string, doc_id string"
-DEDUP_STATE_SCHEMA = "seen boolean, first_doc_id string"
 
 
-def _dedup_state_fn(key, pdfs, state):
-    """applyInPandasWithState body: one key = one content fingerprint.
+def _first_wins(keyed: DataFrame, out_schema: str,
+                ttl_ms: Optional[int] = None) -> DataFrame:
+    """First-fingerprint-wins admission: one state key per ``fp``.
 
-    Emits exactly one (fp, doc_id) survivor row the FIRST time the
-    fingerprint is ever seen (min doc_id inside that batch breaks
-    intra-batch ties deterministically); later batches and re-delivered
-    duplicates emit nothing. State is just the seen flag + survivor id,
-    persisted in the streaming checkpoint, so a restarted query never
-    re-admits a duplicate it already passed."""
-    import pandas as pd
+    ``keyed`` has the columns of ``out_schema``, in its order, ``fp``
+    and ``doc_id`` among them. The FIRST micro-batch that carries a
+    fingerprint emits one row: the one with the least ``doc_id``
+    (compared in the column's own type, so long ids sort numerically
+    and string ids lexically), with ``doc_id`` written as a string.
+    Later batches, re-delivered files and restarts emit nothing for
+    that fingerprint.
 
-    doc_ids = []
-    for pdf in pdfs:
-        doc_ids.extend(pdf["doc_id"].tolist())
-    seen = state.exists and state.get[0]
-    if seen or not doc_ids:
-        return  # duplicate (or empty group): emit nothing
-    winner = min(doc_ids)
-    state.update((True, winner))
-    yield pd.DataFrame({"fp": [key[0]], "doc_id": [winner]})
+    State is only the seen flag and the survivor id, persisted in the
+    streaming checkpoint: one small row per distinct fingerprint,
+    never a payload or the survivor's other columns, so the state
+    store stays fingerprint-sized however wide the admitted rows are.
 
-
-def _dedup_state_fn_ttl(ttl_ms: int):
-    """TTL variant of the dedup state body (sliding admission window):
-    each sighting re-arms the processing-time timeout; a fingerprint
-    unseen for ``ttl_ms`` has its state reclaimed on the next trigger,
-    so a later re-occurrence is admitted again. This is the state-size
-    control for unbounded streams - state holds only fingerprints seen
-    within the window, not forever."""
+    With ``ttl_ms`` the admission list is a sliding window
+    (ProcessingTimeTimeout): each sighting re-arms the timeout, and a
+    fingerprint unseen for ``ttl_ms`` has its state removed on the next
+    trigger, so a later re-occurrence is admitted again. The re-arm
+    is needed because Spark clears the timeout on every invocation
+    that has data; without it the state never expires."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     def fn(key, pdfs, state):
         import pandas as pd
@@ -278,22 +265,27 @@ def _dedup_state_fn_ttl(ttl_ms: int):
         if state.hasTimedOut:
             state.remove()
             return
-        doc_ids = []
-        for pdf in pdfs:
-            doc_ids.extend(pdf["doc_id"].tolist())
-        seen = state.exists and state.get[0]
-        if seen or not doc_ids:
-            if state.exists:
-                # Spark clears the timeout on every invocation that
-                # has data; re-arm it or the state never expires
+        pdfs = [pdf for pdf in pdfs if len(pdf)]
+        if state.exists or not pdfs:
+            if state.exists and ttl_ms is not None:
                 state.setTimeoutDuration(ttl_ms)
             return
-        winner = min(doc_ids)
-        state.update((True, winner))
-        state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame({"fp": [key[0]], "doc_id": [winner]})
+        best = (pd.concat(pdfs).sort_values("doc_id").head(1)
+                .astype({"doc_id": str}))
+        state.update((True, best["doc_id"].iloc[0]))
+        if ttl_ms is not None:
+            state.setTimeoutDuration(ttl_ms)
+        yield best
 
-    return fn
+    timeout = (GroupStateTimeout.NoTimeout if ttl_ms is None
+               else GroupStateTimeout.ProcessingTimeTimeout)
+    return (keyed.groupBy("fp")
+            .applyInPandasWithState(
+                fn,
+                outputStructType=out_schema,
+                stateStructType="seen boolean, first_doc_id string",
+                outputMode="append",
+                timeoutConf=timeout))
 
 
 def stream_dedup_documents(
@@ -319,32 +311,15 @@ def stream_dedup_documents(
     off-heap with checkpointed snapshots; ``ttl_ms`` turns the
     admission list into a sliding window via ProcessingTimeTimeout so
     state size tracks the window, not the stream's lifetime."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    reader = (spark.readStream.schema(DOCUMENTS_SCHEMA)
-              .format("parquet"))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    docs = reader.load(input_dir)
+    docs = _file_stream(spark, DOCUMENTS_SCHEMA, input_dir,
+                        max_files_per_trigger)
     keyed = docs.select(
         F.md5(F.expr(
             "array_join(transform(array_sort(spans, (a, b) -> "
             "a.offset - b.offset), s -> s.text), '\\u001f')"
         )).alias("fp"),
         "doc_id")
-    fn = (_dedup_state_fn if ttl_ms is None
-          else _dedup_state_fn_ttl(ttl_ms))
-    timeout = (GroupStateTimeout.NoTimeout if ttl_ms is None
-               else GroupStateTimeout.ProcessingTimeTimeout)
-    return (keyed.groupBy("fp")
-            .applyInPandasWithState(
-                fn,
-                outputStructType=DEDUP_OUT_SCHEMA,
-                stateStructType=DEDUP_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=timeout))
+    return _first_wins(keyed, DEDUP_OUT_SCHEMA, ttl_ms)
 
 
 def stream_dedup_once(
@@ -363,13 +338,7 @@ def stream_dedup_once(
     survivors = stream_dedup_documents(
         spark, input_dir, max_files_per_trigger=max_files_per_trigger,
         ttl_ms=ttl_ms)
-    q = (survivors.writeStream
-         .format("parquet")
-         .option("path", output_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
+    q = _parquet_sink(survivors, output_dir, checkpoint_dir)
     if ttl_ms is None:
         q.awaitTermination()
     else:
@@ -435,18 +404,10 @@ def stream_doc_rate(
     log of a crawl pipeline (Kafka record time at production scale;
     the parquet file stream has identical semantics for append-only
     batches)."""
-    from pyspark.sql import functions as F
-
-    reader = (spark.readStream
-              .schema("doc_id long, event_ts timestamp")
-              .format("parquet"))
-    if max_files_per_trigger is not None:
-        # per-trigger cap so one drain run processes multiple
-        # microbatches (each batch advances the watermark the next
-        # batch is judged against)
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    return (reader.load(input_dir)
+    # a per-trigger file cap makes one drain run several micro-batches,
+    # each judged against the watermark the previous one advanced
+    return (_file_stream(spark, "doc_id long, event_ts timestamp",
+                         input_dir, max_files_per_trigger)
             .withWatermark("event_ts", watermark_delay)
             .groupBy(F.window("event_ts", window_duration).alias("win"))
             .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -473,14 +434,7 @@ def stream_doc_rate_once(
                            window_duration=window_duration,
                            watermark_delay=watermark_delay,
                            max_files_per_trigger=max_files_per_trigger)
-    q = (rate.writeStream
-         .format("parquet")
-         .option("path", output_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _parquet_sink(rate, output_dir, checkpoint_dir).awaitTermination()
 
 
 # ----------------------------------------------------------------------
@@ -492,28 +446,6 @@ TEXT_DOCS_SCHEMA = "doc_id long, text string, source string"
 
 INGEST_OUT_SCHEMA = ("fp string, doc_id string, pred_lang string, "
                      "n_words long, n_pii long")
-INGEST_STATE_SCHEMA = "seen boolean, first_doc_id string"
-
-
-def _ingest_state_fn(key, pdfs, state):
-    """First-fingerprint-wins across batches AND restarts, carrying
-    the admitted doc's hygiene columns (statistic-sized - never
-    text)."""
-    import pandas as pd
-
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    if state.exists:
-        return iter(())
-    best = rows.sort_values("doc_id").iloc[0]
-    state.update((True, str(best["doc_id"])))
-    out = pd.DataFrame({
-        "fp": [key[0]],
-        "doc_id": [str(best["doc_id"])],
-        "pred_lang": [best["pred_lang"]],
-        "n_words": [int(best["n_words"])],
-        "n_pii": [int(best["n_pii"])],
-    })
-    return iter((out,))
 
 
 def stream_ingest_documents(
@@ -537,28 +469,15 @@ def stream_ingest_documents(
     Scale shape: state is one row per distinct content hash; the
     hygiene projection is whole-stage codegen per micro-batch with
     zero extra shuffle."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from docling_core_spark.textops import hygiene_over
 
-    reader = (spark.readStream.schema(TEXT_DOCS_SCHEMA)
-              .format("parquet"))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    docs = reader.load(input_dir)
+    docs = _file_stream(spark, TEXT_DOCS_SCHEMA, input_dir,
+                        max_files_per_trigger)
     hyg = (hygiene_over(docs)
            .filter(F.col("keep"))
            .select(F.md5("clean_text").alias("fp"), "doc_id",
                    "pred_lang", "n_words", "n_pii"))
-    return (hyg.groupBy("fp")
-            .applyInPandasWithState(
-                _ingest_state_fn,
-                outputStructType=INGEST_OUT_SCHEMA,
-                stateStructType=INGEST_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout))
+    return _first_wins(hyg, INGEST_OUT_SCHEMA)
 
 
 def stream_ingest_once(
@@ -574,11 +493,4 @@ def stream_ingest_once(
     log keeps output exactly-once)."""
     admitted = stream_ingest_documents(
         spark, input_dir, max_files_per_trigger=max_files_per_trigger)
-    q = (admitted.writeStream
-         .format("parquet")
-         .option("path", output_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _parquet_sink(admitted, output_dir, checkpoint_dir).awaitTermination()

@@ -3493,14 +3493,6 @@ def _bpe_fold_spark(a: str, b: str) -> str:
         "concat(acc, '#', x))), 3)")
 
 
-def _bpe_fold_duck(a: str, b: str) -> str:
-    return (
-        "substr(list_reduce(list_prepend('§', "
-        "string_split(sym, '#')), (acc, x) -> "
-        f"CASE WHEN ends_with(acc, '#{a}') AND x = '{b}' "
-        "THEN acc || x ELSE acc || '#' || x END), 3)")
-
-
 _BPE_CACHE: dict = {}
 
 

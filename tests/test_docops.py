@@ -188,5 +188,4 @@ def test_split_outlier_documents(spark):
         assert sorted(offsets) == [s[3] for s in
                                    sorted(orig[base], key=lambda x: x[3])]
     # the pipeline consumes the split output unchanged
-    assert chunk_documents(out, mode="hier",
-                           salt_partitions=8).count() > 0
+    assert chunk_documents(out, mode="hier").count() > 0

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from docling_core_spark.engine import chunk_documents, synth_documents
 from docling_core_spark.streaming import stream_once
 
@@ -443,3 +445,68 @@ def test_stream_ingest_hygiene_gate_and_dedup(spark, tmp_path):
                   .select(F.md5("clean_text").alias("fp"))
                   .distinct().count())
     assert batch_keep == got2.count()
+
+
+@pytest.mark.parametrize("stream", ["ingest", "documents"])
+def test_survivor_is_least_doc_id_in_the_column_type(spark, tmp_path,
+                                                     stream):
+    """Both first-wins streams keep the least doc_id of the batch,
+    compared in the input column's type: the ingest stream's long ids
+    in numeric order (9 < 10), the documents stream's string ids in
+    string order ("d10" < "d9"). The survivor is written as a
+    string."""
+    from docling_core_spark.engine import DOCUMENTS_SCHEMA
+    from docling_core_spark.streaming.pipeline import (
+        TEXT_DOCS_SCHEMA,
+        stream_dedup_once,
+        stream_ingest_once,
+    )
+
+    in_dir = os.path.join(str(tmp_path), "in")
+    out_dir = os.path.join(str(tmp_path), "out")
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+    if stream == "ingest":
+        text = ("the analysis of the data pipeline is a document "
+                "with plenty of english stopword mass")
+        rows, schema = [(10, text, "s"), (9, text, "s")], TEXT_DOCS_SCHEMA
+        run, want = stream_ingest_once, "9"
+    else:
+        rows = [("d10", [("text", "alpha", "", 0)]),
+                ("d9", [("text", "alpha", "", 0)])]
+        schema, run, want = DOCUMENTS_SCHEMA, stream_dedup_once, "d10"
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(in_dir)
+    run(spark, in_dir, out_dir, ckpt)
+    assert [r["doc_id"] for r in spark.read.parquet(out_dir).collect()] \
+        == [want]
+
+
+def test_one_reader_one_sink_one_state_operator():
+    """streaming/pipeline.py opens file streams only in _file_stream,
+    calls applyInPandasWithState only in _first_wins, and starts
+    streaming writes only in _parquet_sink and the two sinks that are
+    not a parquet append (the foreachBatch layout sink and the memory
+    metrics table). An allowed site that disappears fails too."""
+    import ast
+    from pathlib import Path
+
+    rel = "docling_core_spark/streaming/pipeline.py"
+    path = Path(__file__).resolve().parents[1] / rel
+    allowed = {("_file_stream", "readStream"),
+               ("_first_wins", "applyInPandasWithState"),
+               ("_parquet_sink", "writeStream"),
+               ("stream_extract_cells_once", "writeStream"),
+               ("run_metrics_once", "writeStream")}
+    sites, kept = [], set()
+    for top in ast.parse(path.read_text(), rel).body:
+        for node in ast.walk(top):
+            if not (isinstance(node, ast.Attribute) and node.attr in (
+                    "readStream", "writeStream",
+                    "applyInPandasWithState")):
+                continue
+            site = (getattr(top, "name", None), node.attr)
+            if site in allowed:
+                kept.add(site)
+            else:
+                sites.append(f"{rel}:{node.lineno} {site[0]} {node.attr}")
+    assert not sites, sites
+    assert kept == allowed, allowed - kept
