@@ -9,10 +9,11 @@ words are split into <=4-char alphanumeric pieces, every other
 non-space character is one token - a crude subword approximation that
 is fully reproducible on any executor with zero model assets.
 
-HF/tiktoken counting can be swapped in by passing any object with
-``count_tokens(text) -> int`` and ``get_max_tokens() -> int``; the
-chunking algorithms only use this interface
-(tokenizer/base.py:9-25).
+The chunking algorithms only use ``count_tokens(text) -> int`` and
+``get_max_tokens() -> int`` (tokenizer/base.py:9-25), so any object
+with both can stand in. The real algorithms behind the reference's
+HF and tiktoken counters are in chunking/wordpiece.py
+(``WordPieceCounter`` and ``BytePairCounter``).
 """
 
 from __future__ import annotations
@@ -49,67 +50,6 @@ class RegexTokenizer:
         # decomposition (one regex pass beats three, despite the extra
         # substring allocations)
         return len(_PIECE_RE.findall(text))
-
-    def get_max_tokens(self) -> int:
-        return self.max_tokens
-
-
-class HuggingFaceTokenizer:
-    """HF fast-tokenizer adapter (tokenizer/huggingface.py:30-53).
-
-    Gated behind an import-try: ``transformers`` is not in this
-    container, so construction raises NotImplementedError here; on a
-    cluster with the wheel + model assets shipped via --py-files /
-    --archives it becomes a drop-in ``count_tokens`` provider. Load
-    once per executor (module-level cache) - never per batch
-    (SURVEY §4.2 hazard 4)."""
-
-    whitespace_separable = False  # real BPE merges across words
-    _cache: dict = {}
-
-    def __init__(self, model_name: str = "sentence-transformers/all-MiniLM-L6-v2",
-                 max_tokens: int | None = None) -> None:
-        try:
-            from transformers import AutoTokenizer  # noqa: F401
-        except ImportError as exc:
-            raise NotImplementedError(
-                "transformers is not installed in this environment; "
-                "ship it to executors (--py-files/--archives) or use "
-                "RegexTokenizer") from exc
-        if model_name not in self._cache:
-            self._cache[model_name] = AutoTokenizer.from_pretrained(
-                model_name)
-        self._tok = self._cache[model_name]
-        self.max_tokens = (max_tokens if max_tokens is not None
-                           else getattr(self._tok, "model_max_length", 512))
-
-    def count_tokens(self, text: str) -> int:
-        return len(self._tok.tokenize(text))
-
-    def get_max_tokens(self) -> int:
-        return self.max_tokens
-
-
-class TiktokenTokenizer:
-    """tiktoken adapter (tokenizer/openai.py:24-26); same gating."""
-
-    whitespace_separable = False
-    _cache: dict = {}
-
-    def __init__(self, encoding: str = "o200k_base",
-                 max_tokens: int = 128 * 1024) -> None:
-        try:
-            import tiktoken  # noqa: F401
-        except ImportError as exc:
-            raise NotImplementedError(
-                "tiktoken is not installed in this environment") from exc
-        if encoding not in self._cache:
-            self._cache[encoding] = tiktoken.get_encoding(encoding)
-        self._enc = self._cache[encoding]
-        self.max_tokens = max_tokens
-
-    def count_tokens(self, text: str) -> int:
-        return len(self._enc.encode(text))
 
     def get_max_tokens(self) -> int:
         return self.max_tokens

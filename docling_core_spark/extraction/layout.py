@@ -12,10 +12,11 @@ never sees the source kinds.
 Three independent code paths cross-validate, same architecture as the
 HTML tier (extraction/extract.py / render.py / projection.py):
 
-* ``render_layout_cells(doc_id, spans)`` - layout engine: spans ->
+* ``render_layout_pages(spans)`` - layout engine: spans ->
   blocks -> wrapped lines -> word cells with (x, baseline, font, size),
-  paginated with running header/footer + page-number chrome.
-* ``extract_layout_spans(cells)`` - layout parser: strip margin
+  paginated with running header/footer + page-number chrome, emitted
+  as one columnar page record (``PageRec``) per page.
+* ``extract_layout_pages(pages)`` - layout parser: strip margin
   chrome, cluster words into lines by baseline, merge lines into
   blocks by leading/indent/font continuity, classify blocks by
   font/size/markers, rebuild list nesting from indent depth.
@@ -23,10 +24,10 @@ HTML tier (extraction/extract.py / render.py / projection.py):
   from the source spans without running either: which spans survive a
   print round trip and in what normal form.
 
-The round-trip invariant (pinned by tests/test_layout_extract.py and
-the driver query ``layout_extract``):
+The round-trip invariant (pinned by tests/test_layout_extraction.py
+and the driver query ``layout_extract``):
 
-    extract_layout_spans(render_layout_cells(doc_id, spans))
+    extract_layout_pages(render_layout_pages(spans))[0]
         == project_for_layout(spans)
 
 **Print dialect** (what the physical layer can and cannot carry):
@@ -58,16 +59,19 @@ the driver query ``layout_extract``):
   leading indentation (via x) and drops blank lines + trailing
   spaces per line.
 
-Scale shape: rendering is one fused mapInArrow stage over the docs
-table (zero shuffle); extraction co-locates a document's cells with
-ONE hash repartition on doc_id + a within-partition sort, then streams
-doc-at-a-time through mapInArrow with cross-batch carry - the only
-inherent shuffle, identical at 10^12 docs (layout_spark.py).
+Scale shape: printing is one fused mapInArrow stage over the docs
+table (zero shuffle), one page row per page record. The parse has two
+plans (layout_spark.py): a doc-grouped print table on disk parses with
+zero shuffle, each task reading whole files; an arbitrary cell frame
+co-locates a document's pages with one hash repartition on doc_id +
+a within-partition sort. Both stream doc-at-a-time through
+mapInArrow with a cross-batch carry.
 """
 
 from __future__ import annotations
 
-from typing import Dict, Iterable, List, Optional, Sequence, Tuple
+import re
+from typing import Dict, List, Optional, Sequence, Tuple
 
 from docling_core_spark.model.spans import span_tuples
 
@@ -100,8 +104,7 @@ F_OBLIQUE = "Helvetica-Oblique"
 F_MONO = "Courier"
 
 # the print dialect's font dictionary (PDFs reference fonts by index
-# into a per-document resource table; the packed cell encoding in
-# layout_spark does the same)
+# into a per-document resource table; page records do the same)
 FONT_TABLE = (F_BOLD, F_BODY, F_ITALIC, F_OBLIQUE, F_MONO)
 FONT_INDEX = {f: i for i, f in enumerate(FONT_TABLE)}
 
@@ -126,8 +129,13 @@ CB_UNSEL = "☐"
 LINE_ADVANCE = 1.2                       # baseline step within a block
 BLOCK_GAP = 6.0                          # extra gap between blocks
 
-Cell = Dict[str, object]   # doc_id, page_no, idx, text, x0,y0,x1,y1, font
 Row = Dict[str, object]    # kind, text, media_ref, offset
+# one printed page: (page_no, word texts, font indexes into FONT_TABLE,
+# x0s, y0s, x1s, y1s) - the printer's output, the parser's input and
+# the shape layout_spark's cell batches arrive in, so the parse never
+# materializes per-cell Python objects
+PageRec = Tuple[int, List[str], Sequence, Sequence, Sequence,
+                Sequence, Sequence]
 
 
 def _char_w(size: float) -> float:
@@ -438,28 +446,27 @@ def _marker_text(b: Block) -> str:
     return CB_UNSEL
 
 
-def render_layout_cells(doc_id: str,
-                        spans: Sequence[Tuple[str, str, str, int]]
-                        ) -> List[Cell]:
-    """Print the document: one word cell per word (code: one cell per
-    line), chrome on every page. Pure function of its inputs."""
+def render_layout_pages(spans: Sequence[Tuple[str, str, str, int]]
+                        ) -> List[PageRec]:
+    """Print the document: one record per page, in page order, holding
+    one word cell per word (code: one cell per line), chrome on every
+    page. Pure function of its inputs."""
     tup = span_tuples(spans)
     blocks, headers, footers = _spans_to_blocks(tup)
-    cells: List[Cell] = []
-    idx = 0
-    page = 0
+    pages: List[PageRec] = []
     y = BOT_Y  # forces a new page for the first block
 
     def put(text: str, x: float, base_y: float, size: float,
             font: str) -> None:
-        nonlocal idx
         if TEXT_SEP in text:  # keep the packed encoding reversible
             text = text.replace(TEXT_SEP, " ")
-        w = _word_w(text, size, font)
-        cells.append({"doc_id": doc_id, "page_no": page, "idx": idx,
-                      "text": text, "x0": x, "y0": base_y, "x1": x + w,
-                      "y1": base_y + size, "font": font})
-        idx += 1
+        _p, texts, fonts, x0, y0, x1, y1 = pages[-1]
+        texts.append(text)
+        fonts.append(FONT_INDEX[font])
+        x0.append(x)
+        y0.append(base_y)
+        x1.append(x + _word_w(text, size, font))
+        y1.append(base_y + size)
 
     def chrome() -> None:
         if headers:
@@ -472,14 +479,14 @@ def render_layout_cells(doc_id: str,
             for wd in " ".join(footers).split():
                 put(wd, x, FOOTER_BASE, 8.0, F_BODY)
                 x += _word_w(wd, 8.0, F_BODY) + _gap_w(8.0)
-        num = str(page)
+        num = str(len(pages))
         w = _word_w(num, 8.0, F_BODY)
         put(num, MARGIN + (CONTENT_W - w) / 2.0, PAGENUM_BASE, 8.0,
             F_BODY)
 
     def new_page() -> None:
-        nonlocal page, y
-        page += 1
+        nonlocal y
+        pages.append((len(pages) + 1, [], [], [], [], [], []))
         y = TOP_Y
         chrome()
 
@@ -519,7 +526,7 @@ def render_layout_cells(doc_id: str,
 
         assert len(lines) <= 55, "block taller than a page (corpus bug)"
         need = LINE_ADVANCE * size * len(lines)
-        if page == 0 or y - need < BOT_Y:
+        if not pages or y - need < BOT_Y:
             new_page()
         for lx, wl in lines:
             y -= LINE_ADVANCE * size
@@ -528,22 +535,14 @@ def render_layout_cells(doc_id: str,
                 put(wd, x, y, size, font)
                 x += _word_w(wd, size, font) + _gap_w(size)
         y -= BLOCK_GAP
-    return cells
+    return pages
 
 
 # ---------------------------------------------------------------------
-# the layout parser: cells -> blocks -> rows
+# the layout parser: page records -> lines -> blocks -> rows
 # ---------------------------------------------------------------------
 
-_ENUM_RE = None  # lazy compiled
-
-
-def _is_enum_marker(tok: str) -> bool:
-    global _ENUM_RE
-    if _ENUM_RE is None:
-        import re
-        _ENUM_RE = re.compile(r"^\d+\.$")
-    return bool(_ENUM_RE.match(tok))
+_ENUM_RE = re.compile(r"^\d+\.$")
 
 
 def _blocks_to_rows(blocks: List[Block],
@@ -594,68 +593,11 @@ def _blocks_to_rows(blocks: List[Block],
     return rows
 
 
-# cell tuple layout for the extractor hot path (layout_spark streams
-# millions of cells per partition; tuples beat per-cell dicts ~2x)
-CT_PAGE, CT_TEXT, CT_X0, CT_Y0, CT_X1, CT_Y1, CT_FONT = range(7)
-CellTup = Tuple[int, str, float, float, float, float, str]
-
-
-def cell_tuple(c: Cell) -> CellTup:
-    return (int(c["page_no"]), str(c["text"]), float(c["x0"]),
-            float(c["y0"]), float(c["x1"]), float(c["y1"]),
-            str(c["font"]))
-
-
-def extract_layout_spans(cells: Iterable[Cell]
-                         ) -> Tuple[List[Row], Dict[str, int]]:
-    """Reconstruct the span sequence from geometry alone.
-
-    Stages: margin-band chrome strip -> baseline clustering into lines
-    -> leading/indent block merge -> font/size/marker classification ->
-    indent-depth list regrouping. Returns (rows, stats)."""
-    return extract_layout_tuples([cell_tuple(c) for c in cells])
-
-
-def extract_layout_tuples(all_cells: List[CellTup]
-                          ) -> Tuple[List[Row], Dict[str, int]]:
-    """Tuple-columnar fast path of extract_layout_spans (see
-    ``cell_tuple`` for the field order)."""
-    n_chrome = 0
-    by_page: Dict[int, List[CellTup]] = {}
-    for c in all_cells:
-        yc = (c[CT_Y0] + c[CT_Y1]) / 2.0
-        if yc >= CHROME_TOP or yc <= CHROME_BOT:
-            n_chrome += 1
-            continue
-        by_page.setdefault(c[CT_PAGE], []).append(c)
-
-    # lines: per page, cluster by baseline, order top-down
-    lines: List[Dict[str, object]] = []
-    for page in sorted(by_page):
-        pcells = sorted(by_page[page],
-                        key=lambda c: (-c[CT_Y0], c[CT_X0]))
-        cur: List[CellTup] = []
-        cur_y = None
-        for c in pcells:
-            y = c[CT_Y0]
-            if cur_y is None or abs(y - cur_y) > 2.0:
-                if cur:
-                    lines.append(_mk_line(page, cur))
-                cur, cur_y = [c], y
-            else:
-                cur.append(c)
-        if cur:
-            lines.append(_mk_line(page, cur))
-
-    return _lines_to_result(lines, len(by_page), len(all_cells),
-                            n_chrome)
-
-
 def _lines_to_result(lines: List[Dict[str, object]], n_pages: int,
                      n_cells: int, n_chrome: int
                      ) -> Tuple[List[Row], Dict[str, int]]:
-    """Shared parse tail: reading-ordered line records -> block merge
-    -> classification -> span rows + stats."""
+    """Parse tail: reading-ordered line records -> block merge ->
+    classification -> span rows + stats."""
     # blocks: merge consecutive lines with same style + alignment and
     # a within-block leading (gap <= 1.4 * size)
     merged: List[Dict[str, object]] = []
@@ -709,7 +651,7 @@ def _lines_to_result(lines: List[Dict[str, object]], n_pages: int,
         else:
             tok = words[0] if words else ""
             rest = " ".join(words[1:])
-            if tok == BULLET or _is_enum_marker(tok):
+            if tok == BULLET or _ENUM_RE.match(tok):
                 depth = int(round(
                     (float(m["x_left"]) - MARGIN) / LIST_INDENT)) + 1
                 blocks.append(Block(B_ITEM, rest, depth=max(depth, 1),
@@ -732,39 +674,10 @@ def _lines_to_result(lines: List[Dict[str, object]], n_pages: int,
     return rows, stats
 
 
-def _mk_line(page: int, cs: List[CellTup]) -> Dict[str, object]:
-    """Cells of one baseline -> line record (cells arrive x-sorted)."""
-    x_left = cs[0][CT_X0]
-    x_right = cs[-1][CT_X1]
-    size = cs[0][CT_Y1] - cs[0][CT_Y0]
-    font = cs[0][CT_FONT]
-    left_gap = x_left - MARGIN
-    right_gap = (PAGE_W - MARGIN) - x_right
-    centered = left_gap > 20.0 and abs(left_gap - right_gap) < 3.0
-    code_text = ""
-    if font == F_MONO:
-        lead = int(round((x_left - MARGIN) / MONO_CHAR_W))
-        code_text = " " * max(lead, 0) + " ".join(
-            c[CT_TEXT] for c in cs)
-    return {"page": page, "y": cs[0][CT_Y0], "x_left": x_left,
-            "x_right": x_right, "size": size, "font": font,
-            "centered": centered,
-            "words": [c[CT_TEXT] for c in cs],
-            "code_text": code_text}
-
-
-# page-record layout for the packed fast path: one entry per PAGE,
-# geometry as float64 arrays, fonts as indexes into FONT_TABLE - the
-# exact shape layout_spark's cell batches arrive in, so the parse
-# never materializes per-cell tuples
-PageRec = Tuple[int, List[str], Sequence, Sequence, Sequence,
-                Sequence, Sequence]
-
-
 def _mk_line_idx(page: int, sel, texts: List[str], fonts,
                  x0, y0, x1, y1) -> Dict[str, object]:
-    """Array-indexed twin of _mk_line: ``sel`` holds the line's cell
-    indexes in (-y0, x0) order."""
+    """Cells of one baseline -> line record: ``sel`` holds the line's
+    cell indexes into the page arrays, in (-y0, x0) order."""
     f0 = sel[0]
     x_left = float(x0[f0])
     x_right = float(x1[sel[-1]])
@@ -786,14 +699,18 @@ def _mk_line_idx(page: int, sel, texts: List[str], fonts,
 
 def extract_layout_pages(pages: List[PageRec]
                          ) -> Tuple[List[Row], Dict[str, int]]:
-    """Page-columnar fast path of extract_layout_tuples: same result,
-    but cells stay in per-page arrays (chrome strip and reading-order
-    sort run as numpy masks/lexsorts over page slices) instead of
-    2M+ per-cell Python tuples - the allocation pressure those tuples
-    create is what caps the multi-process scaling ceiling of the
-    parse (equivalence pinned by
-    tests/test_layout_extraction.py::test_pages_path_equals_tuples_path).
-    """
+    """Reconstruct the span sequence from geometry alone.
+
+    Stages: margin-band chrome strip -> baseline clustering into lines
+    -> leading/indent block merge -> font/size/marker classification ->
+    indent-depth list regrouping. Returns (rows, stats).
+
+    Records may arrive in any order; a page may be split across
+    several records (concatenated in arrival order) and its cells may
+    come in any order - the reading order is re-derived from geometry.
+    Cells stay in per-page arrays (the chrome strip and reading-order
+    sort run as numpy masks/lexsorts over page slices), so the parse
+    never builds a Python object per cell."""
     import numpy as np
 
     by_page: Dict[int, List[PageRec]] = {}

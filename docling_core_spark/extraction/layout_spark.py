@@ -78,23 +78,13 @@ def render_layout(docs: DataFrame) -> DataFrame:
     """(doc_id, spans) -> packed page rows: the print source."""
     def task():
         from docling_core_spark.extraction.layout import (
-            FONT_INDEX,
             TEXT_SEP,
-            render_layout_cells,
+            render_layout_pages,
         )
 
         def row(d, spans):
-            pages = {}
-            for c in render_layout_cells(d, spans):
-                pages.setdefault(c["page_no"], []).append(c)
-            return [(d, p,
-                     TEXT_SEP.join(c["text"] for c in cs),
-                     [FONT_INDEX[c["font"]] for c in cs],
-                     [c["x0"] for c in cs],
-                     [c["y0"] for c in cs],
-                     [c["x1"] for c in cs],
-                     [c["y1"] for c in cs])
-                    for p, cs in sorted(pages.items())]
+            return [(d, p, TEXT_SEP.join(texts), *geometry)
+                    for p, texts, *geometry in render_layout_pages(spans)]
         return row
 
     return map_rows(docs, ("doc_id", "spans"), CELLS_SCHEMA, task)
@@ -110,43 +100,30 @@ def _parse_cell_batches(batches: Iterator) -> Iterator:
     ~0.6; packing removes the output boundary from the profile."""
     import pyarrow as pa
 
+    from docling_core_spark.engine import _chunk_record_batch
     from docling_core_spark.extraction.layout import (
         TEXT_SEP,
         extract_layout_pages,
     )
+    # PACKED_SPANS_SCHEMA spelled in pyarrow (a test pins the two
+    # equal): parsing the DDL needs a SparkContext, which a Python
+    # worker does not have
+    schema = pa.schema([("doc_id", pa.string()),
+                        ("ords", pa.list_(pa.int32())),
+                        ("kinds", pa.string()), ("texts", pa.string()),
+                        ("refs", pa.string())])
     carry_doc = None
     carry: List[tuple] = []
-    # columnar accumulators for the packed output batch
-    out_ids: List[str] = []
-    out_ords: List[List[int]] = []
-    out_kinds: List[str] = []
-    out_texts: List[str] = []
-    out_refs: List[str] = []
+    out: List[tuple] = []
 
     def flush() -> None:
         if carry_doc is None:
             return
         rows, _st = extract_layout_pages(carry)
-        out_ids.append(carry_doc)
-        out_ords.append([r["offset"] for r in rows])
-        out_kinds.append(TEXT_SEP.join(r["kind"] for r in rows))
-        out_texts.append(TEXT_SEP.join(r["text"] for r in rows))
-        out_refs.append(TEXT_SEP.join(r["media_ref"] for r in rows))
-
-    def to_batch():
-        b = pa.RecordBatch.from_arrays(
-            [pa.array(out_ids, pa.string()),
-             pa.array(out_ords, pa.list_(pa.int32())),
-             pa.array(out_kinds, pa.string()),
-             pa.array(out_texts, pa.string()),
-             pa.array(out_refs, pa.string())],
-            names=["doc_id", "ords", "kinds", "texts", "refs"])
-        out_ids.clear()
-        out_ords.clear()
-        out_kinds.clear()
-        out_texts.clear()
-        out_refs.clear()
-        return b
+        out.append((carry_doc, [r["offset"] for r in rows],
+                    TEXT_SEP.join(r["kind"] for r in rows),
+                    TEXT_SEP.join(r["text"] for r in rows),
+                    TEXT_SEP.join(r["media_ref"] for r in rows)))
 
     for batch in batches:
         doc_ids = batch.column("doc_id").to_pylist()
@@ -177,11 +154,12 @@ def _parse_cell_batches(batches: Iterator) -> Iterator:
                           x0s[pos:e], y0s[pos:e], x1s[pos:e],
                           y1s[pos:e]))
             pos = e
-        if out_ids:
-            yield to_batch()
+        if out:
+            yield _chunk_record_batch(out, schema)
+            out.clear()
     flush()
-    if out_ids:
-        yield to_batch()
+    if out:
+        yield _chunk_record_batch(out, schema)
 
 
 def extract_layout_packed(cells: DataFrame) -> DataFrame:
@@ -392,12 +370,12 @@ def layout_stats(docs: DataFrame) -> DataFrame:
     nothing)."""
     def task():
         from docling_core_spark.extraction.layout import (
-            extract_layout_spans,
-            render_layout_cells,
+            extract_layout_pages,
+            render_layout_pages,
         )
 
         def row(d, spans):
-            _rows, st = extract_layout_spans(render_layout_cells(d, spans))
+            _rows, st = extract_layout_pages(render_layout_pages(spans))
             return [(d, st["n_pages"], st["n_cells"], st["n_chrome_cells"],
                      st["n_lines"], st["n_blocks"], st["n_spans"],
                      st["content_chars"])]

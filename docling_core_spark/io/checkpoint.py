@@ -76,13 +76,18 @@ def read_lineage(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     """Only committed buckets count - uncommitted dirs are ignored,
-    mirroring Iceberg's snapshot isolation."""
+    mirroring Iceberg's snapshot isolation. Every committed bucket,
+    even an empty one, has a directory, so a missing one is lost data
+    and raises ``FileNotFoundError`` instead of shrinking the read."""
     done = completed_buckets(spark, out_dir)
-    paths = [os.path.join(out_dir, "chunks", f"bucket={b}") for b in done]
-    paths = [p for p in paths if os.path.exists(p)]
-    if not paths:
+    if not done:
         raise FileNotFoundError(f"no committed buckets under {out_dir}")
-    return spark.read.parquet(*paths)
+    paths = {b: os.path.join(out_dir, "chunks", f"bucket={b}") for b in done}
+    lost = [b for b, p in paths.items() if not os.path.exists(p)]
+    if lost:
+        raise FileNotFoundError(
+            f"committed buckets {lost} missing under {out_dir}/chunks")
+    return spark.read.parquet(*paths.values())
 
 
 def run_resumable(

@@ -272,14 +272,13 @@ def _rows_layout_page_stats(n: int) -> list:
     """Single-process print+parse per doc (distributed-vs-sequential
     equivalence for the layout accounting)."""
     from docling_core_spark.extraction.layout import (
-        extract_layout_spans,
-        render_layout_cells,
+        extract_layout_pages,
+        render_layout_pages,
     )
 
     out = []
     for r in _corpus_rows(n):
-        _rows, st = extract_layout_spans(
-            render_layout_cells(r["doc_id"], r["spans"]))
+        _rows, st = extract_layout_pages(render_layout_pages(r["spans"]))
         row = {"doc_id": r["doc_id"]}
         row.update(st)
         out.append(row)

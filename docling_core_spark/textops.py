@@ -1140,25 +1140,31 @@ def ivf_kmeans_fit(emb: DataFrame, n_iters: int = N_KMEANS_ITERS
 _IVF_CENT_CACHE: dict = {}
 
 
+def _ivf_centroids(spark: SparkSession, sf_dir: str):
+    """(quantized embeddings frame, broadcast trained-centroid frame
+    ``cid long, qb array<long>``), fitting the centroids once per
+    corpus. The memo key carries a data fingerprint (mtime+size of the
+    source file(s)) so a regenerated corpus at the same path retrains
+    instead of silently serving stale centroids."""
+    emb = (_t(spark, sf_dir, "embeddings")
+           .select("vec_id", "embedding",
+                   F.expr(_QINT.format(c="embedding")).alias("qa")))
+    key = (sf_dir, _data_fingerprint(sf_dir, "embeddings"),
+           N_CELLS, N_KMEANS_ITERS)
+    cent_rows = _IVF_CENT_CACHE.get(key)
+    if cent_rows is None:
+        cent_rows = _IVF_CENT_CACHE[key] = ivf_kmeans_fit(emb)
+    return emb, F.broadcast(spark.createDataFrame(
+        cent_rows, "cid long, qb array<long>"))
+
+
 def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained-IVF ANN: k-means-refined cells (exact integer Lloyd
     rounds, see ivf_kmeans_fit), then the query probes its N_PROBES
     nearest cells and re-ranks only their members by exact cosine. At
     scale the trained cell id is the partition/bucket key; training
     cost amortizes over every query served from the index."""
-    emb = (_t(spark, sf_dir, "embeddings")
-           .select("vec_id", "embedding",
-                   F.expr(_QINT.format(c="embedding")).alias("qa")))
-    # cache key carries a data fingerprint (mtime+size of the source
-    # file(s)) so a regenerated corpus at the same path retrains
-    # instead of silently serving stale centroids (ADVICE r2)
-    key = (sf_dir, _data_fingerprint(sf_dir, "embeddings"),
-           N_CELLS, N_KMEANS_ITERS)
-    cent_rows = _IVF_CENT_CACHE.get(key)
-    if cent_rows is None:
-        cent_rows = _IVF_CENT_CACHE[key] = ivf_kmeans_fit(emb)
-    cent = F.broadcast(spark.createDataFrame(
-        cent_rows, "cid long, qb array<long>"))
+    emb, cent = _ivf_centroids(spark, sf_dir)
     d = emb.crossJoin(cent).withColumn("d2", F.expr(_L2Q))
     assigned = _ivf_assign(d)
     probe_cells = (d.filter(F.col("vec_id") == 0)
@@ -3152,16 +3158,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair join shuffles each vector once per side keyed on cell
     and never materializes cross-cell pairs. The cosine is pure
     JVM-side array math (zip_with/aggregate) - zero Python."""
-    emb = (_t(spark, sf_dir, "embeddings")
-           .select("vec_id", "embedding",
-                   F.expr(_QINT.format(c="embedding")).alias("qa")))
-    key = (sf_dir, _data_fingerprint(sf_dir, "embeddings"),
-           N_CELLS, N_KMEANS_ITERS)
-    cent_rows = _IVF_CENT_CACHE.get(key)
-    if cent_rows is None:
-        cent_rows = _IVF_CENT_CACHE[key] = ivf_kmeans_fit(emb)
-    cent = F.broadcast(spark.createDataFrame(
-        cent_rows, "cid long, qb array<long>"))
+    emb, cent = _ivf_centroids(spark, sf_dir)
     base = emb.select(
         "vec_id",
         F.expr(_TO_DOUBLE_SPARK.format(c="embedding")).alias("emb"))

@@ -79,6 +79,21 @@ def test_uncommitted_bucket_is_rewritten(spark, out_dir):
     assert got == direct  # no dupes, no losses
 
 
+def test_lost_committed_bucket_raises(spark, out_dir):
+    """A committed bucket whose directory is gone is lost data: the
+    read names it instead of returning the other buckets' rows."""
+    run_resumable(_docs(spark), out_dir, _stage, n_buckets=N_BUCKETS)
+    shutil.rmtree(os.path.join(out_dir, "chunks", "bucket=1"))
+    assert completed_buckets(spark, out_dir) == list(range(N_BUCKETS))
+    with pytest.raises(FileNotFoundError, match=r"buckets \[1\] missing"):
+        read_output(spark, out_dir)
+
+
+def test_no_committed_bucket_raises(spark, out_dir):
+    with pytest.raises(FileNotFoundError, match="no committed buckets"):
+        read_output(spark, out_dir)
+
+
 def test_rerun_is_noop(spark, out_dir):
     run_resumable(_docs(spark), out_dir, _stage, n_buckets=N_BUCKETS)
     lineage1 = read_lineage(spark, out_dir).count()

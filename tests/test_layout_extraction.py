@@ -1,11 +1,14 @@
 """PDF/layout-parse extraction: round-trip parity + dialect rules.
 
-Parity contract: ``extract_layout_spans(render_layout_cells(id,
-spans)) == project_for_layout(spans)`` - the left side prints the
-document to positioned word cells (font/size/indent/margins, paginated
-with running chrome) and re-parses it from GEOMETRY ONLY; the right
-side normalizes the spans directly. The geometry paths share no logic
-with the projection, so agreement validates both.
+Parity contract: ``extract_layout_pages(render_layout_pages(spans))``
+rows ``== project_for_layout(spans)`` - the left side prints
+the document to page records of positioned word cells
+(font/size/indent/margins, paginated with running chrome) and
+re-parses them from GEOMETRY ONLY; the right side normalizes the
+spans directly. The geometry paths share no logic with the
+projection, so agreement validates both. The parser must not depend
+on how the records arrive: a shuffled, split and reordered copy of
+the printer's records parses to the same result.
 """
 
 from __future__ import annotations
@@ -16,9 +19,12 @@ from docling_core_spark.corpus import gen_doc_spans
 from docling_core_spark.extraction.layout import (
     CHROME_BOT,
     CHROME_TOP,
-    extract_layout_spans,
+    FOOTER_BASE,
+    HEADER_BASE,
+    PAGENUM_BASE,
+    extract_layout_pages,
     project_for_layout,
-    render_layout_cells,
+    render_layout_pages,
 )
 
 
@@ -26,16 +32,16 @@ def _triples(rows):
     return [(r["kind"], r["text"], r["media_ref"]) for r in rows]
 
 
-def _roundtrip(spans, doc_id="d"):
-    cells = render_layout_cells(doc_id, spans)
-    got, stats = extract_layout_spans(cells)
+def _roundtrip(spans):
+    pages = render_layout_pages(spans)
+    got, stats = extract_layout_pages(pages)
     want = project_for_layout(spans)
-    return got, want, stats, cells
+    return got, want, stats, pages
 
 
 def _rt_doc(doc_index: int, seed: int = 42, mega_every=None):
-    spans = gen_doc_spans(doc_index, seed=seed, mega_every=mega_every)
-    return _roundtrip(spans, f"doc_{doc_index:012d}")
+    return _roundtrip(gen_doc_spans(doc_index, seed=seed,
+                                    mega_every=mega_every))
 
 
 S = lambda kind, text="", mref="": {"kind": kind, "text": text,
@@ -81,7 +87,7 @@ def test_furniture_and_chrome_stripped():
              S("page_break:2"),
              S("text", "second page words"),
              S("furniture:page_footer", "confidential")]
-    got, want, stats, cells = _roundtrip(spans)
+    got, want, stats, _ = _roundtrip(spans)
     assert _triples(got) == _triples(want)
     txt = " ".join(str(r["text"]) for r in got)
     assert "acme" not in txt and "confidential" not in txt
@@ -249,14 +255,15 @@ def test_hrefs_and_fmt_flags_drop():
 
 def test_content_clear_of_chrome_bands():
     """No content baseline may enter the margin chrome bands."""
-    _, _, _, cells = _rt_doc(5)
-    for c in cells:
-        yc = (c["y0"] + c["y1"]) / 2.0
-        in_band = yc >= CHROME_TOP or yc <= CHROME_BOT
-        is_chrome = c["page_no"] >= 1 and in_band
-        # every cell is either clearly content or clearly chrome;
-        # nothing straddles the band boundaries
-        assert in_band == is_chrome
+    _, _, _, pages = _rt_doc(5)
+    assert [p for p, *_ in pages] == list(range(1, len(pages) + 1))
+    for _p, _texts, _fonts, _x0, y0, _x1, y1 in pages:
+        for lo, hi in zip(y0, y1):
+            yc = (lo + hi) / 2.0
+            in_band = yc >= CHROME_TOP or yc <= CHROME_BOT
+            # a cell is in a chrome band iff it sits on a chrome baseline
+            assert in_band == (lo in (HEADER_BASE, FOOTER_BASE,
+                                      PAGENUM_BASE))
 
 
 def test_extracted_doc_chunks_cleanly():
@@ -310,8 +317,7 @@ def test_spark_layout_stats_match(spark):
     assert len(got) == 40
     for i in range(40):
         spans = gen_doc_spans(i, seed=42)
-        _, st = extract_layout_spans(
-            render_layout_cells(f"doc_{i:012d}", spans))
+        _, st = extract_layout_pages(render_layout_pages(spans))
         assert got[f"doc_{i:012d}"] == (
             st["n_pages"], st["n_cells"], st["n_spans"],
             st["content_chars"])
@@ -375,73 +381,48 @@ def test_spark_layout_extract_files_plan_matches(spark, tmp_path):
 
 
 # ----------------------------------------------------------------------
-# page-columnar fast path equivalence (rows AND stats, per document)
+# record arrival order (the Spark parse stitches pages from batches)
 # ----------------------------------------------------------------------
 
-def _page_recs(cells):
-    """Cell dicts -> PageRec list (the layout_spark batch shape):
-    fonts as FONT_TABLE indexes, geometry as float arrays."""
-    from docling_core_spark.extraction.layout import FONT_INDEX
-
-    pages = {}
-    for c in cells:
-        pages.setdefault(c["page_no"], []).append(c)
-    return [(p,
-             [c["text"] for c in cs],
-             [FONT_INDEX[c["font"]] for c in cs],
-             [c["x0"] for c in cs],
-             [c["y0"] for c in cs],
-             [c["x1"] for c in cs],
-             [c["y1"] for c in cs])
-            for p, cs in pages.items()]
-
-
-def test_pages_path_equals_tuples_path():
-    from docling_core_spark.extraction.layout import (
-        cell_tuple,
-        extract_layout_pages,
-        extract_layout_tuples,
-    )
-
-    for i in range(80):
-        spans = gen_doc_spans(i, seed=42)
-        cells = render_layout_cells(f"doc_{i:012d}", spans)
-        want_rows, want_stats = extract_layout_tuples(
-            [cell_tuple(c) for c in cells])
-        got_rows, got_stats = extract_layout_pages(_page_recs(cells))
-        assert got_rows == want_rows, i
-        assert got_stats == want_stats, i
-
-
-def test_pages_path_equals_tuples_path_adversarial():
-    """Shuffled cell order within pages, split page records, empty
-    pages, all-chrome pages: the two paths must still agree."""
+def test_parse_ignores_record_split_and_order():
+    """Cells shuffled within each page, every page split across two
+    records, an empty page added and the records shuffled: the parse
+    (rows AND stats) equals the parse of the printer's clean records."""
     import random
-
-    from docling_core_spark.extraction.layout import (
-        cell_tuple,
-        extract_layout_pages,
-        extract_layout_tuples,
-    )
 
     rng = random.Random(7)
     for i in range(0, 40, 3):
-        spans = gen_doc_spans(i, seed=11)
-        cells = render_layout_cells(f"doc_{i:012d}", spans)
-        rng.shuffle(cells)  # arbitrary arrival order
-        want = extract_layout_tuples([cell_tuple(c) for c in cells])
-        # split every page's cells across two records + an empty page
-        recs = []
-        for rec in _page_recs(cells):
-            p, texts, fonts, x0, y0, x1, y1 = rec
-            k = len(texts) // 2
-            recs.append((p, texts[:k], fonts[:k], x0[:k], y0[:k],
-                         x1[:k], y1[:k]))
-            recs.append((p, texts[k:], fonts[k:], x0[k:], y0[k:],
-                         x1[k:], y1[k:]))
-        recs.append((999, [], [], [], [], [], []))
-        got = extract_layout_pages(recs)
-        assert got == want, i
+        pages = render_layout_pages(gen_doc_spans(i, seed=11))
+        want = extract_layout_pages(pages)
+        recs = [(999, [], [], [], [], [], [])]
+        for p, *cols in pages:
+            perm = list(range(len(cols[0])))
+            rng.shuffle(perm)
+            cols = [[col[j] for j in perm] for col in cols]
+            k = len(perm) // 2
+            recs.append((p, *(col[:k] for col in cols)))
+            recs.append((p, *(col[k:] for col in cols)))
+        rng.shuffle(recs)
+        assert extract_layout_pages(recs) == want, i
+
+
+def test_parse_batches_emit_packed_spans_schema(spark):
+    """The parse stage's pyarrow output schema is PACKED_SPANS_SCHEMA."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    from docling_core_spark.engine import synth_documents
+    from docling_core_spark.extraction.layout_spark import (
+        PACKED_SPANS_SCHEMA,
+        _parse_cell_batches,
+        render_layout,
+    )
+
+    cells = render_layout(synth_documents(spark, n_docs=3, seed=42))
+    out = list(_parse_cell_batches(iter(cells.toArrow().to_batches())))
+    assert sum(b.num_rows for b in out) == 3
+    want = to_arrow_schema(_parse_datatype_string(PACKED_SPANS_SCHEMA))
+    assert all(b.schema == want for b in out)
 
 
 # ----------------------------------------------------------------------

@@ -26,7 +26,7 @@ CAPTURE = {
     "ngram_jaccard_pairs": "PushedFilters, BroadcastHashJoin",
     "caption_resolution": "PushedFilters, BroadcastHashJoin",
     "quality_scores": "",
-    "chunks_hybrid": "PythonUDF",
+    "chunks_hybrid": "one MapInArrow over the parquet scan, zero Exchange",
     "embedding_top_pairs": "FlatMapGroupsInPandas (grouped-map matmul)",
     "parse_doctags": "two MapInArrow stages (export | fused parse+chunk)",
     "html_extract": "single MapInArrow over the page scan, zero shuffle",
@@ -35,10 +35,10 @@ CAPTURE = {
     "pdf_crop_text": "one Exchange on the page key; HOF string fold, no Python",
     "export_legacy": "single MapInArrow, zero shuffle",
     "docjson_validation": "chained MapInArrow stages, zero shuffle",
-    "layout_extract": ("file-granular parse: one rangepartitioning "
-                       "Exchange over the LPT path list only, ONE "
-                       "MapInArrow, no parquet Scan (pyarrow reads), "
-                       "JVM-side split/arrays_zip/inline unpack"),
+    "layout_extract": ("file-granular parse: Range bin dispatch, zero "
+                       "Exchange, ONE MapInArrow, no parquet Scan "
+                       "(pyarrow reads), JVM-side split/posexplode "
+                       "unpack"),
     "layout_page_stats": "fused print+parse: single MapInArrow, zero shuffle",
     "redact_spans": ("delete_items as a pure-JVM aggregate() fold over "
                      "the span array: no Python, no Exchange before "
